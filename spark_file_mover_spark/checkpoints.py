@@ -47,12 +47,12 @@ from __future__ import annotations
 import contextlib
 
 # True while inside :func:`lazy_checkpoints`. Cross-invocation caches
-# (sources.io.cached_plan, the corpus-relation materialized views) must
-# BYPASS both cache read and write under the plan-only mode: a plan
-# built against the substituted empty-leaf barrier is tooling-shaped,
-# and caching it would leak empty relations into later production-mode
-# invocations in the same session (observed: the scan-census test suite
-# shares one session across lazy and eager tests).
+# (sources.io.ingest_artifact and cached_plan) BYPASS both cache read
+# and write under the plan-only mode: a plan built against the
+# substituted empty-leaf barrier is tooling-shaped, and caching it
+# would leak empty relations into later production-mode invocations in
+# the same session (observed: the scan-census test suite shares one
+# session across lazy and eager tests).
 LAZY_ACTIVE = False
 
 

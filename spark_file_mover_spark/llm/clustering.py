@@ -23,9 +23,10 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
+    ingest_artifact,
     load_table,
     plan_cached,
+    session_memo,
 )
 from spark_file_mover_spark.numerics import snap
 
@@ -38,15 +39,6 @@ _KM_DIM = 64  # embeddings.embedding dimension (FIXTURES.md)
 _KM_K = 8
 _KM_ROUNDS = 3  # assignment rounds; updates run after rounds 1..ROUNDS-1
 _KM_QSCALE = 10**6  # fixed-point scale: |x| <= ~0.4 -> |q| <= ~4*10^5
-
-# Materialized-view cache for the quantized relation + converged
-# centroids, keyed on (applicationId, sf_dir) — the _PR_GRAPH_CACHE
-# contract: the clustering is a pure function of immutable input files,
-# so a production deployment maintains the centroid table as a
-# materialized view and repeated invocations pay only the final
-# assignment scan. Stale-appId entries evicted on first use after a
-# SparkContext restart.
-_KM_CACHE: dict = {}
 
 
 def _km_cte_prefix(k: int = _KM_K, rounds: int = _KM_ROUNDS) -> str:
@@ -282,10 +274,10 @@ def embed_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are the two K*DIM-row update aggregates whose map-side
     combine collapses per-partition sums first. At 10^9 vectors the
     per-round cost is one scan + one 512-row aggregate — the loop never
-    joins data-to-data. Converged centroids + the checkpointed relation
-    cache per (SparkContext, sf_dir) as the materialized view a
-    production deployment maintains (_PR_GRAPH_CACHE contract);
-    driver-fresh single runs still pay the full fit, pinned by tests.
+    joins data-to-data. Converged centroids + the persisted relation
+    are an ingest artifact (:func:`_km_model`) — the centroid table a
+    production deployment maintains; driver-fresh single runs still
+    pay the full fit, pinned by tests.
     """
     qdf, cents = _km_model(spark, sf_dir)
     return (
@@ -302,24 +294,18 @@ def _km_model(
     assign=None,
     rounds: int = _KM_ROUNDS,
 ) -> tuple:
-    """(quantized relation, converged centroid dict) through the
-    materialized-view cache — shared by embed-kmeans-lloyd (which
-    declares it), embed-ann-ivfpq (whose IVF coarse quantizer it is,
-    both at K=8) and dedup-semdedup (same Lloyd machinery at its own
-    finer K). Entries key on (corpus, k); entries for a DIFFERENT
-    corpus/context are evicted (the phash-bands one-live-corpus
-    policy) while sibling-k models of the live corpus coexist — a
-    sweep alternating kmeans (K=8) and semdedup (K=64) must not
-    thrash the fit."""
-    base = artifact_cache_key(spark, sf_dir)
-    cache_key = (base, k)
-    cached = _KM_CACHE.get(cache_key)
-    if cached is None:
-        for stale in [kk for kk in _KM_CACHE if kk[0] != base]:
-            del _KM_CACHE[stale]
-        cached = _km_fit(spark, sf_dir, k, assign=assign, rounds=rounds)
-        _KM_CACHE[cache_key] = cached
-    return cached
+    """(quantized relation, converged centroid dict): the ingest
+    artifact ``km-{k}`` shared by embed-kmeans-lloyd (which declares
+    it), embed-ann-ivfpq (whose IVF coarse quantizer it is, both at
+    K=8) and dedup-semdedup (same Lloyd machinery at its own finer
+    K). One artifact name per k, so a sweep alternating kmeans (K=8)
+    and semdedup (K=64) does not thrash the fit."""
+    return ingest_artifact(
+        f"km-{k}",
+        spark,
+        sf_dir,
+        lambda: _km_fit(spark, sf_dir, k, assign=assign, rounds=rounds),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -394,10 +380,21 @@ FROM q ORDER BY vec_id
 """
 
 
-# Parsed-expression cache per SparkContext (the _PHASH_EXPR_CACHE
-# contract): the 8*16 fold Columns are pure expression trees whose py4j
-# construction cost is worth paying once per JVM, not per invocation.
-_PQ_EXPR_CACHE: dict = {}
+def _pq_exprs() -> tuple:
+    """(subvector struct, argmin struct): the 8*16 fold Columns, pure
+    expression trees whose py4j construction is paid once per
+    SparkContext (:func:`session_memo`), not per invocation."""
+    subs = F.struct(
+        *[
+            F.transform(
+                F.slice("embedding", s * _PQ_DIM + 1, _PQ_DIM),
+                lambda x: x.cast("double"),
+            ).alias(f"sub{s}")
+            for s in range(_PQ_SUB)
+        ]
+    )
+    bests = F.struct(*[_pq_best(s).alias(f"b{s}") for s in range(_PQ_SUB)])
+    return subs, bests
 
 
 def _pq_best(s: int):
@@ -444,26 +441,7 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen survives at any K (the embed-random-projection janino
     lesson). Expression trees cache per SparkContext."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ck = spark.sparkContext.applicationId
-    cached = _PQ_EXPR_CACHE.get(ck)
-    if cached is None:
-        for k in [k for k in _PQ_EXPR_CACHE if k != ck]:
-            del _PQ_EXPR_CACHE[k]
-        subs = F.struct(
-            *[
-                F.transform(
-                    F.slice("embedding", s * _PQ_DIM + 1, _PQ_DIM),
-                    lambda x: x.cast("double"),
-                ).alias(f"sub{s}")
-                for s in range(_PQ_SUB)
-            ]
-        )
-        bests = F.struct(
-            *[_pq_best(s).alias(f"b{s}") for s in range(_PQ_SUB)]
-        )
-        cached = (subs, bests)
-        _PQ_EXPR_CACHE[ck] = cached
-    subs, bests = cached
+    subs, bests = session_memo("pq-exprs", spark, _pq_exprs)
     st0 = emb.select("vec_id", F.explode(F.array(subs)).alias("u"))
     st1 = st0.select("vec_id", F.explode(F.array(bests)).alias("bb"))
     err = F.col("bb.b0.d")
@@ -484,10 +462,6 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ_NPROBE = 2
 _IVFPQ_TOPK = 3
 _IVFPQ_NQ = 5  # query set: vec_id < 5 (the sim-search-topk convention)
-
-# (appId, sf_dir) -> localCheckpointed (vec_id, cluster, s, code) index
-# relation — the ingest-time artifact (the _PR_GRAPH_CACHE contract)
-_IVFPQ_CACHE: dict = {}
 
 
 def _ivfpq_oracle() -> str:
@@ -627,6 +601,7 @@ def _ivfpq_codes(asg: DataFrame, cents: dict) -> DataFrame:
 
 
 @query("embed-ann-ivfpq", oracle=_ivfpq_oracle())
+@plan_cached("embed-ann-ivfpq")
 def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I44: IVF-PQ approximate nearest neighbor with asymmetric
     distance computation (Jégou et al. 2011) — the composition the ANN
@@ -647,128 +622,38 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at scale: the corpus-side work (coarse assign + PQ
     encode, both MAP-ONLY against literal centroids/codebooks) is the
-    INGEST cost, paid once and cached here per (SparkContext, sf_dir)
-    like the kmeans model it extends; at query time the probe pick is
+    INGEST cost, paid once per corpus (an ingest artifact like the
+    kmeans model it extends); at query time the probe pick is
     metadata (queries x K distances), the ADC tables are
     queries x nprobe x 128 integers (broadcast), and candidates cross
     the wire as (query, cand, s, code) ids — the raw embedding column
     is never scanned per query, which is the entire IVF-PQ bargain
     (recall < 100% by construction, tuned by nprobe). At 10^9 vectors
     the corpus would be written bucketed by cell id so a probe is a
-    partition-pruned scan."""
-    from spark_file_mover_spark import checkpoints
+    partition-pruned scan.
 
-    # ADVICE r15: every _IVFPQ_CACHE entry is BYPASSED (read and write,
-    # no eviction either) under the plan-only tooling mode — a model/
-    # index/plan built through the substituted empty-leaf checkpoint
-    # inside _km_fit is tooling-shaped and must never serve production
-    # invocations (the sources.io.cached_plan rule).
-    lazy = checkpoints.LAZY_ACTIVE
-    # ADVICE r15: keyed on artifact_cache_key (appId + sf_dir + corpus
-    # fingerprint — the other r15 plan caches' contract) so an in-place
-    # corpus rewrite misses instead of serving a stale index/plan (the
-    # documented r8 cache-contract gap: (appId, sf_dir) alone only
-    # detected switching directories).
-    base = artifact_cache_key(spark, sf_dir)
-    # r15: probe pick, ADC tables and the candidate scoring joins are a
-    # pure PLAN over the cached index + expression fragments — cache
-    # the built DataFrame (the multimodal _ASSET_PLAN_CACHE discipline:
-    # construction once, execution per action). ~0.5 s of
-    # py4j/analysis per invocation before.
-    plan = None if lazy else _IVFPQ_CACHE.get((base, "plan"))
-    if plan is not None:
-        # fresh no-op projection — see sources.io.cached_plan
-        return plan.select("*")
+    The probe pick, ADC tables and candidate scoring joins are a pure
+    PLAN over the index and expression fragments, so the built
+    DataFrame is plan-cached (~0.5 s of py4j/analysis per invocation
+    before)."""
     qdf, cents = _km_model(spark, sf_dir)
     # The (cluster, PQ-code) relation IS the IVF-PQ index — the
     # artifact a deployment builds once at INGEST and every query
-    # reads. It persists (MEMORY_AND_DISK) and caches per
-    # (SparkContext, corpus) exactly like the kmeans model it extends;
-    # without this every query action re-ran the full corpus assign +
-    # encode once per DAG reference (~11 s/invocation at sf0.1 vs
-    # ~1 s with the index materialized).
-    index_key = (base, "index")
-    cached = None if lazy else _IVFPQ_CACHE.get(index_key)
-    if cached is None:
-        asg = _km_assign(qdf, cents).select("vec_id", "qv", "cluster")
-        if lazy:
-            # plan-only: bare lazy relation — no persist/count jobs,
-            # nothing cached, live entries untouched
-            cached = _ivfpq_codes(asg, cents)
-        else:
-            # one live (app, corpus) — stale checkpoints release via
-            # the ContextCleaner once dereferenced (the _KM_CACHE
-            # policy); sibling entries for the same corpus survive
-            for k in [k for k in _IVFPQ_CACHE if k[0] != base]:
-                del _IVFPQ_CACHE[k]
-            cached = _ivfpq_codes(asg, cents).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            cached.count()  # eager populate (probe + ADC both read it)
-            _IVFPQ_CACHE[index_key] = cached
-    codes = cached
-
+    # reads; without it every query action re-ran the full corpus
+    # assign + encode once per DAG reference (~11 s/invocation at
+    # sf0.1 vs ~1 s with the index materialized).
+    codes = ingest_artifact(
+        "ivfpq-index", spark, sf_dir, lambda: _ivfpq_index(qdf, cents)
+    )
     # query-side: the query set assigns AFTER the filter (5 rows, not
     # the corpus) — nprobe nearest cells per query, ties -> lower cid.
     # The probe/residual/ADC expression trees are name-based Columns
-    # (~4.5 s of py4j construction: 136 folds with literal arrays) and
-    # cache with the index (the _TIFF_EXPR_CACHE lesson: build once
-    # per context, measured 6.5 -> ~1.5 s per invocation).
-    frags = None if lazy else _IVFPQ_CACHE.get((base, "exprs"))
-    if frags is None:
-        cd = ", ".join(
-            _dist_structs_sql(
-                "qqv",
-                [
-                    (cid, [int(v) for v in cents[cid]])
-                    for cid in sorted(cents)
-                ],
-                "CAST(0 AS BIGINT)",
-                _long_lit,
-            )
-        )
-        # In integers (q - (c + cb))^2 == ((q - c) - cb)^2 exactly, so
-        # the query RESIDUAL vs the probed cell pins once behind a
-        # barrier and every ADC entry is a plain codebook fold over its
-        # slice (the _ivfpq_codes shape — far fewer nodes than
-        # reconstructing centroid+codebook per entry).
-        qres = (
-            f"zip_with(qqv, {_cent_lookup_sql(cents, key='cell')}, "
-            "(a, b) -> a - b)"
-        )
-        adct_entries = ", ".join(
-            "named_struct('s', CAST({s} AS INT), 'code', "
-            "CAST({j} AS BIGINT), 'pdist', {fold})".format(
-                s=s,
-                j=j,
-                fold=_dist_fold_sql(
-                    f"slice(qres, {s * _PQ_DIM + 1}, {_PQ_DIM})",
-                    [_pq_ival(s, j, d) for d in range(_PQ_DIM)],
-                    "CAST(0 AS BIGINT)",
-                    _long_lit,
-                ),
-            )
-            for s in range(_PQ_SUB)
-            for j in range(_PQ_CENTS)
-        )
-        frags = {
-            # nprobe pick with NO window shuffle: array_sort orders the
-            # (d, cid) structs lexicographically — exactly the
-            # dist-then-lower-cid rule — and slice keeps the first
-            # nprobe; the oracle keeps its ROW_NUMBER form so the two
-            # derivations stay independent. All three fragments parse
-            # from generated SQL in one JVM-side pass each (r8 — the
-            # py4j Column composition they replace measured ~4.5 s of
-            # driver latency per cold build).
-            "probe_cells": F.expr(
-                f"explode(slice(array_sort(array({cd})), 1, "
-                f"{_IVFPQ_NPROBE}))"
-            ),
-            "qres": F.expr(f"explode(array({qres}))"),
-            "adct": F.expr(f"explode(array({adct_entries}))"),
-        }
-        if not lazy:
-            _IVFPQ_CACHE[(base, "exprs")] = frags
+    # (~4.5 s of py4j construction: 136 folds with literal arrays)
+    # over the centroid literals, so they are built once per corpus
+    # beside the index (measured 6.5 -> ~1.5 s per invocation).
+    frags = ingest_artifact(
+        "ivfpq-exprs", spark, sf_dir, lambda: _ivfpq_exprs(cents)
+    )
 
     # plain projection — the probe pick below derives its own cell
     # distances, so running _km_assign here would pay K assignment
@@ -822,9 +707,76 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("query_id", "rank")
     )
-    if not lazy:
-        _IVFPQ_CACHE[(base, "plan")] = out
     return out
+
+
+def _ivfpq_index(qdf: DataFrame, cents: dict) -> DataFrame:
+    """The persisted (vec_id, cluster, s, code) IVF-PQ index relation."""
+    from spark_file_mover_spark import checkpoints
+
+    asg = _km_assign(qdf, cents).select("vec_id", "qv", "cluster")
+    codes = _ivfpq_codes(asg, cents)
+    if checkpoints.LAZY_ACTIVE:
+        return codes  # plan-only: no persist/count jobs
+    codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
+    codes.count()  # eager populate (probe + ADC both read it)
+    return codes
+
+
+def _ivfpq_exprs(cents: dict) -> dict:
+    """Probe-pick, query-residual and ADC-table generators over the
+    centroid literals ``cents``."""
+    cd = ", ".join(
+        _dist_structs_sql(
+            "qqv",
+            [
+                (cid, [int(v) for v in cents[cid]])
+                for cid in sorted(cents)
+            ],
+            "CAST(0 AS BIGINT)",
+            _long_lit,
+        )
+    )
+    # In integers (q - (c + cb))^2 == ((q - c) - cb)^2 exactly, so
+    # the query RESIDUAL vs the probed cell pins once behind a
+    # barrier and every ADC entry is a plain codebook fold over its
+    # slice (the _ivfpq_codes shape — far fewer nodes than
+    # reconstructing centroid+codebook per entry).
+    qres = (
+        f"zip_with(qqv, {_cent_lookup_sql(cents, key='cell')}, "
+        "(a, b) -> a - b)"
+    )
+    adct_entries = ", ".join(
+        "named_struct('s', CAST({s} AS INT), 'code', "
+        "CAST({j} AS BIGINT), 'pdist', {fold})".format(
+            s=s,
+            j=j,
+            fold=_dist_fold_sql(
+                f"slice(qres, {s * _PQ_DIM + 1}, {_PQ_DIM})",
+                [_pq_ival(s, j, d) for d in range(_PQ_DIM)],
+                "CAST(0 AS BIGINT)",
+                _long_lit,
+            ),
+        )
+        for s in range(_PQ_SUB)
+        for j in range(_PQ_CENTS)
+    )
+    return {
+        # nprobe pick with NO window shuffle: array_sort orders the
+        # (d, cid) structs lexicographically — exactly the
+        # dist-then-lower-cid rule — and slice keeps the first
+        # nprobe; the oracle keeps its ROW_NUMBER form so the two
+        # derivations stay independent. All three fragments parse
+        # from generated SQL in one JVM-side pass each (r8 — the
+        # py4j Column composition they replace measured ~4.5 s of
+        # driver latency per cold build).
+        "probe_cells": F.expr(
+            f"explode(slice(array_sort(array({cd})), 1, "
+            f"{_IVFPQ_NPROBE}))"
+        ),
+        "qres": F.expr(f"explode(array({qres}))"),
+        "adct": F.expr(f"explode(array({adct_entries}))"),
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -932,24 +884,24 @@ def _sd_cluster_pairs(pdf):
     )
 
 
-# ((artifact_cache_key, k), side relation) — the live checkpointed
-# (vec_id, cluster, qs) relation the per-cluster pair stage consumes. The cluster ASSIGNMENT is the expensive per-invocation step
-# (a K=64 literal-centroid argmin fold over every vector — measured
-# 1.1 s/invocation at sf0.1 even warm), and it is a pure function of
-# the input files: a SemDeDup deployment assigns clusters once at
-# ingest, so the relation caches under the materialized-view contract
-# (the sim-search-ivf "assigned" precedent — truncated-lineage
-# executor-loss trade documented there).
-_SD_SIDE_CACHE: dict = {}
-
-
 def _sd_side(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
-    global _SD_SIDE_CACHE
-    cache_key = (artifact_cache_key(spark, sf_dir), _SD_K)
-    cached = _SD_SIDE_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    _SD_SIDE_CACHE.clear()  # one live corpus (the _KM_CACHE policy)
+    """The persisted (vec_id, cluster, qs) relation the per-cluster
+    pair stage consumes. The cluster ASSIGNMENT is the expensive
+    per-invocation step (a K=64 literal-centroid argmin fold over every
+    vector — measured 1.1 s/invocation at sf0.1 even warm), and it is a
+    pure function of the input files: a SemDeDup deployment assigns
+    clusters once at ingest, so the relation is an ingest artifact."""
+    return ingest_artifact(
+        "semdedup-side",
+        spark,
+        sf_dir,
+        lambda: _sd_side_build(spark, sf_dir, emb),
+    )
+
+
+def _sd_side_build(
+    spark: SparkSession, sf_dir: str, emb: DataFrame
+) -> DataFrame:
     qdf, cents = _km_model(
         spark, sf_dir, _SD_K, assign=_np_assign, rounds=_SD_ROUNDS
     )
@@ -963,7 +915,6 @@ def _sd_side(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     )
     side = asg.join(qs, "vec_id").persist(StorageLevel.MEMORY_AND_DISK)
     side.count()  # eager populate (gemm stage reads it per cluster)
-    _SD_SIDE_CACHE[cache_key] = side
     return side
 
 

@@ -43,10 +43,11 @@ from spark_file_mover_spark.llm.text import (
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.numerics import snap
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
+    ingest_artifact,
     load_table,
     plan_cached,
     scan_partitions,
+    session_memo,
 )
 
 # ---------------------------------------------------------------------------
@@ -117,54 +118,30 @@ _MAX_BUCKET = 100  # drop degenerate buckets: near-universal signatures
 _rng = random.Random(42)
 _PERMS = [(_rng.randrange(1, 1 << 30), _rng.randrange(0, _P)) for _ in range(_BANDS * _ROWS)]
 
-# ((appId, sf_dir), bands) — the live persisted banded-signature relation
-# (the phash-bands materialized-view contract: a pure function of the
-# immutable input files, reused while the key matches, unpersisted and
-# rebuilt when the corpus or context changes)
-_last_bands = None
-
-# ((appId, sf_dir), nh_rel) — the live checkpointed normalized-hash
-# relation the minhash audit consumes (same contract)
-_last_nh_rel = None
-
-# ((appId, sf_dir), (m_bits, bloom)) — the live persisted cross-corpus
-# Bloom summary (same contract)
-_last_bloom = None
-
-# Reusable unresolved-expression fragments, built once per SparkContext
-# (py4j Column construction is pure driver latency — the k permuted-min
-# aggregates plus the band-struct array cost ~150 gateway round trips,
-# a measured slice of the ~0.6 s plan build this key paid per
-# invocation). Unresolved Columns are immutable expression trees bound
-# to no plan, so reuse across queries is safe; the cache keys on
-# applicationId (a unique string per context — id() would be recyclable)
-# so a restarted JVM rebuilds its fragments.
-_EXPR_CACHE: dict[str, dict[str, object]] = {}
-
-
 def _expr_fragments(spark: SparkSession) -> dict:
-    app = spark.sparkContext.applicationId
-    frags = _EXPR_CACHE.get(app)
-    if frags is None:
-        _EXPR_CACHE.clear()  # at most one live context per process
-        aggs = [
-            F.min(F.pmod(a * F.col("h") + b, F.lit(_P))).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_PERMS)
+    """The k permuted-min aggregates and the band-struct array, built
+    once per SparkContext: ~150 py4j round trips, a measured slice of
+    the ~0.6 s plan build this key paid per invocation."""
+    return session_memo("minhash-exprs", spark, _minhash_exprs)
+
+
+def _minhash_exprs() -> dict:
+    aggs = [
+        F.min(F.pmod(a * F.col("h") + b, F.lit(_P))).alias(f"mh{i}")
+        for i, (a, b) in enumerate(_PERMS)
+    ]
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(
+                    *[F.col(f"mh{b * _ROWS + r}") for r in range(_ROWS)]
+                ).alias("sig"),
+            )
+            for b in range(_BANDS)
         ]
-        band_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        *[F.col(f"mh{b * _ROWS + r}") for r in range(_ROWS)]
-                    ).alias("sig"),
-                )
-                for b in range(_BANDS)
-            ]
-        )
-        frags = {"aggs": aggs, "band_arr": band_arr}
-        _EXPR_CACHE[app] = frags
-    return frags
+    )
+    return {"aggs": aggs, "band_arr": band_arr}
 
 
 def _minhash_signatures(d: DataFrame) -> DataFrame:
@@ -247,10 +224,9 @@ def _norm_hash() -> F.Column:
 
 
 def _nh_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared ``(doc_id, nh)`` normalized-hash relation, persisted
-    per (appId, sf_dir) under the r8 materialized-view contract — a
-    pure function of the input files, so the corpus pass that builds it
-    is paid ONCE and every consumer (the minhash exact-edge union, the
+    """The shared ``(doc_id, nh)`` normalized-hash relation, a persisted
+    ingest artifact — the corpus pass that builds it is paid ONCE per
+    corpus and every consumer (the minhash exact-edge union, the
     signature audit, cross-corpus bloom's reference/probe split) rides
     the cache. persist(MEMORY_AND_DISK) keeps replayable lineage:
     executor loss between invocations recomputes instead of failing
@@ -259,17 +235,16 @@ def _nh_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan previously paid FOUR same-signature documents scans (bloom
     build, probe, verify reference, and the un-persisted candidate
     relation consumed twice), caught by the registry-wide scan gate."""
-    global _last_nh_rel
-    nh_key = artifact_cache_key(spark, sf_dir)
-    if _last_nh_rel is not None and _last_nh_rel[0] == nh_key:
-        return _last_nh_rel[1]
-    d = load_table(spark, sf_dir, "documents")
-    nh_rel = d.select("doc_id", _norm_hash().alias("nh")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    nh_rel.count()  # eager: exact edges + signatures both read it
-    _last_nh_rel = (nh_key, nh_rel)
-    return nh_rel
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        nh_rel = d.select("doc_id", _norm_hash().alias("nh")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        nh_rel.count()  # eager: exact edges + signatures both read it
+        return nh_rel
+
+    return ingest_artifact("minhash-nh", spark, sf_dir, build)
 
 
 def minhash_clusters(
@@ -308,14 +283,10 @@ def minhash_clusters(
     LSH practice and what keeps the pair stage linear in practice (the
     round-1 formulation without the cap went quadratic on exactly this).
 
-    Cache contract (r8, the phash-bands materialized-view pattern): the
-    banded-signature relation is a pure function of the immutable input
-    files, so it persists under an (appId, sf_dir) key and repeat
+    The banded-signature relation is an ingest artifact: repeat
     invocations against the same corpus skip the shingle explode + 12
     min-aggregates entirely — the signature stage is the INGEST cost a
-    deployment pays once. A different sf_dir or restarted context
-    unpersists and rebuilds; invocations are not concurrency-safe
-    (serial driver/bench use, the intended consumers, is unaffected).
+    deployment pays once.
     """
     d = load_table(spark, sf_dir, "documents")
     # exact-dup edges: doc <-> its normalized-text group's min doc_id;
@@ -350,7 +321,6 @@ def _minhash_cluster_sparse(
     exact-dup edge). Split out so the audit query can complete it against
     its own already-materialized ``nh_rel`` instead of paying a second
     completion join."""
-    global _last_bands
     from pyspark.sql import Window as W
 
     # exact edges via ONE window over nh: min(doc_id) per normalized-text
@@ -374,23 +344,19 @@ def _minhash_cluster_sparse(
         .select("e.doc_id", "e.nb")
     )
     # bands is consumed three times (guard window + both sides of the
-    # self-join) AND across invocations (keyed on (appId, sf_dir) — a
-    # pure function of the immutable input files, so repeat invocations
-    # against the same corpus reuse it instead of re-running the shingle
-    # explode + signature aggregation). MEMORY_AND_DISK: spills instead
-    # of OOM on wide corpora. The previous key's relation is released
-    # here — the returned plan is LAZY, so release cannot happen at the
-    # end of the call without forcing a blocking materialization on the
-    # hot path (r02 bench leaked one relation per invocation before).
-    bands_key = artifact_cache_key(spark, sf_dir)
-    if _last_bands is not None and _last_bands[0] == bands_key:
-        return _minhash_neighbor_mins(_last_bands[1], exact_edges)
-    if _last_bands is not None:
-        try:
-            _last_bands[1].unpersist()
-        except Exception:
-            pass  # previous relation may belong to a stopped SparkSession
-        _last_bands = None
+    # self-join) AND across invocations (an ingest artifact).
+    # MEMORY_AND_DISK: spills instead of OOM on wide corpora.
+    bands = ingest_artifact(
+        "minhash-bands", spark, sf_dir, lambda: _minhash_bands(spark, d)
+    )
+    return _minhash_neighbor_mins(bands, exact_edges)
+
+
+def _minhash_bands(spark: SparkSession, d: DataFrame) -> DataFrame:
+    """``(doc_id, band, sig)``: the persisted, bucket-guarded banded
+    signature relation."""
+    from pyspark.sql import Window as W
+
     sig = _minhash_signatures(d)
 
     # Oversized-bucket guard, window form, INSIDE the cached relation
@@ -411,7 +377,7 @@ def _minhash_cluster_sparse(
     # corpora where that mass dominates should flip back to the
     # aggregate guard; the pair stage stays linear either way.
     w_bucket = W.partitionBy("band", "sig")
-    cached = (
+    return (
         sig.select(
             "doc_id",
             F.explode(_expr_fragments(spark)["band_arr"]).alias("bs"),
@@ -422,8 +388,6 @@ def _minhash_cluster_sparse(
         .drop("bn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _last_bands = (bands_key, cached)
-    return _minhash_neighbor_mins(cached, exact_edges)
 
 
 def _minhash_neighbor_mins(
@@ -712,11 +676,6 @@ FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id
 """
 
 
-#: (artifact_cache_key, labels DataFrame) for the last-built closure —
-#: the per-(app, sf_dir) paid-once artifact cache (minhash precedent).
-_last_components = None
-
-
 @query("dedup-components", oracle=_COMPONENTS_ORACLE)
 @plan_cached("dedup-components")
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -734,21 +693,20 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream stays lazy.
 
     The converged LABEL relation (two longs per clustered doc) is the
-    paid-once ingest artifact of this pipeline — the minhash-signature
-    / IVF-index precedent: it is already localCheckpoint-materialized
-    by :func:`connected_components`, so it is cached per
-    (app, sf_dir, corpus fingerprint) and re-invocations pay only the
-    final documents join, exactly like a production dedup run reads
-    the closure it wrote at ingest instead of re-flooding the graph.
+    paid-once ingest artifact of this pipeline, already
+    localCheckpoint-materialized by :func:`connected_components`, so
+    re-invocations pay only the final documents join, exactly like a
+    production dedup run reads the closure it wrote at ingest instead
+    of re-flooding the graph.
     """
-    global _last_components
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if _last_components is not None and _last_components[0] == cache_key:
-        labels = _last_components[1]
-    else:
-        pairs = dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
-        labels = connected_components(pairs)
-        _last_components = (cache_key, labels)
+    labels = ingest_artifact(
+        "components-labels",
+        spark,
+        sf_dir,
+        lambda: connected_components(
+            dedup_ngram_jaccard(spark, sf_dir).select("a", "b")
+        ),
+    )
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return (
         d.join(labels, "doc_id", "left")
@@ -886,11 +844,6 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
 """
 
 
-# ((appId, corpus fingerprint), expl) — the live persisted exploded
-# gram-hash relation (the _last_cont_er contract)
-_last_jac_expl = None
-
-
 @query("dedup-ngram-jaccard", oracle=_JACCARD_ORACLE)
 @plan_cached("dedup-ngram-jaccard")
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,33 +865,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, so |A| and |B| fall out of the SAME pair aggregate — the
     two size joins are deleted outright. 8 scans + 3 joins → 1 scan +
     1 join. And the relation is a pure function of the immutable
-    corpus — scan, tokenize, hash are the INGEST cost — so it
-    persists per (SparkContext, corpus) exactly like text-
-    containment's guarded shingles (one live entry, replayable
-    lineage); the pair join + Jaccard scoring — the verify operator —
+    corpus — scan, tokenize, hash are the INGEST cost — so it is a
+    persisted ingest artifact like text-containment's guarded
+    shingles; the pair join + Jaccard scoring — the verify operator —
     run on every invocation."""
-    global _last_jac_expl
     from spark_file_mover_spark import checkpoints
 
-    # ADVICE r15: the persisted ingest relation is bypassed in BOTH
-    # directions under the plan-only tooling mode — no corpus tokenize
-    # jobs from dump tooling (the r11 zero-jobs invariant), no
-    # tooling-shaped entry leaking into production hits.
-    lazy = checkpoints.LAZY_ACTIVE
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if (
-        not lazy
-        and _last_jac_expl is not None
-        and _last_jac_expl[0] == cache_key
-    ):
-        expl = _last_jac_expl[1]
-    else:
-        if _last_jac_expl is not None and not lazy:
-            try:  # ADVICE r15: release the stale blocks (the _tf_cache
-                _last_jac_expl[1].unpersist()  # eviction pattern)
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_jac_expl = None
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         grams = F.array_distinct(
             F.slice(toks(), 1, 20)
@@ -953,10 +886,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id", "lang", "source", "n", F.xxhash64("gs").alias("g")
         )
-        if not lazy:
-            expl = expl.persist(StorageLevel.MEMORY_AND_DISK)
-            expl.count()  # eager: pay the ingest tokenize once
-            _last_jac_expl = (cache_key, expl)
+        if checkpoints.LAZY_ACTIVE:
+            return expl  # plan-only: no corpus tokenize jobs
+        expl = expl.persist(StorageLevel.MEMORY_AND_DISK)
+        expl.count()  # eager: pay the ingest tokenize once
+        return expl
+
+    expl = ingest_artifact("jaccard-grams", spark, sf_dir, build)
     inter = (
         expl.alias("a")
         .join(
@@ -1130,16 +1066,6 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_K = 5  # k-gram width for span detection
 
 
-# ((appId, sf_dir), (t, g, dp)) — the live persisted span-family
-# relations (tokenized view, id-only gram hashes, duplicated-gram
-# positions): pure functions of the immutable input files, so they
-# follow the minhash/phash-bands materialized-view contract — reused
-# across invocations while the key matches, unpersisted and rebuilt
-# when the corpus or context changes. Serial driver/bench use, not
-# concurrency-safe.
-_span_cache = None
-
-
 def _span_shared(spark: SparkSession, sf_dir: str):
     """(t, g, dp): the persisted relations both span-family keys start
     from.
@@ -1158,9 +1084,9 @@ def _span_shared(spark: SparkSession, sf_dir: str):
     (:func:`_span_dup_positions` — the dup aggregate + semi-join run
     once at build, not per key).
 
-    PERSISTENCE (r8, the (app, sf_dir) materialized-view contract —
-    through r7 the relations were rebuilt and the previous
-    invocation's released on every call): the cutting pass consumes
+    PERSISTENCE (one ingest artifact — through r7 the relations were
+    rebuilt and the previous invocation's released on every call):
+    the cutting pass consumes
     ``t`` twice (gram builder, final doc-local rebuild) and the
     marking pass twice; ``dp`` feeds both keys, which in driver/bench
     reality run back to back over the same corpus — tokenization, gram
@@ -1169,17 +1095,12 @@ def _span_shared(spark: SparkSession, sf_dir: str):
     persist-g-only 1.18 s min, with the cold first rep 1.2 vs 5.8 s.
     Flip to recompute if cache pressure ever dominates — results are
     identical either way."""
-    global _span_cache
-    key = artifact_cache_key(spark, sf_dir)
-    if _span_cache is not None and _span_cache[0] == key:
-        return _span_cache[1]
-    if _span_cache is not None:
-        for rel in _span_cache[1]:
-            try:
-                rel.unpersist()
-            except Exception:
-                pass  # previous relations may belong to a stopped session
-        _span_cache = None
+    return ingest_artifact(
+        "span-relations", spark, sf_dir, lambda: _span_build(spark, sf_dir)
+    )
+
+
+def _span_build(spark: SparkSession, sf_dir: str):
     d = load_table(spark, sf_dir, "documents")
     t = d.select("doc_id", "text")
     par = spark.sparkContext.defaultParallelism
@@ -1195,7 +1116,6 @@ def _span_shared(spark: SparkSession, sf_dir: str):
     )
     g = _span_gram_relation(t).persist(StorageLevel.MEMORY_AND_DISK)
     dp = _span_dup_positions(g).persist(StorageLevel.MEMORY_AND_DISK)
-    _span_cache = (key, (t, g, dp))
     return t, g, dp
 
 
@@ -1548,11 +1468,9 @@ def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The (m_bits, bitmap) pair is THE maintained corpus summary this
     key's incremental premise is about, and it is a pure function of
-    the reference partition — so it persists per (appId, sf_dir) under
-    the r8 materialized-view contract: the sizing count and the bitmap
-    aggregate run once per corpus, and repeat invocations pay only the
-    probe + verify joins."""
-    global _last_bloom
+    the reference partition — so it is an ingest artifact: the sizing
+    count and the bitmap aggregate run once per corpus, and repeat
+    invocations pay only the probe + verify joins."""
     # r12: ride the shared persisted (doc_id, nh) relation — the cold
     # plan previously re-scanned documents four times (registry-wide
     # scan-gate catch); now the corpus pass is the one _nh_relation
@@ -1569,17 +1487,7 @@ def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    bloom_key = artifact_cache_key(spark, sf_dir)
-    if _last_bloom is not None and _last_bloom[0] == bloom_key:
-        m_bits, bloom = _last_bloom[1]
-    else:
-        if _last_bloom is not None:
-            try:
-                _last_bloom[1][1].unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_bloom = None
-
+    def build():
         n_ref = ref.count()
         m_bits = min(
             _BLOOM_MAX_BITS,
@@ -1600,7 +1508,9 @@ def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.bit_or("bit").alias("bitmap"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _last_bloom = (bloom_key, (m_bits, bloom))
+        return m_bits, bloom
+
+    m_bits, bloom = ingest_artifact("cross-bloom", spark, sf_dir, build)
     pos_arr = bloom_positions(m_bits)
     ppos = probe.select(
         "doc_id", "nh", F.explode(pos_arr).alias("pos")
@@ -1738,18 +1648,20 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange vs Jaccard's a<b — the price of an asymmetric
     measure, paid in ids.
 
-    The guarded shingle relation ``er`` is a pure function of the
-    immutable input files, so it caches per (appId, sf_dir) — the
-    minhash/phash/span materialized-view contract (r8): scan,
-    tokenization, gram hashing and the hot-shingle guard are the
-    ingest cost; repeat invocations pay only the pair join + ranking.
-    Checkpointed blocks of an evicted entry release via the
-    ContextCleaner when the reference drops."""
-    global _last_cont_er
-    cache_key = artifact_cache_key(spark, sf_dir)
-    if _last_cont_er is not None and _last_cont_er[0] == cache_key:
-        return _containment_query(_last_cont_er[1])
-    _last_cont_er = None
+    The guarded shingle relation ``er`` is an ingest artifact
+    (:func:`_containment_shingles`): scan, tokenization, gram hashing
+    and the hot-shingle guard are the ingest cost; repeat invocations
+    pay only the pair join + ranking."""
+    er = ingest_artifact(
+        "containment-shingles",
+        spark,
+        sf_dir,
+        lambda: _containment_shingles(spark, sf_dir),
+    )
+    return _containment_query(er)
+
+
+def _containment_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # pin the token array behind a Generate barrier BEFORE the shingle
     # lambda touches it: element_at inside transform() inlines its
@@ -1808,20 +1720,15 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("dfg") <= _CONT_MAXDF)
         .drop("dfg")
-        # three consumers (both join sides + sizes) plus the cross-
-        # invocation cache; persist(MEMORY_AND_DISK) keeps replayable
+        # three consumers (both join sides + sizes) plus later
+        # invocations; persist(MEMORY_AND_DISK) keeps replayable
         # lineage so executor loss between invocations recomputes
         # instead of failing later hits (see llm/similarity.py's IVF
-        # cache note); blocks release when the cache evicts
+        # cache note)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     er.count()  # eager: both join sides + sizes read er in one job
-    _last_cont_er = (cache_key, er)
-    return _containment_query(er)
-
-
-# ((appId, sf_dir), er) — the live checkpointed guarded-shingle relation
-_last_cont_er = None
+    return er
 
 
 def _containment_query(er: DataFrame) -> DataFrame:
@@ -1881,9 +1788,6 @@ def _containment_query(er: DataFrame) -> DataFrame:
 # _ED_MAX_DOCS_PER_FP docs are dropped before the pair join — the
 # text-containment hot-shingle guard, fingerprint-flavored (a boilerplate
 # fingerprint in d docs is C(d,2) pairs).
-# ((appId, corpus fingerprint), fpc) — the live persisted guarded
-# winnowing-fingerprint relation (the _last_bands contract)
-_last_edfp = None
 
 _ED_MIN_SHARED = 3
 _ED_MAX_DOCS_PER_FP = 32
@@ -2044,21 +1948,10 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-(_WIN_W - 1), W.currentRow)
     )
     # The guarded fingerprint relation is consumed twice (both pair-join
-    # sides) and across invocations — a pure function of the immutable
-    # corpus, cached per (appId, corpus fingerprint) like the minhash
-    # bands relation; the hot-fingerprint guard sits INSIDE the cache
+    # sides) and across invocations — an ingest artifact like the
+    # minhash bands; the hot-fingerprint guard sits INSIDE the persist
     # boundary (window form — its h40 exchange runs once, at populate).
-    global _last_edfp
-    ed_key = artifact_cache_key(spark, sf_dir)
-    if _last_edfp is not None and _last_edfp[0] == ed_key:
-        fpc = _last_edfp[1]
-    else:
-        if _last_edfp is not None:
-            try:
-                _last_edfp[1].unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_edfp = None
+    def build() -> DataFrame:
         fp = (
             g.select("doc_id", "pos", F.min(key).over(w).alias("kmin"))
             .filter(F.col("pos") >= _WIN_W - 1)
@@ -2068,7 +1961,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        fpc = (
+        return (
             fp.withColumn(
                 "nd", F.count("*").over(W.partitionBy("h40"))
             )
@@ -2076,7 +1969,8 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("nd")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _last_edfp = (ed_key, fpc)
+
+    fpc = ingest_artifact("edit-distance-fingerprints", spark, sf_dir, build)
     cand = (
         fpc.alias("a")
         .join(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
+    ingest_artifact,
     load_table,
     plan_cached,
 )
@@ -148,35 +148,22 @@ ORDER BY doc_id, rk
 """
 
 
-# ((appId, sf_dir), tf) — the live persisted (doc_id, tok, tf) term-
-# frequency relation BOTH lexical-statistics keys start from (tfidf's
-# df and the perplexity LM's freq/N each derive from it downstream):
-# a pure function of the immutable input files under the r8
-# materialized-view contract — the corpus explode + count is the
-# ingest cost, paid once per corpus.
-_tf_cache = None
-
-
 def _tf_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _tf_cache
-    key = artifact_cache_key(spark, sf_dir)
-    if _tf_cache is not None and _tf_cache[0] == key:
-        return _tf_cache[1]
-    if _tf_cache is not None:
-        try:
-            _tf_cache[1].unpersist()
-        except Exception:
-            pass  # previous relation may belong to a stopped session
-        _tf_cache = None
-    d = load_table(spark, sf_dir, "documents")
-    tf = (
-        d.select("doc_id", F.explode(toks()).alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _tf_cache = (key, tf)
-    return tf
+    """The persisted (doc_id, tok, tf) term-frequency relation BOTH
+    lexical-statistics keys start from (tfidf's df and the perplexity
+    LM's freq/N each derive from it downstream) — an ingest artifact:
+    the corpus explode + count is paid once per corpus."""
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        return (
+            d.select("doc_id", F.explode(toks()).alias("tok"))
+            .groupBy("doc_id", "tok")
+            .agg(F.count("*").alias("tf"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
+    return ingest_artifact("tf", spark, sf_dir, build)
 
 
 @query("text-tfidf-topk", oracle=_TFIDF_ORACLE)
@@ -406,23 +393,18 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ((artifact_cache_key), (doc_id, n_tok, xent) relation) — the scored
-# LM-quality relation, the tf-family ingest artifact one level up:
-# text-perplexity-proxy thresholds it globally and text-ccnet-buckets
-# terciles it per language, and in a deployment the quality score IS a
-# stored column written at ingest, not recomputed per consumer. Same
-# contract as every cached artifact (pure function of the input files,
-# fingerprinted key, truncated-lineage trade documented at the IVF
-# cache).
-_xent_cache = None
-
-
 def _xent_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _xent_cache
-    key = artifact_cache_key(spark, sf_dir)
-    if _xent_cache is not None and _xent_cache[0] == key:
-        return _xent_cache[1]
-    _xent_cache = None
+    """The scored (doc_id, n_tok, xent) LM-quality relation, the
+    tf-family ingest artifact one level up: text-perplexity-proxy
+    thresholds it globally and text-ccnet-buckets terciles it per
+    language, and in a deployment the quality score IS a stored column
+    written at ingest, not recomputed per consumer."""
+    return ingest_artifact(
+        "xent", spark, sf_dir, lambda: _xent_build(spark, sf_dir)
+    )
+
+
+def _xent_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tf = _tf_relation(spark, sf_dir)
     freq = tf.groupBy("tok").agg(F.sum("tf").alias("cnt"))
@@ -462,7 +444,6 @@ def _xent_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     scored.count()  # eager populate (perplexity + ccnet both read it)
-    _xent_cache = (key, scored)
     return scored
 
 

@@ -30,55 +30,49 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import artifact_cache_key, load_table
+from spark_file_mover_spark.sources.io import (
+    artifact_cache_key,
+    cached_plan,
+    ingest_artifact,
+    load_table,
+    plan_cached,
+    session_memo,
+)
 
 # ---------------------------------------------------------------------------
-# Synthetic asset corpora, materialized once per (SparkContext, sf_dir)
+# Synthetic asset corpora, materialized once per (SparkContext, corpus)
 # ---------------------------------------------------------------------------
 
-# (applicationId, family, sf_dir) -> parquet dir. Single live artifact
-# per family per app (the scan-dpp-join / sink-compact setup lifecycle):
-# a stale key — dead SparkContext, or the same family pointed at another
-# sf_dir — rmtree-evicts its directory before the new one lands.
+# (artifact_cache_key, family) -> parquet dir. Single live directory
+# per family (the scan-dpp-join / sink-compact setup lifecycle): a stale
+# key — dead SparkContext, or the family pointed at another sf_dir or a
+# rewritten corpus — rmtree-evicts its directory before the new one
+# lands.
 _ASSET_DIR_CACHE: dict[tuple, str] = {}
-
-# ((appId, corpus fingerprint), family) -> built (lazy) parse DataFrame.
-# PLAN cache, not result cache: the header walk executes on EVERY
-# action against the on-disk corpus — only the Column-tree construction
-# (~100 py4j round trips + one eager analysis per key, profiled at
-# 0.3-0.7 s/invocation) is paid once per (SparkContext, corpus), the
-# _TIFF_EXPR_CACHE / IVF-PQ-fragment discipline applied to the whole
-# projection. One live entry per family (the _ASSET_DIR_CACHE policy).
-_ASSET_PLAN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _asset_query(
     spark: SparkSession, sf_dir: str, family: str, build, parse
 ) -> DataFrame:
     """Parsed-metadata query over a family's asset corpus: corpus via
-    :func:`_asset_corpus` (written once per context), parse plan built
-    once per (SparkContext, corpus) and re-executed per action.
-    ``build`` is the zero-arg corpus synthesizer; ``parse`` maps the
-    corpus scan to the declared output relation."""
-    key = (artifact_cache_key(spark, sf_dir), family)
-    df = _ASSET_PLAN_CACHE.get(key)
-    if df is None:
-        for k in [
-            k for k in _ASSET_PLAN_CACHE if k[1] == family and k != key
-        ]:
-            del _ASSET_PLAN_CACHE[k]
-        df = parse(_asset_corpus(spark, sf_dir, family, build))
-        _ASSET_PLAN_CACHE[key] = df
-        return df
-    # HIT: fresh no-op projection, not the stored (possibly executed)
-    # Dataset — see sources.io.cached_plan for why (AQE final-plan
-    # rendering would make explain order-dependent)
-    return df.select("*")
+    :func:`_asset_corpus` (written once per corpus), parse plan built
+    once per (SparkContext, corpus) by :func:`cached_plan` and
+    re-executed per action — the header walk runs on EVERY action,
+    only its Column-tree construction (~100 py4j round trips + one
+    eager analysis, 0.3-0.7 s/invocation) is paid once. ``build`` is
+    the zero-arg corpus synthesizer; ``parse`` maps the corpus scan to
+    the declared output relation."""
+    return cached_plan(
+        spark,
+        sf_dir,
+        f"assets-{family}",
+        lambda: parse(_asset_corpus(spark, sf_dir, family, build)),
+    )
 
 
 def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
     """Return the synthetic ``(asset_id, content)`` asset corpus as a
-    parquet-backed relation, written ONCE per (SparkContext, sf_dir).
+    parquet-backed relation, written ONCE per (SparkContext, corpus).
 
     The asset bytes are a pure function of the immutable documents
     input — in a real pipeline, corpus ingest lands the binary assets
@@ -95,14 +89,14 @@ def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
     """
     import shutil
 
-    app = spark.sparkContext.applicationId
-    key = (app, family, sf_dir)
+    corpus = artifact_cache_key(spark, sf_dir)
+    key = (corpus, family)
     path = _ASSET_DIR_CACHE.get(key)
     if path is None:
         stale = [
             k
             for k in _ASSET_DIR_CACHE
-            if k[0] != app or (k[1] == family and k != key)
+            if k[0][0] != corpus[0] or (k[1] == family and k != key)
         ]
         for k in stale:
             shutil.rmtree(_ASSET_DIR_CACHE.pop(k), ignore_errors=True)
@@ -111,6 +105,21 @@ def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
         build().write.parquet(path)
         _ASSET_DIR_CACHE[key] = path
     return spark.read.parquet(path)
+
+
+def _hex_corpus(
+    spark: SparkSession, sf_dir: str, family: str, payload_hex
+) -> DataFrame:
+    """``(asset_id, content)`` per document: the bytes of the hex
+    Column the zero-arg ``payload_hex`` builds from ``doc_id`` — the
+    synthesizer behind several families' :func:`_asset_query`. The
+    Column is memoized per SparkContext (:func:`session_memo`): its
+    py4j construction, not its execution, was the synthesis cost."""
+    hexes = session_memo(f"{family}-synth", spark, payload_hex)
+    return load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("asset_id"),
+        F.unhex(hexes).alias("content"),
+    )
 
 
 def decode_image(data: bytes) -> "object":
@@ -512,12 +521,12 @@ def with_wav_meta(
 
     Driver latency: every hop applies the SAME unresolved expression
     over ``(content, _w)``, so the hop struct is built once and reused
-    for all hops, and the fragments are cached per SparkContext (the
-    dedup ``_EXPR_CACHE`` pattern) — py4j Column construction for the
+    for all hops, and the fragments are memoized per SparkContext
+    (:func:`session_memo`) — py4j Column construction for the
     ~60 byte-read nodes was the dominant per-invocation cost
     (~1.2 s build+analyze vs ~0.7 s execute at sf0.1 before the
     cache)."""
-    frags = _wav_fragments(df.sparkSession, content, max_chunks)
+    frags = _wav_fragments(df.sparkSession, content)
     passthrough = [col for col in df.columns]
     cur = df.select("*", frags["init"].alias("_w"))
     for _ in range(max_chunks):
@@ -533,23 +542,13 @@ def with_wav_meta(
     )
 
 
-# Unresolved-fragment cache for the WAV walk + the audio-meta synthesis
-# column, keyed on applicationId (same contract as dedup._EXPR_CACHE:
-# unresolved Columns are immutable trees bound to no plan, safe to reuse
-# across queries; a restarted JVM rebuilds).
-_WAV_EXPR_CACHE: dict[tuple, dict] = {}
+def _wav_fragments(spark: SparkSession, content: str) -> dict:
+    return session_memo(
+        f"wav-walk-{content}", spark, lambda: _wav_walk(content)
+    )
 
 
-def _wav_fragments(spark: SparkSession, content: str, max_chunks: int) -> dict:
-    key = (spark.sparkContext.applicationId, content, max_chunks)
-    frags = _WAV_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    stale = [k for k in _WAV_EXPR_CACHE if k[0] != key[0]]
-    for k in stale:  # evict only dead-context keys: a clear() would also
-        del _WAV_EXPR_CACHE[k]  # drop the current app's synth entry stored
-        # moments earlier by multimodal_audio_meta (one wasted rebuild
-        # on the first call after a SparkContext restart — ADVICE r6)
+def _wav_walk(content: str) -> dict:
     c = F.col(content)
     is_wav = (F.hex(c.substr(F.lit(1), F.lit(4))) == "52494646") & (
         F.hex(c.substr(F.lit(9), F.lit(4))) == "57415645"  # "WAVE"
@@ -599,9 +598,7 @@ def _wav_fragments(spark: SparkSession, content: str, max_chunks: int) -> dict:
             )
         )
     )
-    frags = {"init": init, "hop": hop}
-    _WAV_EXPR_CACHE[key] = frags
-    return frags
+    return {"init": init, "hop": hop}
 
 
 # Oracle predicts the parsed metadata from the same doc_id formulas the
@@ -639,11 +636,9 @@ def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_multimodal_dims.py.
 
     Scale: map-only, zero shuffle, zero Python — fused into the scan.
-    The synthesis column is cached per SparkContext alongside the walk
-    fragments (~200 py4j-constructed nodes otherwise rebuilt per
-    invocation), and the asset BYTES land once per (SparkContext,
-    sf_dir) via :func:`_asset_corpus` — the parse runs per invocation
-    against the on-disk corpus."""
+    The walk fragments are memoized per SparkContext, and the asset
+    BYTES land once per corpus via :func:`_asset_corpus` — the parse
+    runs per invocation against the on-disk corpus."""
     def _build() -> DataFrame:
         return _audio_synth(spark, sf_dir)
 
@@ -723,19 +718,13 @@ def _audio_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multimodal-video-meta — MP4/ISO-BMFF atom walk, no decode
 # ---------------------------------------------------------------------------
 
-# Unresolved-fragment cache for the MP4 walk + synthesis column (same
-# contract as _WAV_EXPR_CACHE: keyed on applicationId, stale-context
-# keys evicted individually so the current app's entries survive).
-_MP4_EXPR_CACHE: dict[tuple, dict] = {}
-
-
 def _mp4_fragments(spark: SparkSession, content: str) -> dict:
-    key = (spark.sparkContext.applicationId, content)
-    frags = _MP4_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    for k in [k for k in _MP4_EXPR_CACHE if k[0] != key[0]]:
-        del _MP4_EXPR_CACHE[k]
+    return session_memo(
+        f"mp4-walk-{content}", spark, lambda: _mp4_walk(content)
+    )
+
+
+def _mp4_walk(content: str) -> dict:
     c = F.col(content)
     nul = F.lit(None).cast("long")
     # ---- top-level box walk state: find the moov container -----------
@@ -823,14 +812,12 @@ def _mp4_fragments(spark: SparkSession, content: str) -> dict:
             )
         )
     )
-    frags = {
+    return {
         "init": init,
         "top_hop": top_hop,
         "inner_init": inner_init,
         "inner_hop": inner_hop,
     }
-    _MP4_EXPR_CACHE[key] = frags
-    return frags
 
 
 def with_mp4_meta(
@@ -940,87 +927,82 @@ def multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _video_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MP4 corpus synthesis (runs only on an asset-corpus cache miss)."""
-    d = load_table(spark, sf_dir, "documents")
-    synth_key = (spark.sparkContext.applicationId, "_video_synth")
-    cached = _MP4_EXPR_CACHE.get(synth_key)
-    if cached is None:
-        doc = F.col("doc_id")
-        hex4 = lambda v: F.lpad(F.hex(v), 8, "0")  # noqa: E731
-        hex2 = lambda v: F.lpad(F.hex(v), 4, "0")  # noqa: E731
-        timescale = (
-            F.when(doc % 3 == 0, 600).when(doc % 3 == 1, 1000).otherwise(90000)
-        )
-        duration = timescale * (1 + doc % 30)
-        width = 160 + doc % 1760
-        height = 90 + doc % 990
-        # ftyp: "isom" major, minor 0x200, 0-2 doc-varying compat brands
-        n_brands = (doc % 3).cast("int")
-        ftyp = F.concat(
-            hex4(F.lit(16) + n_brands * 4),
-            F.lit("6674797069736F6D00000200"),
-            F.repeat(F.lit("69736F6D"), n_brands),
-        )
-        # odd docs: free padding box before moov (faststart encoders
-        # leave these), size varies with doc_id
-        free_top_len = F.when(doc % 2 == 1, 8 + 2 * (doc % 7)).otherwise(
-            F.lit(0)
-        )
-        free_top = F.when(
-            doc % 2 == 1,
-            F.concat(
-                hex4(free_top_len),
-                F.lit("66726565"),  # "free"
-                F.repeat(F.lit("00"), (free_top_len - 8).cast("int")),
-            ),
-        ).otherwise(F.lit(""))
-        # mvhd v0: 108-byte box; timescale/duration at payload +12/+16
-        mvhd = F.concat(
-            F.lit("0000006C6D766864"),  # size 108 + "mvhd"
-            F.lit("00" * 12),  # version/flags, creation, modification
-            hex4(timescale),
-            hex4(duration),
-            F.lit("00" * 80),  # rate..next_track_ID (parser-ignored)
-        )
-        # odd docs: free child between mvhd and trak
-        free_in_len = F.when(doc % 2 == 1, 8 + 4 * (doc % 5)).otherwise(
-            F.lit(0)
-        )
-        free_in = F.when(
-            doc % 2 == 1,
-            F.concat(
-                hex4(free_in_len),
-                F.lit("66726565"),
-                F.repeat(F.lit("00"), (free_in_len - 8).cast("int")),
-            ),
-        ).otherwise(F.lit(""))
-        # tkhd v0: 92-byte box; width/height 16.16 at payload +76/+80
-        tkhd = F.concat(
-            F.lit("0000005C746B6864"),  # size 92 + "tkhd"
-            F.lit("00" * 76),  # version/flags .. matrix (parser-ignored)
-            hex2(width),
-            F.lit("0000"),  # 16.16 fraction
-            hex2(height),
-            F.lit("0000"),
-        )
-        trak = F.concat(F.lit("000000647472616B"), tkhd)  # size 100 + "trak"
-        moov = F.concat(
-            hex4(F.lit(8 + 108 + 100) + free_in_len),
-            F.lit("6D6F6F76"),  # "moov"
-            mvhd,
-            free_in,
-            trak,
-        )
-        # trailing mdat header for realism — the walk must stop at moov,
-        # not run off into (absent) media data
-        payload_hex = F.concat(
-            ftyp, free_top, moov, F.lit("000000086D646174")
-        )
-        cached = {"payload_hex": payload_hex}
-        _MP4_EXPR_CACHE[synth_key] = cached
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(cached["payload_hex"]).alias("content"),
+    return _hex_corpus(spark, sf_dir, "mp4", _mp4_payload_hex)
+
+
+def _mp4_payload_hex() -> F.Column:
+    doc = F.col("doc_id")
+    hex4 = lambda v: F.lpad(F.hex(v), 8, "0")  # noqa: E731
+    hex2 = lambda v: F.lpad(F.hex(v), 4, "0")  # noqa: E731
+    timescale = (
+        F.when(doc % 3 == 0, 600).when(doc % 3 == 1, 1000).otherwise(90000)
     )
+    duration = timescale * (1 + doc % 30)
+    width = 160 + doc % 1760
+    height = 90 + doc % 990
+    # ftyp: "isom" major, minor 0x200, 0-2 doc-varying compat brands
+    n_brands = (doc % 3).cast("int")
+    ftyp = F.concat(
+        hex4(F.lit(16) + n_brands * 4),
+        F.lit("6674797069736F6D00000200"),
+        F.repeat(F.lit("69736F6D"), n_brands),
+    )
+    # odd docs: free padding box before moov (faststart encoders
+    # leave these), size varies with doc_id
+    free_top_len = F.when(doc % 2 == 1, 8 + 2 * (doc % 7)).otherwise(
+        F.lit(0)
+    )
+    free_top = F.when(
+        doc % 2 == 1,
+        F.concat(
+            hex4(free_top_len),
+            F.lit("66726565"),  # "free"
+            F.repeat(F.lit("00"), (free_top_len - 8).cast("int")),
+        ),
+    ).otherwise(F.lit(""))
+    # mvhd v0: 108-byte box; timescale/duration at payload +12/+16
+    mvhd = F.concat(
+        F.lit("0000006C6D766864"),  # size 108 + "mvhd"
+        F.lit("00" * 12),  # version/flags, creation, modification
+        hex4(timescale),
+        hex4(duration),
+        F.lit("00" * 80),  # rate..next_track_ID (parser-ignored)
+    )
+    # odd docs: free child between mvhd and trak
+    free_in_len = F.when(doc % 2 == 1, 8 + 4 * (doc % 5)).otherwise(
+        F.lit(0)
+    )
+    free_in = F.when(
+        doc % 2 == 1,
+        F.concat(
+            hex4(free_in_len),
+            F.lit("66726565"),
+            F.repeat(F.lit("00"), (free_in_len - 8).cast("int")),
+        ),
+    ).otherwise(F.lit(""))
+    # tkhd v0: 92-byte box; width/height 16.16 at payload +76/+80
+    tkhd = F.concat(
+        F.lit("0000005C746B6864"),  # size 92 + "tkhd"
+        F.lit("00" * 76),  # version/flags .. matrix (parser-ignored)
+        hex2(width),
+        F.lit("0000"),  # 16.16 fraction
+        hex2(height),
+        F.lit("0000"),
+    )
+    trak = F.concat(F.lit("000000647472616B"), tkhd)  # size 100 + "trak"
+    moov = F.concat(
+        hex4(F.lit(8 + 108 + 100) + free_in_len),
+        F.lit("6D6F6F76"),  # "moov"
+        mvhd,
+        free_in,
+        trak,
+    )
+    # trailing mdat header for realism — the walk must stop at moov,
+    # not run off into (absent) media data
+    payload_hex = F.concat(
+        ftyp, free_top, moov, F.lit("000000086D646174")
+    )
+    return payload_hex
 
 
 # ---------------------------------------------------------------------------
@@ -1038,11 +1020,6 @@ _PHASH_BAND_BITS = 15  # 4 bands x 15 bits
 _PHASH_NBANDS = _PHASH_BITS // _PHASH_BAND_BITS
 _PHASH_MAX_BUCKET = 100  # oversized-bucket guard (flat-image boilerplate)
 _PHASH_HAMMING_MAX = 8  # near-dup threshold (~13% of 60 bits)
-
-# Unresolved-fragment cache for the dHash expression + band array, keyed
-# on applicationId (same contract as _WAV_EXPR_CACHE; stale-context keys
-# evicted on first use after a restart)
-_PHASH_EXPR_CACHE: dict[str, dict] = {}
 
 
 def _phash_sql(intdiv) -> str:
@@ -1111,6 +1088,7 @@ ORDER BY p.asset_id
 
 
 @query("dedup-image-phash", oracle=_PHASH_ORACLE)
+@plan_cached("dedup-image-phash")
 def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate image detection — the image twin
     of ``dedup-near-minhash``: a 60-bit difference hash (dHash) per
@@ -1134,95 +1112,17 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     color, letterboxing — floods a band bucket exactly like boilerplate
     shingles); hamming verify is two ``bit_count(xor)`` instructions per
     candidate pair; clustering is one min-groupBy. The banded relation
-    is persisted across its two self-join consumers (the minhash
-    ``_last_bands`` lifecycle contract): the A/B at sf0.1 is a tie at
+    is a persisted ingest artifact (like the minhash bands) read by
+    its two self-join consumers: the A/B at sf0.1 is a tie at
     steady state (1.09 vs 1.10 s min — the bands derive from one cheap
     column expression, unlike minhash's expensive shingle explode), but
     the persisted form runs the guard window ONCE where the recompute
     form runs it per join side, and measured ~0.2 s better over the
     cold 3-rep window the bench and driver actually observe.
     """
-    from pyspark import StorageLevel
-    from pyspark.sql import Window as W
-
-    global _last_phash_bands
-    d = load_table(spark, sf_dir, "documents")
-    # Unresolved-fragment cache (the _WAV_EXPR_CACHE contract, own dict
-    # so stale-context eviction runs whenever THIS key is first after a
-    # SparkContext restart — parking these in _MP4_EXPR_CACHE left dead
-    # py4j refs unevicted until an MP4-walk query happened to run):
-    # parsing the 60-term generated CASE expression through the SQL
-    # parser and building the band-struct array cost ~0.4 s of pure
-    # driver latency per invocation before the cache.
-    cache_key = spark.sparkContext.applicationId
-    frags = _PHASH_EXPR_CACHE.get(cache_key)
-    if frags is None:
-        for k in [k for k in _PHASH_EXPR_CACHE if k != cache_key]:
-            del _PHASH_EXPR_CACHE[k]
-        frags = {
-            "phash": F.expr(_phash_sql(lambda a, b: f"({a} div {b})")),
-            "band_arr": F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("phash", _PHASH_BAND_BITS * b)
-                        .bitwiseAND(F.lit((1 << _PHASH_BAND_BITS) - 1))
-                        .alias("bits"),
-                    )
-                    for b in range(_PHASH_NBANDS)
-                ]
-            ),
-        }
-        _PHASH_EXPR_CACHE[cache_key] = frags
-    # (asset_id, phash) is consumed twice (banded blocking + the final
-    # completion join). A per-invocation localCheckpoint barrier
-    # measured SLOWER than re-evaluating the 120-node sampler per
-    # consumer (0.66 s vs 0.29 s/pass at sf0.1) — but r15 moves the
-    # relation into the SAME cross-invocation persist lifecycle as the
-    # bands below: the sampler pass is paid once per (appId, sf_dir)
-    # when the bands build first materializes it, and every
-    # invocation's completion join reads the cached 16-byte rows.
-    p = d.select(
-        F.col("doc_id").alias("asset_id"), frags["phash"].alias("phash")
+    p, bands = ingest_artifact(
+        "phash-bands", spark, sf_dir, lambda: _phash_bands(spark, sf_dir)
     )
-    band_arr = frags["band_arr"]
-    # Guarded-bands MATERIALIZED VIEW, keyed (appId, sf_dir) — the
-    # _PR_GRAPH_CACHE contract: the banded relation is a pure function
-    # of immutable input files, so a repeat invocation against the same
-    # corpus reuses the persisted relation instead of re-running the
-    # sampler + band explode + guard window (the r7 sweep put the
-    # rebuild-every-time form at 2.07 s against the 2.0 s budget; the
-    # reused form pays only the pair join + completion join). A
-    # DIFFERENT sf_dir (or restarted context) evicts and unpersists the
-    # stale entry — serial driver/bench use, exactly one live relation.
-    bands_key = (cache_key, sf_dir)
-    if _last_phash_bands is not None and _last_phash_bands[0] == bands_key:
-        # the pair/cluster/completion PLAN over the two persisted
-        # relations is itself invariant per (appId, sf_dir): return a
-        # fresh no-op projection over the plan built on the first
-        # invocation (the _ASSET_PLAN_CACHE discipline — construction
-        # cached, execution per action; select("*") avoids the
-        # executed-Dataset AQE final-plan rendering)
-        return _last_phash_bands[3].select("*")
-    else:
-        if _last_phash_bands is not None:
-            try:
-                _last_phash_bands[1].unpersist()
-                _last_phash_bands[2].unpersist()
-            except Exception:
-                pass  # previous relation may belong to a stopped session
-            _last_phash_bands = None
-        p = p.persist(StorageLevel.MEMORY_AND_DISK)
-        bands = (
-            p.select("asset_id", "phash", F.explode(band_arr).alias("bs"))
-            .select("asset_id", "phash", "bs.band", "bs.bits")
-            .withColumn(
-                "bn", F.count("*").over(W.partitionBy("band", "bits"))
-            )
-            .filter(F.col("bn") <= _PHASH_MAX_BUCKET)
-            .drop("bn")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
     pairs = (
         bands.alias("l")
         .join(bands.alias("r"), ["band", "bits"])
@@ -1256,15 +1156,64 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cluster_id"),
         F.col("min_nb").isNotNull().alias("has_near_dup"),
     )
-    _last_phash_bands = (bands_key, bands, p, out)
     return out
 
 
-# ((appId, sf_dir), bands, phash-relation, completion-plan) — the live
-# persisted phash band + (asset_id, phash) relations plus the built
-# pair/cluster/completion DataFrame over them; reused while the key
-# matches, unpersisted and rebuilt when it changes
-_last_phash_bands = None
+def _phash_exprs() -> dict:
+    """The dHash Column (the 60-term generated CASE expression through
+    the SQL parser) and the band-struct array: ~0.4 s of pure driver
+    latency per invocation before they were memoized."""
+    return {
+        "phash": F.expr(_phash_sql(lambda a, b: f"({a} div {b})")),
+        "band_arr": F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftright("phash", _PHASH_BAND_BITS * b)
+                    .bitwiseAND(F.lit((1 << _PHASH_BAND_BITS) - 1))
+                    .alias("bits"),
+                )
+                for b in range(_PHASH_NBANDS)
+            ]
+        ),
+    }
+
+
+def _phash_bands(spark: SparkSession, sf_dir: str) -> tuple:
+    """``(p, bands)``: the persisted (asset_id, phash) relation and the
+    guarded banded relation over it. ``p`` is consumed twice (banded
+    blocking + the final completion join): a per-invocation
+    localCheckpoint barrier measured SLOWER than re-evaluating the
+    120-node sampler per consumer (0.66 s vs 0.29 s/pass at sf0.1),
+    but persisted beside the bands the sampler pass is paid once per
+    corpus and every completion join reads the cached 16-byte rows.
+    Reusing the bands skips the sampler + band explode + guard window
+    (the r7 sweep put the rebuild-every-time form at 2.07 s against
+    the 2.0 s budget)."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Window as W
+
+    frags = session_memo("phash-exprs", spark, _phash_exprs)
+    p = (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            F.col("doc_id").alias("asset_id"), frags["phash"].alias("phash")
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    bands = (
+        p.select(
+            "asset_id", "phash", F.explode(frags["band_arr"]).alias("bs")
+        )
+        .select("asset_id", "phash", "bs.band", "bs.bits")
+        .withColumn(
+            "bn", F.count("*").over(W.partitionBy("band", "bits"))
+        )
+        .filter(F.col("bn") <= _PHASH_MAX_BUCKET)
+        .drop("bn")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return p, bands
 
 
 # ---------------------------------------------------------------------------
@@ -1328,21 +1277,13 @@ def with_tiff_meta(df: DataFrame, content: str = "content") -> DataFrame:
     )
 
 
-# Unresolved-fragment cache for the TIFF walk Columns, keyed on
-# (applicationId, content column name) — the _WAV_EXPR_CACHE contract:
-# the walk trees are name-based and plan-independent, and their py4j
-# construction (~1.4 s at first build) was the dominant per-invocation
-# cost before the cache. Stale-context keys evicted on first use.
-_TIFF_EXPR_CACHE: dict[tuple, dict] = {}
-
-
 def _tiff_fragments(spark: SparkSession, content: str) -> dict:
-    key = (spark.sparkContext.applicationId, content)
-    frags = _TIFF_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    for k in [k for k in _TIFF_EXPR_CACHE if k[0] != key[0]]:
-        del _TIFF_EXPR_CACHE[k]
+    return session_memo(
+        f"tiff-walk-{content}", spark, lambda: _tiff_walk(content)
+    )
+
+
+def _tiff_walk(content: str) -> dict:
     c = F.col(content)
     le = F.hex(c.substr(F.lit(1), F.lit(2))) == "4949"
     be = F.hex(c.substr(F.lit(1), F.lit(2))) == "4D4D"
@@ -1391,9 +1332,7 @@ def _tiff_fragments(spark: SparkSession, content: str) -> dict:
             )
         )
     )
-    frags = {"init": init, "hop": hop}
-    _TIFF_EXPR_CACHE[key] = frags
-    return frags
+    return {"init": init, "hop": hop}
 
 
 # Oracle predicts the parse from the same doc_id formulas the
@@ -1432,11 +1371,11 @@ def multimodal_image_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_r7c_ops.py.
 
     Scale: map-only, zero shuffle, zero Python — fused into the scan
-    like multimodal-image-dims. The synthesis Column caches per
-    SparkContext alongside the walk fragments (the _WAV_EXPR_CACHE
-    contract): build+analyze was ~1.4 s/invocation before, ~2x the
-    actual execution. Asset bytes land once per (SparkContext, sf_dir)
-    via :func:`_asset_corpus`; the IFD walk runs per invocation."""
+    like multimodal-image-dims. The walk fragments are memoized per
+    SparkContext (:func:`session_memo`): build+analyze was
+    ~1.4 s/invocation before, ~2x the actual execution. Asset bytes
+    land once per corpus via :func:`_asset_corpus`; the IFD walk runs
+    per invocation."""
 
     def _build() -> DataFrame:
         return _exif_synth(spark, sf_dir)
@@ -2562,17 +2501,13 @@ def multimodal_ico_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _AVI_MAX_HOPS = 3  # bounded top-level chunk walk (JUNK/LIST precede hdrl)
 
-# Unresolved-fragment cache, the _WAV_EXPR_CACHE contract.
-_AVI_EXPR_CACHE: dict[tuple, dict] = {}
-
-
 def _avi_fragments(spark: SparkSession, content: str) -> dict:
-    key = (spark.sparkContext.applicationId, content)
-    frags = _AVI_EXPR_CACHE.get(key)
-    if frags is not None:
-        return frags
-    for k in [k for k in _AVI_EXPR_CACHE if k[0] != key[0]]:
-        del _AVI_EXPR_CACHE[k]
+    return session_memo(
+        f"avi-walk-{content}", spark, lambda: _avi_walk(content)
+    )
+
+
+def _avi_walk(content: str) -> dict:
     c = F.col(content)
     is_avi = (F.hex(c.substr(F.lit(1), F.lit(4))) == "52494646") & (
         F.hex(c.substr(F.lit(9), F.lit(4))) == "41564920"  # "AVI "
@@ -2620,9 +2555,7 @@ def _avi_fragments(spark: SparkSession, content: str) -> dict:
             )
         )
     )
-    frags = {"init": init, "hop": hop}
-    _AVI_EXPR_CACHE[key] = frags
-    return frags
+    return {"init": init, "hop": hop}
 
 
 def with_avi_meta(df: DataFrame, content: str = "content") -> DataFrame:
@@ -2690,9 +2623,9 @@ def multimodal_avi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     AVI header is pinned in tests/test_r13_ops.py.
 
     Scale: map-only, zero shuffle, zero Python — fused into the scan;
-    synthesis + walk Columns cached per SparkContext (the WAV cache
-    contract); asset bytes land once per (SparkContext, sf_dir) via
-    :func:`_asset_corpus`, the parse runs per invocation."""
+    synthesis + walk Columns memoized per SparkContext; asset bytes
+    land once per corpus via :func:`_asset_corpus`, the parse runs per
+    invocation."""
     return _asset_query(
         spark, sf_dir, "avi", lambda: _avi_synth(spark, sf_dir), _avi_parse
     )
@@ -2700,68 +2633,63 @@ def multimodal_avi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _avi_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVI corpus synthesis (runs only on an asset-corpus cache miss)."""
-    d = load_table(spark, sf_dir, "documents")
-    synth_key = (spark.sparkContext.applicationId, "__avi_synth__")
-    cached = _AVI_EXPR_CACHE.get(synth_key)
-    if cached is None:
-        doc = F.col("doc_id")
-        usec = 10000 + (doc % 500) * 100
-        frames = 1 + doc % 5000
-        streams = 1 + doc % 3
-        width = 16 * (1 + doc % 120)
-        height = 16 * (1 + doc % 68)
-        hexle2 = lambda c: F.concat(  # noqa: E731
-            F.lpad(F.hex(c % 256), 2, "0"),
-            F.lpad(F.hex((c / 256).cast("long") % 256), 2, "0"),
-        )
-        hexle4 = lambda c: F.concat(  # noqa: E731
-            hexle2(c % 65536), hexle2((c / 65536).cast("long"))
-        )
-        z4 = hexle4(F.lit(0))
-        avih_payload = F.concat(
-            hexle4(usec),  # dwMicroSecPerFrame
-            hexle4(usec * 2),  # dwMaxBytesPerSec (carried, unread)
-            z4,  # dwPaddingGranularity
-            z4,  # dwFlags
-            hexle4(frames),  # dwTotalFrames
-            z4,  # dwInitialFrames
-            hexle4(streams),  # dwStreams
-            z4,  # dwSuggestedBufferSize
-            hexle4(width),  # dwWidth
-            hexle4(height),  # dwHeight
-            z4, z4, z4, z4,  # dwReserved[4]
-        )
-        # LIST size = 4 (form) + 8 (avih hdr) + 56 (payload)
-        hdrl = F.concat(
-            F.lit("4C495354"),  # "LIST"
-            hexle4(F.lit(68)),
-            F.lit("6864726C"),  # "hdrl"
-            F.lit("61766968"),  # "avih"
-            hexle4(F.lit(56)),
-            avih_payload,
-        )
-        junk_len = 4 + (doc % 6) * 2  # even, keeps RIFF alignment
-        junk = F.when(
-            doc % 2 == 1,
-            F.concat(
-                F.lit("4A554E4B"),  # "JUNK"
-                hexle4(junk_len),
-                F.lit("00" * 16).substr(F.lit(1), junk_len * 2),
-            ),
-        ).otherwise(F.lit(""))
-        body = F.concat(junk, hdrl)
-        payload_hex = F.concat(
-            F.lit("52494646"),  # "RIFF"
-            hexle4(F.length(body) / 2 + 4),
-            F.lit("41564920"),  # "AVI "
-            body,
-        )
-        cached = {"payload_hex": payload_hex}
-        _AVI_EXPR_CACHE[synth_key] = cached
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(cached["payload_hex"]).alias("content"),
+    return _hex_corpus(spark, sf_dir, "avi", _avi_payload_hex)
+
+
+def _avi_payload_hex() -> F.Column:
+    doc = F.col("doc_id")
+    usec = 10000 + (doc % 500) * 100
+    frames = 1 + doc % 5000
+    streams = 1 + doc % 3
+    width = 16 * (1 + doc % 120)
+    height = 16 * (1 + doc % 68)
+    hexle2 = lambda c: F.concat(  # noqa: E731
+        F.lpad(F.hex(c % 256), 2, "0"),
+        F.lpad(F.hex((c / 256).cast("long") % 256), 2, "0"),
     )
+    hexle4 = lambda c: F.concat(  # noqa: E731
+        hexle2(c % 65536), hexle2((c / 65536).cast("long"))
+    )
+    z4 = hexle4(F.lit(0))
+    avih_payload = F.concat(
+        hexle4(usec),  # dwMicroSecPerFrame
+        hexle4(usec * 2),  # dwMaxBytesPerSec (carried, unread)
+        z4,  # dwPaddingGranularity
+        z4,  # dwFlags
+        hexle4(frames),  # dwTotalFrames
+        z4,  # dwInitialFrames
+        hexle4(streams),  # dwStreams
+        z4,  # dwSuggestedBufferSize
+        hexle4(width),  # dwWidth
+        hexle4(height),  # dwHeight
+        z4, z4, z4, z4,  # dwReserved[4]
+    )
+    # LIST size = 4 (form) + 8 (avih hdr) + 56 (payload)
+    hdrl = F.concat(
+        F.lit("4C495354"),  # "LIST"
+        hexle4(F.lit(68)),
+        F.lit("6864726C"),  # "hdrl"
+        F.lit("61766968"),  # "avih"
+        hexle4(F.lit(56)),
+        avih_payload,
+    )
+    junk_len = 4 + (doc % 6) * 2  # even, keeps RIFF alignment
+    junk = F.when(
+        doc % 2 == 1,
+        F.concat(
+            F.lit("4A554E4B"),  # "JUNK"
+            hexle4(junk_len),
+            F.lit("00" * 16).substr(F.lit(1), junk_len * 2),
+        ),
+    ).otherwise(F.lit(""))
+    body = F.concat(junk, hdrl)
+    payload_hex = F.concat(
+        F.lit("52494646"),  # "RIFF"
+        hexle4(F.length(body) / 2 + 4),
+        F.lit("41564920"),  # "AVI "
+        body,
+    )
+    return payload_hex
 
 
 def _avi_parse(assets: DataFrame) -> DataFrame:
@@ -2784,9 +2712,6 @@ def _avi_parse(assets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multimodal-tar-meta — ustar member headers (the WebDataset container)
 # ---------------------------------------------------------------------------
-
-_TAR_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def _tar_member(c, hdr_off):
     """(name, size, typeflag, magic_ok) of the ustar member whose
@@ -2881,57 +2806,50 @@ def multimodal_tar_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tar_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tar corpus synthesis (runs only on an asset-corpus cache miss)."""
-    d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__tar_synth__")
-    cached = _TAR_EXPR_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _TAR_EXPR_CACHE if k[0] != key[0]]:
-            del _TAR_EXPR_CACHE[k]
-        doc = F.col("doc_id")
-        s1 = 1 + doc % 1400
-        s2 = 10 + doc % 200
-        name1 = F.concat(F.lit("doc"), doc.cast("string"), F.lit(".txt"))
-        name2 = F.concat(F.lit("meta"), doc.cast("string"), F.lit(".json"))
+    return _hex_corpus(spark, sf_dir, "tar", _tar_payload_hex)
 
-        def field_hex(col_str, nbytes: int):
-            # ASCII field, NUL-padded to width
-            return F.rpad(F.hex(F.encode(col_str, "UTF-8")), nbytes * 2, "0")
 
-        def octal_hex(num, nbytes: int):
-            # 11 octal digits + NUL (the ustar numeric convention)
-            o = F.lpad(F.conv(num.cast("string"), 10, 8), nbytes - 1, "0")
-            return F.concat(F.hex(F.encode(o, "UTF-8")), F.lit("00"))
+def _tar_payload_hex() -> F.Column:
+    doc = F.col("doc_id")
+    s1 = 1 + doc % 1400
+    s2 = 10 + doc % 200
+    name1 = F.concat(F.lit("doc"), doc.cast("string"), F.lit(".txt"))
+    name2 = F.concat(F.lit("meta"), doc.cast("string"), F.lit(".json"))
 
-        def header_hex(name, size):
-            return F.concat(
-                field_hex(name, 100),  # name
-                field_hex(F.lit("0000644"), 8),  # mode
-                field_hex(F.lit("0000000"), 8),  # uid
-                field_hex(F.lit("0000000"), 8),  # gid
-                octal_hex(size, 12),  # size (OCTAL)
-                octal_hex(F.lit(0), 12),  # mtime
-                F.lit("20" * 8),  # chksum: spaces (unverified)
-                F.hex(F.encode(F.lit("0"), "UTF-8")),  # typeflag '0'
-                F.lit("00" * 100),  # linkname
-                F.hex(F.encode(F.lit("ustar"), "UTF-8")),  # magic
-                F.lit("00"),  # magic NUL
-                F.hex(F.encode(F.lit("00"), "UTF-8")),  # version
-                F.lit("00" * (32 + 32 + 8 + 8 + 155 + 12)),  # rest
-            )
+    def field_hex(col_str, nbytes: int):
+        # ASCII field, NUL-padded to width
+        return F.rpad(F.hex(F.encode(col_str, "UTF-8")), nbytes * 2, "0")
 
-        pad1_bytes = 512 * ((s1 + 511) / 512).cast("long")
-        zeros = F.lit("00" * 2048)  # 2048 B covers ceil(1400/512)*512
-        payload_hex = F.concat(
-            header_hex(name1, s1),
-            zeros.substr(F.lit(1), pad1_bytes * 2),
-            header_hex(name2, s2),
+    def octal_hex(num, nbytes: int):
+        # 11 octal digits + NUL (the ustar numeric convention)
+        o = F.lpad(F.conv(num.cast("string"), 10, 8), nbytes - 1, "0")
+        return F.concat(F.hex(F.encode(o, "UTF-8")), F.lit("00"))
+
+    def header_hex(name, size):
+        return F.concat(
+            field_hex(name, 100),  # name
+            field_hex(F.lit("0000644"), 8),  # mode
+            field_hex(F.lit("0000000"), 8),  # uid
+            field_hex(F.lit("0000000"), 8),  # gid
+            octal_hex(size, 12),  # size (OCTAL)
+            octal_hex(F.lit(0), 12),  # mtime
+            F.lit("20" * 8),  # chksum: spaces (unverified)
+            F.hex(F.encode(F.lit("0"), "UTF-8")),  # typeflag '0'
+            F.lit("00" * 100),  # linkname
+            F.hex(F.encode(F.lit("ustar"), "UTF-8")),  # magic
+            F.lit("00"),  # magic NUL
+            F.hex(F.encode(F.lit("00"), "UTF-8")),  # version
+            F.lit("00" * (32 + 32 + 8 + 8 + 155 + 12)),  # rest
         )
-        cached = {"payload_hex": payload_hex}
-        _TAR_EXPR_CACHE[key] = cached
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(cached["payload_hex"]).alias("content"),
+
+    pad1_bytes = 512 * ((s1 + 511) / 512).cast("long")
+    zeros = F.lit("00" * 2048)  # 2048 B covers ceil(1400/512)*512
+    payload_hex = F.concat(
+        header_hex(name1, s1),
+        zeros.substr(F.lit(1), pad1_bytes * 2),
+        header_hex(name2, s2),
     )
+    return payload_hex
 
 
 def _tar_parse(assets: DataFrame) -> DataFrame:
@@ -2945,9 +2863,6 @@ def _tar_parse(assets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multimodal-zip-meta — ZIP local-file-header metadata, no inflate
 # ---------------------------------------------------------------------------
-
-_ZIP_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def with_zip_meta(df: DataFrame, content: str = "content") -> DataFrame:
     """Append (magic_ok, method, method_name, uncomp_size, comp_size,
@@ -3022,46 +2937,39 @@ def multimodal_zip_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _zip_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZIP corpus synthesis (runs only on an asset-corpus cache miss)."""
-    d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__zip_synth__")
-    cached = _ZIP_EXPR_CACHE.get(key)
-    if cached is None:
-        for k in [k for k in _ZIP_EXPR_CACHE if k[0] != key[0]]:
-            del _ZIP_EXPR_CACHE[k]
-        doc = F.col("doc_id")
-        method = F.when(doc % 3 == 0, 0).otherwise(8)
-        usize = 100 + doc % 9000
-        csize = F.when(doc % 3 == 0, usize).otherwise(
-            (usize * 2 / 5).cast("long")
-        )
-        fname = F.concat(F.lit("f"), doc.cast("string"), F.lit(".bin"))
-        hexle2 = lambda c: F.concat(  # noqa: E731
-            F.lpad(F.hex(c % 256), 2, "0"),
-            F.lpad(F.hex((c / 256).cast("long") % 256), 2, "0"),
-        )
-        hexle4 = lambda c: F.concat(  # noqa: E731
-            hexle2(c % 65536), hexle2((c / 65536).cast("long"))
-        )
-        payload_hex = F.concat(
-            F.lit("504B0304"),  # PK\x03\x04
-            hexle2(F.lit(20)),  # version needed
-            hexle2(F.lit(0)),  # flags
-            hexle2(method),
-            hexle2(F.lit(0)),  # mod time
-            hexle2(F.lit(0)),  # mod date
-            hexle4(doc % 4294967296),  # crc32 (carried, unverified)
-            hexle4(csize),
-            hexle4(usize),
-            hexle2(F.length(fname)),
-            hexle2(F.lit(0)),  # extra length
-            F.hex(F.encode(fname, "UTF-8")),
-        )
-        cached = {"payload_hex": payload_hex}
-        _ZIP_EXPR_CACHE[key] = cached
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(cached["payload_hex"]).alias("content"),
+    return _hex_corpus(spark, sf_dir, "zip", _zip_payload_hex)
+
+
+def _zip_payload_hex() -> F.Column:
+    doc = F.col("doc_id")
+    method = F.when(doc % 3 == 0, 0).otherwise(8)
+    usize = 100 + doc % 9000
+    csize = F.when(doc % 3 == 0, usize).otherwise(
+        (usize * 2 / 5).cast("long")
     )
+    fname = F.concat(F.lit("f"), doc.cast("string"), F.lit(".bin"))
+    hexle2 = lambda c: F.concat(  # noqa: E731
+        F.lpad(F.hex(c % 256), 2, "0"),
+        F.lpad(F.hex((c / 256).cast("long") % 256), 2, "0"),
+    )
+    hexle4 = lambda c: F.concat(  # noqa: E731
+        hexle2(c % 65536), hexle2((c / 65536).cast("long"))
+    )
+    payload_hex = F.concat(
+        F.lit("504B0304"),  # PK\x03\x04
+        hexle2(F.lit(20)),  # version needed
+        hexle2(F.lit(0)),  # flags
+        hexle2(method),
+        hexle2(F.lit(0)),  # mod time
+        hexle2(F.lit(0)),  # mod date
+        hexle4(doc % 4294967296),  # crc32 (carried, unverified)
+        hexle4(csize),
+        hexle4(usize),
+        hexle2(F.length(fname)),
+        hexle2(F.lit(0)),  # extra length
+        F.hex(F.encode(fname, "UTF-8")),
+    )
+    return payload_hex
 
 
 def _zip_parse(assets: DataFrame) -> DataFrame:
@@ -3071,9 +2979,6 @@ def _zip_parse(assets: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multimodal-ogg-meta — Ogg BOS page + OpusHead identification header
 # ---------------------------------------------------------------------------
-
-_OGG_EXPR_CACHE: dict[tuple, dict] = {}
-
 
 def with_ogg_opus_meta(df: DataFrame, content: str = "content") -> DataFrame:
     """Append (is_ogg, is_bos, serial, channels, pre_skip, sample_rate)
@@ -3087,56 +2992,9 @@ def with_ogg_opus_meta(df: DataFrame, content: str = "content") -> DataFrame:
     offset depends on the PARSED n_segs, so a fixed-offset read fails
     any stream whose lacing differs. Non-Ogg / non-Opus payloads parse
     as NULLs, never wrong values."""
-    key = (df.sparkSession.sparkContext.applicationId, content)
-    frags = _OGG_EXPR_CACHE.get(key)
-    if frags is None:
-        for k in [k for k in _OGG_EXPR_CACHE if k[0] != key[0]]:
-            del _OGG_EXPR_CACHE[k]
-        c = F.col(content)
-        is_ogg = (F.hex(c.substr(F.lit(1), F.lit(4))) == "4F676753") & (
-            _be_uint(c, F.lit(5), 1) == 0
-        )
-        htype = _be_uint(c, F.lit(6), 1)
-        serial = _le_uint(c, F.lit(15), 4)
-        nsegs = _be_uint(c, F.lit(27), 1)
-        pkt = 28 + nsegs
-        init = F.explode(
-            F.array(
-                F.struct(
-                    is_ogg.alias("is_ogg"),
-                    F.when(is_ogg, (htype.bitwiseAND(2) == 2)).alias(
-                        "is_bos"
-                    ),
-                    F.when(is_ogg, serial).alias("serial"),
-                    F.when(is_ogg, pkt).cast("long").alias("pkt"),
-                )
-            )
-        )
-        st = F.col("_g")
-        p = st.pkt
-        is_opus = st.is_ogg & (
-            F.hex(c.substr(p, F.lit(8))) == "4F70757348656164"  # OpusHead
-        )
-        fields = F.explode(
-            F.array(
-                F.struct(
-                    st.is_ogg.alias("is_ogg"),
-                    st.is_bos.alias("is_bos"),
-                    st.serial.alias("serial"),
-                    F.when(is_opus, _be_uint(c, p + 9, 1)).alias(
-                        "channels"
-                    ),
-                    F.when(is_opus, _le_uint(c, p + 10, 2)).alias(
-                        "pre_skip"
-                    ),
-                    F.when(is_opus, _le_uint(c, p + 12, 4)).alias(
-                        "sample_rate"
-                    ),
-                )
-            )
-        )
-        frags = {"init": init, "fields": fields}
-        _OGG_EXPR_CACHE[key] = frags
+    frags = session_memo(
+        f"ogg-walk-{content}", df.sparkSession, lambda: _ogg_walk(content)
+    )
     passthrough = [col for col in df.columns]
     cur = df.select("*", frags["init"].alias("_g"))
     cur = cur.select(*passthrough, frags["fields"].alias("_g"))
@@ -3150,6 +3008,53 @@ def with_ogg_opus_meta(df: DataFrame, content: str = "content") -> DataFrame:
         st.pre_skip.alias("pre_skip"),
         st.sample_rate.alias("sample_rate"),
     )
+
+
+def _ogg_walk(content: str) -> dict:
+    c = F.col(content)
+    is_ogg = (F.hex(c.substr(F.lit(1), F.lit(4))) == "4F676753") & (
+        _be_uint(c, F.lit(5), 1) == 0
+    )
+    htype = _be_uint(c, F.lit(6), 1)
+    serial = _le_uint(c, F.lit(15), 4)
+    nsegs = _be_uint(c, F.lit(27), 1)
+    pkt = 28 + nsegs
+    init = F.explode(
+        F.array(
+            F.struct(
+                is_ogg.alias("is_ogg"),
+                F.when(is_ogg, (htype.bitwiseAND(2) == 2)).alias(
+                    "is_bos"
+                ),
+                F.when(is_ogg, serial).alias("serial"),
+                F.when(is_ogg, pkt).cast("long").alias("pkt"),
+            )
+        )
+    )
+    st = F.col("_g")
+    p = st.pkt
+    is_opus = st.is_ogg & (
+        F.hex(c.substr(p, F.lit(8))) == "4F70757348656164"  # OpusHead
+    )
+    fields = F.explode(
+        F.array(
+            F.struct(
+                st.is_ogg.alias("is_ogg"),
+                st.is_bos.alias("is_bos"),
+                st.serial.alias("serial"),
+                F.when(is_opus, _be_uint(c, p + 9, 1)).alias(
+                    "channels"
+                ),
+                F.when(is_opus, _le_uint(c, p + 10, 2)).alias(
+                    "pre_skip"
+                ),
+                F.when(is_opus, _le_uint(c, p + 12, 4)).alias(
+                    "sample_rate"
+                ),
+            )
+        )
+    )
+    return {"init": init, "fields": fields}
 
 
 _OGG_ORACLE = """
@@ -3191,61 +3096,56 @@ def multimodal_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ogg_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ogg corpus synthesis (runs only on an asset-corpus cache miss)."""
-    d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__ogg_synth__")
-    cached = _OGG_EXPR_CACHE.get(key)
-    if cached is None:
-        doc = F.col("doc_id")
-        serial = doc % 2147483647
-        channels = 1 + doc % 2
-        pre_skip = 312 + doc % 100
-        rate = (
-            F.when(doc % 3 == 0, 48000)
-            .when(doc % 3 == 1, 44100)
-            .otherwise(16000)
-        )
-        hexbe1 = lambda c: F.lpad(F.hex(c % 256), 2, "0")  # noqa: E731
-        hexle2 = lambda c: F.concat(  # noqa: E731
-            hexbe1(c), hexbe1((c / 256).cast("long"))
-        )
-        hexle4 = lambda c: F.concat(  # noqa: E731
-            hexle2(c % 65536), hexle2((c / 65536).cast("long"))
-        )
-        opus_head = F.concat(
-            F.lit("4F70757348656164"),  # "OpusHead"
-            F.lit("01"),  # version 1
-            hexbe1(channels),
-            hexle2(pre_skip),
-            hexle4(rate),
-            F.lit("0000"),  # output gain
-            F.lit("00"),  # mapping family 0
-        )
-        # doc-varying lacing: 1 + doc%3 ZERO-length segments before the
-        # 19-byte OpusHead segment, so n_segs (and the packet offset)
-        # differ per row
-        n_pad = (doc % 3).cast("int")
-        seg_table = F.concat(
-            F.lit("000000").substr(F.lit(1), n_pad * 2),
-            F.lit("13"),  # 19-byte OpusHead packet
-        )
-        payload_hex = F.concat(
-            F.lit("4F676753"),  # "OggS"
-            F.lit("00"),  # version
-            F.lit("02"),  # header_type: BOS
-            F.lit("00" * 8),  # granule
-            hexle4(serial),
-            F.lit("00" * 4),  # page seq
-            F.lit("00" * 4),  # crc (carried, unverified)
-            hexbe1(n_pad + 1),  # n_segs
-            seg_table,
-            opus_head,
-        )
-        cached = {"payload_hex": payload_hex}
-        _OGG_EXPR_CACHE[key] = cached
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.unhex(cached["payload_hex"]).alias("content"),
+    return _hex_corpus(spark, sf_dir, "ogg", _ogg_payload_hex)
+
+
+def _ogg_payload_hex() -> F.Column:
+    doc = F.col("doc_id")
+    serial = doc % 2147483647
+    channels = 1 + doc % 2
+    pre_skip = 312 + doc % 100
+    rate = (
+        F.when(doc % 3 == 0, 48000)
+        .when(doc % 3 == 1, 44100)
+        .otherwise(16000)
     )
+    hexbe1 = lambda c: F.lpad(F.hex(c % 256), 2, "0")  # noqa: E731
+    hexle2 = lambda c: F.concat(  # noqa: E731
+        hexbe1(c), hexbe1((c / 256).cast("long"))
+    )
+    hexle4 = lambda c: F.concat(  # noqa: E731
+        hexle2(c % 65536), hexle2((c / 65536).cast("long"))
+    )
+    opus_head = F.concat(
+        F.lit("4F70757348656164"),  # "OpusHead"
+        F.lit("01"),  # version 1
+        hexbe1(channels),
+        hexle2(pre_skip),
+        hexle4(rate),
+        F.lit("0000"),  # output gain
+        F.lit("00"),  # mapping family 0
+    )
+    # doc-varying lacing: 1 + doc%3 ZERO-length segments before the
+    # 19-byte OpusHead segment, so n_segs (and the packet offset)
+    # differ per row
+    n_pad = (doc % 3).cast("int")
+    seg_table = F.concat(
+        F.lit("000000").substr(F.lit(1), n_pad * 2),
+        F.lit("13"),  # 19-byte OpusHead packet
+    )
+    payload_hex = F.concat(
+        F.lit("4F676753"),  # "OggS"
+        F.lit("00"),  # version
+        F.lit("02"),  # header_type: BOS
+        F.lit("00" * 8),  # granule
+        hexle4(serial),
+        F.lit("00" * 4),  # page seq
+        F.lit("00" * 4),  # crc (carried, unverified)
+        hexbe1(n_pad + 1),  # n_segs
+        seg_table,
+        opus_head,
+    )
+    return payload_hex
 
 
 def _ogg_parse(assets: DataFrame) -> DataFrame:
@@ -3268,9 +3168,6 @@ def _ogg_parse(assets: DataFrame) -> DataFrame:
 # multimodal-pdf-meta — PDF header/trailer triage, no object parsing
 # ---------------------------------------------------------------------------
 
-_PDF_EXPR_CACHE: dict[tuple, dict] = {}
-
-
 def with_pdf_meta(df: DataFrame, content: str = "content") -> DataFrame:
     """Append (is_pdf, version, n_objects, has_eof, startxref_offset)
     parsed from a PDF payload's header and trailer — the triage pass a
@@ -3281,38 +3178,38 @@ def with_pdf_meta(df: DataFrame, content: str = "content") -> DataFrame:
     between "startxref" and "%%EOF"). Substring counting is the
     (length − length(replace))/len trick — pure string expressions,
     no regex scan per object."""
-    key = (df.sparkSession.sparkContext.applicationId, content)
-    frags = _PDF_EXPR_CACHE.get(key)
-    if frags is None:
-        for k in [k for k in _PDF_EXPR_CACHE if k[0] != key[0]]:
-            del _PDF_EXPR_CACHE[k]
-        c = F.col(content)
-        txt = F.decode(c, "UTF-8")
-        is_pdf = F.hex(c.substr(F.lit(1), F.lit(5))) == "255044462D"
-        version = F.when(
-            is_pdf, F.decode(c.substr(F.lit(6), F.lit(3)), "UTF-8")
-        )
-        n_obj = (
-            (F.length(txt) - F.length(F.replace(txt, F.lit(" obj"))))
-            / 4
-        ).cast("long")
-        has_eof = txt.endswith("%%EOF")
-        sx = F.regexp_extract(
-            txt, "startxref[^0-9]*([0-9]+)[^0-9]*%%EOF$", 1
-        )
-        frags = {
-            "fields": [
-                is_pdf.alias("is_pdf"),
-                version.alias("version"),
-                F.when(is_pdf, n_obj).alias("n_objects"),
-                F.when(is_pdf, has_eof).alias("has_eof"),
-                F.when(is_pdf & (sx != ""), sx.cast("long")).alias(
-                    "startxref_offset"
-                ),
-            ]
-        }
-        _PDF_EXPR_CACHE[key] = frags
+    frags = session_memo(
+        f"pdf-walk-{content}", df.sparkSession, lambda: _pdf_walk(content)
+    )
     return df.select("*", *frags["fields"])
+
+
+def _pdf_walk(content: str) -> dict:
+    c = F.col(content)
+    txt = F.decode(c, "UTF-8")
+    is_pdf = F.hex(c.substr(F.lit(1), F.lit(5))) == "255044462D"
+    version = F.when(
+        is_pdf, F.decode(c.substr(F.lit(6), F.lit(3)), "UTF-8")
+    )
+    n_obj = (
+        (F.length(txt) - F.length(F.replace(txt, F.lit(" obj"))))
+        / 4
+    ).cast("long")
+    has_eof = txt.endswith("%%EOF")
+    sx = F.regexp_extract(
+        txt, "startxref[^0-9]*([0-9]+)[^0-9]*%%EOF$", 1
+    )
+    return {
+        "fields": [
+            is_pdf.alias("is_pdf"),
+            version.alias("version"),
+            F.when(is_pdf, n_obj).alias("n_objects"),
+            F.when(is_pdf, has_eof).alias("has_eof"),
+            F.when(is_pdf & (sx != ""), sx.cast("long")).alias(
+                "startxref_offset"
+            ),
+        ]
+    }
 
 
 _PDF_ORACLE = """
@@ -3347,40 +3244,13 @@ def multimodal_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only, zero shuffle, zero Python — fused into the scan;
     Columns cached per SparkContext."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__pdf_synth__")
-    cached = _PDF_EXPR_CACHE.get(key)
-    if cached is None:
-        doc = F.col("doc_id")
-        version = F.concat(F.lit("1."), (4 + doc % 4).cast("string"))
-        n_obj = (1 + doc % 30).cast("int")
-        sxoff = 100 + doc % 9000
-        body = F.concat(
-            F.lit("%PDF-"),
-            version,
-            F.lit("\n"),
-            # N objects, doc-varying filler between them
-            F.repeat(
-                F.concat(
-                    F.lit("1 0 obj\n<< /Len "),
-                    (doc % 7).cast("string"),
-                    F.lit(" >>\nendobj\n"),
-                ),
-                n_obj,
-            ),
-            F.lit("startxref\n"),
-            sxoff.cast("string"),
-            F.lit("\n%%EOF"),
-        )
-        cached = {"payload": F.encode(body, "UTF-8")}
-        _PDF_EXPR_CACHE[key] = cached
-    src = cached
+    payload = session_memo("pdf-synth", spark, _pdf_payload)
     assets = _asset_corpus(
         spark,
         sf_dir,
         "pdf",
         lambda: d.select(
-            F.col("doc_id").alias("asset_id"),
-            src["payload"].alias("content"),
+            F.col("doc_id").alias("asset_id"), payload.alias("content")
         ),
     )
     return (
@@ -3397,11 +3267,34 @@ def multimodal_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pdf_payload() -> F.Column:
+    doc = F.col("doc_id")
+    version = F.concat(F.lit("1."), (4 + doc % 4).cast("string"))
+    n_obj = (1 + doc % 30).cast("int")
+    sxoff = 100 + doc % 9000
+    body = F.concat(
+        F.lit("%PDF-"),
+        version,
+        F.lit("\n"),
+        # N objects, doc-varying filler between them
+        F.repeat(
+            F.concat(
+                F.lit("1 0 obj\n<< /Len "),
+                (doc % 7).cast("string"),
+                F.lit(" >>\nendobj\n"),
+            ),
+            n_obj,
+        ),
+        F.lit("startxref\n"),
+        sxoff.cast("string"),
+        F.lit("\n%%EOF"),
+    )
+    return F.encode(body, "UTF-8")
+
+
 # ---------------------------------------------------------------------------
 # multimodal-srt-meta — SubRip subtitle triage (cue count, time span)
 # ---------------------------------------------------------------------------
-
-_SRT_EXPR_CACHE: dict[tuple, dict] = {}
 
 # Backslash-free shared timestamp regex (the G18 literal rule)
 _SRT_TS_RE = "[0-9][0-9]:[0-9][0-9]:[0-9][0-9],[0-9][0-9][0-9]"
@@ -3415,41 +3308,41 @@ def with_srt_meta(df: DataFrame, content: str = "content") -> DataFrame:
     The transcript-alignment triage a video/audio pipeline runs before
     pairing subtitles with media (duration mismatch, empty or
     single-cue files)."""
-    key = (df.sparkSession.sparkContext.applicationId, content)
-    frags = _SRT_EXPR_CACHE.get(key)
-    if frags is None:
-        for k in [k for k in _SRT_EXPR_CACHE if k[0] != key[0]]:
-            del _SRT_EXPR_CACHE[k]
-        txt = F.col(content)
-        n_cues = (
-            (F.length(txt) - F.length(F.replace(txt, F.lit(" --> "))))
-            / 5
-        ).cast("long")
-
-        def ms(col):
-            return (
-                F.substring(col, 1, 2).cast("long") * 3600000
-                + F.substring(col, 4, 2).cast("long") * 60000
-                + F.substring(col, 7, 2).cast("long") * 1000
-                + F.substring(col, 10, 3).cast("long")
-            )
-
-        all_ts = F.expr(
-            f"regexp_extract_all({content}, '{_SRT_TS_RE}', 0)"
-        )
-        first_ts = F.element_at(all_ts, 1)
-        last_ts = F.element_at(all_ts, -1)
-        has = n_cues > 0
-        frags = {
-            "fields": [
-                n_cues.alias("n_cues"),
-                F.when(has, ms(first_ts)).alias("first_start_ms"),
-                F.when(has, ms(last_ts)).alias("last_end_ms"),
-                F.when(has, ms(last_ts) - ms(first_ts)).alias("span_ms"),
-            ]
-        }
-        _SRT_EXPR_CACHE[key] = frags
+    frags = session_memo(
+        f"srt-walk-{content}", df.sparkSession, lambda: _srt_walk(content)
+    )
     return df.select("*", *frags["fields"])
+
+
+def _srt_walk(content: str) -> dict:
+    txt = F.col(content)
+    n_cues = (
+        (F.length(txt) - F.length(F.replace(txt, F.lit(" --> "))))
+        / 5
+    ).cast("long")
+
+    def ms(col):
+        return (
+            F.substring(col, 1, 2).cast("long") * 3600000
+            + F.substring(col, 4, 2).cast("long") * 60000
+            + F.substring(col, 7, 2).cast("long") * 1000
+            + F.substring(col, 10, 3).cast("long")
+        )
+
+    all_ts = F.expr(
+        f"regexp_extract_all({content}, '{_SRT_TS_RE}', 0)"
+    )
+    first_ts = F.element_at(all_ts, 1)
+    last_ts = F.element_at(all_ts, -1)
+    has = n_cues > 0
+    return {
+        "fields": [
+            n_cues.alias("n_cues"),
+            F.when(has, ms(first_ts)).alias("first_start_ms"),
+            F.when(has, ms(last_ts)).alias("last_end_ms"),
+            F.when(has, ms(last_ts) - ms(first_ts)).alias("span_ms"),
+        ]
+    }
 
 
 _SRT_ORACLE = """
@@ -3479,36 +3372,13 @@ def multimodal_srt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring-occurrence identity, timestamp decode is fixed-width
     positional arithmetic; Columns cached per SparkContext."""
     d = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, "__srt_synth__")
-    cached = _SRT_EXPR_CACHE.get(key)
-    if cached is None:
-        fmt = (
-            "lpad(CAST(ms DIV 3600000 AS STRING), 2, '0') || ':'"
-            " || lpad(CAST(ms DIV 60000 % 60 AS STRING), 2, '0') || ':'"
-            " || lpad(CAST(ms DIV 1000 % 60 AS STRING), 2, '0') || ','"
-            " || lpad(CAST(ms % 1000 AS STRING), 3, '0')"
-        )
-        # build with a transform() lambda: per cue i, start/end times
-        # from the doc formulas, one text line, blank separator
-        synth = F.expr(
-            "array_join(transform(sequence(1, CAST(1 + doc_id % 12 AS INT)),"
-            " i -> CAST(i AS STRING) || chr(10)"
-            f" || {fmt.replace('ms', '(doc_id % 1000 + (i - 1) * 4000)')}"
-            " || ' --> '"
-            f" || {fmt.replace('ms', '(doc_id % 1000 + (i - 1) * 4000 + 2000 + (doc_id % 7) * 100)')}"
-            " || chr(10) || 'cue text ' || CAST(i AS STRING)"
-            " || chr(10)), chr(10))"
-        )
-        cached = {"payload": synth}
-        _SRT_EXPR_CACHE[key] = cached
-    src = cached
+    payload = session_memo("srt-synth", spark, _srt_payload)
     assets = _asset_corpus(
         spark,
         sf_dir,
         "srt",
         lambda: d.select(
-            F.col("doc_id").alias("asset_id"),
-            src["payload"].alias("content"),
+            F.col("doc_id").alias("asset_id"), payload.alias("content")
         ),
     )
     return (
@@ -3518,3 +3388,24 @@ def multimodal_srt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("asset_id")
     )
+
+
+def _srt_payload() -> F.Column:
+    fmt = (
+        "lpad(CAST(ms DIV 3600000 AS STRING), 2, '0') || ':'"
+        " || lpad(CAST(ms DIV 60000 % 60 AS STRING), 2, '0') || ':'"
+        " || lpad(CAST(ms DIV 1000 % 60 AS STRING), 2, '0') || ','"
+        " || lpad(CAST(ms % 1000 AS STRING), 3, '0')"
+    )
+    # build with a transform() lambda: per cue i, start/end times
+    # from the doc formulas, one text line, blank separator
+    synth = F.expr(
+        "array_join(transform(sequence(1, CAST(1 + doc_id % 12 AS INT)),"
+        " i -> CAST(i AS STRING) || chr(10)"
+        f" || {fmt.replace('ms', '(doc_id % 1000 + (i - 1) * 4000)')}"
+        " || ' --> '"
+        f" || {fmt.replace('ms', '(doc_id % 1000 + (i - 1) * 4000 + 2000 + (doc_id % 7) * 100)')}"
+        " || chr(10) || 'cue text ' || CAST(i AS STRING)"
+        " || chr(10)), chr(10))"
+    )
+    return synth

@@ -20,7 +20,11 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import (
+    ingest_artifact,
+    load_table,
+    plan_cached,
+)
 from spark_file_mover_spark.numerics import snap
 
 _STOPWORDS = ("a", "the", "of", "to", "and")
@@ -923,37 +927,23 @@ def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup-ngram-jaccard discipline) halves the tokenization work
     and drops the duplicate subtree; and the relation is a pure
     function of the immutable corpus — scan, tokenization and gram
-    hashing are the INGEST cost — so it persists per
-    (SparkContext, sf_dir) like text-containment's guarded shingles
-    (one live entry, replayable lineage, blocks release on eviction).
-    The first-seen aggregation, attribution join and per-doc rollup —
-    the novelty operator itself — run on every invocation.
+    hashing are the INGEST cost — so it is a persisted ingest artifact
+    like text-containment's guarded shingles. The first-seen
+    aggregation, attribution join and per-doc rollup — the novelty
+    operator itself — run on every invocation.
 
     Exact integers; novelty is one snapped division; gram-less docs
     (< 3 tokens) surface with zero counts and NULL novelty."""
-    global _last_nov_grams
-    from spark_file_mover_spark import checkpoints
-    from spark_file_mover_spark.sources.io import artifact_cache_key
-
-    # ADVICE r15: cache bypassed in BOTH directions under the plan-only
-    # tooling mode — no corpus tokenize jobs from dump tooling (the r11
-    # zero-jobs invariant), no tooling-shaped entry leaking into
-    # production hits; dumps render the cold shape.
-    lazy = checkpoints.LAZY_ACTIVE
-    cache_key = artifact_cache_key(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    if (
-        not lazy
-        and _last_nov_grams is not None
-        and _last_nov_grams[0] == cache_key
-    ):
-        return _novelty_query(d, _last_nov_grams[1])
-    if _last_nov_grams is not None and not lazy:
-        try:  # ADVICE r15: release the stale blocks (the _tf_cache
-            _last_nov_grams[1].unpersist()  # eviction pattern)
-        except Exception:
-            pass  # previous relation may belong to a stopped session
-        _last_nov_grams = None
+    grams = ingest_artifact(
+        "novelty-grams", spark, sf_dir, lambda: _novelty_grams(d)
+    )
+    return _novelty_query(d, grams)
+
+
+def _novelty_grams(d: DataFrame) -> DataFrame:
+    from spark_file_mover_spark import checkpoints
+
     tk = d.select("doc_id", toks().alias("tk"))
     grams = (
         tk.select(
@@ -978,20 +968,15 @@ def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    if not lazy:
-        # two consumers (first-seen agg + attribution join) plus the
-        # cross-invocation cache; persist keeps replayable lineage so
-        # executor loss between invocations recomputes instead of
-        # failing later hits (the containment-er note)
-        grams = grams.persist()
-        grams.count()  # eager: pay the ingest scan once
-        _last_nov_grams = (cache_key, grams)
-    return _novelty_query(d, grams)
-
-
-# ((appId, corpus fingerprint), grams) — the live persisted distinct
-# (doc_id, gram-hash) relation (the _last_cont_er contract)
-_last_nov_grams = None
+    if checkpoints.LAZY_ACTIVE:
+        return grams  # plan-only: no corpus tokenize jobs
+    # two consumers (first-seen agg + attribution join) plus later
+    # invocations; persist keeps replayable lineage so executor loss
+    # between invocations recomputes instead of failing later hits
+    # (the containment-er note)
+    grams = grams.persist()
+    grams.count()  # eager: pay the ingest scan once
+    return grams
 
 
 def _novelty_query(d: DataFrame, grams: DataFrame) -> DataFrame:
@@ -1292,11 +1277,6 @@ ORDER BY s.doc_id
 """
 
 
-# ((appId, corpus fingerprint), line relation) — the live persisted
-# hashed line-block relation (the _last_nov_grams contract)
-_last_bp_lines = None
-
-
 @query("text-boilerplate-lines", oracle=_BP_ORACLE)
 @plan_cached("text-boilerplate-lines")
 def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1329,29 +1309,12 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode passes (6 parquet scans in the audited plan). Hashing the
     block to a long shrinks the relation to ~32 B/row behind one
     barrier; and the relation is a pure function of the immutable
-    corpus — tokenize + block hashing are the INGEST cost — so it
-    persists per (SparkContext, corpus) like the novelty grams (one
-    live entry, replayable lineage). The df pass, threshold and
+    corpus — tokenize + block hashing are the INGEST cost — so it is an
+    ingest artifact like the novelty grams. The df pass, threshold and
     per-doc rollup — the boilerplate operator — run per invocation."""
-    global _last_bp_lines
-    from spark_file_mover_spark import checkpoints
-    from spark_file_mover_spark.sources.io import artifact_cache_key
-
-    # ADVICE r15: read side bypassed under the plan-only tooling mode
-    # too (the write side already was) so dumps render the cold shape
-    # instead of a live entry's materialized leaf.
-    lazy = checkpoints.LAZY_ACTIVE
-    cache_key = artifact_cache_key(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    if (
-        not lazy
-        and _last_bp_lines is not None
-        and _last_bp_lines[0] == cache_key
-    ):
-        l = _last_bp_lines[1]
-    else:
-        if not lazy:
-            _last_bp_lines = None
+
+    def build() -> DataFrame:
         sized = d.select(
             "doc_id", "source", toks().alias("toks")
         ).selectExpr(
@@ -1361,7 +1324,10 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"greatest(CAST((size(toks) + {_BP_LINE - 1})"
             f" DIV {_BP_LINE} AS INT), 1) AS n_lines",
         )
-        l = sized.selectExpr(
+        # localCheckpoint, not persist: both consumers read the raw
+        # materialized rows; the columnar persist() cache measured
+        # ~2x slower per read (decompression per consumer)
+        return sized.selectExpr(
             "doc_id",
             "source",
             "n_lines",
@@ -1375,15 +1341,8 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"xxhash64(array_join(slice(toks, idx * {_BP_LINE} + 1,"
             f" {_BP_LINE}), ' ')) AS lh",
         ).localCheckpoint(eager=True)
-        # localCheckpoint, not persist: both consumers read the raw
-        # materialized rows; the columnar persist() cache measured
-        # ~2x slower per read (decompression per consumer). Never
-        # cached under the plan-only tooling mode — the substituted
-        # barrier is an empty leaf (the cached_plan bypass rule).
-        from spark_file_mover_spark import checkpoints
 
-        if not checkpoints.LAZY_ACTIVE:
-            _last_bp_lines = (cache_key, l)
+    l = ingest_artifact("boilerplate-lines", spark, sf_dir, build)
     nd = d.groupBy("source").agg(F.count("*").alias("n_docs"))
     df_rel = l.groupBy("source", "lh").agg(
         F.countDistinct("doc_id").alias("df")

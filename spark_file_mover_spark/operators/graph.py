@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import artifact_cache_key, load_table, plan_cached
+from spark_file_mover_spark.sources.io import (
+    ingest_artifact,
+    load_table,
+    plan_cached,
+)
 from spark_file_mover_spark.numerics import snap
 
 
@@ -54,34 +58,15 @@ _PR_ENTITY_BASE = 10**6  # offsets entity ids out of the user-id space
 # (1 - d) * S0 = 15 * S0 / 100 — integer, exact in both engines
 _PR_TELE = 15 * _PR_SCALE // 100
 
-# Materialized-view cache for the STATIC graph relations (edges, the
-# node+outdeg relation, the node count), keyed on (applicationId,
-# sf_dir). The graph is a pure function of immutable input files, so
-# rebuilding it on every invocation is waste an engine would not pay —
-# a production deployment maintains exactly this as a materialized
-# view the iterative query reads. Stale-appId entries are evicted on
-# first use after a SparkContext restart (the _PHASH_EXPR_CACHE
-# contract, data-relation flavored).
-_PR_GRAPH_CACHE: dict = {}
-
-
 def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached DIRECTED user→entity click-edge relation K1
-    (pagerank) and K9 (reciprocity) share: forward edges for every
-    interaction, back-edges only for even entities — checkpointed once
-    per (SparkContext, sf_dir) under the ``_PR_GRAPH_CACHE``
-    materialized-view contract, so every query over the graph reads
-    the materialized (src, dst) pairs instead of re-running the JSON
+    """The DIRECTED user→entity click-edge relation K1 (pagerank) and
+    K9 (reciprocity) share: forward edges for every interaction,
+    back-edges only for even entities — checkpointed once per corpus
+    as an ingest artifact, so every query over the graph reads the
+    materialized (src, dst) pairs instead of re-running the JSON
     parse + two DISTINCTs against the corpus."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _PR_GRAPH_CACHE.get(cache_key)
-    if cached is None:
-        # one live entry — stale checkpointed graph relations release
-        # via the ContextCleaner once dereferenced
-        _PR_GRAPH_CACHE.clear()
-        cached = {}
-        _PR_GRAPH_CACHE[cache_key] = cached
-    if "e" not in cached:
+
+    def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
         ent = F.lit(_PR_ENTITY_BASE) + F.get_json_object(
             "props", "$.k"
@@ -102,8 +87,35 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(ent.alias("src"), F.col("user_id").alias("dst"))
             .distinct()
         )
-        cached["e"] = _reliable_checkpoint(fwd.unionAll(back))
-    return cached["e"]
+        return _reliable_checkpoint(fwd.unionAll(back))
+
+    return ingest_artifact("pr-edges", spark, sf_dir, build)
+
+
+def _pr_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """``(nd, n_nodes)``: the one (node, outdeg) relation K1 and K15
+    iterate over — NULL outdeg marks a dangling node, so folding the
+    degree into the node (and rank) relation deletes the per-round
+    degree join AND the per-round anti-join — plus its exact row count
+    (one scalar, metadata-scale). An ingest artifact like the edges
+    it derives from."""
+
+    def build() -> tuple[DataFrame, int]:
+        e = _pr_edges(spark, sf_dir)
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+        nd = _reliable_checkpoint(
+            nodes.join(deg, nodes.node == deg.src, "left").select(
+                "node", "outdeg"
+            )
+        )
+        return nd, nd.count()
+
+    return ingest_artifact("pr-nodes", spark, sf_dir, build)
 
 
 def _pr_oracle() -> str:
@@ -174,14 +186,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape (Pregel on DataFrames, the ``dedup-components``
     pattern): the STATIC graph relations — edges and a single
-    (node, outdeg) relation with NULL marking dangling nodes —
-    localCheckpoint once and are cached per (SparkContext, sf_dir) as
-    the materialized view a production deployment would maintain (the
-    graph is a pure function of immutable input files; rebuilding it
-    per query is waste — driver-fresh single runs still pay it, pinned
-    by the cold path in tests). Folding outdeg into the node AND rank
-    relations deletes the per-round degree join and the per-round
-    anti-join of the textbook formulation. Each round is then ONE
+    (node, outdeg) relation with NULL marking dangling nodes — are
+    ingest artifacts (:func:`_pr_edges`, :func:`_pr_nodes`;
+    driver-fresh single runs still pay them, pinned by the cold path
+    in tests). Folding outdeg into the node AND rank relations deletes
+    the per-round degree join and the per-round anti-join of the
+    textbook formulation. Each round is then ONE
     materialization job: e⋈ranks contribution aggregate, completion
     join against (node, outdeg), and the one-row dangling aggregate
     broadcast back — never a driver collect of row data. Ranks
@@ -194,27 +204,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ranks only (the rank relation is 24 B/row; edges never move
     after round 0).
     """
-    cache_key = artifact_cache_key(spark, sf_dir)
     e = _pr_edges(spark, sf_dir)
-    cached = _PR_GRAPH_CACHE[cache_key]
-    if "nd" not in cached:
-        # one relation for (node, outdeg): NULL outdeg = dangling —
-        # folding the degree into the node relation (and below, into
-        # the rank relation) deletes the per-round deg join AND the
-        # per-round anti-join the first formulation paid
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        cached["nd"] = _reliable_checkpoint(
-            nodes.join(deg, nodes.node == deg.src, "left").select(
-                "node", "outdeg"
-            )
-        )
-        cached["n"] = cached["nd"].count()  # one scalar — metadata-scale
-    nd, n_nodes = cached["nd"], cached["n"]
+    nd, n_nodes = _pr_nodes(spark, sf_dir)
 
     # ranks carries (node, outdeg, rank): every round is ONE
     # materialization job — the e⋈ranks contribution aggregate, the
@@ -280,21 +271,12 @@ _LPA_ENTITY_BASE = _PR_ENTITY_BASE  # same node-id space as pagerank
 # (event_id is a stable key), mirrored in the oracle.
 _LPA_EDGE_MOD = 20
 
-_LPA_CACHE: dict = {}
-_LPA_N_CACHE: dict = {}  # exact adjacency edge count per cached artifact
-
-
 def _sparse_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached UNDIRECTED sparse user↔entity adjacency K3 and K4
-    share (every ``_LPA_EDGE_MOD``-th event, both edge directions) —
-    one localCheckpoint per (SparkContext, sf_dir), the
-    ``_PR_GRAPH_CACHE`` materialized-view contract."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _LPA_CACHE.get(cache_key)
-    if cached is None:
-        # one live entry — see _KM_CACHE (stale checkpointed adjacency
-        # releases via the ContextCleaner once dereferenced)
-        _LPA_CACHE.clear()
+    """The UNDIRECTED sparse user↔entity adjacency K3 and K4 share
+    (every ``_LPA_EDGE_MOD``-th event, both edge directions) — one
+    checkpointed ingest artifact per corpus."""
+
+    def build() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
         ent = F.lit(_LPA_ENTITY_BASE) + F.get_json_object(
             "props", "$.k"
@@ -304,32 +286,31 @@ def _sparse_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("user_id").alias("a"), ent.alias("b"))
             .distinct()
         )
-        adj = _reliable_checkpoint(
+        return _reliable_checkpoint(
             fwd.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .unionAll(
                 fwd.select(F.col("b").alias("src"), F.col("a").alias("dst"))
             )
         )
-        _LPA_CACHE[cache_key] = adj
-        cached = adj
-    return cached
+
+    return ingest_artifact("lpa-adjacency", spark, sf_dir, build)
 
 
 def _lpa_node_fits(spark: SparkSession, sf_dir: str) -> bool:
     """True when every node-bounded per-round relation of the K3/K5
     Pregel loops fits the session broadcast threshold — gated on the
-    EXACT adjacency edge count (taken once per cached artifact, the
-    K1 ``cached['n']`` discipline; distinct nodes ≤ edge rows because
+    EXACT adjacency edge count (an ingest artifact beside the
+    adjacency, like K1's node count; distinct nodes ≤ edge rows because
     the undirected relation lists each node as a src) times the
     _PR_RANK_BCAST_BYTES hashed-row estimate. Past the threshold the
     loops keep their shuffled joins — the _tri_corners
     fits-or-shuffle contract."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    n = _LPA_N_CACHE.get(cache_key)
-    if n is None:
-        _LPA_N_CACHE.clear()
-        n = _sparse_adjacency(spark, sf_dir).count()
-        _LPA_N_CACHE[cache_key] = n
+    n = ingest_artifact(
+        "lpa-edge-count",
+        spark,
+        sf_dir,
+        lambda: _sparse_adjacency(spark, sf_dir).count(),
+    )
     return 0 < n * _PR_RANK_BCAST_BYTES <= _bcast_threshold(spark)
 
 
@@ -399,8 +380,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one aggregate, no window); the oracle keeps the ROW_NUMBER
     formulation so the two derivations stay independent.
 
-    Plan shape: adjacency localCheckpoints once (cached per
-    (SparkContext, sf_dir) — the _PR_GRAPH_CACHE contract); each round
+    Plan shape: adjacency checkpoints once per corpus (an ingest
+    artifact); each round
     is ONE join shuffle (adj ⋈ labels on dst) + two map-side-combined
     aggregates, labels localCheckpoint per round to truncate lineage.
     At cluster scale adjacency pre-partitions on dst so each round
@@ -574,19 +555,14 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRI_MAX_ENT_USERS = 64
 
 
-_TRI_CACHE: dict = {}
-
-
 def _tri_relations(spark: SparkSession, sf_dir: str):
-    """The cached (oriented edges, degrees) pair for K5 — one
-    localCheckpoint each per (SparkContext, corpus fingerprint). The
-    triangle enumeration joins ``eo`` against itself THREE times;
-    without the checkpoint Spark re-derives the events-scan →
-    hot-entity guard → pair-join projection once per join input."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _TRI_CACHE.get(cache_key)
-    if cached is None:
-        _TRI_CACHE.clear()  # one live entry (the _KM_CACHE contract)
+    """The (oriented edges, degrees, edge count) ingest artifact for K5
+    — one checkpoint per relation per corpus. The triangle enumeration
+    joins ``eo`` against itself THREE times; without the checkpoint
+    Spark re-derives the events-scan → hot-entity guard → pair-join
+    projection once per join input."""
+
+    def build():
         ev = load_table(spark, sf_dir, "events")
         ent = F.get_json_object("props", "$.k").cast("long")
         fwd = (
@@ -641,10 +617,9 @@ def _tri_relations(spark: SparkSession, sf_dir: str):
         # enumeration below gates its join strategy on it — Catalyst
         # cannot (LogicalRDD carries no size stats, so the planner
         # would never broadcast the checkpointed edges on its own).
-        n_edges = eo.count()
-        cached = (eo, deg, n_edges)
-        _TRI_CACHE[cache_key] = cached
-    return cached
+        return eo, deg, eo.count()
+
+    return ingest_artifact("tri-relations", spark, sf_dir, build)
 
 
 # Planner-parity estimate of a broadcast hash relation's in-memory
@@ -806,9 +781,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     decisions; the clustering coefficient is one all-double division
     snapped to 9 dp (NULL for degree < 2).
 
-    The oriented-edge and degree relations are cached per
-    (SparkContext, corpus fingerprint) — the ``_PR_GRAPH_CACHE``
-    materialized-view contract: the projection is a pure function of
+    The oriented-edge and degree relations are ingest artifacts
+    (:func:`_tri_relations`): the projection is a pure function of
     immutable input files, and ``eo`` feeds THREE join inputs (a
     naive composition re-derives the whole events→projection DAG for
     each)."""
@@ -893,18 +867,12 @@ ORDER BY user_id, rnk
 """
 
 
-_JN_CACHE: dict = {}
-
-
 def _jn_relations(spark: SparkSession, sf_dir: str):
-    """The cached (guarded bipartite edges, user degrees) pair for K6 —
-    one localCheckpoint each per (SparkContext, corpus fingerprint),
-    the ``_TRI_CACHE`` contract (a pure function of the immutable
-    input files, consumed by three join inputs per invocation)."""
-    cache_key = artifact_cache_key(spark, sf_dir)
-    cached = _JN_CACHE.get(cache_key)
-    if cached is None:
-        _JN_CACHE.clear()  # one live entry (the _KM_CACHE contract)
+    """The (guarded bipartite edges, user degrees) ingest artifact for
+    K6 — one checkpoint each per corpus, consumed by three join inputs
+    per invocation."""
+
+    def build():
         ev = load_table(spark, sf_dir, "events")
         ent = F.get_json_object("props", "$.k").cast("long")
         fwd = (
@@ -921,9 +889,9 @@ def _jn_relations(spark: SparkSession, sf_dir: str):
         deg = _reliable_checkpoint(
             fk.groupBy("u").agg(F.count("*").alias("d"))
         )
-        cached = (fk, deg)
-        _JN_CACHE[cache_key] = cached
-    return cached
+        return fk, deg
+
+    return ingest_artifact("jn-relations", spark, sf_dir, build)
 
 
 @query("graph-jaccard-neighbors", oracle=_jn_oracle())
@@ -947,8 +915,8 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully deterministic.
 
     The guarded bipartite edge relation and the degree relation are
-    cached per (SparkContext, corpus fingerprint) — the _TRI_CACHE
-    contract: fk feeds BOTH pair-join inputs and the degree rollup,
+    ingest artifacts (:func:`_jn_relations`): fk feeds BOTH pair-join
+    inputs and the degree rollup,
     and unmaterialized each consumer re-derived the events scan →
     distinct → guard chain (8 corpus scans per invocation in the
     audited plan; at 100 TB the scan is the expensive part)."""
@@ -1073,8 +1041,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel-on-DataFrames family member #5 (K1 sum, K3 mode, K4
     frontier-min, components min-closure; k-core = filter-by-degree):
     same loop skeleton, each round = TWO semi-joins restricting the
-    shared cached adjacency (_sparse_adjacency, the _PR_GRAPH_CACHE
-    contract) to surviving endpoints + ONE map-side-combined degree
+    shared adjacency artifact (:func:`_sparse_adjacency`) to surviving
+    endpoints + ONE map-side-combined degree
     aggregate; the surviving-node relation localCheckpoints per round
     (8 B/row — at cluster scale adjacency pre-partitions on src and
     only the node relation shuffles). Removed-node relations stay LAZY
@@ -1768,7 +1736,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     likelihood) — recommender candidate generation uses both.
 
     Shape at 100 TB: rides the SAME cached (fk, deg) checkpoints as
-    K6 (_JN_CACHE — zero corpus passes here), with the hot-entity cap
+    K6 (:func:`_jn_relations` — zero corpus passes here), with the hot-entity cap
     applied BEFORE the wedge join (C(u,2) blowup bound); the entity-
     degree relation derives from the cached fk and joins on the wedge
     key k, so it shares the pair join's exchange; WindowGroupLimit
@@ -2057,37 +2025,22 @@ def graph_personalized_pagerank(
     teleport and dangling shares as floor-divided seed quotas; the
     driver hash-compares exact ranks after 4 rounds.
 
-    Plan shape: shares K1's cached edge + (node, outdeg) relations
-    (the _PR_GRAPH_CACHE materialized view); each round is one
+    Plan shape: shares K1's edge + (node, outdeg) ingest artifacts;
+    each round is one
     contribution aggregate over the rank>0 frontier (PPR's frontier
     is SPARSE early — round 1 touches only seed out-edges), a
     completion join, and the one-row dangling aggregate broadcast
     back; ranks localCheckpoint per round. At cluster scale the
     frontier sparsity is the point: per-seed-set PPR touches the
     seeds' neighborhood, not the graph."""
-    cache_key = artifact_cache_key(spark, sf_dir)
     e = _pr_edges(spark, sf_dir)
-    cached = _PR_GRAPH_CACHE[cache_key]
-    if "nd" not in cached:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-        cached["nd"] = _reliable_checkpoint(
-            nodes.join(deg, nodes.node == deg.src, "left").select(
-                "node", "outdeg"
-            )
-        )
-        cached["n"] = cached["nd"].count()
-    nd, n_nodes = cached["nd"], cached["n"]
+    nd, n_nodes = _pr_nodes(spark, sf_dir)
     seed_pred = (
         f"node < {_PR_ENTITY_BASE} AND node % {_PPR_SEED_MOD} = 0"
     )
-    if "n_seeds" not in cached:
-        cached["n_seeds"] = nd.filter(seed_pred).count()
-    n_seeds = cached["n_seeds"]
+    n_seeds = ingest_artifact(
+        "ppr-seeds", spark, sf_dir, lambda: nd.filter(seed_pred).count()
+    )
     r0_expr = (
         f"CASE WHEN {seed_pred}"
         f" THEN CAST({n_nodes} AS BIGINT) * {_PR_SCALE} DIV {n_seeds}"

@@ -1023,13 +1023,13 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction is UTC-pinned in both engines.
 
     r15: the partitioned fact + dim layout is a pure function of the
-    immutable orders input — a corpus-ingest MATERIALIZED VIEW, the
-    _PR_GRAPH_CACHE / sim-search-ivf contract — so it is written once
-    per (SparkContext, sf_dir) and reused across invocations (a stale
-    key rmtree-evicts its directory; driver-fresh single runs still
-    pay the build, pinned cold in tests). The DPP behavior the key
-    declares — runtime partition pruning at split generation — runs
-    on EVERY invocation against the on-disk layout."""
+    immutable orders input — a corpus-ingest MATERIALIZED VIEW — so it
+    is written once per (SparkContext, sf_dir) and reused across
+    invocations (a stale key rmtree-evicts its directory; driver-fresh
+    single runs still pay the build, pinned cold in tests). The DPP
+    behavior the key declares — runtime partition pruning at split
+    generation — runs on EVERY invocation against the on-disk
+    layout."""
     global _last_dpp_tables
     cache_key = (spark.sparkContext.applicationId, sf_dir)
     if _last_dpp_tables is not None and _last_dpp_tables[0] == cache_key:

@@ -325,18 +325,16 @@ def test_minhash_guard_window_runs_once_inside_cache(spark, sf_dir):
     pre-guard relation and let AQE's broadcast conversion silently run
     the guard's Sort+Window+Exchange twice — once per join side.
 
-    The pin targets the COLD build plan, so the r8 cross-invocation
-    bands cache is evicted first (a warm InMemoryRelation renders its
+    The pin targets the COLD build plan, so the cross-invocation bands
+    artifact is evicted first (a warm InMemoryRelation renders its
     materialized adaptive plan per scan, inflating the textual
     windowspec count without any extra execution)."""
     import re
 
-    from spark_file_mover_spark.llm import dedup as _dedup
     from spark_file_mover_spark.sources import io as _io
 
-    if _dedup._last_bands is not None:
-        _dedup._last_bands[1].unpersist()
-        _dedup._last_bands = None
+    for k in [k for k in _io._ARTIFACTS if k[1] == "minhash-bands"]:
+        _io._release(_io._ARTIFACTS.pop(k))
     # the r15 built-plan cache must be evicted WITH the relation it
     # references, or the stale plan would render the unpersisted shape
     for k in [

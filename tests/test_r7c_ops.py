@@ -83,11 +83,12 @@ def test_kmeans_matches_pure_python_reference(spark, emb_small):
 
 
 def test_kmeans_cold_path_unchanged(spark, emb_small):
-    """The materialized-view cache must be a pure memo: a cache-cleared
+    """The k-means ingest artifact must be a pure memo: a cache-cleared
     (driver-fresh) invocation produces the identical assignment."""
-    from spark_file_mover_spark.llm import clustering
+    from spark_file_mover_spark.sources import io as sio
 
-    clustering._KM_CACHE.clear()
+    for k in [k for k in sio._ARTIFACTS if k[1] == "km-8"]:
+        sio._release(sio._ARTIFACTS.pop(k))
     first = registry.QUERIES["embed-kmeans-lloyd"](
         spark, "/root/testdata/sf0.001"
     ).collect()

@@ -1,16 +1,20 @@
-"""The r8 ingest-artifact cache contract: relations that are pure
-functions of the immutable input files (minhash bands, the IVF assigned
-relation, the span-family tok/gram/dup-position trio, the containment
-guarded-shingle checkpoint) persist per artifact_cache_key — (appId,
-sf_dir, corpus fingerprint) since r9 — and are evicted + rebuilt when
-the corpus changes, including an IN-PLACE rewrite at the same path
-(tests/test_r9_ops.py pins that case).
+"""The ingest-artifact cache contract (``sources.io.ingest_artifact``):
+relations that are pure functions of the immutable input files (minhash
+bands, the IVF assigned relation, the span-family tok/gram/dup-position
+trio, the containment guarded shingles, graph adjacency, k-means
+models, …) persist per artifact_cache_key — (appId, sf_dir, corpus
+fingerprint) — and are evicted + rebuilt when the corpus changes,
+including an IN-PLACE rewrite at the same path (tests/test_r9_ops.py
+pins that case).
 
-These tests pin the two paths a cached key can take wrong: a HIT that
-returns stale/incorrect results, and an EVICTION that fails to rebuild
-for a new corpus. Each cached key runs against a DIFFERENT sf_dir
-first, then oracle-compares at the test sf_dir (evict-rebuild), then
-oracle-compares again (hit) — both must hash-match DuckDB.
+These tests pin the three paths a cached key can take wrong: a HIT that
+returns stale/incorrect results, an EVICTION that fails to rebuild for
+a new corpus, and a plan-only build (``lazy_checkpoints()``, the
+tools/dump_plans.py mode) leaking its empty-leaf artifacts into
+production. Each cached key runs against a DIFFERENT sf_dir first, is
+then built once plan-only at the test sf_dir, then oracle-compares at
+the test sf_dir (evict-rebuild), then oracle-compares again (hit) —
+both must hash-match DuckDB.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from __future__ import annotations
 import pytest
 
 from spark_file_mover_spark import registry
+from spark_file_mover_spark.checkpoints import lazy_checkpoints
 from tests.parity import compare
 
 registry.load_all()
@@ -37,6 +42,13 @@ CACHED_KEYS = [
     "text-ccnet-buckets",
     "dedup-cross-bloom",
     "text-decontaminate",
+    "dedup-components",
+    "dedup-ngram-jaccard",
+    "text-boilerplate-lines",
+    "text-novelty-ratio",
+    "embed-ann-ivfpq",
+    "dedup-semdedup",
+    "graph-pagerank",
 ]
 
 
@@ -44,6 +56,10 @@ CACHED_KEYS = [
 def test_cache_evict_rebuild_then_hit(key, spark, sf_dir, duck):
     # warm the cache against a DIFFERENT corpus...
     registry.QUERIES[key](spark, OTHER_SF).collect()
+    # ...build the test corpus plan-only, as plan tooling does in a
+    # shared session (its empty-leaf artifacts must not be stored)...
+    with lazy_checkpoints():
+        registry.QUERIES[key](spark, sf_dir)
     # ...then the test corpus must evict + rebuild correctly...
     ok, msg = compare(
         registry.QUERIES[key](spark, sf_dir), duck.sql(registry.ORACLES[key])
