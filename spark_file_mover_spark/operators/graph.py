@@ -11,6 +11,10 @@ algorithm shares with ``dedup-components`` (llm/dedup.py).
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +49,139 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
         atexit.register(shutil.rmtree, d, ignore_errors=True)
     return df.checkpoint(eager=True)
 
+
+# ---------------------------------------------------------------------------
+# Fits-or-shuffle: one Arrow task when the graph fits, Pregel loops past it
+# ---------------------------------------------------------------------------
+
+# Planner-parity estimate of one graph row held in a broadcast hash
+# relation (three longs in an UnsafeRow plus hash-relation overhead).
+_PR_RANK_BCAST_BYTES = 80
+
+
+def _bcast_threshold(spark: SparkSession) -> int:
+    """The session's autoBroadcastJoinThreshold in bytes (the knob every
+    planner broadcast decision follows); 10 MB default on parse
+    failure."""
+    try:
+        return int(
+            str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+            .lower()
+            .rstrip("b")
+        )
+    except Exception:
+        return 10 * 1024 * 1024
+
+
+def _fits_one_task(spark: SparkSession, rows: int) -> bool:
+    """The graph loops' fits-or-shuffle gate: True when ``rows`` graph
+    rows at ``_PR_RANK_BCAST_BYTES`` each fit the session's
+    autoBroadcastJoinThreshold, so the gate follows the knob every
+    planner broadcast decision follows and adds none of its own.
+
+    Under the gate K1 and K15 (rows = nodes + edges) and K4 (rows =
+    adjacency rows, which bound its nodes) run their whole fixed-round
+    iteration as ONE Arrow task — ``coalesce(1).mapInPandas`` over the
+    checkpointed ingest artifacts, with a numpy kernel in exact int64
+    (:func:`_pagerank_kernel`, :func:`_ppr_kernel`, :func:`_bfs_kernel`)
+    — so a warm build runs no Spark job and the call costs one task;
+    K3 and K-core broadcast their per-round node relation instead.
+    Past the gate (a 100 TB graph, or a threshold of -1) every loop
+    keeps its shuffled per-round joins, the :func:`_tri_corners`
+    contract. Values are identical on both sides of the gate."""
+    return 0 < rows * _PR_RANK_BCAST_BYTES <= _bcast_threshold(spark)
+
+
+# The kernels raise wherever the ANSI loops would: the session runs
+# with spark.sql.ansi.enabled, so BIGINT overflow and DIV 0 fail the
+# query there, while numpy wraps silently and returns 0 for x // 0.
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+
+
+def _overflow() -> OverflowError:
+    return OverflowError("[ARITHMETIC_OVERFLOW] long overflow")
+
+
+def _i64(v: int) -> int:
+    """A scalar step of a kernel, checked like an ANSI BIGINT result."""
+    if not _I64_MIN <= v <= _I64_MAX:
+        raise _overflow()
+    return v
+
+
+def _add(a: np.ndarray, b) -> np.ndarray:
+    """Elementwise ``a + b`` raising on int64 overflow like ANSI ``+``
+    (a wrapped sum has the opposite sign of both operands)."""
+    r = a + b
+    if (((a ^ r) & (b ^ r)) < 0).any():
+        raise _overflow()
+    return r
+
+
+def _mul(a: np.ndarray, k: int) -> np.ndarray:
+    """``a * k`` for a positive constant ``k``, raising like ANSI ``*``."""
+    if ((a > _I64_MAX // k) | (a < -(2**63 // k))).any():
+        raise _overflow()
+    return a * k
+
+
+def _sum_at(idx: np.ndarray, vals: np.ndarray, n: int) -> np.ndarray:
+    """Exact int64 sums of ``vals`` into ``n`` buckets by ``idx``,
+    raising when a sum leaves int64 like an ANSI ``sum``. The values
+    are summed as 32-bit halves with ``np.add.at``, so neither
+    accumulator can wrap while a bucket takes fewer than 2^31 values;
+    ``bincount`` would sum float64 weights, which are not exact above
+    2^53."""
+    lo = np.zeros(n, np.int64)
+    hi = np.zeros(n, np.int64)
+    np.add.at(lo, idx, vals & 0xFFFFFFFF)
+    np.add.at(hi, idx, vals >> 32)
+    hi += lo >> 32
+    if ((hi >= 2**31) | (hi < -(2**31))).any():
+        raise _overflow()
+    return (hi << 32) | (lo & 0xFFFFFFFF)
+
+
+def _total(vals: np.ndarray) -> int:
+    """The exact sum of ``vals``, checked like :func:`_sum_at`."""
+    return int(_sum_at(np.zeros(len(vals), np.intp), vals, 1)[0])
+
+
+def _tagged_columns(pdf: pd.DataFrame):
+    """``(node, outdeg, src, dst)`` from the K1/K15 kernel input: tag 0
+    rows are ``pr-nodes`` (outdeg 0 = dangling), tag 1 rows
+    ``pr-edges``."""
+    is_node = pdf["tag"].to_numpy() == 0
+    a = pdf["a"].to_numpy(np.int64)
+    b = pdf["b"].to_numpy(np.int64)
+    return a[is_node], b[is_node], a[~is_node], b[~is_node]
+
+
+def _adjacency_columns(pdf: pd.DataFrame):
+    """``(src, dst)`` from the K4 kernel input."""
+    return pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+
+
+def _task(kernel, unpack, value: str, batches):
+    """The mapInPandas body of a one-task kernel: the partition's Arrow
+    batches as one frame, ``kernel(*unpack(frame))`` over its columns,
+    one ``(node, value)`` frame out. A partition with no batches yields
+    an empty frame."""
+    frames = list(batches)
+    if frames:
+        node, val = kernel(*unpack(pd.concat(frames, ignore_index=True)))
+    else:
+        node = val = np.empty(0, np.int64)
+    yield pd.DataFrame({"node": node, value: val})
+
+
+def _one_task(df: DataFrame, kernel, unpack, value: str) -> DataFrame:
+    """``df`` gathered into one partition and run through ``kernel``:
+    a ``(node, value)`` relation of longs computed in one task."""
+    return df.coalesce(1).mapInPandas(
+        functools.partial(_task, kernel, unpack, value),
+        f"node long, {value} long",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -92,15 +229,17 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_artifact("pr-edges", spark, sf_dir, build)
 
 
-def _pr_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    """``(nd, n_nodes)``: the one (node, outdeg) relation K1 and K15
-    iterate over — NULL outdeg marks a dangling node, so folding the
-    degree into the node (and rank) relation deletes the per-round
-    degree join AND the per-round anti-join — plus its exact row count
-    (one scalar, metadata-scale). An ingest artifact like the edges
-    it derives from."""
+def _pr_nodes(spark: SparkSession, sf_dir: str):
+    """``(nd, n_nodes, n_edges, n_seeds)``: the one (node, outdeg)
+    relation K1 and K15 iterate over — NULL outdeg marks a dangling
+    node, so folding the degree into the node (and rank) relation
+    deletes the per-round degree join AND the per-round anti-join —
+    plus three exact scalars from ONE aggregate job over it: the node
+    count, the edge count (Σ outdeg; with the node count it sizes the
+    one-task gate) and K15's seed count. An ingest artifact like the
+    edges it derives from."""
 
-    def build() -> tuple[DataFrame, int]:
+    def build():
         e = _pr_edges(spark, sf_dir)
         nodes = (
             e.select(F.col("src").alias("node"))
@@ -113,9 +252,24 @@ def _pr_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
                 "node", "outdeg"
             )
         )
-        return nd, nd.count()
+        n_nodes, n_edges, n_seeds = nd.selectExpr(
+            "count(*)",
+            "coalesce(sum(outdeg), 0)",
+            f"count_if({_PPR_SEED_PRED})",
+        ).first()
+        return nd, n_nodes, n_edges, n_seeds
 
     return ingest_artifact("pr-nodes", spark, sf_dir, build)
+
+
+def _pr_tagged(e: DataFrame, nd: DataFrame) -> DataFrame:
+    """The K1/K15 kernel input: ``pr-nodes`` as tag-0 rows
+    ``(node, outdeg)`` with 0 for a dangling node (a null would turn the
+    Arrow column into float64), unioned with ``pr-edges`` as tag-1 rows
+    ``(src, dst)``."""
+    return nd.selectExpr(
+        "0 AS tag", "node AS a", "coalesce(outdeg, 0) AS b"
+    ).unionAll(e.selectExpr("1 AS tag", "src AS a", "dst AS b"))
 
 
 def _pr_oracle() -> str:
@@ -168,73 +322,49 @@ ORDER BY node_id
     return head + "".join(blocks) + tail
 
 
-@query("graph-pagerank", oracle=_pr_oracle())
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K1: PageRank over the bipartite user → entity click graph mined
-    from ``events`` (edges: user interacted with entity ``props.k``) —
-    5 damped iterations (d=0.85) with full dangling-mass
-    redistribution, the authority signal recommendation and curation
-    pipelines compute over interaction graphs.
+def _pagerank_kernel(node, outdeg, src, dst, scale=_PR_SCALE):
+    """K1's iteration in numpy: ``(sorted node ids, ranks)`` after
+    ``_PR_ITERS`` rounds, the exact integers of :func:`_pagerank_loop`.
+    ``outdeg`` 0 marks a dangling node, and every edge endpoint is a
+    node (``pr-nodes`` is built from ``pr-edges``). Every quantity is
+    non-negative, so floor division equals Spark's truncating ``div``;
+    overflow raises like the ANSI loop (``scale`` is S0, a parameter so
+    tests can reach the int64 edge on small graphs)."""
+    order = np.argsort(node, kind="stable")
+    node, outdeg = node[order], outdeg[order]
+    n = len(node)
+    if n == 0:
+        return node, node.copy()
+    s = np.searchsorted(node, src)
+    d = np.searchsorted(node, dst)
+    dangling = np.flatnonzero(outdeg == 0)
+    tele = 15 * scale // 100
+    rank = np.full(n, scale, np.int64)
+    for _ in range(_PR_ITERS):
+        dang = _total(rank[dangling])
+        contrib = _sum_at(d, rank[s] // outdeg[s], n)
+        rank = _add(_mul(_add(contrib, dang // n), 85) // 100, tele)
+    return node, rank
 
-    Exactness across engines: ranks are FIXED-POINT BIGINTs (S0=10¹²
-    per node), contributions are ``rank div outdeg``, damping is the
-    rational 85/100 applied with integer floor-div — so every operation
-    is order-independent integer arithmetic and the driver hash-compares
-    exact ranks after 5 rounds, no float drift, no snapping. (At 10⁹
-    nodes scale S0 down so total mass N·S0 stays under 2⁶³ — the
-    arithmetic is otherwise size-independent.)
 
-    Plan shape (Pregel on DataFrames, the ``dedup-components``
-    pattern): the STATIC graph relations — edges and a single
-    (node, outdeg) relation with NULL marking dangling nodes — are
-    ingest artifacts (:func:`_pr_edges`, :func:`_pr_nodes`;
-    driver-fresh single runs still pay them, pinned by the cold path
-    in tests). Folding outdeg into the node AND rank relations deletes
-    the per-round degree join and the per-round anti-join of the
-    textbook formulation. Each round is then ONE
-    materialization job: e⋈ranks contribution aggregate, completion
-    join against (node, outdeg), and the one-row dangling aggregate
-    broadcast back — never a driver collect of row data. Ranks
-    localCheckpoint per round, truncating the 5-round lineage exactly
-    like dedup-components' pointer-jumping loop (lazier variants
-    measured WORSE: a fully lazy 5-round DAG pays exponential analysis
-    + recompute, and plain persist pins pre-AQE partitioning). At
-    cluster scale the edge relation would be pre-partitioned on
-    ``src`` so the per-round join co-locates with a one-sided shuffle
-    of ranks only (the rank relation is 24 B/row; edges never move
-    after round 0).
-    """
-    e = _pr_edges(spark, sf_dir)
-    nd, n_nodes = _pr_nodes(spark, sf_dir)
-
-    # ranks carries (node, outdeg, rank): every round is ONE
-    # materialization job — the e⋈ranks contribution aggregate, the
-    # completion join against nd, and the one-row dangling aggregate
-    # broadcast back (a sub-job over the previous round's materialized
-    # checkpoint; never a driver collect of row data)
+def _pagerank_loop(e: DataFrame, nd: DataFrame, n_nodes: int) -> DataFrame:
+    """K1 past the one-task gate: Pregel on DataFrames with shuffled
+    per-round joins. ``ranks`` carries (node, outdeg, rank); each round
+    builds the e⋈ranks contribution aggregate, the completion join
+    against nd and the one-row dangling aggregate broadcast back (never
+    a driver collect of row data), and localCheckpoints the new ranks —
+    6–7 Spark jobs a round under AQE, 30–35 a call (measured at
+    sf0.01–0.02)."""
     ranks = nd.withColumn("rank", F.lit(_PR_SCALE).cast("long"))
-    # r15: when the rank relation (3 longs/node hashed) fits the
-    # session broadcast threshold, broadcast it into the contribution
-    # join and broadcast the dst-bounded contrib relation into the
-    # completion join — the checkpointed edges never shuffle and nd
-    # never sorts; the only exchange per round is the contribution
-    # groupBy. Past the threshold (a 100 TB graph) the original
-    # shuffled joins, exactly the _tri_corners fits-or-shuffle gate.
-    # Values are unchanged either way (same integer arithmetic, only
-    # the physical join strategy moves).
-    fits = 0 < n_nodes * _PR_RANK_BCAST_BYTES <= _bcast_threshold(spark)
     for _ in range(_PR_ITERS):
         dang = ranks.filter(F.col("outdeg").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0)).alias("dang")
         )
         contrib = (
-            e.join(F.broadcast(ranks) if fits else ranks,
-                   e.src == ranks.node)
+            e.join(ranks, e.src == ranks.node)
             .groupBy("dst")
             .agg(F.sum(F.expr("rank div outdeg")).alias("contrib"))
         )
-        if fits:
-            contrib = F.broadcast(contrib)
         ranks = (
             nd.join(contrib, nd.node == contrib.dst, "left")
             .crossJoin(F.broadcast(dang))
@@ -251,6 +381,48 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+    return ranks
+
+
+@query("graph-pagerank", oracle=_pr_oracle())
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K1: PageRank over the bipartite user → entity click graph mined
+    from ``events`` (edges: user interacted with entity ``props.k``) —
+    5 damped iterations (d=0.85) with full dangling-mass
+    redistribution, the authority signal recommendation and curation
+    pipelines compute over interaction graphs.
+
+    Exactness across engines: ranks are FIXED-POINT BIGINTs (S0=10¹²
+    per node), contributions are ``rank div outdeg``, damping is the
+    rational 85/100 applied with integer floor-div — so every operation
+    is order-independent integer arithmetic and the driver hash-compares
+    exact ranks after 5 rounds, no float drift, no snapping. (At 10⁹
+    nodes scale S0 down so total mass N·S0 stays under 2⁶³ — the
+    arithmetic is otherwise size-independent.)
+
+    Plan shape: the STATIC graph relations — edges and a single
+    (node, outdeg) relation with NULL marking dangling nodes — are
+    ingest artifacts (:func:`_pr_edges`, :func:`_pr_nodes`;
+    driver-fresh single runs still pay them, pinned by the cold path
+    in tests). Folding outdeg into the node AND rank relations deletes
+    the per-round degree join and the per-round anti-join of the
+    textbook formulation. When nodes + edges fit one task
+    (:func:`_fits_one_task`) the 5 rounds run in one Arrow task over
+    the artifacts (:func:`_pagerank_kernel`); past it,
+    :func:`_pagerank_loop` runs them as shuffled Pregel rounds. At
+    cluster scale the edge relation would be pre-partitioned on
+    ``src`` so the per-round join co-locates with a one-sided shuffle
+    of ranks only (the rank relation is 24 B/row; edges never move
+    after round 0).
+    """
+    e = _pr_edges(spark, sf_dir)
+    nd, n_nodes, n_edges, _ = _pr_nodes(spark, sf_dir)
+    if _fits_one_task(spark, n_nodes + n_edges):
+        ranks = _one_task(
+            _pr_tagged(e, nd), _pagerank_kernel, _tagged_columns, "rank"
+        )
+    else:
+        ranks = _pagerank_loop(e, nd, n_nodes)
     return ranks.select(
         F.col("node").alias("node_id"),
         "rank",
@@ -297,21 +469,17 @@ def _sparse_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lpa_node_fits(spark: SparkSession, sf_dir: str) -> bool:
-    """True when every node-bounded per-round relation of the K3/K5
-    Pregel loops fits the session broadcast threshold — gated on the
-    EXACT adjacency edge count (an ingest artifact beside the
-    adjacency, like K1's node count; distinct nodes ≤ edge rows because
-    the undirected relation lists each node as a src) times the
-    _PR_RANK_BCAST_BYTES hashed-row estimate. Past the threshold the
-    loops keep their shuffled joins — the _tri_corners
-    fits-or-shuffle contract."""
+    """:func:`_fits_one_task` for the sparse adjacency, gated on its
+    EXACT row count (an ingest artifact beside the adjacency; distinct
+    nodes ≤ adjacency rows because the undirected relation lists each
+    node as a src)."""
     n = ingest_artifact(
         "lpa-edge-count",
         spark,
         sf_dir,
         lambda: _sparse_adjacency(spark, sf_dir).count(),
     )
-    return 0 < n * _PR_RANK_BCAST_BYTES <= _bcast_threshold(spark)
+    return _fits_one_task(spark, n)
 
 
 def _lpa_cte_prefix() -> str:
@@ -393,9 +561,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = adj.select(F.col("src").alias("node")).distinct().withColumn(
         "lbl", F.col("node")
     )
-    # r15: the K1 fits-or-shuffle gate — broadcast the 16 B/row label
-    # relation into each round's join so the checkpointed adjacency
-    # never shuffles; values unchanged (physical strategy only).
+    # The fits-or-shuffle gate (_fits_one_task): broadcast the 16 B/row
+    # label relation into each round's join so the checkpointed
+    # adjacency never shuffles; values unchanged (physical strategy
+    # only).
     fits = _lpa_node_fits(spark, sf_dir)
     for _ in range(_LPA_ROUNDS):
         neigh = (
@@ -477,38 +646,38 @@ ORDER BY node_id
     return head + "".join(blocks) + tail
 
 
-@query("graph-bfs-levels", oracle=_bfs_oracle())
-def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4: multi-source breadth-first distance labeling over the K3
-    sparse undirected user↔entity graph — every node's hop distance to
-    the nearest seed (ids divisible by 10) within 4 rounds. The
-    traversal member of the Pregel-on-DataFrames family (with K1 sum,
-    K3 mode, dedup-components min-closure): "how far is this account /
-    document from a trusted or flagged set" is the standard
-    contamination- and influence-radius signal curation and
-    abuse pipelines compute.
+def _bfs_kernel(src, dst):
+    """K4's frontier BFS in numpy over the adjacency rows:
+    ``(node, dist)`` of every node within ``_BFS_ROUNDS`` hops of a
+    seed (a src id divisible by ``_BFS_SEED_MOD``), the rows
+    :func:`_bfs_loop` settles. Each round marks the dst of every edge
+    out of last round's frontier, keeps the unsettled ones and makes
+    them the next frontier."""
+    node = np.unique(np.concatenate([src, dst]))
+    if len(node) == 0:
+        return node, node.copy()
+    s = np.searchsorted(node, src)
+    d = np.searchsorted(node, dst)
+    frontier = np.zeros(len(node), bool)
+    frontier[s] = True
+    frontier &= node % _BFS_SEED_MOD == 0
+    dist = np.where(frontier, 0, -1)
+    for i in range(1, _BFS_ROUNDS + 1):
+        hit = np.zeros(len(node), bool)
+        hit[d[frontier[s]]] = True
+        frontier = hit & (dist < 0)
+        dist[frontier] = i
+    reached = dist >= 0
+    return node[reached], dist[reached].astype(np.int64)
 
-    Spark runs TRUE FRONTIER BFS: each round expands only the nodes
-    reached last round (adj ⋈ frontier), left-anti-joins already
-    settled nodes, and appends the new level — per-round work is
-    proportional to the frontier's edge neighborhood, not the graph
-    (the textbook full-relaxation recomputes every settled node every
-    round; the oracle keeps exactly that formulation as an independent
-    derivation). Settled/frontier relations localCheckpoint per round
-    (the K1/K3 lineage contract); adjacency comes from the shared
-    cached K3 relation. At cluster scale adjacency pre-partitions on
-    src so each round shuffles only the 12 B/row frontier.
 
-    Exactness: distances are small integers produced by joins + MIN —
-    no floats anywhere; unreached nodes are simply absent (they carry
-    no row, not a sentinel), identically in both engines."""
-    adj = _sparse_adjacency(spark, sf_dir)
-    # ONE materialization per round: each round checkpoints only its
-    # frontier; "settled" stays a LAZY union of the already-checkpointed
-    # levels (≤ ROUNDS small relations), so the anti-join re-reads
-    # checkpointed blocks instead of re-materializing a settled relation
-    # every round (first cut checkpointed frontier AND settled: 12 jobs
-    # for 4 rounds; this shape pays 5).
+def _bfs_loop(adj: DataFrame) -> DataFrame:
+    """K4 past the one-task gate. Each round checkpoints only its
+    frontier; "settled" stays a LAZY union of the already-checkpointed
+    levels (≤ ROUNDS small relations), so the anti-join re-reads
+    checkpointed blocks instead of re-materializing a settled relation
+    every round. The seed level plus 4 rounds are 5 checkpoints, 20–28
+    Spark jobs a call under AQE (measured at sf0.01–0.02)."""
     levels = [
         adj.select(F.col("src").alias("node"))
         .distinct()
@@ -536,6 +705,40 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     settled = levels[0]
     for lv in levels[1:]:
         settled = settled.unionAll(lv)
+    return settled
+
+
+@query("graph-bfs-levels", oracle=_bfs_oracle())
+def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K4: multi-source breadth-first distance labeling over the K3
+    sparse undirected user↔entity graph — every node's hop distance to
+    the nearest seed (ids divisible by 10) within 4 rounds. The
+    traversal member of the Pregel-on-DataFrames family (with K1 sum,
+    K3 mode, dedup-components min-closure): "how far is this account /
+    document from a trusted or flagged set" is the standard
+    contamination- and influence-radius signal curation and
+    abuse pipelines compute.
+
+    Both paths run TRUE FRONTIER BFS: each round expands only the nodes
+    reached last round and drops already settled ones — per-round work
+    is proportional to the frontier's edge neighborhood, not the graph
+    (the textbook full-relaxation recomputes every settled node every
+    round; the oracle keeps exactly that formulation as an independent
+    derivation). When the adjacency fits one task
+    (:func:`_lpa_node_fits`) the rounds run in one Arrow task
+    (:func:`_bfs_kernel`); past it :func:`_bfs_loop` runs them as
+    adj ⋈ frontier joins with a left-anti join against the settled
+    levels. At cluster scale adjacency pre-partitions on src so each
+    round shuffles only the 12 B/row frontier.
+
+    Exactness: distances are small integers produced by joins + MIN —
+    no floats anywhere; unreached nodes are simply absent (they carry
+    no row, not a sentinel), identically in both engines."""
+    adj = _sparse_adjacency(spark, sf_dir)
+    if _lpa_node_fits(spark, sf_dir):
+        settled = _one_task(adj, _bfs_kernel, _adjacency_columns, "dist")
+    else:
+        settled = _bfs_loop(adj)
     return settled.select(
         F.col("node").alias("node_id"),
         F.col("dist").cast("long").alias("dist"),
@@ -624,28 +827,9 @@ def _tri_relations(spark: SparkSession, sf_dir: str):
 
 # Planner-parity estimate of a broadcast hash relation's in-memory
 # cost per oriented edge (two longs in an UnsafeRow + LongHashedRelation
-# page/pointer overhead). Used to compare against the session's own
-# autoBroadcastJoinThreshold, so the gate follows the same knob every
-# other broadcast decision in the engine follows.
+# page/pointer overhead), compared against the session's own
+# autoBroadcastJoinThreshold like :func:`_fits_one_task`.
 _TRI_EDGE_BCAST_BYTES = 64
-
-# Same planner-parity estimate for the PageRank rank relation (three
-# longs per node hashed: node, outdeg, rank).
-_PR_RANK_BCAST_BYTES = 80
-
-
-def _bcast_threshold(spark: SparkSession) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (the knob every
-    planner broadcast decision follows); 10 MB default on parse
-    failure."""
-    try:
-        return int(
-            str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-            .lower()
-            .rstrip("b")
-        )
-    except Exception:
-        return 10 * 1024 * 1024
 
 
 def _tri_corners(spark: SparkSession, sf_dir: str):
@@ -1059,8 +1243,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r15: the K1 fits-or-shuffle gate — the surviving-node relation
-    # (8 B/row) broadcasts into both endpoint restrictions and the
+    # The fits-or-shuffle gate (_fits_one_task): the surviving-node
+    # relation (8 B/row) broadcasts into both endpoint restrictions and the
     # per-round anti-join, so the checkpointed adjacency never
     # shuffles; values unchanged (physical strategy only).
     fits = _lpa_node_fits(spark, sf_dir)
@@ -1933,6 +2117,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PPR_ITERS = 4
 _PPR_SEED_MOD = 16  # seeds: user nodes with node % 16 == 0
+_PPR_SEED_PRED = f"node < {_PR_ENTITY_BASE} AND node % {_PPR_SEED_MOD} = 0"
 
 
 def _ppr_oracle() -> str:
@@ -2006,56 +2191,60 @@ ORDER BY node_id
     return head + "".join(blocks) + tail
 
 
-@query("graph-personalized-pagerank", oracle=_ppr_oracle())
-def graph_personalized_pagerank(
-    spark: SparkSession, sf_dir: str
+def _ppr_kernel(node, outdeg, src, dst, scale=_PR_SCALE):
+    """K15's iteration in numpy: ``(sorted node ids, ranks)`` after
+    ``_PPR_ITERS`` rounds, the exact integers of :func:`_ppr_loop`
+    (zero ranks included; the caller keeps rank > 0). Inputs, overflow
+    and ``scale`` as in :func:`_pagerank_kernel`; a non-empty graph
+    without seeds raises, since every seed quota divides by the seed
+    count."""
+    order = np.argsort(node, kind="stable")
+    node, outdeg = node[order], outdeg[order]
+    n = len(node)
+    if n == 0:
+        return node, node.copy()
+    seed = (node < _PR_ENTITY_BASE) & (node % _PPR_SEED_MOD == 0)
+    n_seeds = int(seed.sum())
+    if n_seeds == 0:
+        raise _no_seeds()
+    s = np.searchsorted(node, src)
+    d = np.searchsorted(node, dst)
+    dangling = np.flatnonzero(outdeg == 0)
+    tele = np.where(seed, _i64(_i64(15 * n) * scale) // 100 // n_seeds, 0)
+    rank = np.where(seed, _i64(n * scale) // n_seeds, 0)
+    for _ in range(_PPR_ITERS):
+        dang = _total(rank[dangling])
+        contrib = _sum_at(d, rank[s] // outdeg[s], n)
+        share = np.where(seed, dang // n_seeds, 0)
+        rank = _add(tele, _mul(_add(contrib, share), 85) // 100)
+    return node, rank
+
+
+def _no_seeds() -> ZeroDivisionError:
+    return ZeroDivisionError(
+        "[DIVIDE_BY_ZERO] graph-personalized-pagerank: the seed set is"
+        " empty, so every seed quota divides by zero"
+    )
+
+
+def _ppr_loop(
+    e: DataFrame, nd: DataFrame, n_nodes: int, n_seeds: int
 ) -> DataFrame:
-    """K15: personalized PageRank (Page et al. 1999 §6 / the
-    random-walk-with-restart of recommendation systems): both the
-    teleport mass AND the dangling redistribution return to a SEED
-    set (every 16th user) instead of all nodes, so ranks measure
-    proximity TO THE SEEDS — "entities these users gravitate to" —
-    rather than global authority (K1). Initial mass sits entirely on
-    the seeds; nodes the walk never reaches hold rank 0 and are
-    omitted (the oracle does the same), which is the sparsity that
-    makes PPR tractable per-seed-set at scale.
-
-    Exactness: the K1 fixed-point discipline verbatim — BIGINT mass,
-    ``rank div outdeg`` contributions, damping as 85/100 floor-div,
-    teleport and dangling shares as floor-divided seed quotas; the
-    driver hash-compares exact ranks after 4 rounds.
-
-    Plan shape: shares K1's edge + (node, outdeg) ingest artifacts;
-    each round is one
-    contribution aggregate over the rank>0 frontier (PPR's frontier
-    is SPARSE early — round 1 touches only seed out-edges), a
-    completion join, and the one-row dangling aggregate broadcast
-    back; ranks localCheckpoint per round. At cluster scale the
-    frontier sparsity is the point: per-seed-set PPR touches the
-    seeds' neighborhood, not the graph."""
-    e = _pr_edges(spark, sf_dir)
-    nd, n_nodes = _pr_nodes(spark, sf_dir)
-    seed_pred = (
-        f"node < {_PR_ENTITY_BASE} AND node % {_PPR_SEED_MOD} = 0"
-    )
-    n_seeds = ingest_artifact(
-        "ppr-seeds", spark, sf_dir, lambda: nd.filter(seed_pred).count()
-    )
+    """K15 past the one-task gate: K1's shuffled Pregel rounds with the
+    contribution aggregate over the rank>0 frontier (PPR's frontier is
+    SPARSE early — round 1 touches only seed out-edges), a completion
+    join and the one-row dangling aggregate broadcast back; ranks
+    localCheckpoint per round (28 Spark jobs a call under AQE). A
+    per-round broadcast of the rank relation measured only ~1.05× here
+    and was removed; the shuffled joins are the spill-graceful shape at
+    any scale."""
     r0_expr = (
-        f"CASE WHEN {seed_pred}"
+        f"CASE WHEN {_PPR_SEED_PRED}"
         f" THEN CAST({n_nodes} AS BIGINT) * {_PR_SCALE} DIV {n_seeds}"
         f" ELSE CAST(0 AS BIGINT) END"
     )
     ranks = nd.selectExpr("node", "outdeg", f"{r0_expr} AS rank")
     tele = f"15 * CAST({n_nodes} AS BIGINT) * {_PR_SCALE} DIV 100"
-    # r16 (verdict item 4): the r15 per-round broadcast gate is REMOVED
-    # for K15 — the driver's cold run measured it 0.90x and this
-    # round's paired interleaved A/B put the gated form only ~1.05x
-    # (0.93 vs 0.98 s min-of-4, inside noise), which does not clear
-    # the verdict's >=1.1x bar; late-session sweeps read the
-    # broadcast-per-round form far worse (3.4 s). K1 keeps its gate
-    # (paired 1.15x there). The shuffled joins below are the
-    # spill-graceful shape at any scale.
     for _ in range(_PPR_ITERS):
         dang = ranks.filter(F.col("outdeg").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0)).alias("dang")
@@ -2072,21 +2261,60 @@ def graph_personalized_pagerank(
             .selectExpr(
                 "node",
                 "outdeg",
-                f"CAST(CASE WHEN {seed_pred}"
+                f"CAST(CASE WHEN {_PPR_SEED_PRED}"
                 f" THEN ({tele}) DIV {n_seeds} ELSE 0 END"
                 f" + (85 * (COALESCE(contrib, 0)"
-                f" + CASE WHEN {seed_pred}"
+                f" + CASE WHEN {_PPR_SEED_PRED}"
                 f" THEN dang DIV {n_seeds} ELSE 0 END)) DIV 100"
                 f" AS BIGINT) AS rank",
             )
             .localCheckpoint(eager=True)
         )
+    return ranks
+
+
+@query("graph-personalized-pagerank", oracle=_ppr_oracle())
+def graph_personalized_pagerank(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """K15: personalized PageRank (Page et al. 1999 §6 / the
+    random-walk-with-restart of recommendation systems): both the
+    teleport mass AND the dangling redistribution return to a SEED
+    set (every 16th user) instead of all nodes, so ranks measure
+    proximity TO THE SEEDS — "entities these users gravitate to" —
+    rather than global authority (K1). Initial mass sits entirely on
+    the seeds; nodes the walk never reaches hold rank 0 and are
+    omitted (the oracle does the same), which is the sparsity that
+    makes PPR tractable per-seed-set at scale. A non-empty graph with
+    no seed raises ZeroDivisionError on both paths (the seed quotas
+    divide by the seed count); an empty graph returns no rows.
+
+    Exactness: the K1 fixed-point discipline verbatim — BIGINT mass,
+    ``rank div outdeg`` contributions, damping as 85/100 floor-div,
+    teleport and dangling shares as floor-divided seed quotas; the
+    driver hash-compares exact ranks after 4 rounds.
+
+    Plan shape: shares K1's edge + (node, outdeg) ingest artifacts and
+    its gate — one Arrow task (:func:`_ppr_kernel`) when nodes + edges
+    fit it, the shuffled rounds of :func:`_ppr_loop` past it. At
+    cluster scale the frontier sparsity is the point: per-seed-set PPR
+    touches the seeds' neighborhood, not the graph."""
+    e = _pr_edges(spark, sf_dir)
+    nd, n_nodes, n_edges, n_seeds = _pr_nodes(spark, sf_dir)
+    if n_nodes and not n_seeds:
+        raise _no_seeds()
+    if _fits_one_task(spark, n_nodes + n_edges):
+        ranks = _one_task(
+            _pr_tagged(e, nd), _ppr_kernel, _tagged_columns, "rank"
+        )
+    else:
+        ranks = _ppr_loop(e, nd, n_nodes, n_seeds)
     return (
         ranks.filter(F.col("rank") > 0)
         .selectExpr(
             "node AS node_id",
             "rank",
-            f"{seed_pred} AS is_seed",
+            f"{_PPR_SEED_PRED} AS is_seed",
             f"node >= {_PR_ENTITY_BASE} AS is_entity",
         )
         .orderBy("node_id")

@@ -5,8 +5,10 @@ CI, not a 100 TB run."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.functions import col as F_col
 
+from graph_reference import loop_path
 from spark_file_mover_spark import registry
 
 registry.load_all()
@@ -694,12 +696,36 @@ def test_winnowing_shuffles_ints_not_text(spark, sf_dir):
 
 def test_bfs_levels_no_cartesian(spark, sf_dir):
     """K4: frontier expansion is an equi-join on node ids — no
-    nested-loop/cartesian anywhere in the final composed plan."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["graph-bfs-levels"](spark, sf_dir)
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nested-loop/cartesian anywhere in the final composed plan, on the
+    one-task kernel path and on the shuffled loop past the gate."""
+    fn = registry.QUERIES["graph-bfs-levels"]
+    plans = [_formatted_plan(spark, fn(spark, sf_dir))]
+    with loop_path(spark):
+        plans.append(_formatted_plan(spark, fn(spark, sf_dir)))
+    assert "MapInPandas" not in plans[1]
+    for plan in plans:
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "key",
+    ["graph-pagerank", "graph-personalized-pagerank", "graph-bfs-levels"],
+)
+def test_graph_kernel_path_is_one_task(spark, sf_dir, key):
+    """K1/K15/K4 under the one-task gate: exactly one MapInPandas node
+    with no Exchange below it, and a warm build runs no Spark job (the
+    job-id window around it reads 0)."""
+    fn = registry.QUERIES[key]
+    fn(spark, sf_dir)  # warm the ingest artifacts
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.numTotalJobs()
+    df = fn(spark, sf_dir)
+    assert dag.numTotalJobs() - j0 == 0
+    tree = _formatted_plan(spark, df).split("\n\n")[0]
+    assert tree.count("MapInPandas") == 1
+    below = tree.split("MapInPandas", 1)[1]
+    assert "Exchange" not in below, tree
 
 
 def test_ewma_single_window_node(spark, sf_dir):

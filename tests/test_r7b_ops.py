@@ -12,13 +12,11 @@ from decimal import Decimal
 
 from pyspark.sql import functions as F
 
+from graph_reference import pagerank_reference
 from spark_file_mover_spark.llm.features import _RP_IN, _RP_OUT, _rp_sign
 from spark_file_mover_spark.operators.aggregates import agg_outlier_mad
 from spark_file_mover_spark.operators.graph import (
     _PR_ENTITY_BASE,
-    _PR_ITERS,
-    _PR_SCALE,
-    _PR_TELE,
     graph_pagerank,
 )
 from spark_file_mover_spark.operators.joins import join_interval_overlap
@@ -193,20 +191,7 @@ def test_pagerank_matches_pure_python(spark, sf_dir):
         if r.k % 2 == 0:
             edges.add((_PR_ENTITY_BASE + r.k, r.user_id))
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    outdeg: dict[int, int] = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    n = len(nodes)
-    rank = {v: _PR_SCALE for v in nodes}
-    for _ in range(_PR_ITERS):
-        contrib = {v: 0 for v in nodes}
-        for s, d in edges:
-            contrib[d] += rank[s] // outdeg[s]
-        dang = sum(rank[v] for v in nodes if v not in outdeg)
-        rank = {
-            v: _PR_TELE + (85 * (contrib[v] + dang // n)) // 100
-            for v in nodes
-        }
+    rank = pagerank_reference(nodes, sorted(edges))
     got = {r.node_id: r.rank for r in graph_pagerank(spark, sf_dir).collect()}
     assert got == rank  # EXACT integer equality, all nodes
     # sanity: dangling odd entities rank below back-linked even ones on

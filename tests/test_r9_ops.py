@@ -39,7 +39,7 @@ ARTIFACT_KEYS = [
     "embed-ann-ivfpq",  # km-8, ivfpq-index, ivfpq-exprs
     "graph-jaccard-neighbors",
     "graph-label-propagation",  # lpa-adjacency, lpa-edge-count
-    "graph-personalized-pagerank",  # pr-edges, pr-nodes, ppr-seeds
+    "graph-personalized-pagerank",  # pr-edges, pr-nodes
     "graph-triangle-count",
     "multimodal-audio-meta",
     "multimodal-avi-meta",

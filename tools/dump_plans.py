@@ -33,7 +33,7 @@ NOTES = {
     "sample-neyman-allocation": "One groupBy(source) to exact per-stratum sufficient statistics; allocation windows run over the strata-bounded relation.",
     "multimodal-srt-meta": "Map-only occurrence counting + regexp_extract_all + positional ms decode; zero shuffle, zero Python.",
     "join-bbox-overlap": "Grid-cell bin-then-refine in 2-D; pair credited once in the overlap's lower-left-corner cell; BIGINT residual areas.",
-    "graph-personalized-pagerank": "K1's Pregel loop with seed-quota teleport/dangling; contribution aggregate runs over the sparse rank>0 frontier; shares the cached graph relations.",
+    "graph-personalized-pagerank": "K1's gate and one-task shape with seed-quota teleport/dangling: pr-nodes (tag 0) union pr-edges (tag 1) coalesce(1) into ONE MapInPandas task running the 4 rounds in exact ANSI-checked int64 numpy; no exchange, no build-time job once the artifacts are warm. Past the gate: K1's shuffled Pregel rounds with the contribution aggregate over the sparse rank>0 frontier (28 build jobs a call).",
     "fn-html-strip": "Map-only strip/decode/collapse template (a {g} hole bridges the engines' regexp_replace global-flag split); zero shuffle.",
     "fn-xml-extract": "Spark XPath vs oracle regex — independent formulations; map-only with a split-count-gated width exchange (one-split test scans only; absent at cluster scale); per-row DOM parse declared triage-grade, from_xml parity pinned.",
     "agg-bh-fdr": "Distinct user-arm relation + per-type distinct-converter agg; BH rank/step-up windows run over the types-bounded relation only.",
@@ -95,7 +95,7 @@ NOTES = {
     "agg-outlier-mad": "ONE events scan collapses to the per-(type, cent) COUNT distribution (map-side combine; bounded by the VALUE RANGE, ~49k rows/type at any data size, persisted across the median and MAD passes); medians are order-statistic lookups on the cumulative window; the outlier threshold compare is pure BIGINT (2a*10^4 > 44478*amed2) so the flag is boundary-exact cross-engine.",
     "join-interval-overlap": "Interval x interval overlap as bin-then-refine: both sides explode to covered 7-day bins, equi-join on the bin (campaigns broadcast) + exact residual; each pair kept exactly once via bin == week(greatest(starts)) - dedupe by arithmetic, no shuffling DISTINCT.",
     "embed-random-projection": "Map-only JL sign projection 64->8: per-dim zip_with(embedding, +-1 literals) + sequential fold, norm fold alongside; one Generate barrier pins all nine folds to one evaluation each. Loop-based HOFs keep codegen compact - the unrolled 600-node form broke janino (observed; interpreted fallback), the folds do not.",
-    "graph-pagerank": "Pregel-on-DataFrames: edges/degrees/nodes localCheckpoint once; each of 5 rounds = one rank-relation join shuffle + one dst agg shuffle + a one-row dangling aggregate crossJoined back (broadcast); ranks localCheckpoint per round to truncate lineage. Exact fixed-point BIGINT arithmetic - the plan below is the LAST round's (checkpointed RDD scans are the leaves).",
+    "graph-pagerank": "Fits-or-shuffle. When nodes + edges fit the session broadcast threshold (80 B/row), the checkpointed pr-nodes (tag 0: node, outdeg) and pr-edges (tag 1: src, dst) union, coalesce(1) and run all 5 rounds in ONE MapInPandas task: a numpy kernel over searchsorted node indices, contributions by np.add.at in exact ANSI-checked int64. No exchange, and a warm build runs no Spark job. Past the gate: Pregel-on-DataFrames, each round a rank-relation join shuffle + dst agg shuffle + one-row dangling aggregate crossJoined back, ranks localCheckpointed per round (30-35 build jobs a call).",
     "embed-kmeans-lloyd": "MLlib KMeans shape: quantized relation localCheckpoints once; centroids collect per round (K*64 ints, metadata) and bake as literals so every assignment is MAP-ONLY (loop HOF folds + array_min over (dist,cid) structs behind a Generate barrier); only the K*64-row update aggregates shuffle. Fixed-point BIGINT quantize makes every step order-independent integer math; the plan below is the final cached-centroid assignment.",
     "agg-sketch-cms": "One scan explodes each event into d=3 sketch rows; the (r,pos) groupBy's map-side combine absorbs input volume into a <=768-row counter table, broadcast to the probe join; estimate = min over rows. Counters from the shared md5-prefix-60 hash - the driver compares actual sketch contents, integer-exact.",
     "text-bpe-pairs": "Token explode -> in-token pair explode (both Generate, zero shuffle) -> ONE pair groupBy bounded by charset^2 (~1-4k rows at any corpus size); the top-20 window ranks metadata, the sort-limit argument.",
@@ -129,7 +129,7 @@ NOTES = {
     "agg-quantile-exact": "Exact nearest-rank percentiles via the E13/E16/E17 distribution trick: scan collapses map-side to DISTINCT (priority, price) rows with counts; ONE exchange+sort feeds the CDF and per-group-total windows (two Window nodes, same partitioning - pinned); final bounded agg picks ceil(q*n) ranks with the (q*n+99) div 100 integer identity. No global sort, no row_number over raw rows; selected quantiles are input doubles picked by integer compare.",
     "agg-entropy": "Distribution diversity per source: hash agg to (source, lang) doc+char counts (|sources|x|langs|-bounded), per-source window normalizer over the AGGREGATED relation (pinned: 2 exchanges, window after agg, text column never read); each p*ln(p) / p^2 term 9-dp-snapped and summed in DECIMAL(18,9) - order-independent, engine-exact (tfidf ln precedent). 0*ln0=0 for zero-length-doc langs; all-empty source -> NULL char entropy (both caught by the differential harness).",
     "window-range-rolling": "Trailing 7-day/1-hour time-RANGE frames per user: ONE Exchange on user_id + ONE integer-microsecond sort serves all three frame aggregates (single Window node, frames per-expression - pinned); shuffle carries (event_id, user_id, ts_us, decimal value) = 32 B/row; rolling sums in exact DECIMAL(12,2), frame membership by integer compare incl. timestamp peers.",
-    "graph-bfs-levels": "Multi-source frontier BFS over the shared cached K3 adjacency: each round joins ONLY last round's frontier (adj JOIN frontier + left-anti vs the lazy union of checkpointed levels - one materialization job per round, 5 for 4 rounds), work proportional to the frontier neighborhood; the oracle keeps the textbook full-relaxation CTE unroll as an independent derivation. Pure integer joins+MIN; warm ~1.1 s at sf0.1 = the Pregel-family serial-job floor, not data volume.",
+    "graph-bfs-levels": "Multi-source frontier BFS over the shared cached K3 adjacency. Under the lpa-edge-count gate the adjacency coalesce(1)s into ONE MapInPandas task running the 4 frontier rounds in numpy (no exchange, no build-time job once warm). Past it: each round joins ONLY last round's frontier (adj JOIN frontier + left-anti vs the lazy union of checkpointed levels; 5 checkpoints, 20-28 build jobs a call). The oracle keeps the textbook full-relaxation CTE unroll as an independent derivation. Pure integer joins+MIN.",
     "text-winnowing": "Winnowing (SIGMOD'03): rightmost-min tie rule folded into the order itself - key = h40*2^20+(2^20-1-pos) makes the window argmin ONE integer frame-MIN, no per-window subquery; tokens pinned behind one Generate barrier (containment lesson); shingle hashes leave the scan as 8-byte ints, the per-doc window receives (doc_id, pos, key) only (pinned: no text/tk in any exchange); DISTINCT + per-doc rollup reuse the partitioning. Density 0.416 = 2/(w+1) theory, pinned in tests.",
     "window-ewma-decay": "Truncated-lag EWMA (the DISTRIBUTABLE form of the inherently-serial recurrence; 8 dyadic terms, truncation <= 2^-9 of the oldest weight): all 8 lag terms + presence mask + history count ride ONE user_id exchange and one (ts_us, event_id) sort - a single Window node (pinned). alpha=1/2 makes every weight 2^-(k+1) EXACT in DECIMAL(12,10), so numerator/denominator are order-independent decimal sums; the final value is one IEEE division snapped 9 dp.",
     "agg-distinct-bitmap": "Exact distinct via 62-bit bitmap words (the groupBitmap pattern): bit_or folds MAP-SIDE (pinned: partial_bit_or), so each split contributes <= distinct_ids/62 8-byte words per type to the exchange - a 62x wire reduction vs shuffling (type, user) pairs; popcount-sum is a second 2-phase agg; the exact-countDistinct audit join broadcasts (declared test scaffolding, the E15 precedent).",
