@@ -1,4 +1,4 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
@@ -75,317 +75,6 @@ WORKLOAD_CHANGED = {
     "sink-bucketed": "r12: write batch narrowed to o_orderkey<40000",
 }
 
-# Headline set: one representative per SURVEY.md §2 category, including
-# the write-path plane (A/B keys) so write regressions surface per-round.
-HEADLINE = [
-    "agg-hash",
-    "join-multiway-star",
-    "join-inner-equi",
-    "window-ranking",
-    "topk-per-group",
-    "stream-tumbling",
-    "stream-session",
-    "dedup-exact",
-    "dedup-near-minhash",
-    "sim-search-topk",
-    "sim-search-ivf",
-    "text-analysis",
-    "text-fingerprint",
-    "text-decontaminate",
-    "sort-limit",
-    "fn-string",
-    "fn-map-json",
-    "move-template",
-    "write-single-file",
-    "sink-partitioned",
-    "sink-merge-upsert",
-    "sink-compact",
-    # r5 additions (not in the frozen common16 set)
-    "text-chunk-sliding",
-    "text-tfidf-topk",
-    "embed-quantize-int8",
-    "sim-search-lsh",
-    # r6 additions (not in either frozen set)
-    "dedup-paragraph",
-    "multimodal-image-dims",
-    "multimodal-audio-meta",
-    "text-perplexity-proxy",
-    "text-dup-span",
-    # r7 additions (not in either frozen set)
-    "multimodal-video-meta",
-    "text-dup-cut",
-    "dedup-image-phash",
-    "text-gopher-rules",
-    "sink-zorder",
-    "agg-retention-cohort",
-    "dedup-cross-bloom",
-    "agg-sketch-hll-merge",
-    "scan-schema-evolution",
-    "agg-outlier-mad",
-    "join-interval-overlap",
-    "embed-random-projection",
-    "graph-pagerank",
-    # late-r7 additions (not in either frozen set)
-    "embed-kmeans-lloyd",
-    "agg-sketch-cms",
-    "text-bpe-pairs",
-    "sample-reservoir-weighted",
-    "embed-pq-encode",
-    "graph-label-propagation",
-    "multimodal-image-exif",
-    "sink-snapshot-read",
-    "scan-dpp-join",
-    "embed-ann-ivfpq",
-    "stream-disorder-metrics",
-    "agg-sketch-theta-setops",
-    "scan-csv-corrupt-recover",
-    "window-distribution",
-    "sample-balanced-downsample",
-    "join-asof-tolerance",
-    "fn-variant-json",
-    "text-containment",
-    "agg-mode-exact",
-    "stream-sink-exactly-once",
-    # r9 additions (not in either frozen set)
-    "agg-ks-drift",
-    "agg-hist-logbucket",
-    "window-session-batch",
-    "join-bloom-prefilter",
-    "sample-interleave-sources",
-    "text-ccnet-buckets",
-    "dedup-semdedup",
-    "join-asof-nearest",
-    "join-scd2-temporal",
-    "agg-quantile-exact",
-    "agg-entropy",
-    "window-range-rolling",
-    "graph-bfs-levels",
-    "text-winnowing",
-    "window-ewma-decay",
-    "agg-benford-digit",
-    "agg-distinct-bitmap",
-    "agg-proportion-ztest",
-    "window-streaks",
-    "graph-triangle-count",
-    "dedup-edit-distance",
-    "multimodal-gif-meta",
-    "window-zscore-anomaly",
-    "agg-ols-trend",
-    "etl-snapshot-diff",
-    "graph-jaccard-neighbors",
-    "scan-text-lines",
-    "fn-url-parse",
-    "window-period-over-period",
-    "agg-conversion-lag",
-    "sim-search-hard-negatives",
-    "agg-markov-transitions",
-    "text-collocations-pmi",
-    "fn-time-buckets",
-    "text-langid-confusion",
-    "dedup-profile",
-    "join-null-safe-eq",
-    "sink-overwrite-dynamic",
-    "scan-json-nested",
-    "embed-norm-outliers",
-    # late-r9 additions (not in either frozen set)
-    "window-gap-fill",
-    "agg-cuped",
-    "embed-matryoshka",
-    "graph-kcore",
-    "etl-dq-audit",
-    "fn-ip-cidr",
-    "sample-group-kfold",
-    "agg-auc-rank",
-    "window-attribution",
-    "agg-srm-check",
-    "agg-welch-ttest",
-    "agg-chisq-independence",
-    "window-cusum-changepoint",
-    "graph-assortativity",
-    "fn-useragent-parse",
-    "window-rolling-corr",
-    "agg-gini-coefficient",
-    "agg-hhi-concentration",
-    "window-interorder-gap",
-    # r10 additions (not in either frozen set)
-    "agg-new-vs-returning",
-    "agg-seasonality-dow",
-    "window-rfm-segment",
-    "window-concurrency-sweep",
-    "fn-geo-cell",
-    "text-readability",
-    "multimodal-bmp-meta",
-    "join-geo-cell-nearest",
-    "agg-spearman-corr",
-    "agg-power-mde",
-    "sample-quota-allocate",
-    "text-novelty-ratio",
-    "fn-phone-normalize",
-    "graph-reciprocity",
-    "graph-degree-histogram",
-    "agg-cohort-ltv",
-    "events-funnel-windowed",
-    "sample-downsample-negatives",
-    "agg-theil-index",
-    "agg-lorenz-deciles",
-    "agg-winsorized-stats",
-    "graph-global-clustering",
-    "text-zipf-fit",
-    "stream-topk-windowed",
-    "agg-bootstrap-ci",
-    "graph-hits",
-    "multimodal-webp-meta",
-    "window-ohlc-bars",
-    "sample-temporal-split",
-    "multimodal-flac-meta",
-    "window-calendar-mtd-ytd",
-    "agg-stickiness-dau-mau",
-    "etl-table-checksum",
-    "window-pareto-frontier",
-    "agg-survival-km",
-    "window-percentile-bands",
-    "agg-assoc-lift",
-    "window-drawdown",
-    # r12 additions — the ~70 keys that had never carried a recorded
-    # wall-time (verdict order 5: BENCH_FULL must cover every key)
-    "set-union-intersect-except",
-    "join-skew-salted",
-    "join-range-binned",
-    "join-asof",
-    "join-lateral-topk",
-    "dedup-components",
-    "text-repetition",
-    "filter-scalar-subquery",
-    "fn-bitwise",
-    "move-list-files",
-    "move-rename",
-    "scan-jsonl-roundtrip",
-    "sink-bucketed",
-    "join-semi-anti",
-    "join-broadcast",
-    "join-range-theta",
-    "dedup-simhash",
-    "dedup-ngram-jaccard",
-    "dedup-embedding-cosine",
-    "sample-train-split",
-    "sample-hash-stratified",
-    "sample-temperature-weights",
-    "text-url-normalize",
-    "project-select",
-    "filter-pred",
-    "filter-like-regexp",
-    "fn-date",
-    "fn-math",
-    "fn-array",
-    "fn-case-when-cast",
-    "multimodal-binary",
-    "multimodal-frame-sample",
-    "text-token-count",
-    "text-langid",
-    "text-quality-score",
-    "text-pii-scrub",
-    "text-ngram-freq",
-    "move-partition-extract",
-    "move-collision-guard",
-    "scan-parquet",
-    "scan-table-manifest",
-    "scan-orc-roundtrip",
-    "sink-sorted-pruning",
-    "sink-overwrite",
-    "udf-scalar-pandas",
-    "udaf-grouped-pandas",
-    "udtf-explode-like",
-    "agg-distinct",
-    "agg-approx-distinct",
-    "agg-rollup-cube-gsets",
-    "agg-having",
-    "agg-approx-quantile",
-    "agg-pivot",
-    "agg-stats",
-    "agg-unpivot",
-    "agg-incremental-merge",
-    "window-analytic",
-    "window-frame-agg",
-    "sample-pack-sequences",
-    "repartition-n",
-    "scan-csv-roundtrip",
-    "etl-scd2",
-    "etl-cdc-apply",
-    "stream-sliding",
-    "stream-dedup-late",
-    "stream-stateful-agg",
-    "stream-join",
-    "events-funnel",
-    "rollup-hierarchical",
-    "join-left-right-full",
-    # r12-new keys
-    "agg-mann-whitney",
-    "agg-psi-drift",
-    "agg-hill-tail",
-    "window-vwap-anchored",
-    "multimodal-png-meta",
-    "graph-adamic-adar",
-    "sink-partition-stats",
-    "udf-map-in-pandas",
-    # r12 second-wave additions
-    "agg-cramers-v",
-    "agg-jsd-drift",
-    "window-bollinger",
-    "window-rsi",
-    "etl-fk-audit",
-    "fn-luhn-checksum",
-    "text-logodds-monroe",
-    "sample-length-buckets",
-    "agg-kendall-tau",
-    "graph-modularity",
-    "multimodal-mp3-meta",
-    "agg-tukey-fences",
-    "window-local-extrema",
-    "fn-codec-roundtrip",
-    "embed-standardize",
-    "agg-overdispersion",
-    "sample-epoch-shuffle",
-    "agg-capture-recapture",
-    "window-autocorr",
-    "text-hapax-ratio",
-    "scan-csv-quoted-multiline",
-    "agg-confusion-mcc",
-    "etl-interval-islands",
-    "agg-mann-kendall",
-    "sample-rolling-origin",
-    "text-burstiness",
-    "window-seasonal-decompose",
-    "multimodal-ico-meta",
-    "dedup-keep-best",
-    "window-parkinson-vol",
-    # r13 additions (not in either frozen set)
-    "window-macd",
-    "window-stochastic-osc",
-    "window-ulcer-index",
-    "agg-ratio-delta-ci",
-    "fn-uuid3",
-    "sample-ess-weights",
-    "embed-centroid-drift",
-    "multimodal-avi-meta",
-    "multimodal-tar-meta",
-    "multimodal-zip-meta",
-    "agg-poisson-rate-test",
-    "agg-diff-in-diff",
-    "fn-semver-compare",
-    "fn-jwt-parse",
-    "text-boilerplate-lines",
-    "multimodal-ogg-meta",
-    "agg-bh-fdr",
-    "multimodal-pdf-meta",
-    "sink-expire-snapshots",
-    "fn-html-strip",
-    "fn-xml-extract",
-    "sample-neyman-allocation",
-    "multimodal-srt-meta",
-    "join-bbox-overlap",
-    "graph-personalized-pagerank",
-]
-
 
 def materialize(df) -> int:
     """Execute the full plan: xxhash64 over all output columns, folded
@@ -403,10 +92,7 @@ def main() -> None:
     registry.load_all()
     spark = get_spark("spark_file_mover_spark-bench")
 
-    keys = [k for k in HEADLINE if k in registry.QUERIES]
-    missing = [k for k in HEADLINE if k not in registry.QUERIES]
-    if missing:
-        print(f"# WARNING: headline keys not implemented: {missing}", file=sys.stderr)
+    keys = list(registry.QUERIES)  # every registered key, registry order
 
     # Queries run with stdout re-routed to stderr: the bench contract is
     # ONE JSON line on stdout, and the file-mover keys print their rename
@@ -623,7 +309,7 @@ def main() -> None:
 _LINE_BUDGET = 1985
 
 # Keys guaranteed a slot on the driver-parsed stdout line when the full
-# HEADLINE set cannot fit (~290 keys ≈ 7 kB vs the ~2 kB capture — no
+# registry cannot fit (~290 keys ≈ 7 kB vs the ~2 kB capture — no
 # precision can close that gap). FROZEN, and emitted in this order: the
 # r15 keep-list was value-width-dependent ("rest newest-first, drop from
 # the end"), so a digit change could shed a key round-over-round —

@@ -47,8 +47,9 @@ from __future__ import annotations
 import contextlib
 
 # True while inside :func:`lazy_checkpoints`. Cross-invocation caches
-# (sources.io.ingest_artifact and cached_plan) BYPASS both cache read
-# and write under the plan-only mode: a plan built against the
+# (sources.io.ingest_artifact, and the cached_plan behind every
+# ``pure`` registry key) BYPASS both cache read and write under the
+# plan-only mode: a plan built against the
 # substituted empty-leaf barrier is tooling-shaped, and caching it
 # would leak empty relations into later production-mode invocations in
 # the same session (observed: the scan-census test suite shares one

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 from spark_file_mover_spark.numerics import snap
 
 def _widen_narrow_scan(
@@ -69,8 +69,7 @@ FROM customer
 """
 
 
-@query("fn-string", oracle=_STRING_ORACLE)
-@plan_cached("fn-string")
+@query("fn-string", oracle=_STRING_ORACLE, pure=True)
 def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1: the string workhorse set — case, substr, concat, trim, pad,
     regexp extract/replace, levenshtein, split, LIKE."""
@@ -118,8 +117,7 @@ FROM orders
 """
 
 
-@query("fn-date", oracle=_DATE_ORACLE)
-@plan_cached("fn-date")
+@query("fn-date", oracle=_DATE_ORACLE, pure=True)
 def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2: date decomposition, truncation, arithmetic, epoch conversion.
     Timestamps never leave the query raw — everything is a string or an
@@ -169,8 +167,7 @@ FROM lineitem WHERE l_partkey % 7 = 0
 """
 
 
-@query("fn-math", oracle=_MATH_ORACLE)
-@plan_cached("fn-math")
+@query("fn-math", oracle=_MATH_ORACLE, pure=True)
 def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G3: rounding, abs, floor/ceil, pow/log/sqrt (rounded 6 dp — libm
     ulp hazard), modulo, sign, greatest/least — over the deterministic
@@ -222,8 +219,7 @@ FROM t
 """
 
 
-@query("fn-array", oracle=_ARRAY_ORACLE)
-@plan_cached("fn-array")
+@query("fn-array", oracle=_ARRAY_ORACLE, pure=True)
 def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G4: size/contains/slice/sort/distinct plus higher-order
     filter/transform/aggregate — all codegen'd JVM lambdas, the idiomatic
@@ -271,8 +267,7 @@ FROM events
 """
 
 
-@query("fn-map-json", oracle=_MAPJSON_ORACLE)
-@plan_cached("fn-map-json")
+@query("fn-map-json", oracle=_MAPJSON_ORACLE, pure=True)
 def fn_map_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G5: JSON parsing of events.props — ONE ``from_json`` into a
     generic map, every output column derived from it (r15: the
@@ -326,8 +321,7 @@ FROM orders
 """
 
 
-@query("fn-case-when-cast", oracle=_CASE_CAST_ORACLE)
-@plan_cached("fn-case-when-cast")
+@query("fn-case-when-cast", oracle=_CASE_CAST_ORACLE, pure=True)
 def fn_case_when_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G6: simple + searched CASE, numeric/string/date casts incl. a
     timestamp↔string round trip, NULLIF/COALESCE."""
@@ -375,8 +369,7 @@ FROM orders WHERE o_orderkey % 100 = 0
 """
 
 
-@query("fn-bitwise", oracle=_BITWISE_ORACLE)
-@plan_cached("fn-bitwise")
+@query("fn-bitwise", oracle=_BITWISE_ORACLE, pure=True)
 def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7: bitwise AND/OR/XOR, shifts, popcount — flag fields, bitmap
     membership, hash mixing and bucket math all run on these; exact
@@ -414,8 +407,7 @@ ORDER BY event_id
 """
 
 
-@query("fn-variant-json", oracle=_VARIANT_ORACLE)
-@plan_cached("fn-variant-json")
+@query("fn-variant-json", oracle=_VARIANT_ORACLE, pure=True)
 def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8: the VARIANT semi-structured type (new in Spark 4) — the
     engine-native answer to JSON columns: ``parse_json`` decodes once
@@ -493,8 +485,7 @@ FROM u ORDER BY doc_id
 """
 
 
-@query("fn-url-parse", oracle=_URLPARSE_ORACLE)
-@plan_cached("fn-url-parse")
+@query("fn-url-parse", oracle=_URLPARSE_ORACLE, pure=True)
 def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G9: URL component extraction (scheme, host, port, path, one
     query parameter, fragment) — the parse every crawl/referrer
@@ -568,8 +559,7 @@ FROM e ORDER BY event_id
 """
 
 
-@query("fn-time-buckets", oracle=_TIMEBUCKET_ORACLE)
-@plan_cached("fn-time-buckets")
+@query("fn-time-buckets", oracle=_TIMEBUCKET_ORACLE, pure=True)
 def fn_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G10: time bucketing — 15-minute / hourly / daily bucket starts,
     ISO week start, hour-of-day and day-of-week, all as EXACT integer
@@ -660,8 +650,7 @@ FROM num ORDER BY event_id
 """
 
 
-@query("fn-ip-cidr", oracle=_IP_ORACLE)
-@plan_cached("fn-ip-cidr")
+@query("fn-ip-cidr", oracle=_IP_ORACLE, pure=True)
 def fn_ip_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G11: IPv4 parsing + CIDR-block classification — the access-log
     staple: split dotted-quad strings into octets, rebuild the 32-bit
@@ -823,8 +812,7 @@ FROM synth ORDER BY event_id
 """
 
 
-@query("fn-useragent-parse", oracle=_UA_ORACLE)
-@plan_cached("fn-useragent-parse")
+@query("fn-useragent-parse", oracle=_UA_ORACLE, pure=True)
 def fn_useragent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G12: user-agent parse + bot classification — the access-log
     twin of G11 (IP/CIDR): family, major version, OS, mobile flag and
@@ -924,8 +912,7 @@ FROM cells ORDER BY c_custkey
 """
 
 
-@query("fn-geo-cell", oracle=_GEO_ORACLE)
-@plan_cached("fn-geo-cell")
+@query("fn-geo-cell", oracle=_GEO_ORACLE, pure=True)
 def fn_geo_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G13: geo coordinate parsing + grid-cell bucketing — the spatial
     preprocessing every geo pipeline runs BEFORE any join: parse
@@ -1084,8 +1071,7 @@ FROM c ORDER BY event_id
 """
 
 
-@query("fn-phone-normalize", oracle=_PHONE_ORACLE)
-@plan_cached("fn-phone-normalize")
+@query("fn-phone-normalize", oracle=_PHONE_ORACLE, pure=True)
 def fn_phone_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G14: phone-number normalization to E.164 — the identity-
     resolution / PII-handling staple: free-form numbers ('+1 (212)
@@ -1244,8 +1230,7 @@ FROM k ORDER BY acct_id
 """
 
 
-@query("fn-luhn-checksum", oracle=_LUHN_ORACLE)
-@plan_cached("fn-luhn-checksum")
+@query("fn-luhn-checksum", oracle=_LUHN_ORACLE, pure=True)
 def fn_luhn_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G15: Luhn mod-10 checksum (ISO/IEC 7812) — compute the check
     digit for a 15-digit payload, emit the full 16-digit account
@@ -1316,8 +1301,7 @@ FROM s ORDER BY doc_id
 """
 
 
-@query("fn-codec-roundtrip", oracle=_CODEC_ORACLE)
-@plan_cached("fn-codec-roundtrip")
+@query("fn-codec-roundtrip", oracle=_CODEC_ORACLE, pure=True)
 def fn_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G16: binary↔text codec surface — base64 and hex encodings of a
     UTF-8 payload, their decode roundtrips asserted AS DATA, an md5
@@ -1396,8 +1380,7 @@ FROM h ORDER BY doc_id
 """
 
 
-@query("fn-uuid3", oracle=_UUID3_ORACLE)
-@plan_cached("fn-uuid3")
+@query("fn-uuid3", oracle=_UUID3_ORACLE, pure=True)
 def fn_uuid3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G17: RFC 4122 §4.3 name-based UUID minting (version 3, MD5) —
     the deterministic-ID primitive ingestion pipelines use to assign
@@ -1529,8 +1512,7 @@ FROM p ORDER BY pkg_id
 """
 
 
-@query("fn-semver-compare", oracle=_SEMVER_ORACLE)
-@plan_cached("fn-semver-compare")
+@query("fn-semver-compare", oracle=_SEMVER_ORACLE, pure=True)
 def fn_semver_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G18: SemVer 2.0 parsing and precedence (semver.org §11) — the
     version-comparison primitive dependency/artifact analytics need:
@@ -1651,8 +1633,8 @@ SELECT token_id,
        json_extract_string(payload_json, '$.scope') AS scope
 FROM d ORDER BY token_id
 """,
+    pure=True,
 )
-@plan_cached("fn-jwt-parse")
 def fn_jwt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G19: JWT decoding — split the three base64url segments, undo the
     URL-safe alphabet (RFC 4648 §5: '-'→'+', '_'→'/', padding
@@ -1830,8 +1812,8 @@ SELECT doc_id,
             AS BIGINT) AS n_tags
 FROM s ORDER BY doc_id
 """,
+    pure=True,
 )
-@plan_cached("fn-html-strip")
 def fn_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G20: HTML tag stripping + entity decoding — the first cleaning
     pass every web-scraped corpus goes through before any quality
@@ -1903,8 +1885,8 @@ SELECT s_suppkey AS supp_id,
          AS id_attr
 FROM x ORDER BY supp_id
 """,
+    pure=True,
 )
-@plan_cached("fn-xml-extract")
 def fn_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G21: XPath extraction from XML payloads — the feed-ingestion
     primitive for the XML that B2B/finance/legacy pipelines still

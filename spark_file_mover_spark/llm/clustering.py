@@ -25,7 +25,6 @@ from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import (
     ingest_artifact,
     load_table,
-    plan_cached,
     session_memo,
 )
 from spark_file_mover_spark.numerics import snap
@@ -600,8 +599,7 @@ def _ivfpq_codes(asg: DataFrame, cents: dict) -> DataFrame:
     )
 
 
-@query("embed-ann-ivfpq", oracle=_ivfpq_oracle())
-@plan_cached("embed-ann-ivfpq")
+@query("embed-ann-ivfpq", oracle=_ivfpq_oracle(), pure=True)
 def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I44: IVF-PQ approximate nearest neighbor with asymmetric
     distance computation (Jégou et al. 2011) — the composition the ANN
@@ -969,8 +967,7 @@ ORDER BY asg.vec_id
     )
 
 
-@query("dedup-semdedup", oracle=_sd_oracle())
-@plan_cached("dedup-semdedup")
+@query("dedup-semdedup", oracle=_sd_oracle(), pure=True)
 def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I49: SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     deduplication that only ever compares embeddings INSIDE k-means

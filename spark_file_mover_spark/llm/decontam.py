@@ -31,11 +31,7 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import (
-    ingest_artifact,
-    load_table,
-    plan_cached,
-)
+from spark_file_mover_spark.sources.io import ingest_artifact, load_table
 from spark_file_mover_spark.numerics import snap
 
 _GRAM_N = 5
@@ -65,8 +61,7 @@ ORDER BY d.doc_id
 """
 
 
-@query("text-decontaminate", oracle=_DECONTAM_ORACLE)
-@plan_cached("text-decontaminate")
+@query("text-decontaminate", oracle=_DECONTAM_ORACLE, pure=True)
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set decontamination: one row per document with ``is_eval``
     (deterministic 10% slice) and ``contaminated`` (a non-eval document
@@ -159,8 +154,7 @@ ORDER BY b.doc_id
 """
 
 
-@query("text-repetition", oracle=_REPETITION_ORACLE)
-@plan_cached("text-repetition")
+@query("text-repetition", oracle=_REPETITION_ORACLE, pure=True)
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document: the fraction of
     bigrams that are duplicates (``1 − |distinct bigrams| / |bigrams|``)
@@ -277,8 +271,7 @@ FROM n ORDER BY doc_id
 """
 
 
-@query("text-url-normalize", oracle=_URL_ORACLE)
-@plan_cached("text-url-normalize")
+@query("text-url-normalize", oracle=_URL_ORACLE, pure=True)
 def text_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization for crawl dedup: scheme/www stripped, utm_*
     and ref tracking params removed, separators tidied, trailing slash

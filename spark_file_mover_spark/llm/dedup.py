@@ -45,7 +45,6 @@ from spark_file_mover_spark.numerics import snap
 from spark_file_mover_spark.sources.io import (
     ingest_artifact,
     load_table,
-    plan_cached,
     scan_partitions,
     session_memo,
 )
@@ -69,8 +68,7 @@ FROM (
 """
 
 
-@query("dedup-exact", oracle=_EXACT_ORACLE)
-@plan_cached("dedup-exact")
+@query("dedup-exact", oracle=_EXACT_ORACLE, pure=True)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I1: exact duplicate removal on whitespace/case-normalized text,
     keeping the lowest doc_id per duplicate group (deterministic survivor
@@ -434,8 +432,7 @@ FROM documents ORDER BY doc_id
 """
 
 
-@query("dedup-near-minhash", oracle=_MINHASH_ORACLE)
-@plan_cached("dedup-near-minhash")
+@query("dedup-near-minhash", oracle=_MINHASH_ORACLE, pure=True)
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I2: banded MinHash-LSH near-dup clustering (plan details on
     :func:`minhash_clusters`), declared as an invariant audit.
@@ -676,8 +673,7 @@ FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id
 """
 
 
-@query("dedup-components", oracle=_COMPONENTS_ORACLE)
-@plan_cached("dedup-components")
+@query("dedup-components", oracle=_COMPONENTS_ORACLE, pure=True)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact transitive dedup clustering, driver-verified end to end:
     the deterministic Jaccard>=0.5 candidate pairs (the dedup-ngram-jaccard
@@ -752,8 +748,7 @@ FROM votes GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@query("dedup-simhash", oracle=_SIMHASH_ORACLE)
-@plan_cached("dedup-simhash")
+@query("dedup-simhash", oracle=_SIMHASH_ORACLE, pure=True)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash: 60-bit fingerprint via per-bit votes of token hashes;
     near-dups share high bits (bucket on the top 16 for candidate
@@ -844,8 +839,7 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
 """
 
 
-@query("dedup-ngram-jaccard", oracle=_JACCARD_ORACLE)
-@plan_cached("dedup-ngram-jaccard")
+@query("dedup-ngram-jaccard", oracle=_JACCARD_ORACLE, pure=True)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard ≥ 0.5 between documents blocked by
     (lang, source) — the verification stage of a dedup pipeline.
@@ -976,8 +970,7 @@ ORDER BY s.doc_id
 """
 
 
-@query("dedup-paragraph", oracle=_PARA_ORACLE)
-@plan_cached("dedup-paragraph")
+@query("dedup-paragraph", oracle=_PARA_ORACLE, pure=True)
 def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I29: CCNet-style paragraph-level dedup — drop every paragraph
     that already occurred earlier in the corpus (first occurrence in
@@ -1204,8 +1197,7 @@ ORDER BY s.doc_id
 """
 
 
-@query("text-dup-span", oracle=_SPAN_ORACLE)
-@plan_cached("text-dup-span")
+@query("text-dup-span", oracle=_SPAN_ORACLE, pure=True)
 def text_dup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I33: cross-document duplicated-span detection — the MARKING pass
     of exact-substring dedup (the Lee et al. "Deduplicating Training
@@ -1323,8 +1315,7 @@ ORDER BY s.doc_id
 """
 
 
-@query("text-dup-cut", oracle=_CUT_ORACLE)
-@plan_cached("text-dup-cut")
+@query("text-dup-cut", oracle=_CUT_ORACLE, pure=True)
 def text_dup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I34: exact-substring dedup, CUTTING pass — the second half of the
     Lee et al. recipe whose marking half is ``text-dup-span``: every
@@ -1423,10 +1414,10 @@ ORDER BY p.doc_id
 
 
 @query("dedup-cross-bloom", oracle=_XBLOOM_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build localCheckpoints
-# the doc-scale candidate relation (probe explode + groupBy) — a
-# plan-cache hit would serve that materialized intermediate
-# (result caching). The barrier stays; the plan cache goes.
+# Not ``pure``: the build localCheckpoints the doc-scale candidate
+# relation (probe explode + groupBy) — a plan-cache hit would serve
+# that materialized intermediate (result caching). The barrier
+# stays, so the key is not ``pure``.
 def dedup_cross_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I38: cross-corpus exact dedup through a Bloom-filter summary —
     the pattern for "dedup the NEW crawl against the EXISTING corpus"
@@ -1620,8 +1611,7 @@ FROM best ORDER BY doc_id
 """
 
 
-@query("text-containment", oracle=_CONTAIN_ORACLE)
-@plan_cached("text-containment")
+@query("text-containment", oracle=_CONTAIN_ORACLE, pure=True)
 def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle-set CONTAINMENT C(A→B) = |S_A ∩ S_B| / |S_A|
     (Broder 1997's second resemblance measure) within (lang, source)
@@ -1862,12 +1852,12 @@ ORDER BY a, b
 
 
 @query("dedup-edit-distance", oracle=_EDITDIST_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build localCheckpoints
-# the normalized-text relation feeding both verify-join sides — a
-# map-only subtree with no exchange to reuse, so the barrier is the
-# only way to pay the scan+regex once per invocation; a plan-cache
-# hit would skip it entirely (result caching). Barrier stays,
-# plan cache goes.
+# Not ``pure``: the build localCheckpoints the normalized-text
+# relation feeding both verify-join sides — a map-only subtree with
+# no exchange to reuse, so the barrier is the only way to pay the
+# scan+regex once per invocation; a plan-cache hit would skip it
+# entirely (result caching). The barrier stays, so the key is not
+# ``pure``.
 def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I51: exact edit-distance near-dup verification over winnowing-
     fingerprint candidates — the full MOSS-style pipeline (sketch →
@@ -2037,8 +2027,7 @@ FROM h ORDER BY cluster_size
 """
 
 
-@query("dedup-profile", oracle=_DUP_PROFILE_ORACLE)
-@plan_cached("dedup-profile")
+@query("dedup-profile", oracle=_DUP_PROFILE_ORACLE, pure=True)
 def dedup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I56: corpus duplication profile — the histogram of exact-dup
     cluster sizes (how many documents live in clusters of 1, 2, 3…)
@@ -2110,8 +2099,7 @@ ORDER BY b.doc_id
 """
 
 
-@query("dedup-keep-best", oracle=_KEEPBEST_ORACLE)
-@plan_cached("dedup-keep-best")
+@query("dedup-keep-best", oracle=_KEEPBEST_ORACLE, pure=True)
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I79: canonical-document ELECTION — per exact-duplicate cluster
     keep the BEST member (longest n_chars, doc_id tie-break) instead

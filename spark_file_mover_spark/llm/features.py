@@ -26,11 +26,7 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import (
-    ingest_artifact,
-    load_table,
-    plan_cached,
-)
+from spark_file_mover_spark.sources.io import ingest_artifact, load_table
 from spark_file_mover_spark.numerics import snap
 
 # ---------------------------------------------------------------------------
@@ -62,8 +58,7 @@ ORDER BY doc_id, chunk_idx
 """
 
 
-@query("text-chunk-sliding", oracle=_CHUNK_ORACLE)
-@plan_cached("text-chunk-sliding")
+@query("text-chunk-sliding", oracle=_CHUNK_ORACLE, pure=True)
 def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking: each document's token stream is cut into
     {chunk}-token windows advancing by {stride} tokens (overlap = 16), the
@@ -166,8 +161,7 @@ def _tf_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_artifact("tf", spark, sf_dir, build)
 
 
-@query("text-tfidf-topk", oracle=_TFIDF_ORACLE)
-@plan_cached("text-tfidf-topk")
+@query("text-tfidf-topk", oracle=_TFIDF_ORACLE, pure=True)
 def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} terms per document by smoothed TF-IDF
     (``tf * ln((N+1)/(df+1))``) — the classic cheap relevance/keyword
@@ -257,8 +251,7 @@ ORDER BY vec_id
 """
 
 
-@query("embed-quantize-int8", oracle=_QUANT_ORACLE)
-@plan_cached("embed-quantize-int8")
+@query("embed-quantize-int8", oracle=_QUANT_ORACLE, pure=True)
 def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization of the embedding column —
     ``q_i = floor(v_i * 127/absmax + 0.5)`` — the 4× shrink an embedding
@@ -357,8 +350,7 @@ ORDER BY nt.doc_id
 """
 
 
-@query("text-perplexity-proxy", oracle=_XENT_ORACLE)
-@plan_cached("text-perplexity-proxy")
+@query("text-perplexity-proxy", oracle=_XENT_ORACLE, pure=True)
 def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM cross-entropy per document — the proxy for the LM
     perplexity filter every CCNet-descended curation pipeline runs: fit
@@ -541,8 +533,7 @@ def _rp_struct_sql() -> str:
 _RP_SQL = None
 
 
-@query("embed-random-projection", oracle=_rp_oracle())
-@plan_cached("embed-random-projection")
+@query("embed-random-projection", oracle=_rp_oracle(), pure=True)
 def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson–Lindenstrauss random projection of the embedding column,
     64 → 8 dims with a fixed Rademacher (±1) matrix (Achlioptas 2001:
@@ -620,8 +611,7 @@ ORDER BY rank
 """
 
 
-@query("text-bpe-pairs", oracle=_BPE_ORACLE)
-@plan_cached("text-bpe-pairs")
+@query("text-bpe-pairs", oracle=_BPE_ORACLE, pure=True)
 def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide BPE merge-candidate statistics — the pair-counting
     step of byte-pair-encoding tokenizer training (Sennrich et al.
@@ -695,8 +685,7 @@ FROM b ORDER BY doc_id
 """
 
 
-@query("text-ccnet-buckets", oracle=_CCNET_ORACLE)
-@plan_cached("text-ccnet-buckets")
+@query("text-ccnet-buckets", oracle=_CCNET_ORACLE, pure=True)
 def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I48: the CCNet bucketing step — split each language's corpus
     into head/middle/tail TERCILES of LM perplexity (here the repo's
@@ -778,8 +767,7 @@ ORDER BY x, y
 """
 
 
-@query("text-collocations-pmi", oracle=_PMI_ORACLE)
-@plan_cached("text-collocations-pmi")
+@query("text-collocations-pmi", oracle=_PMI_ORACLE, pure=True)
 def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I53: bigram collocation mining by pointwise mutual information —
     PMI = ln(p(x,y) / (p(x)·p(y))) over consecutive token pairs, the
@@ -908,8 +896,7 @@ FROM m GROUP BY label ORDER BY label
 """
 
 
-@query("embed-norm-outliers", oracle=_NORMQA_ORACLE)
-@plan_cached("embed-norm-outliers")
+@query("embed-norm-outliers", oracle=_NORMQA_ORACLE, pure=True)
 def embed_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I57: embedding-norm QA per label — count, mean/min/max norm,
     zero-norm count (failed embedding jobs) and the count of vectors
@@ -1034,8 +1021,7 @@ FROM sel ORDER BY query_id, budget
 """
 
 
-@query("embed-matryoshka", oracle=_MRL_ORACLE)
-@plan_cached("embed-matryoshka")
+@query("embed-matryoshka", oracle=_MRL_ORACLE, pure=True)
 def embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I58: Matryoshka truncation audit (Kusupati et al. 2022,
     arXiv:2205.13147 — MRL): before serving truncated embeddings (the
@@ -1228,8 +1214,7 @@ FROM m
 """
 
 
-@query("text-zipf-fit", oracle=_ZIPF_ORACLE)
-@plan_cached("text-zipf-fit")
+@query("text-zipf-fit", oracle=_ZIPF_ORACLE, pure=True)
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I65: Zipf-law fit over the corpus vocabulary — OLS of ln(freq)
     on ln(rank) over the top-{K} tokens: natural text follows
@@ -1382,8 +1367,7 @@ ORDER BY direction, rank
 """
 
 
-@query("text-logodds-monroe", oracle=_LOGODDS_ORACLE)
-@plan_cached("text-logodds-monroe")
+@query("text-logodds-monroe", oracle=_LOGODDS_ORACLE, pure=True)
 def text_logodds_monroe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I70: Monroe-Colaresi-Quinn log-odds ratio with an informative
     Dirichlet prior ("Fightin' Words", 2008) between the English and
@@ -1502,8 +1486,7 @@ FROM x ORDER BY vec_id, dim
 """
 
 
-@query("embed-standardize", oracle=_STD_ORACLE)
-@plan_cached("embed-standardize")
+@query("embed-standardize", oracle=_STD_ORACLE, pure=True)
 def embed_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I73: per-dimension embedding standardization — z-score each
     coordinate against ITS dimension's corpus mean/std (diagonal
@@ -1631,8 +1614,7 @@ ORDER BY j.label
 """
 
 
-@query("embed-centroid-drift", oracle=_CDRIFT_ORACLE)
-@plan_cached("embed-centroid-drift")
+@query("embed-centroid-drift", oracle=_CDRIFT_ORACLE, pure=True)
 def embed_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I81: per-label centroid drift between two corpus halves — the
     embedding-space twin of the scalar drift panel (PSI E47 / JSD E50 /

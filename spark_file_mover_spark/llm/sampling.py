@@ -19,7 +19,7 @@ from spark_file_mover_spark.llm._textnorm import (
     toks,
 )
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 from spark_file_mover_spark.numerics import snap
 
 _SPLIT_ORACLE = """
@@ -66,8 +66,7 @@ FROM s ORDER BY lang
 """
 
 
-@query("sample-hash-stratified", oracle=_STRATIFIED_ORACLE)
-@plan_cached("sample-hash-stratified")
+@query("sample-hash-stratified", oracle=_STRATIFIED_ORACLE, pure=True)
 def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified 20% sample per language via stable key hashing —
     hash-modulo selection picks the same documents on any cluster at any
@@ -136,11 +135,11 @@ FROM c ORDER BY doc_id
 
 
 @query("sample-pack-sequences", oracle=_PACK_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build localCheckpoints
-# the sharded relation (RangePartitioner bound determinism) and
-# collects shard totals — eager build-time work that a plan-cache
-# hit would silently skip (result caching). Every invocation pays
-# the barrier + collect in the timed region.
+# Not ``pure``: the build localCheckpoints the sharded relation
+# (RangePartitioner bound determinism) and collects shard totals —
+# eager build-time work that a plan-cache hit would silently skip
+# (result caching). Every invocation pays the barrier + collect in
+# the timed region.
 def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-packing layout for pretraining: documents are concatenated
     in doc_id order into one token stream sliced into fixed
@@ -301,8 +300,7 @@ FROM w CROSS JOIN t ORDER BY lang
 """
 
 
-@query("sample-temperature-weights", oracle=_TEMP_ORACLE)
-@plan_cached("sample-temperature-weights")
+@query("sample-temperature-weights", oracle=_TEMP_ORACLE, pure=True)
 def sample_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture rebalancing — the standard multilingual /
     multi-source recipe: sampling weight ∝ n^α (α=0.7 here, the common
@@ -397,8 +395,7 @@ ORDER BY doc_id
 )
 
 
-@query("sample-reservoir-weighted", oracle=_RES_ORACLE)
-@plan_cached("sample-reservoir-weighted")
+@query("sample-reservoir-weighted", oracle=_RES_ORACLE, pure=True)
 def sample_reservoir_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted reservoir sampling via PRIORITY SAMPLING (Duffield,
     Lund & Thorup 2007): each document draws a deterministic uniform
@@ -1194,11 +1191,11 @@ ORDER BY t.epoch, t.rank
 
 
 @query("sample-epoch-shuffle", oracle=_EPOCH_SHUFFLE_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build localCheckpoints
-# the k·epochs top-k relation — the doc-scale rank window runs at
-# BUILD time, so a plan-cache hit would serve its materialized
-# output (result caching). The barrier stays (re-running the window
-# per consumer is the worse trade at scale); the plan cache goes.
+# Not ``pure``: the build localCheckpoints the k·epochs top-k
+# relation — the doc-scale rank window runs at BUILD time, so a
+# plan-cache hit would serve its materialized output (result
+# caching). The barrier stays (re-running the window per consumer is
+# the worse trade at scale); the key is not ``pure``.
 def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I74: deterministic per-epoch shuffle order — rank every
     document by md5(epoch ':' doc_id) per training epoch: the
@@ -1509,9 +1506,9 @@ ORDER BY t.source
 
 
 @query("sample-ess-weights", oracle=_ESS_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def sample_ess_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I80: importance-weight diagnostics — effective sample size and
     clipping screen per source. When a corpus sampled length-biased
@@ -1561,8 +1558,8 @@ def sample_ess_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the corpus scan (the scan-signature gate; r16 measured the
         # lazy form at THREE FileScans per action — the broadcast
         # subtrees don't share the shuffle exchange, so reuse never
-        # fires here). The barrier is per-invocation eager work, which
-        # is why this key is NOT @plan_cached (r16).
+        # fires here). The barrier is per-invocation eager work, so
+        # the key must not be ``pure``.
         .localCheckpoint(eager=True)
     )
     c = (

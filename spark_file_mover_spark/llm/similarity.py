@@ -39,11 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import (
-    ingest_artifact,
-    load_table,
-    plan_cached,
-)
+from spark_file_mover_spark.sources.io import ingest_artifact, load_table
 from spark_file_mover_spark.numerics import snap
 
 N_QUERIES = 5
@@ -107,8 +103,7 @@ FROM (
 """
 
 
-@query("sim-search-topk", oracle=_TOPK_ORACLE)
-@plan_cached("sim-search-topk")
+@query("sim-search-topk", oracle=_TOPK_ORACLE, pure=True)
 def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I3: exact brute-force cosine top-k — query set broadcast against the
     corpus, per-query rank-then-filter (rewritten to WindowGroupLimit).
@@ -230,8 +225,7 @@ FROM (
 """
 
 
-@query("sim-search-ivf", oracle=_IVF_ORACLE)
-@plan_cached("sim-search-ivf")
+@query("sim-search-ivf", oracle=_IVF_ORACLE, pure=True)
 def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with DATA-DERIVED cells: ``k = ceil(sqrt(N))`` seed vectors
     (the classic IVF cell count) coarse-quantize the corpus — every vector
@@ -559,8 +553,7 @@ FROM (
 """
 
 
-@query("dedup-embedding-cosine", oracle=_EMB_DEDUP_ORACLE)
-@plan_cached("dedup-embedding-cosine")
+@query("dedup-embedding-cosine", oracle=_EMB_DEDUP_ORACLE, pure=True)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup detection: nearest in-block neighbor per vector,
     flagged ``is_near_dup`` when cosine clears the dedup threshold.
@@ -662,8 +655,7 @@ ORDER BY query_id, rnk
 """
 
 
-@query("sim-search-lsh", oracle=_LSH_ORACLE)
-@plan_cached("sim-search-lsh")
+@query("sim-search-lsh", oracle=_LSH_ORACLE, pure=True)
 def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN: corpus vectors are hashed into sign-projection
     buckets; each query retrieves ONLY its own bucket's candidates and
@@ -856,8 +848,7 @@ ORDER BY query_id, rnk
 """
 
 
-@query("sim-search-hard-negatives", oracle=_HARDNEG_ORACLE)
-@plan_cached("sim-search-hard-negatives")
+@query("sim-search-hard-negatives", oracle=_HARDNEG_ORACLE, pure=True)
 def sim_search_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I54: hard-negative mining — for each anchor, the top-k most
     similar vectors with a DIFFERENT label. This is the candidate

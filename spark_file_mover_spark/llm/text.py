@@ -20,11 +20,7 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import (
-    ingest_artifact,
-    load_table,
-    plan_cached,
-)
+from spark_file_mover_spark.sources.io import ingest_artifact, load_table
 from spark_file_mover_spark.numerics import snap
 
 _STOPWORDS = ("a", "the", "of", "to", "and")
@@ -50,8 +46,7 @@ FROM t GROUP BY lang
 """
 
 
-@query("text-analysis", oracle=_ANALYSIS_ORACLE)
-@plan_cached("text-analysis")
+@query("text-analysis", oracle=_ANALYSIS_ORACLE, pure=True)
 def text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I4: per-language corpus statistics — doc counts, char/token volumes,
     type-token ratio. Map-side tokenize + 5-group agg; partial aggregation
@@ -87,8 +82,7 @@ FROM documents
 """
 
 
-@query("text-token-count", oracle=_TOKEN_COUNT_ORACLE)
-@plan_cached("text-token-count")
+@query("text-token-count", oracle=_TOKEN_COUNT_ORACLE, pure=True)
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count plus the standard chars/4 BPE estimate —
     the budget arithmetic every training-data pipeline runs first."""
@@ -139,8 +133,7 @@ FROM documents
 """
 
 
-@query("text-langid", oracle=_LANGID_ORACLE)
-@plan_cached("text-langid")
+@query("text-langid", oracle=_LANGID_ORACLE, pure=True)
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language scorer: count per-language marker tokens, pick
     the best-scoring language, 'und' when nothing matches. Pure map —
@@ -192,8 +185,7 @@ FROM m
 """
 
 
-@query("text-quality-score", oracle=_QUALITY_ORACLE)
-@plan_cached("text-quality-score")
+@query("text-quality-score", oracle=_QUALITY_ORACLE, pure=True)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality gates: token-count bounds + stopword-ratio
     floor, emitted per document with the underlying signals. Pure map."""
@@ -242,8 +234,7 @@ FROM t
 """
 
 
-@query("text-fingerprint", oracle=_FP_ORACLE)
-@plan_cached("text-fingerprint")
+@query("text-fingerprint", oracle=_FP_ORACLE, pure=True)
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive document fingerprint: left fold of a polynomial
     rolling hash over the token stream (two docs with the same token
@@ -300,8 +291,7 @@ FROM tagged
 """
 
 
-@query("text-pii-scrub", oracle=_PII_ORACLE)
-@plan_cached("text-pii-scrub")
+@query("text-pii-scrub", oracle=_PII_ORACLE, pure=True)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: emails and phone numbers replaced with typed
     placeholder tokens, plus per-document found-flags for audit counts.
@@ -363,8 +353,7 @@ SELECT lang, bigram, n, rnk FROM (
 """
 
 
-@query("text-ngram-freq", oracle=_NGRAM_ORACLE)
-@plan_cached("text-ngram-freq")
+@query("text-ngram-freq", oracle=_NGRAM_ORACLE, pure=True)
 def text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 bigrams per language — the frequency table behind
     benchmark-contamination and memorization checks. Explode bigrams →
@@ -461,8 +450,7 @@ ORDER BY doc_id
 """
 
 
-@query("text-gopher-rules", oracle=_GOPHER_ORACLE)
-@plan_cached("text-gopher-rules")
+@query("text-gopher-rules", oracle=_GOPHER_ORACLE, pure=True)
 def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full Gopher word-level quality-rule panel (Rae et al. 2021,
     Appendix A) — per-rule booleans plus the combined verdict, per
@@ -577,8 +565,7 @@ FROM sel GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@query("text-winnowing", oracle=_WINNOW_ORACLE)
-@plan_cached("text-winnowing")
+@query("text-winnowing", oracle=_WINNOW_ORACLE, pure=True)
 def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I50: winnowing fingerprint selection (Schleimer, Wilkerson &
     Aiken, SIGMOD 2003 — the MOSS algorithm): hash every k-token
@@ -697,8 +684,7 @@ FROM m ORDER BY lang, predicted_lang
 """
 
 
-@query("text-langid-confusion", oracle=_CONFUSION_ORACLE)
-@plan_cached("text-langid-confusion")
+@query("text-langid-confusion", oracle=_CONFUSION_ORACLE, pure=True)
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I55: confusion matrix of the I11 language-ID heuristic against
     the labeled ``lang`` column — classifier evaluation AS A QUERY,
@@ -792,8 +778,7 @@ FROM m ORDER BY doc_id
 """
 
 
-@query("text-readability", oracle=_READABILITY_ORACLE)
-@plan_cached("text-readability")
+@query("text-readability", oracle=_READABILITY_ORACLE, pure=True)
 def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I60: readability scoring — Flesch reading ease and the
     Flesch-Kincaid grade level (Kincaid et al. 1975), the classic
@@ -897,8 +882,7 @@ ORDER BY d.doc_id
 """
 
 
-@query("text-novelty-ratio", oracle=_NOVELTY_ORACLE)
-@plan_cached("text-novelty-ratio")
+@query("text-novelty-ratio", oracle=_NOVELTY_ORACLE, pure=True)
 def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I63: per-document n-gram NOVELTY in corpus order — the share of
     a document's distinct trigrams never seen in any earlier document
@@ -1051,8 +1035,7 @@ FROM tf GROUP BY source ORDER BY source
 """
 
 
-@query("text-hapax-ratio", oracle=_HAPAX_ORACLE)
-@plan_cached("text-hapax-ratio")
+@query("text-hapax-ratio", oracle=_HAPAX_ORACLE, pure=True)
 def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I75: hapax legomena ratio per source — the share of each
     source's vocabulary seen exactly once (plus dis legomena and the
@@ -1154,8 +1137,7 @@ FROM r WHERE rank <= {_BURST_TOPK} ORDER BY rank
 """
 
 
-@query("text-burstiness", oracle=_BURSTINESS_ORACLE)
-@plan_cached("text-burstiness")
+@query("text-burstiness", oracle=_BURSTINESS_ORACLE, pure=True)
 def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I77: token burstiness top-k (Church & Gale 1995) — a token's
     mean count WITHIN the documents that contain it (plus the Fano
@@ -1277,8 +1259,7 @@ ORDER BY s.doc_id
 """
 
 
-@query("text-boilerplate-lines", oracle=_BP_ORACLE)
-@plan_cached("text-boilerplate-lines")
+@query("text-boilerplate-lines", oracle=_BP_ORACLE, pure=True)
 def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I85: frequency-based boilerplate detection — flag the lines that
     repeat across MORE THAN 20% of a source's documents (navigation,

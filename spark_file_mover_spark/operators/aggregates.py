@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from spark_file_mover_spark.llm._textnorm import MD5_PREFIX60_SQL, md5_prefix60
 from spark_file_mover_spark.operators._parity import davg, dec, dsum
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 from spark_file_mover_spark.numerics import snap
 
 # E1 / flagship: TPC-H Q1 shape over lineitem. Scan→filter (pushed to
@@ -35,8 +35,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@query("agg-hash", oracle=_AGG_HASH_ORACLE)
-@plan_cached("agg-hash")
+@query("agg-hash", oracle=_AGG_HASH_ORACLE, pure=True)
 def agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1: group-by sum/avg/count over lineitem (TPC-H Q1 shape).
 
@@ -110,8 +109,7 @@ GROUP BY l_returnflag
 """
 
 
-@query("agg-distinct", oracle=_DISTINCT_ORACLE)
-@plan_cached("agg-distinct")
+@query("agg-distinct", oracle=_DISTINCT_ORACLE, pure=True)
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2: multiple count(distinct) — Spark expands to a single
     aggregate with grouping-id expansion, still fully distributed."""
@@ -133,8 +131,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-@query("agg-approx-distinct", oracle=_APPROX_DISTINCT_ORACLE)
-@plan_cached("agg-approx-distinct")
+@query("agg-approx-distinct", oracle=_APPROX_DISTINCT_ORACLE, pure=True)
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3: HyperLogLog++ approximate distinct counts — the 100 TB-scale
     substitute for exact distinct (no shuffle of distinct values, fixed
@@ -203,8 +200,7 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 """
 
 
-@query("agg-rollup-cube-gsets", oracle=_ROLLUP_ORACLE)
-@plan_cached("agg-rollup-cube-gsets")
+@query("agg-rollup-cube-gsets", oracle=_ROLLUP_ORACLE, pure=True)
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4: rollup with grouping_id (cube/grouping-sets share the same
     Expand-based physical plan)."""
@@ -226,8 +222,7 @@ HAVING SUM(CAST(l_quantity AS DECIMAL(12,2))) > 150
 """
 
 
-@query("agg-having", oracle=_HAVING_ORACLE)
-@plan_cached("agg-having")
+@query("agg-having", oracle=_HAVING_ORACLE, pure=True)
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E5: post-aggregation filter (HAVING) — TPC-H Q18 shape."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -256,8 +251,7 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-@query("agg-approx-quantile", oracle=_APPROX_QUANTILE_ORACLE)
-@plan_cached("agg-approx-quantile")
+@query("agg-approx-quantile", oracle=_APPROX_QUANTILE_ORACLE, pure=True)
 def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E6: streaming quantile sketches per group — approx_percentile
     (Greenwald-Khanna) for p50/p95/p99 of order totals per status.
@@ -313,8 +307,7 @@ GROUP BY o_orderpriority
 """
 
 
-@query("agg-pivot", oracle=_PIVOT_ORACLE)
-@plan_cached("agg-pivot")
+@query("agg-pivot", oracle=_PIVOT_ORACLE, pure=True)
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E7: pivot — priority rows × status columns. The pivot values are
     DECLARED (['F','O','P']), which matters at scale: an unlisted pivot
@@ -348,8 +341,7 @@ GROUP BY l_returnflag
 """
 
 
-@query("agg-stats", oracle=_STATS_ORACLE)
-@plan_cached("agg-stats")
+@query("agg-stats", oracle=_STATS_ORACLE, pure=True)
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E8: statistical moments per group — stddev/variance/correlation/
     covariance. All are single-pass mergeable accumulators (sum, sum of
@@ -389,8 +381,7 @@ UNPIVOT (val FOR measure IN (totalprice, custkey))
 """
 
 
-@query("agg-unpivot", oracle=_UNPIVOT_ORACLE)
-@plan_cached("agg-unpivot")
+@query("agg-unpivot", oracle=_UNPIVOT_ORACLE, pure=True)
 def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9: UNPIVOT/melt — wide measure columns to (key, measure, value)
     long form, the inverse of E7's pivot and the shape feature stores and
@@ -429,8 +420,7 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-@query("agg-incremental-merge", oracle=_INCR_ORACLE)
-@plan_cached("agg-incremental-merge")
+@query("agg-incremental-merge", oracle=_INCR_ORACLE, pure=True)
 def agg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E10: incremental materialized-aggregate maintenance — the base
     relation is split into an existing snapshot and a new batch
@@ -502,8 +492,7 @@ ORDER BY r.cohort_week, r.week_offset
 """
 
 
-@query("agg-retention-cohort", oracle=_RETENTION_ORACLE)
-@plan_cached("agg-retention-cohort")
+@query("agg-retention-cohort", oracle=_RETENTION_ORACLE, pure=True)
 def agg_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E11: the classic cohort retention matrix — users grouped by
     first-activity week, then for every (cohort, week-offset) cell the
@@ -568,8 +557,7 @@ ORDER BY 1
 """
 
 
-@query("agg-sketch-hll-merge", oracle=_HLL_ORACLE)
-@plan_cached("agg-sketch-hll-merge")
+@query("agg-sketch-hll-merge", oracle=_HLL_ORACLE, pure=True)
 def agg_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E12: the persisted-sketch rollup pattern — Apache DataSketches
     HLL via Spark's built-in ``hll_sketch_agg`` / ``hll_union_agg``:
@@ -726,8 +714,7 @@ _MED2_FOLD = (
 )
 
 
-@query("agg-outlier-mad", oracle=_MAD_ORACLE)
-@plan_cached("agg-outlier-mad")
+@query("agg-outlier-mad", oracle=_MAD_ORACLE, pure=True)
 def agg_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E13: EXACT median / MAD robust-outlier panel per event type —
     the monitoring staple (median + median-absolute-deviation beats
@@ -859,8 +846,7 @@ def _cms_pos() -> "F.Column":
     )
 
 
-@query("agg-sketch-cms", oracle=_CMS_ORACLE)
-@plan_cached("agg-sketch-cms")
+@query("agg-sketch-cms", oracle=_CMS_ORACLE, pure=True)
 def agg_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E14: count-min sketch (Cormode & Muthukrishnan 2005) over
     (user, event-type) interaction counts — the mergeable FREQUENCY
@@ -945,8 +931,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-@query("agg-sketch-theta-setops", oracle=_THETA_ORACLE)
-@plan_cached("agg-sketch-theta-setops")
+@query("agg-sketch-theta-setops", oracle=_THETA_ORACLE, pure=True)
 def agg_sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E15: distinct-set ALGEBRA from sketches — the question rollup
     tables exist to answer ("how many order keys did two overlapping
@@ -1069,8 +1054,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("agg-mode-exact", oracle=_MODE_ORACLE)
-@plan_cached("agg-mode-exact")
+@query("agg-mode-exact", oracle=_MODE_ORACLE, pure=True)
 def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E16: EXACT modal value per group with a DETERMINISTIC tie-break
     (smallest value wins) — completing the ordered-set aggregate
@@ -1168,8 +1152,7 @@ FROM c GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("agg-ks-drift", oracle=_KS_ORACLE)
-@plan_cached("agg-ks-drift")
+@query("agg-ks-drift", oracle=_KS_ORACLE, pure=True)
 def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E17: two-sample Kolmogorov–Smirnov statistic per event type
     between two time windows — the standard nonparametric
@@ -1279,8 +1262,7 @@ FROM h ORDER BY event_type, bucket
 """
 
 
-@query("agg-hist-logbucket", oracle=_HIST_ORACLE)
-@plan_cached("agg-hist-logbucket")
+@query("agg-hist-logbucket", oracle=_HIST_ORACLE, pure=True)
 def agg_hist_logbucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E18: order-of-magnitude value histogram per event type — the
     log-bucketed distribution profile a 100 TB data-QA sweep keeps per
@@ -1355,8 +1337,7 @@ FROM c GROUP BY priority ORDER BY priority
 """
 
 
-@query("agg-quantile-exact", oracle=_QEXACT_ORACLE)
-@plan_cached("agg-quantile-exact")
+@query("agg-quantile-exact", oracle=_QEXACT_ORACLE, pure=True)
 def agg_quantile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E19: EXACT nearest-rank percentiles (p50/p90/p99 of order value
     per priority class) — the deterministic complement of E6's
@@ -1451,8 +1432,7 @@ FROM t GROUP BY source ORDER BY source
 """
 
 
-@query("agg-entropy", oracle=_ENTROPY_ORACLE)
-@plan_cached("agg-entropy")
+@query("agg-entropy", oracle=_ENTROPY_ORACLE, pure=True)
 def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E20: Shannon entropy + Gini impurity of the per-source language
     distribution (doc-count and char-weighted) — the corpus-composition
@@ -1568,8 +1548,7 @@ FROM t ORDER BY flag, digit
 """
 
 
-@query("agg-benford-digit", oracle=_BENFORD_ORACLE)
-@plan_cached("agg-benford-digit")
+@query("agg-benford-digit", oracle=_BENFORD_ORACLE, pure=True)
 def agg_benford_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E21: first-significant-digit distribution vs Benford's law per
     return flag, with the χ² deviation statistic — the classic
@@ -1654,8 +1633,7 @@ FROM w GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("agg-distinct-bitmap", oracle=_BITMAP_ORACLE)
-@plan_cached("agg-distinct-bitmap")
+@query("agg-distinct-bitmap", oracle=_BITMAP_ORACLE, pure=True)
 def agg_distinct_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E22: EXACT distinct-user count per event type via 64-bit bitmap
     words — the roaring-bitmap / ClickHouse ``groupBitmap`` pattern for
@@ -1769,8 +1747,7 @@ FROM t ORDER BY metric
 """
 
 
-@query("agg-proportion-ztest", oracle=_ZTEST_ORACLE)
-@plan_cached("agg-proportion-ztest")
+@query("agg-proportion-ztest", oracle=_ZTEST_ORACLE, pure=True)
 def agg_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E23: pooled two-proportion z-test per conversion metric — the
     A/B experiment readout (did variant A's users convert at a
@@ -1902,8 +1879,7 @@ FROM d ORDER BY event_type
 """
 
 
-@query("agg-ols-trend", oracle=_OLS_ORACLE)
-@plan_cached("agg-ols-trend")
+@query("agg-ols-trend", oracle=_OLS_ORACLE, pure=True)
 def agg_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E24: simple linear regression per event type — value (cents)
     against day number: slope (cents/day), intercept and r² — the
@@ -2029,8 +2005,7 @@ SELECT (SELECT COUNT(*) FROM s) AS n_signup,
 """
 
 
-@query("agg-conversion-lag", oracle=_CONVLAG_ORACLE)
-@plan_cached("agg-conversion-lag")
+@query("agg-conversion-lag", oracle=_CONVLAG_ORACLE, pure=True)
 def agg_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E25: signup→purchase conversion — rate plus EXACT nearest-rank
     p50/p90 of the time-to-convert, the activation-funnel readout
@@ -2140,8 +2115,7 @@ FROM t ORDER BY prev_type, next_type
 """
 
 
-@query("agg-markov-transitions", oracle=_MARKOV_ORACLE)
-@plan_cached("agg-markov-transitions")
+@query("agg-markov-transitions", oracle=_MARKOV_ORACLE, pure=True)
 def agg_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E26: first-order Markov transition matrix over per-user event
     sequences — P(next event type | previous event type), with a
@@ -2242,8 +2216,7 @@ ORDER BY variant
 """
 
 
-@query("agg-cuped", oracle=_CUPED_ORACLE)
-@plan_cached("agg-cuped")
+@query("agg-cuped", oracle=_CUPED_ORACLE, pure=True)
 def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E27: CUPED variance-reduced experiment readout (Deng et al.,
     WSDM'13 — the adjustment every large experimentation platform
@@ -2401,8 +2374,7 @@ FROM c
 """
 
 
-@query("agg-auc-rank", oracle=_AUC_ORACLE)
-@plan_cached("agg-auc-rank")
+@query("agg-auc-rank", oracle=_AUC_ORACLE, pure=True)
 def agg_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E28: EXACT ROC-AUC of a score column against a binary outcome
     via the rank-sum identity (Mann-Whitney U; Hanley & McNeil 1982) —
@@ -2518,8 +2490,7 @@ FROM c
 """
 
 
-@query("agg-srm-check", oracle=_SRM_ORACLE)
-@plan_cached("agg-srm-check")
+@query("agg-srm-check", oracle=_SRM_ORACLE, pure=True)
 def agg_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E29: sample-ratio-mismatch gate — the trust check every
     experimentation platform runs BEFORE reading any A/B result
@@ -2646,8 +2617,7 @@ FROM aa
 """
 
 
-@query("agg-welch-ttest", oracle=_WELCH_ORACLE)
-@plan_cached("agg-welch-ttest")
+@query("agg-welch-ttest", oracle=_WELCH_ORACLE, pure=True)
 def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E30: Welch two-sample t-test on per-user TOTAL spend between
     the two hash variants — the means test that closes the experiment
@@ -2833,9 +2803,9 @@ ORDER BY bucket, event_type
 
 
 @query("agg-chisq-independence", oracle=_CHISQ_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E31: Pearson chi-square test of independence over the
     time-of-day × event-type contingency table — "does the event mix
@@ -2881,8 +2851,7 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lazy form re-executed the events scan 4x; with AQE stage
     # reuse it still re-ran the final agg + four stage schedules,
     # measured 1.17 vs 0.68 s/invocation at sf0.1). The barrier is
-    # per-invocation eager work, which is why this key is NOT
-    # @plan_cached (r16).
+    # per-invocation eager work, so the key must not be ``pure``.
     obs = (
         e.groupBy("bucket", "event_type")
         .agg(F.count("*").cast("long").alias("o"))
@@ -2991,8 +2960,7 @@ FROM m
 """
 
 
-@query("agg-gini-coefficient", oracle=_GINI_ORACLE)
-@plan_cached("agg-gini-coefficient")
+@query("agg-gini-coefficient", oracle=_GINI_ORACLE, pure=True)
 def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E32: Gini coefficient of the per-user spend distribution plus
     the top-decile revenue share — the concentration readout every
@@ -3124,8 +3092,7 @@ FROM m ORDER BY segment
 """
 
 
-@query("agg-hhi-concentration", oracle=_HHI_ORACLE)
-@plan_cached("agg-hhi-concentration")
+@query("agg-hhi-concentration", oracle=_HHI_ORACLE, pure=True)
 def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E33: Herfindahl–Hirschman index of revenue concentration per
     market segment — HHI = Σ shareᵢ², the antitrust-standard
@@ -3221,8 +3188,7 @@ FROM daily ORDER BY day
 """
 
 
-@query("agg-new-vs-returning", oracle=_NVR_ORACLE)
-@plan_cached("agg-new-vs-returning")
+@query("agg-new-vs-returning", oracle=_NVR_ORACLE, pure=True)
 def agg_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E34: the growth-accounting daily split — per day, active users
     partitioned into NEW (first-ever activity today) vs RETURNING,
@@ -3303,8 +3269,7 @@ FROM tot ORDER BY event_type, dow
 """
 
 
-@query("agg-seasonality-dow", oracle=_DOW_ORACLE)
-@plan_cached("agg-seasonality-dow")
+@query("agg-seasonality-dow", oracle=_DOW_ORACLE, pure=True)
 def agg_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E35: day-of-week seasonality profile per event type — the
     volume index (share of events on this weekday x 7; 1.0 = flat) and
@@ -3414,8 +3379,7 @@ FROM p
 """
 
 
-@query("agg-power-mde", oracle=_POWER_ORACLE)
-@plan_cached("agg-power-mde")
+@query("agg-power-mde", oracle=_POWER_ORACLE, pure=True)
 def agg_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E36: experiment power planning AS A QUERY — the two numbers a
     platform computes before (and while) running an A/B test: the
@@ -3543,9 +3507,9 @@ FROM m
 
 
 @query("agg-spearman-corr", oracle=_SPEAR_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E37: Spearman rank correlation between quantity and discount
     — the robust monotone-association readout (Pearson on RANKS):
@@ -3590,8 +3554,7 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the broadcast rank subtrees cannot share the main plan's
     # exchange, so the r16 lazy experiment still ran TWO corpus scans
     # per action for the same wall time). The barrier is
-    # per-invocation eager work, which is why this key is NOT
-    # @plan_cached (r16, verdict item 1).
+    # per-invocation eager work, so the key must not be ``pure``.
     joint = (
         rows_.groupBy("xv", "yv")
         .agg(F.count("*").cast("long").alias("c"))
@@ -3701,8 +3664,7 @@ ORDER BY cum.cohort_week, week_offset
 """
 
 
-@query("agg-cohort-ltv", oracle=_LTV_ORACLE)
-@plan_cached("agg-cohort-ltv")
+@query("agg-cohort-ltv", oracle=_LTV_ORACLE, pure=True)
 def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E38: cohort LTV curves — cumulative purchase revenue per
     (first-activity-week cohort, week offset), per-user: the money
@@ -3821,9 +3783,9 @@ FROM m, terms
 
 
 @query("agg-theil-index", oracle=_THEIL_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E39: Theil T and Theil L (mean log deviation) of the per-user
     spend distribution — the DECOMPOSABLE inequality indices (total
@@ -3861,7 +3823,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum) — materialize once: only the user-agg exchange below it is
     # shareable, so the lazy form re-runs the user-scale final
     # aggregate per consumer. The barrier is per-invocation eager
-    # work, which is why this key is NOT @plan_cached (r16).
+    # work, so the key must not be ``pure``.
     dist = (
         pu.filter(F.col("yc") > 0)
         .groupBy("yc")
@@ -3948,8 +3910,7 @@ FROM t ORDER BY decile
 """
 
 
-@query("agg-lorenz-deciles", oracle=_LORENZ_ORACLE)
-@plan_cached("agg-lorenz-deciles")
+@query("agg-lorenz-deciles", oracle=_LORENZ_ORACLE, pure=True)
 def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E40: the Lorenz curve at decile resolution — per spend decile
     (users ranked ascending), user count, cents, cumulative cents and
@@ -4086,8 +4047,7 @@ FROM m
 """
 
 
-@query("agg-winsorized-stats", oracle=_WINSOR_ORACLE)
-@plan_cached("agg-winsorized-stats")
+@query("agg-winsorized-stats", oracle=_WINSOR_ORACLE, pure=True)
 def agg_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E41: 5%-winsorized and 5%-trimmed means of per-user spend next
     to the raw mean — the robust-location staple for long-tailed
@@ -4260,9 +4220,9 @@ FROM pt, ci
 
 
 @query("agg-bootstrap-ci", oracle=_BOOT_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E42: Poisson-bootstrap 90% confidence interval for the mean
     per-user spend — THE at-scale resampling recipe (Chamandy et al.,
@@ -4296,8 +4256,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once: the lazy form re-runs the user-scale final
     # aggregate per consumer (only the scan exchange is reused;
     # measured 0.94 vs 0.81 s/invocation at sf0.1). The barrier is
-    # per-invocation eager work, which is why this key is NOT
-    # @plan_cached (r16).
+    # per-invocation eager work, so the key must not be ``pure``.
     pu = ev.groupBy("user_id").agg(
         F.coalesce((F.sum(dec("value")) * 100).cast("long"), F.lit(0))
         .alias("yc")
@@ -4400,8 +4359,7 @@ ORDER BY month
 """
 
 
-@query("agg-stickiness-dau-mau", oracle=_STICKY_ORACLE)
-@plan_cached("agg-stickiness-dau-mau")
+@query("agg-stickiness-dau-mau", oracle=_STICKY_ORACLE, pure=True)
 def agg_stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E43: DAU/MAU stickiness per month — mean daily active users
     over monthly active users, THE product-engagement ratio every
@@ -4525,8 +4483,7 @@ FROM ev ORDER BY t_days
 """
 
 
-@query("agg-survival-km", oracle=_KM_ORACLE)
-@plan_cached("agg-survival-km")
+@query("agg-survival-km", oracle=_KM_ORACLE, pure=True)
 def agg_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E44: the Kaplan–Meier survival curve for time-to-first-purchase
     (days from a user's first activity), right-censored at the corpus
@@ -4662,9 +4619,9 @@ ORDER BY ante, cons
 
 
 @query("agg-assoc-lift", oracle=_LIFT_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_assoc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E45: pairwise association rules over per-user event-type
     baskets — support, confidence and lift for every unordered type
@@ -4691,8 +4648,7 @@ def agg_assoc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides) — materialize once: the exchanged partials are USER-scale,
     # so the lazy form re-runs the user-scale final dedup per consumer
     # (measured 0.60 vs 0.45 s/invocation at sf0.1). The barrier is
-    # per-invocation eager work, which is why this key is NOT
-    # @plan_cached (r16).
+    # per-invocation eager work, so the key must not be ``pure``.
     ut = ev.select("user_id", "event_type").distinct().localCheckpoint(
         eager=True
     )
@@ -4806,8 +4762,7 @@ FROM c
 """
 
 
-@query("agg-mann-whitney", oracle=_MANNWHITNEY_ORACLE)
-@plan_cached("agg-mann-whitney")
+@query("agg-mann-whitney", oracle=_MANNWHITNEY_ORACLE, pure=True)
 def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E46: Mann-Whitney U (Wilcoxon rank-sum) test on per-user total
     spend between the two hash variants — the NONPARAMETRIC sibling
@@ -4969,8 +4924,7 @@ FROM p ORDER BY event_type
 """
 
 
-@query("agg-psi-drift", oracle=_PSI_ORACLE)
-@plan_cached("agg-psi-drift")
+@query("agg-psi-drift", oracle=_PSI_ORACLE, pure=True)
 def agg_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E47: Population Stability Index per event type between the two
     time windows — THE industry drift gate for deployed-model inputs
@@ -5129,8 +5083,7 @@ FROM c
 """
 
 
-@query("agg-hill-tail", oracle=_HILL_ORACLE)
-@plan_cached("agg-hill-tail")
+@query("agg-hill-tail", oracle=_HILL_ORACLE, pure=True)
 def agg_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E48: Hill estimator of the Pareto tail index over per-user
     total spend — the heavy-tail gate for revenue metrics: H =
@@ -5296,8 +5249,7 @@ FROM f
 """
 
 
-@query("agg-cramers-v", oracle=_CRAMERSV_ORACLE)
-@plan_cached("agg-cramers-v")
+@query("agg-cramers-v", oracle=_CRAMERSV_ORACLE, pure=True)
 def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E49: Cramér's V + Cohen's w over the market-segment × nation
     contingency — the EFFECT-SIZE readout that belongs beside the E31
@@ -5455,8 +5407,7 @@ FROM p ORDER BY event_type
 """
 
 
-@query("agg-jsd-drift", oracle=_JSD_ORACLE)
-@plan_cached("agg-jsd-drift")
+@query("agg-jsd-drift", oracle=_JSD_ORACLE, pure=True)
 def agg_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E50: Jensen-Shannon divergence per event type between the two
     KS time windows (Lin 1991) — the SYMMETRIC, BOUNDED member of the
@@ -5607,8 +5558,7 @@ FROM f
 """
 
 
-@query("agg-kendall-tau", oracle=_KENDALL_ORACLE)
-@plan_cached("agg-kendall-tau")
+@query("agg-kendall-tau", oracle=_KENDALL_ORACLE, pure=True)
 def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E51: Kendall's tau-b between order quantity and discount — the
     RANK-correlation sibling that completes the association family:
@@ -5781,9 +5731,9 @@ FROM f
 
 
 @query("agg-tukey-fences", oracle=_TUKEY_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E52: Tukey's 1.5·IQR fences on per-user total spend (Tukey
     1977, the boxplot rule) — the quartile-based member completing
@@ -5816,7 +5766,7 @@ def agg_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form re-runs the user-scale final aggregate per consumer
     # (measured 0.66 vs 0.59 s/invocation at sf0.1, and duplicated
     # user-scale work at 100 TB). The barrier is per-invocation eager
-    # work, which is why this key is NOT @plan_cached (r16).
+    # work, so the key must not be ``pure``.
     dist = (
         pu.groupBy("yc")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -5919,8 +5869,7 @@ FROM x ORDER BY event_type
 """
 
 
-@query("agg-overdispersion", oracle=_OVERDISP_ORACLE)
-@plan_cached("agg-overdispersion")
+@query("agg-overdispersion", oracle=_OVERDISP_ORACLE, pure=True)
 def agg_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E53: overdispersion screen — the variance-to-mean ratio (Fano
     factor) of per-user event counts per type, against the Poisson
@@ -6018,8 +5967,7 @@ FROM m
 """
 
 
-@query("agg-capture-recapture", oracle=_CAPTURE_ORACLE)
-@plan_cached("agg-capture-recapture")
+@query("agg-capture-recapture", oracle=_CAPTURE_ORACLE, pure=True)
 def agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E54: capture-recapture population estimate — treat the two KS
     time windows as two independent "captures" of the user
@@ -6135,9 +6083,9 @@ FROM cf
 
 
 @query("agg-confusion-mcc", oracle=_CONFUSION_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_confusion_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E55: the classifier-evaluation panel AS A QUERY — confusion
     matrix, precision/recall/F1/accuracy and Matthews correlation —
@@ -6185,8 +6133,8 @@ def agg_confusion_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # discipline: the lazy form re-runs the user-scale final
         # aggregate per consumer (only the scan exchange is reused;
         # measured 1.25 vs 0.86 s/invocation at sf0.1). The barrier
-        # is per-invocation eager work, which is why this key is NOT
-        # @plan_cached (r16).
+        # is per-invocation eager work, so the key must not be
+        # ``pure``.
         .localCheckpoint(eager=True)
     )
 
@@ -6316,9 +6264,9 @@ FROM f
 
 
 @query("agg-mann-kendall", oracle=_MANNKENDALL_ORACLE)
-# NOT @plan_cached (r16, verdict item 1): the build runs an eager
-# localCheckpoint barrier — per-invocation work a plan-cache hit
-# would silently skip (result caching, not plan caching).
+# Not ``pure``: the build runs an eager localCheckpoint barrier,
+# per-invocation work a plan-cache hit would silently skip (a
+# result cache).
 def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E56: the Mann-Kendall trend test on daily revenue — the
     NONPARAMETRIC "is this series monotonically trending?" verdict
@@ -6357,7 +6305,7 @@ def agg_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the r16 lazy experiment measured the same wall time with
         # two corpus scans per action — no win to buy the static
         # multi-scan shape). The barrier is per-invocation eager
-        # work, which is why this key is NOT @plan_cached (r16).
+        # work, so the key must not be ``pure``.
         .localCheckpoint(eager=True)
     )
     a = d.select(F.col("day").alias("aday"), F.col("cents").alias("ac"))
@@ -6504,8 +6452,7 @@ FROM m
 """
 
 
-@query("agg-ratio-delta-ci", oracle=_RATIO_DELTA_ORACLE)
-@plan_cached("agg-ratio-delta-ci")
+@query("agg-ratio-delta-ci", oracle=_RATIO_DELTA_ORACLE, pure=True)
 def agg_ratio_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E57: delta-method inference for a RATIO metric (revenue per
     event) between two hash-split arms — the experimentation family's
@@ -6639,8 +6586,7 @@ FROM m
 """
 
 
-@query("agg-poisson-rate-test", oracle=_POISSON_RATE_ORACLE)
-@plan_cached("agg-poisson-rate-test")
+@query("agg-poisson-rate-test", oracle=_POISSON_RATE_ORACLE, pure=True)
 def agg_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E58: two-sample Poisson rate test — events per ACTIVE USER-DAY
     between two hash-split arms, the intensity member of the
@@ -6774,8 +6720,7 @@ FROM m
 """
 
 
-@query("agg-diff-in-diff", oracle=_DID_ORACLE)
-@plan_cached("agg-diff-in-diff")
+@query("agg-diff-in-diff", oracle=_DID_ORACLE, pure=True)
 def agg_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E59: 2×2 difference-in-differences — the quasi-experimental
     estimator for rollouts WITHOUT randomization-at-exposure: group
@@ -6944,8 +6889,7 @@ FROM km ORDER BY event_type
 """
 
 
-@query("agg-bh-fdr", oracle=_BH_ORACLE)
-@plan_cached("agg-bh-fdr")
+@query("agg-bh-fdr", oracle=_BH_ORACLE, pure=True)
 def agg_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E60: Benjamini-Hochberg FDR control over the per-metric test
     family — the multiple-comparisons discipline the rest of the

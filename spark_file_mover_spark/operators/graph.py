@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import (
-    ingest_artifact,
-    load_table,
-    plan_cached,
-)
+from spark_file_mover_spark.sources.io import ingest_artifact, load_table
 from spark_file_mover_spark.numerics import snap
 
 
@@ -925,8 +921,7 @@ ORDER BY node_id
 """
 
 
-@query("graph-triangle-count", oracle=_tri_oracle())
-@plan_cached("graph-triangle-count")
+@query("graph-triangle-count", oracle=_tri_oracle(), pure=True)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5: per-node triangle counts + local clustering coefficient over
     the user co-interaction graph (two users are adjacent iff they
@@ -1078,8 +1073,7 @@ def _jn_relations(spark: SparkSession, sf_dir: str):
     return ingest_artifact("jn-relations", spark, sf_dir, build)
 
 
-@query("graph-jaccard-neighbors", oracle=_jn_oracle())
-@plan_cached("graph-jaccard-neighbors")
+@query("graph-jaccard-neighbors", oracle=_jn_oracle(), pure=True)
 def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K6: top-k most similar users by entity-set Jaccard over the K3
     sparse bipartite adjacency — collaborative-filtering candidate
@@ -1358,8 +1352,7 @@ FROM x
 """
 
 
-@query("graph-assortativity", oracle=_assort_oracle())
-@plan_cached("graph-assortativity")
+@query("graph-assortativity", oracle=_assort_oracle(), pure=True)
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K8: degree assortativity — Newman's r (Newman 2002, "Assortative
     mixing in networks"): the Pearson correlation of endpoint degrees
@@ -1464,8 +1457,7 @@ FROM m
 """
 
 
-@query("graph-reciprocity", oracle=_RECIP_ORACLE)
-@plan_cached("graph-reciprocity")
+@query("graph-reciprocity", oracle=_RECIP_ORACLE, pure=True)
 def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K9: edge reciprocity r = |E ∩ Eᵀ| / |E| of the DIRECTED
     user→entity click graph (the K1 pagerank edge relation: forward
@@ -1549,8 +1541,7 @@ FROM t ORDER BY degree
 """
 
 
-@query("graph-degree-histogram", oracle=_DEGHIST_ORACLE)
-@plan_cached("graph-degree-histogram")
+@query("graph-degree-histogram", oracle=_DEGHIST_ORACLE, pure=True)
 def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K10: degree distribution of the shared sparse undirected
     user↔entity graph (the K3/K4 adjacency) — the first thing anyone
@@ -1675,8 +1666,7 @@ FROM m
 """
 
 
-@query("graph-global-clustering", oracle=_gc_oracle())
-@plan_cached("graph-global-clustering")
+@query("graph-global-clustering", oracle=_gc_oracle(), pure=True)
 def graph_global_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K11: graph transitivity C = 3·triangles / wedges plus the
     Watts–Strogatz average local clustering coefficient — the
@@ -1908,8 +1898,7 @@ ORDER BY user_id, rnk
 """
 
 
-@query("graph-adamic-adar", oracle=_aa_oracle())
-@plan_cached("graph-adamic-adar")
+@query("graph-adamic-adar", oracle=_aa_oracle(), pure=True)
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K13: Adamic-Adar link prediction over the K3/K6 bipartite
     user↔entity adjacency — the classic "will these two users

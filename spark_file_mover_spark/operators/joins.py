@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.operators._parity import dec
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 
 _INNER_ORACLE = """
 SELECT o.o_orderkey, c.c_custkey, c.c_name, c.c_mktsegment, o.o_totalprice
@@ -25,8 +25,7 @@ WHERE o.o_orderstatus = 'O'
 """
 
 
-@query("join-inner-equi", oracle=_INNER_ORACLE)
-@plan_cached("join-inner-equi")
+@query("join-inner-equi", oracle=_INNER_ORACLE, pure=True)
 def join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1: customer ⋈ orders equi-join (planner picks broadcast/SMJ)."""
     c = load_table(spark, sf_dir, "customer")
@@ -54,8 +53,7 @@ FROM cust_per_nation c FULL OUTER JOIN supp_per_nation s
 """
 
 
-@query("join-left-right-full", oracle=_OUTER_ORACLE)
-@plan_cached("join-left-right-full")
+@query("join-left-right-full", oracle=_OUTER_ORACLE, pure=True)
 def join_left_right_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2: full-outer join of per-nation customer vs supplier counts
     (nulls on both sides since suppliers cover few nations)."""
@@ -96,8 +94,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 """
 
 
-@query("join-semi-anti", oracle=_SEMI_ANTI_ORACLE)
-@plan_cached("join-semi-anti")
+@query("join-semi-anti", oracle=_SEMI_ANTI_ORACLE, pure=True)
 def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: left-semi (EXISTS) and left-anti (NOT EXISTS), tagged + unioned."""
     c = load_table(spark, sf_dir, "customer")
@@ -123,8 +120,7 @@ GROUP BY r.r_name
 """
 
 
-@query("join-broadcast", oracle=_BCAST_ORACLE)
-@plan_cached("join-broadcast")
+@query("join-broadcast", oracle=_BCAST_ORACLE, pure=True)
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4: small-dim broadcast join — region and nation ship to every task,
     so the customer scan never shuffles for the join."""
@@ -151,8 +147,7 @@ WHERE p.p_brand = 'Brand#1'
 """
 
 
-@query("join-range-theta", oracle=_RANGE_ORACLE)
-@plan_cached("join-range-theta")
+@query("join-range-theta", oracle=_RANGE_ORACLE, pure=True)
 def join_range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5: equi + range residual join (TPC-H Q19 shape). The equi key keeps
     the join hash-able; the range predicate is evaluated as a post-join
@@ -187,8 +182,7 @@ GROUP BY r.r_name, n.n_name
 """
 
 
-@query("join-multiway-star", oracle=_STAR_ORACLE)
-@plan_cached("join-multiway-star")
+@query("join-multiway-star", oracle=_STAR_ORACLE, pure=True)
 def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D6: TPC-H Q5-shaped star join region→nation→customer→orders→lineitem.
 
@@ -245,8 +239,7 @@ GROUP BY d.temperature
 _SALT_BUCKETS = 8
 
 
-@query("join-skew-salted", oracle=_SKEW_SALTED_ORACLE)
-@plan_cached("join-skew-salted")
+@query("join-skew-salted", oracle=_SKEW_SALTED_ORACLE, pure=True)
 def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D7: explicit salted join over a manufactured 90%-hot key.
 
@@ -317,8 +310,7 @@ GROUP BY c.campaign_id
 """
 
 
-@query("join-range-binned", oracle=_RANGE_BINNED_ORACLE)
-@plan_cached("join-range-binned")
+@query("join-range-binned", oracle=_RANGE_BINNED_ORACLE, pure=True)
 def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8: PURE range join (no natural equi key) — events falling inside
     campaign time windows — executed as bin-then-refine.
@@ -435,8 +427,7 @@ def _asof_merged(spark: SparkSession, sf_dir: str):
     return orders_side.unionByName(events_side), w
 
 
-@query("join-asof", oracle=_ASOF_ORACLE)
-@plan_cached("join-asof")
+@query("join-asof", oracle=_ASOF_ORACLE, pure=True)
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D9: AS-OF join — for each event, the customer's most recent order
     at-or-before the event time (ties on date broken by max orderkey).
@@ -479,8 +470,7 @@ WHERE c.c_custkey % 10 = 0
 """
 
 
-@query("join-lateral-topk", oracle=_LATERAL_ORACLE)
-@plan_cached("join-lateral-topk")
+@query("join-lateral-topk", oracle=_LATERAL_ORACLE, pure=True)
 def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10: correlated LATERAL subquery — each customer's single highest-
     value order, written the way an analyst writes it (per-row LIMIT 1
@@ -541,8 +531,7 @@ ORDER BY c.campaign_id, p.o_orderkey
 """
 
 
-@query("join-interval-overlap", oracle=_IOVERLAP_ORACLE)
-@plan_cached("join-interval-overlap")
+@query("join-interval-overlap", oracle=_IOVERLAP_ORACLE, pure=True)
 def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D11: interval × interval OVERLAP join — promo windows (derived
     from orders) against campaign windows — executed bin-then-refine.
@@ -660,8 +649,7 @@ ORDER BY e.event_id
 """
 
 
-@query("join-asof-tolerance", oracle=_ASOF_TOL_ORACLE)
-@plan_cached("join-asof-tolerance")
+@query("join-asof-tolerance", oracle=_ASOF_TOL_ORACLE, pure=True)
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D12: as-of join with a TOLERANCE bound — D9's semantics plus the
     staleness rule every production as-of join actually ships with
@@ -730,12 +718,12 @@ GROUP BY 1 ORDER BY 1
 
 
 @query("join-bloom-prefilter", oracle=_BLOOMJ_ORACLE)
-# NOT @plan_cached (r16, verdict item 1 — caught by the build-jobs
-# audit): the build COLLECTS the Bloom bitmap (metadata-scale, but a
-# corpus-derived result baked into the plan as a literal), so a
-# plan-cache hit would skip the dim scan + bitmap build entirely
-# (result caching). Every invocation rebuilds the filter in the timed
-# region, as a production run with a fresh survivor set would.
+# Not ``pure`` (tools/audit_build_jobs.py checks it): the build
+# COLLECTS the Bloom bitmap (metadata-scale, but a corpus-derived
+# result baked into the plan as a literal), so a plan-cache hit would
+# skip the dim scan + bitmap build entirely (result caching). Every
+# invocation rebuilds the filter in the timed region, as a production
+# run with a fresh survivor set would.
 def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D13: the Bloom-prefilter join pattern — build an 8 KiB Bloom
     bitmap over the FILTERED dimension's join keys, broadcast it as a
@@ -875,8 +863,7 @@ FROM pick p LEFT JOIN matched m ON m.event_id = p.event_id
 """
 
 
-@query("join-asof-nearest", oracle=_ASOF_NEAR_ORACLE)
-@plan_cached("join-asof-nearest")
+@query("join-asof-nearest", oracle=_ASOF_NEAR_ORACLE, pure=True)
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D14: as-of join, direction='nearest' (pandas ``merge_asof``'s
     third mode, completing the family: D9 backward, D12 backward with
@@ -973,8 +960,7 @@ FROM e LEFT JOIN v
 """
 
 
-@query("join-scd2-temporal", oracle=_SCD2J_ORACLE)
-@plan_cached("join-scd2-temporal")
+@query("join-scd2-temporal", oracle=_SCD2J_ORACLE, pure=True)
 def join_scd2_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D15: the temporal dimension join — each fact row matches the
     SCD2 dimension VERSION valid at its event time (valid_from <= t <
@@ -1082,8 +1068,7 @@ ORDER BY key_repr
 """
 
 
-@query("join-null-safe-eq", oracle=_NULLSAFE_ORACLE)
-@plan_cached("join-null-safe-eq")
+@query("join-null-safe-eq", oracle=_NULLSAFE_ORACLE, pure=True)
 def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D16: null-safe equality join — Spark ``<=>`` ≡ SQL ``IS NOT
     DISTINCT FROM``. Under plain ``=``, NULL join keys silently drop
@@ -1199,8 +1184,7 @@ ORDER BY c_custkey
 """
 
 
-@query("join-geo-cell-nearest", oracle=_GEO_NEAREST_ORACLE)
-@plan_cached("join-geo-cell-nearest")
+@query("join-geo-cell-nearest", oracle=_GEO_NEAREST_ORACLE, pure=True)
 def join_geo_cell_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D17: cell-blocked nearest-neighbor SPATIAL join — "nearest
     supplier to each customer": the geo counterpart of the ANN keys,
@@ -1319,8 +1303,7 @@ ORDER BY a_id, b_id
 """
 
 
-@query("join-bbox-overlap", oracle=_BBOX_ORACLE)
-@plan_cached("join-bbox-overlap")
+@query("join-bbox-overlap", oracle=_BBOX_ORACLE, pure=True)
 def join_bbox_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D18: 2-D bounding-box overlap join — the spatial workhorse
     (viewport queries, map-tile assignment, UI hit-testing, geo

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 
 _PROJECT_ORACLE = """
 SELECT
@@ -25,8 +25,7 @@ FROM customer
 """
 
 
-@query("project-select", oracle=_PROJECT_ORACLE)
-@plan_cached("project-select")
+@query("project-select", oracle=_PROJECT_ORACLE, pure=True)
 def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1: projection + rename + computed columns."""
     c = load_table(spark, sf_dir, "customer")
@@ -48,8 +47,7 @@ WHERE o_orderstatus IN ('O', 'F')
 """
 
 
-@query("filter-pred", oracle=_FILTER_ORACLE)
-@plan_cached("filter-pred")
+@query("filter-pred", oracle=_FILTER_ORACLE, pure=True)
 def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2: conjunctive predicates with IN / BETWEEN / null-safe equality."""
     o = load_table(spark, sf_dir, "orders")
@@ -70,8 +68,7 @@ WHERE (p_name LIKE '%gear%' OR p_type LIKE 'ECONOMY%')
 """
 
 
-@query("filter-like-regexp", oracle=_LIKE_ORACLE)
-@plan_cached("filter-like-regexp")
+@query("filter-like-regexp", oracle=_LIKE_ORACLE, pure=True)
 def filter_like_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: LIKE and RLIKE predicates."""
     p = load_table(spark, sf_dir, "part")
@@ -95,8 +92,7 @@ WHERE c_acctbal > (
 """
 
 
-@query("filter-scalar-subquery", oracle=_SCALAR_SUBQ_ORACLE)
-@plan_cached("filter-scalar-subquery")
+@query("filter-scalar-subquery", oracle=_SCALAR_SUBQ_ORACLE, pure=True)
 def filter_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: filter against an uncorrelated scalar subquery (rows above the
     table-wide average). Declared through ``spark.sql`` so Catalyst's

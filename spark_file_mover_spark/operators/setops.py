@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 
 _SETOPS_ORACLE = """
 WITH building AS (
@@ -31,8 +31,7 @@ SELECT 'except' AS op, c_custkey FROM (
 """
 
 
-@query("set-union-intersect-except", oracle=_SETOPS_ORACLE)
-@plan_cached("set-union-intersect-except")
+@query("set-union-intersect-except", oracle=_SETOPS_ORACLE, pure=True)
 def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6: UNION [ALL|DISTINCT], INTERSECT, EXCEPT over customer key sets,
     tagged and concatenated into one result.

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from spark_file_mover_spark.llm._textnorm import MD5_PREFIX60_SQL
 from spark_file_mover_spark.operators._parity import dec
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table, plan_cached
+from spark_file_mover_spark.sources.io import load_table
 from spark_file_mover_spark.numerics import snap
 
 _RANKING_ORACLE = """
@@ -33,8 +33,7 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
 """
 
 
-@query("window-ranking", oracle=_RANKING_ORACLE)
-@plan_cached("window-ranking")
+@query("window-ranking", oracle=_RANKING_ORACLE, pure=True)
 def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1: ranking family over a totally ordered partition."""
     c = load_table(spark, sf_dir, "customer")
@@ -63,8 +62,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-@query("window-analytic", oracle=_ANALYTIC_ORACLE)
-@plan_cached("window-analytic")
+@query("window-analytic", oracle=_ANALYTIC_ORACLE, pure=True)
 def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2: lag/lead/first/last per customer order history."""
     o = load_table(spark, sf_dir, "orders")
@@ -96,8 +94,7 @@ WINDOW w AS (PARTITION BY l_orderkey
 """
 
 
-@query("window-frame-agg", oracle=_FRAME_ORACLE)
-@plan_cached("window-frame-agg")
+@query("window-frame-agg", oracle=_FRAME_ORACLE, pure=True)
 def window_frame_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: running sum + moving average with explicit row frames.
 
@@ -138,8 +135,7 @@ FROM (
 """
 
 
-@query("topk-per-group", oracle=_TOPK_ORACLE)
-@plan_cached("topk-per-group")
+@query("topk-per-group", oracle=_TOPK_ORACLE, pure=True)
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: top-5 customers per segment by balance (rank-then-filter).
 
@@ -168,8 +164,7 @@ LIMIT 100
 """
 
 
-@query("sort-limit", oracle=_SORT_LIMIT_ORACLE)
-@plan_cached("sort-limit")
+@query("sort-limit", oracle=_SORT_LIMIT_ORACLE, pure=True)
 def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: global order + limit (TakeOrderedAndProject physical op)."""
     o = load_table(spark, sf_dir, "orders")
@@ -192,8 +187,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-@query("etl-scd2", oracle=_SCD2_ORACLE)
-@plan_cached("etl-scd2")
+@query("etl-scd2", oracle=_SCD2_ORACLE, pure=True)
 def etl_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7: SCD type-2 version-interval construction — each change event
     becomes a [valid_from, valid_to) row, open-ended for the current
@@ -253,8 +247,7 @@ FROM latest WHERE rn = 1 AND op <> 'D'
 """
 
 
-@query("etl-cdc-apply", oracle=_CDC_ORACLE)
-@plan_cached("etl-cdc-apply")
+@query("etl-cdc-apply", oracle=_CDC_ORACLE, pure=True)
 def etl_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8: CDC apply — compact an ordered change feed (insert / update /
     delete with a per-key sequence) onto a base snapshot: the
@@ -330,8 +323,7 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
 """
 
 
-@query("window-distribution", oracle=_DISTRIBUTION_ORACLE)
-@plan_cached("window-distribution")
+@query("window-distribution", oracle=_DISTRIBUTION_ORACLE, pure=True)
 def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9: the distribution window family — ``percent_rank`` (relative
     rank in [0,1]), ``cume_dist`` (fraction of rows at-or-before) and
@@ -401,8 +393,7 @@ FROM per_session GROUP BY user_id ORDER BY user_id
 """
 
 
-@query("window-session-batch", oracle=_SESSIONIZE_ORACLE)
-@plan_cached("window-session-batch")
+@query("window-session-batch", oracle=_SESSIONIZE_ORACLE, pure=True)
 def window_session_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F10: BATCH sessionization — assign every event to a session by
     inactivity gap (> 30 min starts a new session) with the classic
@@ -483,8 +474,7 @@ WINDOW w7 AS (PARTITION BY user_id ORDER BY ts_us
 """
 
 
-@query("window-range-rolling", oracle=_RANGE_ROLLING_ORACLE)
-@plan_cached("window-range-rolling")
+@query("window-range-rolling", oracle=_RANGE_ROLLING_ORACLE, pure=True)
 def window_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F11: trailing time-RANGE rolling aggregates per user — events in
     the last 7 days / last hour AT each event's own timestamp (rolling
@@ -572,8 +562,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
 """
 
 
-@query("window-ewma-decay", oracle=_ewma_oracle())
-@plan_cached("window-ewma-decay")
+@query("window-ewma-decay", oracle=_ewma_oracle(), pure=True)
 def window_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12: exponentially weighted moving average (α=1/2, 8-term
     lookback) of event value per user — the decayed rolling signal
@@ -666,8 +655,7 @@ FROM s GROUP BY user_id ORDER BY user_id
 """
 
 
-@query("window-streaks", oracle=_STREAKS_ORACLE)
-@plan_cached("window-streaks")
+@query("window-streaks", oracle=_STREAKS_ORACLE, pure=True)
 def window_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F13: gaps-and-islands — longest consecutive-day activity streak
     per user (the engagement metric behind "7-day streak" badges and
@@ -766,8 +754,7 @@ FROM m ORDER BY user_id, ts_us, event_id
 """
 
 
-@query("window-zscore-anomaly", oracle=_ZSCORE_ORACLE)
-@plan_cached("window-zscore-anomaly")
+@query("window-zscore-anomaly", oracle=_ZSCORE_ORACLE, pure=True)
 def window_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14: trailing-window z-score anomaly flag per event — "is this
     value > 3 sample standard deviations from the user's recent
@@ -874,8 +861,7 @@ ORDER BY o_orderkey
 """
 
 
-@query("etl-snapshot-diff", oracle=_DIFF_ORACLE)
-@plan_cached("etl-snapshot-diff")
+@query("etl-snapshot-diff", oracle=_DIFF_ORACLE, pure=True)
 def etl_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F15: keyed diff of two table snapshots — added / removed /
     changed rows with per-column change flags, the data-diff operation
@@ -959,8 +945,7 @@ ORDER BY event_type, day_num
 """
 
 
-@query("window-period-over-period", oracle=_POP_ORACLE)
-@plan_cached("window-period-over-period")
+@query("window-period-over-period", oracle=_POP_ORACLE, pure=True)
 def window_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F16: period-over-period change — daily revenue per event type
     with the previous OBSERVED day's total, relative change, and a
@@ -1041,8 +1026,7 @@ ORDER BY user_id, day
 """
 
 
-@query("window-gap-fill", oracle=_GAP_FILL_ORACLE)
-@plan_cached("window-gap-fill")
+@query("window-gap-fill", oracle=_GAP_FILL_ORACLE, pure=True)
 def window_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F17: calendar gap-fill with forward fill (LOCF) — densify each
     user's daily-spend series so every calendar day between their first
@@ -1173,8 +1157,7 @@ ORDER BY check_name
 """
 
 
-@query("etl-dq-audit", oracle=_DQ_ORACLE)
-@plan_cached("etl-dq-audit")
+@query("etl-dq-audit", oracle=_DQ_ORACLE, pure=True)
 def etl_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18: declarative data-quality audit — the Deequ/Great-
     Expectations check-suite shape (Schelter et al., VLDB'18: "Unit
@@ -1334,8 +1317,7 @@ FROM a ORDER BY channel
 """
 
 
-@query("window-attribution", oracle=_ATTRIBUTION_ORACLE)
-@plan_cached("window-attribution")
+@query("window-attribution", oracle=_ATTRIBUTION_ORACLE, pure=True)
 def window_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F19: last-touch marketing attribution with a 7-day lookback —
     every purchase credits the user's most recent click/view touch
@@ -1474,8 +1456,7 @@ ORDER BY event_type, day_num
 """
 
 
-@query("window-cusum-changepoint", oracle=_CUSUM_ORACLE)
-@plan_cached("window-cusum-changepoint")
+@query("window-cusum-changepoint", oracle=_CUSUM_ORACLE, pure=True)
 def window_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F20: CUSUM changepoint screen (Page 1954) per daily metric
     series — the drift detector that catches what the pointwise
@@ -1608,8 +1589,7 @@ FROM c ORDER BY day_num
 """
 
 
-@query("window-rolling-corr", oracle=_RCORR_ORACLE)
-@plan_cached("window-rolling-corr")
+@query("window-rolling-corr", oracle=_RCORR_ORACLE, pure=True)
 def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F21: rolling Pearson correlation between two daily series —
     clicks vs purchases over a trailing 14-calendar-day window: the
@@ -1725,8 +1705,7 @@ FROM m ORDER BY segment
 """
 
 
-@query("window-interorder-gap", oracle=_IOG_ORACLE)
-@plan_cached("window-interorder-gap")
+@query("window-interorder-gap", oracle=_IOG_ORACLE, pure=True)
 def window_interorder_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F22: inter-order gap cadence — days between a customer's
     consecutive orders, rolled up per market segment (count, min/max,
@@ -1917,8 +1896,7 @@ ORDER BY custkey
 )
 
 
-@query("window-rfm-segment", oracle=_RFM_ORACLE)
-@plan_cached("window-rfm-segment")
+@query("window-rfm-segment", oracle=_RFM_ORACLE, pure=True)
 def window_rfm_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F23: RFM segmentation — the CRM/lifecycle-marketing staple:
     every customer scored 1-5 on Recency (last order day), Frequency
@@ -1996,8 +1974,7 @@ FROM c ORDER BY day
 """
 
 
-@query("window-concurrency-sweep", oracle=_SWEEP_ORACLE)
-@plan_cached("window-concurrency-sweep")
+@query("window-concurrency-sweep", oracle=_SWEEP_ORACLE, pure=True)
 def window_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F24: interval-concurrency profile by SWEEP-LINE — how many
     orders are simultaneously open on each change day, plus the global
@@ -2086,8 +2063,7 @@ ORDER BY window_start, event_type
 """
 
 
-@query("window-ohlc-bars", oracle=_OHLC_ORACLE)
-@plan_cached("window-ohlc-bars")
+@query("window-ohlc-bars", oracle=_OHLC_ORACLE, pure=True)
 def window_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F25: OHLC candle bars — open/high/low/close of the value stream
     per (hour, event_type), plus count and exact total: the
@@ -2176,8 +2152,7 @@ FROM k ORDER BY day
 """
 
 
-@query("window-calendar-mtd-ytd", oracle=_MTD_ORACLE)
-@plan_cached("window-calendar-mtd-ytd")
+@query("window-calendar-mtd-ytd", oracle=_MTD_ORACLE, pure=True)
 def window_calendar_mtd_ytd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F26: per-day revenue with month-to-date and year-to-date
     running totals — the reporting-calendar query behind every
@@ -2272,8 +2247,7 @@ FROM h
 """
 
 
-@query("etl-table-checksum", oracle=_CKSUM_ORACLE)
-@plan_cached("etl-table-checksum")
+@query("etl-table-checksum", oracle=_CKSUM_ORACLE, pure=True)
 def etl_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F27: order-independent table checksum — THE migration/copy
     validation for the reference's own audience (a file-mover's user
@@ -2345,8 +2319,7 @@ ORDER BY c.spend_cents, c.custkey
 """
 
 
-@query("window-pareto-frontier", oracle=_PARETO_ORACLE)
-@plan_cached("window-pareto-frontier")
+@query("window-pareto-frontier", oracle=_PARETO_ORACLE, pure=True)
 def window_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F28: the Pareto frontier (skyline) of customers in
     (total spend, recency) space — customers no other customer beats
@@ -2446,8 +2419,7 @@ ORDER BY window_start
 """
 
 
-@query("window-percentile-bands", oracle=_PCTBANDS_ORACLE)
-@plan_cached("window-percentile-bands")
+@query("window-percentile-bands", oracle=_PCTBANDS_ORACLE, pure=True)
 def window_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F29: exact nearest-rank p50/p95/p99 of the value stream per
     hour — THE observability panel (latency/size/cost percentile
@@ -2561,8 +2533,7 @@ FROM r ORDER BY day
 """
 
 
-@query("window-drawdown", oracle=_DRAWDOWN_ORACLE)
-@plan_cached("window-drawdown")
+@query("window-drawdown", oracle=_DRAWDOWN_ORACLE, pure=True)
 def window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F30: running-peak drawdown of the daily revenue series — per
     day, the gap to the best day seen SO FAR (absolute, fractional,
@@ -2666,8 +2637,7 @@ FROM scored GROUP BY ship_day ORDER BY ship_day
 """
 
 
-@query("window-vwap-anchored", oracle=_VWAP_ORACLE)
-@plan_cached("window-vwap-anchored")
+@query("window-vwap-anchored", oracle=_VWAP_ORACLE, pure=True)
 def window_vwap_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F31: anchored VWAP — the volume-weighted average unit price
     cumulated from each ship day's first fill, the execution-quality
@@ -2835,8 +2805,7 @@ FROM x ORDER BY day
 """
 
 
-@query("window-bollinger", oracle=_BOLL_ORACLE)
-@plan_cached("window-bollinger")
+@query("window-bollinger", oracle=_BOLL_ORACLE, pure=True)
 def window_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F32: Bollinger bands (Bollinger 1983: 20-day mean ± 2σ) over
     the daily revenue series — the volatility-scaled envelope that
@@ -2960,8 +2929,7 @@ FROM g ORDER BY day
 """
 
 
-@query("window-rsi", oracle=_RSI_ORACLE)
-@plan_cached("window-rsi")
+@query("window-rsi", oracle=_RSI_ORACLE, pure=True)
 def window_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F33: relative strength index (Cutler's SMA variant of Wilder
     1978) over the daily revenue series — the momentum readout that
@@ -3089,8 +3057,7 @@ _FK_AUDIT_ORACLE = "\nUNION ALL\n".join(
 ) + "\nORDER BY relationship"
 
 
-@query("etl-fk-audit", oracle=_FK_AUDIT_ORACLE)
-@plan_cached("etl-fk-audit")
+@query("etl-fk-audit", oracle=_FK_AUDIT_ORACLE, pure=True)
 def etl_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F34: referential-integrity audit over every FK edge of the
     star schema — per relationship, total child rows, NULL
@@ -3219,8 +3186,7 @@ FROM w ORDER BY day
 """
 
 
-@query("window-local-extrema", oracle=_EXTREMA_ORACLE)
-@plan_cached("window-local-extrema")
+@query("window-local-extrema", oracle=_EXTREMA_ORACLE, pure=True)
 def window_local_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F35: local extrema of the daily revenue series — a day is a
     PEAK when it strictly exceeds every day in its ±3-day
@@ -3329,8 +3295,7 @@ ORDER BY lag
 """
 
 
-@query("window-autocorr", oracle=_ACF_ORACLE)
-@plan_cached("window-autocorr")
+@query("window-autocorr", oracle=_ACF_ORACLE, pure=True)
 def window_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F36: the autocorrelation function of the daily revenue series
     at lags 1..7 — THE time-series diagnostic read before any
@@ -3453,8 +3418,7 @@ ORDER BY c_custkey, island_id
 """
 
 
-@query("etl-interval-islands", oracle=_ISLANDS_ORACLE)
-@plan_cached("etl-interval-islands")
+@query("etl-interval-islands", oracle=_ISLANDS_ORACLE, pure=True)
 def etl_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F37: gaps-and-islands interval coalescing — each order opens a
     30-day activity interval per customer; overlapping/touching
@@ -3601,8 +3565,7 @@ FROM se ORDER BY day
 """
 
 
-@query("window-seasonal-decompose", oracle=_SEASDECOMP_ORACLE)
-@plan_cached("window-seasonal-decompose")
+@query("window-seasonal-decompose", oracle=_SEASDECOMP_ORACLE, pure=True)
 def window_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F38: classical additive seasonal decomposition of the daily
     revenue series — centered 7-day trend, day-of-week seasonal
@@ -3720,8 +3683,7 @@ FROM w ORDER BY day
 """
 
 
-@query("window-parkinson-vol", oracle=_PARKINSON_ORACLE)
-@plan_cached("window-parkinson-vol")
+@query("window-parkinson-vol", oracle=_PARKINSON_ORACLE, pure=True)
 def window_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F39: Parkinson range volatility (Parkinson 1980) over daily
     event-value bars — σ = √(mean(ln(H/L)²)/(4·ln2)) on a 20-day
@@ -3904,8 +3866,7 @@ FROM s ORDER BY day
 """
 
 
-@query("window-macd", oracle=_macd_oracle())
-@plan_cached("window-macd")
+@query("window-macd", oracle=_macd_oracle(), pure=True)
 def window_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F40: MACD(12, 26, 9) over the daily revenue series — the
     trend-following momentum readout that completes the finance-window
@@ -4050,8 +4011,7 @@ FROM s ORDER BY day
 """
 
 
-@query("window-stochastic-osc", oracle=_STOCH_ORACLE)
-@plan_cached("window-stochastic-osc")
+@query("window-stochastic-osc", oracle=_STOCH_ORACLE, pure=True)
 def window_stochastic_osc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F41: stochastic oscillator %K/%D (Lane) over the daily revenue
     series — where today's close sits inside the 14-day low/high
@@ -4158,8 +4118,7 @@ FROM u ORDER BY day
 """
 
 
-@query("window-ulcer-index", oracle=_ULCER_ORACLE)
-@plan_cached("window-ulcer-index")
+@query("window-ulcer-index", oracle=_ULCER_ORACLE, pure=True)
 def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F42: Ulcer Index (Martin & McCann 1989) over the daily revenue
     series — the root-mean-square of the last 14 days' percentage

@@ -100,7 +100,7 @@ def max_signature_count(plan: str) -> int:
 SCAN_BUDGET_EXEMPT: dict[str, str] = {
     # r16 (verdict item 1): the ~550-cell (x, y, c) relation feeds five
     # consumers LAZILY — the r15 eager localCheckpoint ran at build
-    # time, which turned the @plan_cached hit into a result cache. The
+    # time, which turned the plan-cache hit into a result cache. The
     # static census sees one scan per consumer branch, but the
     # branches share the identical scan→partial-agg→Exchange subtree
     # and AQE stage reuse collapses them at runtime: the executed

@@ -177,12 +177,12 @@ def session_memo(name: str, spark: SparkSession, build):
 def cached_plan(spark: SparkSession, sf_dir: str, name: str, make):
     """Return the built plan for query ``name`` or build it via the
     zero-arg ``make`` — keyed and bypassed like :func:`ingest_artifact`.
-    A PLAN cache for side-effect-free queries (no writes, fresh temp
-    dirs or streaming queries), not a result cache: the returned
-    DataFrame re-executes on every action, only the Column-tree
-    construction and eager analysis (0.2-0.8 s on expression-heavy
-    keys) are paid once per (SparkContext, corpus). Evicted plans are
-    dropped, not released — they own no storage."""
+    The registry calls it for every ``@query(..., pure=True)`` key (see
+    :func:`~spark_file_mover_spark.registry.query`). A PLAN cache, not
+    a result cache: the returned DataFrame re-executes on every action,
+    only the Column-tree construction and eager analysis (0.2-0.8 s on
+    expression-heavy keys) are paid once per (SparkContext, corpus).
+    Evicted plans are dropped, not released — they own no storage."""
     df, hit = _lookup(
         _QUERY_PLAN_CACHE, name, spark, sf_dir, make, lambda _df: None
     )
@@ -194,25 +194,6 @@ def cached_plan(spark: SparkSession, sf_dir: str, name: str, make):
     # to a cold build; the cost is ONE analyzer pass over the resolved
     # tree instead of the per-operator construction+analysis chain.
     return df.select("*") if hit else df
-
-
-def plan_cached(name: str):
-    """Decorator form of :func:`cached_plan` for side-effect-free query
-    functions: the wrapped function builds the plan on a (SparkContext,
-    corpus) miss; hits return the SAME lazy DataFrame, re-executed per
-    action. Apply BELOW ``@query`` so the registry sees the wrapper."""
-    import functools
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return cached_plan(
-                spark, sf_dir, name, lambda: fn(spark, sf_dir)
-            )
-
-        return wrapper
-
-    return deco
 
 
 # (sf_dir, name) → DataFrame for ONE SparkSession at a time. A DataFrame

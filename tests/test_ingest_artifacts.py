@@ -1,6 +1,7 @@
 """The ingest-artifact primitive (``sources.io.ingest_artifact``) is the
-only corpus-artifact cache: these tests pin that no module grows its own
-again, and that evicting an entry releases the blocks it pinned."""
+only corpus-artifact cache and the registry's ``pure`` flag the only
+plan cache: these tests pin that no module grows its own again, and
+that evicting an entry releases the blocks it pinned."""
 
 from __future__ import annotations
 
@@ -22,15 +23,29 @@ KEY_EXEMPT = {
     ("llm/multimodal.py", "_asset_corpus"),
 }
 
+# cache entry point → is a call at (module path, enclosing function)
+# allowed? Plan caching is a registry flag (``@query(..., pure=True)``),
+# so only registry.py may call cached_plan.
+ALLOWED = {
+    "artifact_cache_key": lambda rel, fn: rel == "sources/io.py"
+    or (rel, fn) in KEY_EXEMPT,
+    "cached_plan": lambda rel, fn: rel == "registry.py",
+}
+# names that must not exist anywhere in the package
+GONE = {"plan_cached"}
 
-def _key_calls(path: Path):
-    """(enclosing function, line) of every artifact_cache_key call."""
+
+def _cache_uses(path: Path):
+    """(name, enclosing function, line) of every call to an ALLOWED
+    entry point and every mention of a GONE name."""
     tree = ast.parse(path.read_text())
     hits = []
 
     def walk(node, fn):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if child.name in GONE:
+                    hits.append((child.name, fn, child.lineno))
                 walk(child, child.name)
                 continue
             if isinstance(child, ast.Call):
@@ -38,8 +53,13 @@ def _key_calls(path: Path):
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(
                     f, "id", None
                 )
-                if name == "artifact_cache_key":
-                    hits.append((fn, child.lineno))
+                if name in ALLOWED:
+                    hits.append((name, fn, child.lineno))
+            name = getattr(child, "id", None) or getattr(child, "attr", None)
+            if isinstance(child, ast.alias):
+                name = child.asname or child.name
+            if name in GONE:
+                hits.append((name, fn, child.lineno))
             walk(child, fn)
 
     walk(tree, None)
@@ -50,13 +70,12 @@ def test_no_hand_rolled_artifact_cache():
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel == "sources/io.py":
-            continue
-        for fn, line in _key_calls(path):
-            if (rel, fn) not in KEY_EXEMPT:
-                offenders.append(f"{rel}:{line} ({fn})")
+        for name, fn, line in _cache_uses(path):
+            if name in GONE or not ALLOWED[name](rel, fn):
+                offenders.append(f"{rel}:{line} {name} ({fn})")
     assert not offenders, (
-        "corpus-keyed cache outside sources.io — use ingest_artifact: "
+        "cache outside its owner — use ingest_artifact for corpus "
+        "artifacts and @query(..., pure=True) for plans: "
         + ", ".join(offenders)
     )
 

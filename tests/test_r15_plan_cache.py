@@ -1,6 +1,6 @@
-"""r15 built-plan cache (sources.io.cached_plan / @plan_cached):
-construction is cached per (appId, corpus fingerprint, key), execution
-happens on every action.
+"""r15 built-plan cache (sources.io.cached_plan behind every
+``@query(..., pure=True)`` key): construction is cached per (appId,
+corpus fingerprint, key), execution happens on every action.
 
 Pins the three ways the cache could go wrong:
 
@@ -11,6 +11,9 @@ Pins the three ways the cache could go wrong:
   must miss and rebuild;
 * the plan-only tooling mode leaking through the cache — under
   ``lazy_checkpoints`` the cache must be bypassed in both directions.
+
+Plus the registry owns the cache: every cached name is a key in
+``registry.PURE``.
 """
 
 from __future__ import annotations
@@ -23,7 +26,8 @@ from spark_file_mover_spark.sources import io as sio
 registry.load_all()
 
 SF = "/root/testdata/sf0.001"
-KEY = "text-zipf-fit"  # pure-read, plan-cached, fast at sf0.001
+KEY = "text-zipf-fit"  # pure, fast at sf0.001
+ASSET_KEY = "multimodal-gif-meta"  # pure, over an asset corpus
 
 
 def test_plan_cache_hit_returns_same_plan_and_reexecutes(spark):
@@ -73,3 +77,13 @@ def test_plan_cache_bypassed_under_lazy_checkpoints(spark):
     # lazy mode must neither evict nor overwrite the production entry
     for k, v in entries.items():
         assert sio._QUERY_PLAN_CACHE.get(k) is v
+
+
+def test_plan_cache_holds_only_pure_keys(spark):
+    for key in (KEY, ASSET_KEY):
+        assert key in registry.PURE
+        for _ in range(2):
+            registry.QUERIES[key](spark, SF)
+    names = {k[1] for k in sio._QUERY_PLAN_CACHE}
+    assert {KEY, ASSET_KEY} <= names
+    assert names <= registry.PURE, names - registry.PURE

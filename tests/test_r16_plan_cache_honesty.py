@@ -10,12 +10,12 @@ Two contracts, pinned with Spark job counts:
   executed);
 * a key whose build legitimately KEEPS an eager barrier (collect /
   range-bound determinism / scale-critical materialization) must not
-  be ``@plan_cached`` at all: its second invocation re-runs the
-  barrier jobs at BUILD time.
+  be ``pure`` at all: its second invocation re-runs the barrier jobs
+  at BUILD time.
 
-Plus the registry-wide invariant the r16 audit enforces: no
-``@plan_cached`` key runs jobs during a warm (artifact caches
-populated) build.
+Plus the registry-wide invariant the r16 audit enforces: no key in
+``registry.PURE`` runs jobs during a warm (artifact caches populated)
+build.
 """
 
 from __future__ import annotations
@@ -28,10 +28,10 @@ registry.load_all()
 SF = "/root/testdata/sf0.001"
 
 # r15 offenders de-barriered in r16: build is pure lazy construction,
-# @plan_cached kept — a hit must re-read parquet on every action.
+# the key stays ``pure`` — a hit must re-read parquet on every action.
 DEBARRIERED = "agg-kendall-tau"
-# r15 offenders whose barrier is load-bearing: @plan_cached stripped —
-# the second invocation must re-run the barrier jobs in the build.
+# r15 offenders whose barrier is load-bearing: not ``pure`` — the
+# second invocation must re-run the barrier jobs in the build.
 STRIPPED = "agg-tukey-fences"
 
 
@@ -86,8 +86,8 @@ def test_stripped_barrier_key_rebuilds_per_invocation(spark):
     assert df1.collect() == df2.collect()
 
 
-def test_no_plan_cached_key_has_eager_build(spark):
-    """Registry-wide: every @plan_cached key's SECOND build (artifact
+def test_no_pure_key_has_eager_build(spark):
+    """Registry-wide: every ``pure`` key's SECOND build (artifact
     caches warm) is job-free. Runs at sf0.001 so the sweep stays
     cheap; the per-key audit tool (tools/audit_build_jobs.py) is the
     sf0.01 version of the same gate."""
@@ -96,14 +96,9 @@ def test_no_plan_cached_key_has_eager_build(spark):
     sio.cached_plan = lambda spark, sf_dir, name, make: make()
     offenders = {}
     try:
-        wrapped = [
-            key
-            for key, fn in registry.QUERIES.items()
-            if getattr(fn, "__wrapped__", None) is not None
-            and hasattr(fn.__wrapped__, "__wrapped__")
-        ]
-        assert len(wrapped) > 100  # the cache is still in wide use
-        for key in wrapped:
+        # the 197 former decorator keys plus the 15 multimodal asset keys
+        assert len(registry.PURE) >= 212
+        for key in sorted(registry.PURE):
             registry.QUERIES[key](spark, SF)  # warm artifacts
             group = f"r16-audit-{key}"
             sc.setJobGroup(group, key)
@@ -116,4 +111,4 @@ def test_no_plan_cached_key_has_eager_build(spark):
                 offenders[key] = n
     finally:
         sio.cached_plan = real
-    assert not offenders, f"plan_cached keys with eager builds: {offenders}"
+    assert not offenders, f"pure keys with eager builds: {offenders}"

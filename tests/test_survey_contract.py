@@ -83,30 +83,27 @@ def test_bench_line_fits_driver_capture():
         "sweeps": [9999.9999, 9999.9999],
         "sweep_selected": 1,
         "over_budget": [],
-        "queries": {k: 1.2345 for k in bench.HEADLINE},
+        "queries": {k: 1.2345 for k in registry.QUERIES},
         "sf": 0.1,
     }
     # Realistic widths (every key under the 2 s budget): at 78+ keys the
-    # full set no longer fits even at 1 dp, so emit_line keeps a
-    # priority-ordered inline subset — the frozen sets plus the NEWEST
-    # keys (HEADLINE tail), dropping only the oldest few to the sidecar.
+    # full set no longer fits even at 1 dp, so emit_line keeps the
+    # frozen LINE_KEYS subset inline and the rest go to the sidecar.
     line = bench.emit_line(payload)
     assert len(line) <= bench._LINE_BUDGET
     parsed = json.loads(line)
     assert parsed["common16_total"] == payload["common16_total"]
     inline = set(parsed["queries"])
-    assert set(bench.COMMON20) <= inline
-    # the five newest keys (this round's additions) must be inline
-    assert set(bench.HEADLINE[-5:]) <= inline
+    assert set(bench.LINE_KEYS) <= inline  # COMMON20 is its head
     # degradation is marginal: the inline set keeps a fixed-size head
     # (~66 keys fit at 1.23-width values now that the r13 median and
-    # r14 sweeps fields ride the same line); only the oldest non-frozen
-    # keys drop to BENCH_FULL.json as HEADLINE grows
-    assert len(inline) >= min(len(bench.HEADLINE), 65)
+    # r14 sweeps fields ride the same line); the other keys drop to
+    # BENCH_FULL.json
+    assert len(inline) >= min(len(registry.QUERIES), 65)
     # Pathological widths: the line must STILL parse and fit — the frozen
     # comparison sets stay inline, the rest degrades to BENCH_FULL.json.
-    payload["queries"] = {k: 11111.2345 for k in bench.HEADLINE}
-    payload["over_budget"] = sorted(bench.HEADLINE)[:5]
+    payload["queries"] = {k: 11111.2345 for k in registry.QUERIES}
+    payload["over_budget"] = sorted(registry.QUERIES)[:5]
     line = bench.emit_line(payload)
     assert len(line) <= bench._LINE_BUDGET or json.loads(line).get(
         "queries_truncated"
@@ -116,13 +113,13 @@ def test_bench_line_fits_driver_capture():
 
 
 def test_bench_headline_keys_are_registered():
-    """bench.py only WARNS on unknown HEADLINE keys at runtime — a
-    renamed key would silently drop out of every future sweep; fail CI
-    instead. Duplicates would double-count a key's time in totals."""
+    """bench.py benches every registered key, but its frozen lists are
+    hand-kept: a renamed key would silently drop out of the common
+    totals and the stdout line; fail CI instead. Duplicates would
+    double-count a key's time in totals."""
     import bench
 
-    unknown = [k for k in bench.HEADLINE if k not in registry.QUERIES]
-    assert not unknown, f"HEADLINE keys not registered: {unknown}"
-    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
-    for frozen in (bench.COMMON16, bench.COMMON20):
-        assert set(frozen) <= set(bench.HEADLINE)
+    for frozen in (bench.COMMON16, bench.COMMON20, bench.LINE_KEYS):
+        unknown = [k for k in frozen if k not in registry.QUERIES]
+        assert not unknown, f"frozen bench keys not registered: {unknown}"
+        assert len(frozen) == len(set(frozen))

@@ -1,23 +1,24 @@
-"""Audit: which @plan_cached keys run Spark jobs at BUILD time?
+"""Audit: which ``pure`` registry keys run Spark jobs at BUILD time?
 
-A key wrapped in @plan_cached must be pure lazy construction: on a
-cache hit the stored plan re-executes from the parquet inputs, so
-anything the BUILD executes eagerly (localCheckpoint barriers,
-collects, persist().count() outside a declared artifact cache) is
-computed once and silently served from the materialized intermediate
-afterwards — result caching, not plan caching (r15 verdict item 1).
+A key registered with ``@query(..., pure=True)`` must be lazy
+construction only: on a cache hit the stored plan re-executes from the
+parquet inputs, so anything the BUILD executes eagerly (localCheckpoint
+barriers, collects, persist().count() outside a declared artifact
+cache) is computed once and silently served from the materialized
+intermediate afterwards — result caching, not plan caching.
 
-Method: for every registered key that carries the plan-cache wrapper,
-bypass the plan cache (so the real build runs) and count the Spark
-jobs submitted DURING CONSTRUCTION (no action). The first build warms
-the declared per-(SparkContext, corpus) ingest artifacts (tf relation,
-minhash bands, asset corpora, …) whose build jobs are blessed paid-
-once ingest; the SECOND build's job count is the per-invocation eager
-work. Keys with second-build jobs > 0 may not be @plan_cached.
+Method: for every key in ``registry.PURE``, bypass the plan cache (so
+the real build runs) and count the Spark jobs submitted DURING
+CONSTRUCTION (no action). The first build warms the declared
+per-(SparkContext, corpus) ingest artifacts (tf relation, minhash
+bands, asset corpora, …) whose build jobs are blessed paid-once ingest;
+the SECOND build's job count is the per-invocation eager work. Keys
+with second-build jobs > 0 may not be ``pure``.
 
 Usage: python tools/audit_build_jobs.py [sf_dir]
-Prints one line per wrapped key: key, first-build jobs, second-build
-jobs, and OFFENDER for second-build > 0.
+Prints one line per pure key: key, first-build jobs, second-build
+jobs, and OFFENDER for second-build > 0. Exits 1 when any key is an
+OFFENDER or fails to build.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ REPO = str(Path(__file__).resolve().parent.parent)
 sys.path.insert(0, REPO)
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from spark_file_mover_spark import registry
     from spark_file_mover_spark.session import get_spark
@@ -43,17 +44,11 @@ def main() -> None:
     real_cached_plan = sio.cached_plan
     sio.cached_plan = lambda spark, sf_dir, name, make: make()
 
-    wrapped = []
-    for key, fn in registry.QUERIES.items():
-        inner = getattr(fn, "__wrapped__", None)
-        # plan_cached wrappers carry functools.wraps' __wrapped__
-        if inner is not None and hasattr(inner, "__wrapped__"):
-            wrapped.append(key)
-    print(f"# {len(wrapped)} plan_cached keys", file=sys.stderr)
+    print(f"# {len(registry.PURE)} pure keys", file=sys.stderr)
 
     tracker = sc.statusTracker()
-    offenders = []
-    for key in sorted(wrapped):
+    offenders, errors = [], []
+    for key in sorted(registry.PURE):
         counts = []
         for rep in range(2):
             group = f"audit-{key}-{rep}"
@@ -62,6 +57,7 @@ def main() -> None:
                 registry.QUERIES[key](spark, sf_dir)
             except Exception as e:  # noqa: BLE001 — report and continue
                 print(f"{key}\tERROR\t{e}")
+                errors.append(key)
                 counts = None
                 break
             finally:
@@ -75,7 +71,10 @@ def main() -> None:
             offenders.append(key)
     sio.cached_plan = real_cached_plan
     print(f"# offenders ({len(offenders)}): {offenders}", file=sys.stderr)
+    if errors:
+        print(f"# errors ({len(errors)}): {errors}", file=sys.stderr)
+    return 1 if offenders or errors else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -2,9 +2,10 @@
 
 For each key: 2 unmeasured warm passes (JIT/codegen), then N reps of
 (build + materialize) timed separately. With --bypass-plan-cache the
-sources.io plan cache is disabled so every rep pays the build (the
-honest per-invocation cost of a barrier form); without it, reps after
-the first are plan-cache hits (the honest cost of a lazy form).
+``sources.io.cached_plan`` behind every ``pure`` registry key is
+disabled, so every rep pays the build (the honest per-invocation cost
+of a barrier form); without it, a pure key's reps after the first are
+plan-cache hits (the honest cost of a lazy form).
 
 Usage: python tools/probe_ab.py [--bypass-plan-cache] sf_dir key...
 """
