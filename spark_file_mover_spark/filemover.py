@@ -625,8 +625,9 @@ def write_single_file(
         # defers it to publish time so the old content stays readable
         # while the new write runs. Clear every non-hidden child now,
         # plus .__staging__-* dirs orphaned by crashed prior staged
-        # runs — age-guarded (1 h, like the sfm-b22 scratch sweep) so a
-        # concurrent staged writer keeps its in-flight dir; never ours.
+        # runs. A staging dir names no owner process, so its age is the
+        # only liveness signal: dirs younger than 1 h may belong to a
+        # concurrent staged writer and stay; ours is never removed.
         cutoff_ms = (_time.time() - 3600) * 1000
         for st in fs.listStatus(jout):
             name = st.getPath().getName()

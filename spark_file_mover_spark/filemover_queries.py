@@ -15,8 +15,6 @@ template regex `:30`, collision guard `:50-53`, null/empty partition →
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -26,7 +24,11 @@ from spark_file_mover_spark.filemover import (
     write_single_file,
 )
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table
+from spark_file_mover_spark.sources.io import (
+    ingest_artifact,
+    load_table,
+    scratch_dir,
+)
 
 # ---------------------------------------------------------------------------
 # A2 — partition extraction as a declarative query
@@ -194,53 +196,28 @@ def move_collision_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# A1's completed-write fixture, keyed (applicationId, sf_dir) — one
-# live entry, stale directory rmtree-evicted (the B15/B7 setup-cache
-# lifecycle). The fixture is a pure function of the immutable nation
-# input, and the OPERATOR the key declares is the recursive listing of
-# a completed write — in a real deployment the write happened in some
-# upstream job, the mover only ever lists it. The listing + per-dir
-# rollup run on every invocation; the listing never mutates the dir.
-_last_a1_fixture: tuple | None = None
-
-
 def _write_partitioned_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Write nation partitioned by region key to a temp dir (the write
-    pipeline the mover operates on, ref test :52-59) and return the
-    path. Cached per (SparkContext, sf_dir): the write is SETUP (r15,
-    the scan-dpp-join discipline), the listing is the operator."""
-    global _last_a1_fixture
-    import os
+    """Write nation partitioned by region key (the write pipeline the
+    mover operates on, ref test :52-59) and return the path. The write
+    is SETUP, an ingest artifact of the nation input: in a deployment
+    it happened in some upstream job and the mover only lists it. The
+    OPERATOR the key declares — the recursive listing of the completed
+    write plus its per-dir rollup — runs on every invocation and never
+    mutates the directory."""
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    # ADVICE r15: require the cached dir to still EXIST (the B22
-    # template-cache liveness check) — an OS tmp reaper on a long
-    # session would otherwise turn A1 into an empty manifest.
-    if (
-        _last_a1_fixture is not None
-        and _last_a1_fixture[0] == cache_key
-        and os.path.isdir(_last_a1_fixture[1])
-    ):
-        return _last_a1_fixture[1]
-    if _last_a1_fixture is not None:
-        import os
-        import shutil
-
-        shutil.rmtree(
-            os.path.dirname(_last_a1_fixture[1]), ignore_errors=True
+    def build() -> str:
+        out = scratch_dir() + "/out"
+        (
+            load_table(spark, sf_dir, "nation")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("n_regionkey")
+            .csv(out)
         )
-        _last_a1_fixture = None
-    out = tempfile.mkdtemp(prefix="sfm-a1-") + "/out"
-    n = load_table(spark, sf_dir, "nation")
-    (
-        n.coalesce(1)
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("n_regionkey")
-        .csv(out)
-    )
-    _last_a1_fixture = (cache_key, out)
-    return out
+        return out
+
+    return ingest_artifact("a1-fixture", spark, sf_dir, build)
 
 
 # The listing's expected layout is fully determined by the data: one
@@ -295,7 +272,7 @@ def move_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest the landed per-partition files (scala :52) — hash-checked:
     the template dictates one ``region_<rk>.csv`` per distinct partition
     value, every one the product of an actual rename."""
-    out = tempfile.mkdtemp(prefix="sfm-a5-") + "/out"
+    out = scratch_dir("move-rename") + "/out"
     n = load_table(spark, sf_dir, "nation")
     res = write_single_file(
         n.withColumnRenamed("n_regionkey", "rk"),
@@ -331,25 +308,7 @@ def write_single_file_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     write as exactly ONE named CSV file via the post-write move, re-read
     that single file, return its contents (oracle-checked against the
     pre-write aggregate; int+string columns round-trip CSV exactly)."""
-    import os
-    import shutil
-    import time as _time
-
-    # scratch hygiene (r15, bench item 5): prior invocations' sfm-a6-*
-    # dirs are swept with the same 1 h age guard as the sfm-b22 sweep,
-    # so repeated scoring/bench rounds can't accumulate /tmp residue
-    tmp_root = tempfile.gettempdir()
-    cutoff = _time.time() - 3600
-    for name in os.listdir(tmp_root):
-        if name.startswith("sfm-a6-"):
-            stale = os.path.join(tmp_root, name)
-            try:
-                if os.path.getmtime(stale) < cutoff:
-                    shutil.rmtree(stale, ignore_errors=True)
-            except OSError:
-                pass
-
-    out = tempfile.mkdtemp(prefix="sfm-a6-") + "/out"
+    out = scratch_dir("write-single-file") + "/out"
     o = load_table(spark, sf_dir, "orders")
     agg = o.groupBy("o_orderstatus").agg(F.count("*").alias("n_orders"))
     res = write_single_file(

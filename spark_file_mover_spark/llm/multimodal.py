@@ -20,7 +20,6 @@ and is what these queries exercise.
 from __future__ import annotations
 
 import hashlib
-import tempfile
 from collections.abc import Iterator
 from pathlib import Path
 
@@ -31,22 +30,15 @@ from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
 from spark_file_mover_spark.sources.io import (
-    artifact_cache_key,
     ingest_artifact,
     load_table,
+    scratch_dir,
     session_memo,
 )
 
 # ---------------------------------------------------------------------------
 # Synthetic asset corpora, materialized once per (SparkContext, corpus)
 # ---------------------------------------------------------------------------
-
-# (artifact_cache_key, family) -> (parquet dir, its read DataFrame).
-# Single live directory per family (the scan-dpp-join / sink-compact
-# setup lifecycle): a stale key — dead SparkContext, or the family
-# pointed at another sf_dir or a rewritten corpus — rmtree-evicts its
-# directory before the new one lands.
-_ASSET_DIR_CACHE: dict[tuple, tuple[str, DataFrame]] = {}
 
 
 def _asset_query(
@@ -65,13 +57,13 @@ def _asset_query(
 def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
     """Return the synthetic ``(asset_id, content)`` asset corpus as a
     parquet-backed relation, written and read ONCE per (SparkContext,
-    corpus).
+    corpus): an ingest artifact whose directory goes with its entry.
 
     The asset bytes are a pure function of the immutable documents
     input — in a real pipeline, corpus ingest lands the binary assets
-    once and every metadata pass re-reads them from storage. Before
-    r15 each invocation re-synthesized the bytes inline, which profiled
-    as pure plan tax (py4j construction + per-action codegen source of
+    once and every metadata pass re-reads them from storage.
+    Re-synthesizing the bytes inline on each invocation profiled as
+    pure plan tax (py4j construction + per-action codegen source of
     the ~200-node hex chain) around ~0.05 s of actual execution. The
     PARSE — the operator each query declares — still runs per
     invocation against the on-disk bytes, so the header walk is
@@ -82,24 +74,13 @@ def _asset_corpus(spark: SparkSession, sf_dir: str, family: str, build):
     ``build`` is a zero-arg callable returning the assets DataFrame to
     materialize; it is only invoked on a cache miss.
     """
-    import shutil
 
-    corpus = artifact_cache_key(spark, sf_dir)
-    key = (corpus, family)
-    hit = _ASSET_DIR_CACHE.get(key)
-    if hit is None:
-        stale = [
-            k
-            for k in _ASSET_DIR_CACHE
-            if k[0][0] != corpus[0] or (k[1] == family and k != key)
-        ]
-        for k in stale:
-            shutil.rmtree(_ASSET_DIR_CACHE.pop(k)[0], ignore_errors=True)
-        base = tempfile.mkdtemp(prefix=f"sfm-assets-{family}-")
-        path = base + "/assets"
+    def land() -> tuple[str, DataFrame]:
+        path = scratch_dir() + "/assets"
         build().write.parquet(path)
-        hit = _ASSET_DIR_CACHE[key] = (path, spark.read.parquet(path))
-    return hit[1]
+        return path, spark.read.parquet(path)
+
+    return ingest_artifact(f"assets-{family}", spark, sf_dir, land)[1]
 
 
 def _hex_corpus(
@@ -205,7 +186,7 @@ def multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # loose-file ingestion path: write a few assets, read via binaryFile
-    loose_dir = Path(tempfile.mkdtemp(prefix="sfm-assets-")) / "assets"
+    loose_dir = Path(scratch_dir("multimodal-binary")) / "assets"
     loose_dir.mkdir()
     for row in assets.filter(F.col("asset_id") < 3).collect():
         (loose_dir / f"{row.asset_id}.bin").write_bytes(bytes(row.content))

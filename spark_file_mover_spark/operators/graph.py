@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import ingest_artifact, load_table
+from spark_file_mover_spark.sources.io import (
+    ingest_artifact,
+    load_table,
+    scratch_dir,
+)
 from spark_file_mover_spark.numerics import snap
 
 
@@ -28,21 +32,15 @@ def _reliable_checkpoint(df: DataFrame) -> DataFrame:
     lineage that still survives executor loss: a RELIABLE checkpoint
     into the checkpoint dir (HDFS/object store on a real cluster —
     the "adjacency as an ingest table" posture). localCheckpoint's
-    blocks die with their executor (the r9 verdict item); bare
-    persist() keeps replayable lineage but leaves the DEEP adjacency
-    subtree in every per-round plan, which Catalyst re-optimizes each
-    round (measured pagerank 1.23 -> 2.25 s at sf0.1). The reliable
-    checkpoint gives both: one-node plans for the iterative rounds,
-    and blocks that any executor can re-read from storage."""
+    blocks die with their executor; bare persist() keeps replayable
+    lineage but leaves the DEEP adjacency subtree in every per-round
+    plan, which Catalyst re-optimizes each round (measured pagerank
+    1.23 -> 2.25 s at sf0.1). The reliable checkpoint gives both:
+    one-node plans for the iterative rounds, and blocks that any
+    executor can re-read from storage."""
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="sfm-graph-ckpt-")
-        sc.setCheckpointDir(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        sc.setCheckpointDir(scratch_dir())
     return df.checkpoint(eager=True)
 
 

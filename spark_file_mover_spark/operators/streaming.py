@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 from spark_file_mover_spark.llm._textnorm import MD5_PREFIX60_SQL
 from spark_file_mover_spark.operators._parity import dec
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import artifact_cache_key, load_table
+from spark_file_mover_spark.sources.io import (
+    ingest_artifact,
+    load_table,
+    scratch_dir,
+)
 from spark_file_mover_spark.numerics import snap
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -387,15 +391,7 @@ def as_stream(
     EVICTION (not just merging) is observable; with random shards the
     first batch jumps the watermark near max(ts) and later batches'
     old rows are dropped as late instead of ever entering state."""
-    import atexit
-    import shutil
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="sfm-stream-")
-    # each call writes a full events copy; without cleanup a test session
-    # (6 calls) or bench loop leaks one table copy per invocation
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    path = base + "/events"
+    path = scratch_dir() + "/events"
     batch = load_table(spark, sf_dir, "events")
     if time_ordered:
         # The file source orders micro-batches by file MODIFICATION TIME
@@ -706,18 +702,16 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the remaining cost is pure StreamExecution startup. Do not
     chase this key below ~1.1 s without changing the proof.
 
-    Source-slice staging (r8, the ingest-artifact contract): the two
-    slice files are pure functions of the input — they are WRITTEN
-    once per (appId, sf_dir) into a staging dir and OS-copied into
-    each invocation's fresh source dir (two Spark write jobs leave the
-    hot path; the checkpoint/sink/restart machinery, the thing under
-    proof, is rebuilt fresh every invocation)."""
+    Source-slice staging (the ingest-artifact contract): the two slice
+    files are pure functions of the input — they are WRITTEN once per
+    corpus into a staging dir and OS-copied into each invocation's
+    fresh source dir (two Spark write jobs leave the hot path; the
+    checkpoint/sink/restart machinery, the thing under proof, is
+    rebuilt fresh every invocation)."""
     import os
     import shutil
-    import tempfile
 
-    global _last_eos_src
-    base = tempfile.mkdtemp(prefix="sfm-h10-")
+    base = scratch_dir("stream-sink-exactly-once")
     src_dir, sink_dir, ckpt = (
         base + "/src",
         base + "/sink",
@@ -725,19 +719,18 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = load_table(spark, sf_dir, "events")
     schema = e.schema
-    src_key = artifact_cache_key(spark, sf_dir)
-    if _last_eos_src is None or _last_eos_src[0] != src_key:
-        if _last_eos_src is not None:
-            shutil.rmtree(_last_eos_src[1], ignore_errors=True)
-        stage = tempfile.mkdtemp(prefix="sfm-h10-stage-")
+
+    def stage_slices() -> str:
+        stage = scratch_dir()
         e.filter(F.col("event_id") % 40 == 0).coalesce(1).write.mode(
             "overwrite"
         ).parquet(stage + "/p1")
         e.filter(F.col("event_id") % 40 == 20).coalesce(1).write.mode(
             "overwrite"
         ).parquet(stage + "/p3")
-        _last_eos_src = (src_key, stage)
-    stage = _last_eos_src[1]
+        return stage
+
+    stage = ingest_artifact("eos-slices", spark, sf_dir, stage_slices)
     shutil.copytree(stage + "/p1", src_dir)
 
     def land_delta() -> None:
@@ -764,40 +757,16 @@ def stream_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.read.schema(schema).parquet(sink_dir).count()
 
     counts = {}
-    try:
-        run_stream()
-        counts["p1_initial"] = sink_count()
-        run_stream()  # same checkpoint, no new data -> must append nothing
-        counts["p2_restart_no_new_data"] = sink_count()
-        land_delta()  # a NEW file lands; restart processes ONLY the delta
-        run_stream()
-        counts["p3_incremental_batch"] = sink_count()
-    finally:
-        # counts are plain Python ints by now — nothing returned reads
-        # base again, so the per-invocation src/sink/ckpt tree goes
-        # immediately (pre-r9 every invocation leaked one sfm-h10-*
-        # dir in the system tmp for the process lifetime and beyond)
-        shutil.rmtree(base, ignore_errors=True)
-
+    run_stream()
+    counts["p1_initial"] = sink_count()
+    run_stream()  # same checkpoint, no new data -> must append nothing
+    counts["p2_restart_no_new_data"] = sink_count()
+    land_delta()  # a NEW file lands; restart processes ONLY the delta
+    run_stream()
+    counts["p3_incremental_batch"] = sink_count()
     return spark.createDataFrame(
         sorted(counts.items()), "phase string, n_in_sink long"
     ).orderBy("phase")
-
-
-# ((appId, sf_dir), staging dir) — the pre-written source-slice files.
-# Replacing an entry removes the old dir inline; the LIVE entry is
-# removed by the atexit hook below, so repeated bench/test runs don't
-# accumulate staging data in the system tmp dir.
-_last_eos_src = None
-
-
-def _cleanup_eos_staging() -> None:
-    global _last_eos_src
-    if _last_eos_src is not None:
-        import shutil
-
-        shutil.rmtree(_last_eos_src[1], ignore_errors=True)
-        _last_eos_src = None
 
 
 # ---------------------------------------------------------------------------
@@ -979,8 +948,3 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("window_start", "rnk")
     )
-
-
-import atexit  # noqa: E402  (module-scope registration, one per process)
-
-atexit.register(_cleanup_eos_staging)

@@ -9,7 +9,12 @@ nothing here assumes a single file.
 
 from __future__ import annotations
 
+import atexit
 import itertools
+import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,8 +48,6 @@ def corpus_fingerprint(sf_dir: str) -> tuple:
     to catch. Directory-shaped tables (partitioned/multi-file datasets)
     are walked one level of files deep, which covers any rewrite that
     replaces or appends data files."""
-    import os
-
     parts: list[tuple[str, int, int]] = []
     try:
         entries = sorted(os.scandir(sf_dir), key=lambda e: e.name)
@@ -93,14 +96,17 @@ def _lookup(
 ):
     """(value, hit) for ``name`` over the corpus at ``sf_dir``: one live
     entry per name, older entries passed to ``evict`` BEFORE ``build``
-    runs. Under the plan-only tooling mode (:data:`checkpoints.
+    runs. An entry whose scratch directory is gone (an OS temp reaper)
+    is a miss. Under the plan-only tooling mode (:data:`checkpoints.
     LAZY_ACTIVE`) the store is bypassed in both directions."""
     from spark_file_mover_spark import checkpoints
 
     if checkpoints.LAZY_ACTIVE:
         return build(), False
     key = (artifact_cache_key(spark, sf_dir), name)
-    if key in store:
+    if key in store and all(
+        os.path.exists(p) for p in _scratch_paths(store[key])
+    ):
         return store[key], True
     for k in [k for k in store if k[1] == name]:
         evict(store.pop(k))
@@ -108,24 +114,36 @@ def _lookup(
     return store[key], False
 
 
-def _release(value) -> None:
-    """Free the Spark storage held by an evicted artifact: every
-    DataFrame in ``value`` (nested tuples/lists/dicts walked) is
-    unpersisted, and a DataFrame that IS a ``LogicalRDD`` (a
-    checkpoint) also unpersists that RDD — ``DataFrame.unpersist()``
-    alone leaves ``localCheckpoint`` blocks registered."""
+def _leaves(value):
+    """Every non-container value in ``value`` (tuples, lists and dict
+    values walked)."""
     if isinstance(value, (tuple, list)):
         for v in value:
-            _release(v)
+            yield from _leaves(v)
     elif isinstance(value, dict):
         for v in value.values():
-            _release(v)
-    elif isinstance(value, DataFrame):
-        from py4j.protocol import Py4JError
+            yield from _leaves(v)
+    else:
+        yield value
 
+
+def _release(value) -> None:
+    """Free what an evicted artifact holds: every DataFrame in ``value``
+    is unpersisted, a DataFrame that IS a ``LogicalRDD`` (a checkpoint)
+    also unpersists that RDD — ``DataFrame.unpersist()`` alone leaves
+    ``localCheckpoint`` blocks registered — and every path inside a
+    :func:`scratch_dir` directory removes that directory."""
+    from py4j.protocol import Py4JError
+
+    for path in _scratch_paths(value):
+        top = os.path.relpath(path, _SCRATCH_ROOT).split(os.sep)[0]
+        shutil.rmtree(os.path.join(_SCRATCH_ROOT, top), ignore_errors=True)
+    for df in _leaves(value):
+        if not isinstance(df, DataFrame):
+            continue
         try:
-            value.unpersist()
-            plan = value._jdf.queryExecution().logical()
+            df.unpersist()
+            plan = df._jdf.queryExecution().logical()
             if plan.getClass().getSimpleName() == "LogicalRDD":
                 plan.rdd().unpersist(False)
         except Py4JError:
@@ -150,6 +168,10 @@ def ingest_artifact(name: str, spark: SparkSession, sf_dir: str, build):
       bytes left behind would be matched by Spark's CacheManager
       against the rebuilt plan of a same-path rewrite and serve the
       old corpus;
+    * files: a value may hold paths inside anonymous
+      :func:`scratch_dir` directories (written fixtures); eviction
+      removes those directories, and a hit whose directory is gone is
+      a miss;
     * under the plan-only tooling mode (:func:`checkpoints.
       lazy_checkpoints`) ``build`` runs and the store is neither read
       nor written — a value built against substituted empty-leaf
@@ -158,6 +180,76 @@ def ingest_artifact(name: str, spark: SparkSession, sf_dir: str, build):
 
     Not thread-safe: one query builds at a time."""
     return _lookup(_ARTIFACTS, name, spark, sf_dir, build, _release)[0]
+
+
+# This process's scratch root; see scratch_dir.
+_SCRATCH_ROOT: str | None = None
+# name → the directory scratch_dir last handed out for it.
+_SCRATCH_NAMED: dict[str, str] = {}
+_ROOT_RE = re.compile(r"sfm-(\d+)-")
+
+
+def owner_alive(pid: int) -> bool:
+    """Whether process ``pid`` exists — the predicate every sweep of a
+    dead process's files uses. Only ``ProcessLookupError`` means dead:
+    ``PermissionError`` is a live process owned by another user."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _scratch_root() -> str:
+    """This process's scratch root ``<tmp>/sfm-<pid>-*``, made on first
+    use after removing the roots of dead processes, and removed at
+    exit."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        tmp = tempfile.gettempdir()
+        for entry in os.listdir(tmp):
+            m = _ROOT_RE.match(entry)
+            if m and not owner_alive(int(m.group(1))):
+                shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix=f"sfm-{os.getpid()}-")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return _SCRATCH_ROOT
+
+
+def _scratch_paths(value) -> list[str]:
+    """The paths in ``value`` that lie inside this process's scratch
+    root."""
+    if _SCRATCH_ROOT is None:
+        return []
+    root = _SCRATCH_ROOT + os.sep
+    return [
+        v for v in _leaves(value) if isinstance(v, str) and v.startswith(root)
+    ]
+
+
+def scratch_dir(name: str | None = None) -> str:
+    """A fresh directory for files a query writes — THE owner of
+    scratch space in the package. Every directory lives under one
+    per-process root that is removed at exit; the first call also
+    removes the roots left by dead processes.
+
+    With a ``name`` (a query key), the directory handed out for that
+    name by the previous call is removed first: a returned DataFrame
+    reads its files lazily, so a key's output stays readable until the
+    key is invoked again, and each name holds at most one directory.
+    Without a ``name`` the directory lives until exit, or until the
+    :func:`ingest_artifact` entry whose value holds a path inside it is
+    evicted — the form for fixtures cached across invocations."""
+    root = _scratch_root()
+    if name is None:
+        return tempfile.mkdtemp(dir=root)
+    prev = _SCRATCH_NAMED.pop(name, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    _SCRATCH_NAMED[name] = tempfile.mkdtemp(prefix=f"{name}-", dir=root)
+    return _SCRATCH_NAMED[name]
 
 
 def session_memo(name: str, spark: SparkSession, build):

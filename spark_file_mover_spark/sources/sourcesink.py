@@ -16,14 +16,18 @@ single file or local FS.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import TABLES, load_table
+from spark_file_mover_spark.sources.io import (
+    TABLES,
+    ingest_artifact,
+    load_table,
+    owner_alive,
+    scratch_dir,
+)
 from spark_file_mover_spark.numerics import snap
 
 # ---------------------------------------------------------------------------
@@ -114,7 +118,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round trip. Both options pinned false on both sides — the identity
     contract must hold for every string the source can contain, not
     just trimmed ones."""
-    out = tempfile.mkdtemp(prefix="sfm-b2-") + "/nation_csv"
+    out = scratch_dir("scan-csv-roundtrip") + "/nation_csv"
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -154,7 +158,7 @@ def scan_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over 100 TB and silently drifts types (a numeric-looking string
     column becomes a double). The oracle is the original table — the
     round trip must be the identity."""
-    out = tempfile.mkdtemp(prefix="sfm-b9-") + "/documents_jsonl"
+    out = scratch_dir("scan-jsonl-roundtrip") + "/documents_jsonl"
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars", "text"
     )
@@ -195,7 +199,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same predicate-pushdown/column-pruning treatment as parquet from
     the same declarative scan (``spark.read.orc``) — no schema
     inference, the writer's footer schema is authoritative."""
-    out = tempfile.mkdtemp(prefix="sfm-b11-") + "/supplier_orc"
+    out = scratch_dir("scan-orc-roundtrip") + "/supplier_orc"
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -237,7 +241,7 @@ def sink_sorted_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter at the scan (pinned in tests); the oracle is the same
     aggregate over the original table — layout must never change results.
     """
-    out = tempfile.mkdtemp(prefix="sfm-b10-") + "/lineitem_sorted"
+    out = scratch_dir("sink-sorted-pruning") + "/lineitem_sorted"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_quantity"
     )
@@ -292,7 +296,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     then re-read from the partitioned layout and aggregate per partition.
     The re-read proves partition discovery: the bucket comes back as a
     partition COLUMN read from directory names, not file contents."""
-    out = tempfile.mkdtemp(prefix="sfm-b3-") + "/supplier_part"
+    out = scratch_dir("sink-partitioned") + "/supplier_part"
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_name",
@@ -329,7 +333,7 @@ def sink_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B4: overwrite save mode — first write garbage, then overwrite with
     the real rows; the re-read must see ONLY the second write. (The
     reference always writes SaveMode.Overwrite, test :56.)"""
-    out = tempfile.mkdtemp(prefix="sfm-b4-") + "/region_pq"
+    out = scratch_dir("sink-overwrite") + "/region_pq"
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     garbage = r.withColumn("r_name", F.lit("GARBAGE"))
     garbage.write.mode("overwrite").parquet(out)
@@ -406,17 +410,11 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     if fs.exists(dbpath):
         for st in fs.listStatus(dbpath):
             m = _re.match(r".*_b_(\d+)$", st.getPath().getName())
-            if m and int(m.group(1)) != pid:
-                try:
-                    os.kill(int(m.group(1)), 0)  # raises if owner is dead
-                except OSError:
-                    fs.delete(st.getPath(), True)
-                except Exception:
-                    pass
+            if m and not owner_alive(int(m.group(1))):
+                fs.delete(st.getPath(), True)
     names = {"orders_b": f"orders_b_{pid}", "lineitem_b": f"lineitem_b_{pid}"}
 
-    def _write_bucketed(args) -> None:
-        name, df, key = args
+    def _write_bucketed(name: str, df: DataFrame, key: str) -> None:
         # a fresh session may find the managed location on disk without a
         # catalog entry (left by a previous process) — drop both
         spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
@@ -433,24 +431,31 @@ def sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(f"{db}.{name}")
         )
 
-    # r16 (guide §2.6 — overlap independent jobs): the two bucketed
-    # writes share no state (distinct tables/locations), so submitting
-    # them from two driver threads lets the second write's tasks
-    # back-fill the first's commit tail. Paired A/B at sf0.1:
-    # 1.16/1.33 → 0.82/0.86 s (min/med of 4). Same tables, same join,
-    # same values.
-    from concurrent.futures import ThreadPoolExecutor
+    # Overlap independent jobs: the two bucketed writes share no state
+    # (distinct tables/locations), so submitting the second from
+    # another driver thread lets its tasks back-fill the first's commit
+    # tail. Paired A/B at sf0.1: 1.16/1.33 → 0.82/0.86 s (min/med of
+    # 4). An InheritableThread carries the caller's job group and other
+    # local properties to its jobs; a plain thread's JVM thread is
+    # pooled, so its jobs carry no group or a stale one.
+    from pyspark import InheritableThread
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                _write_bucketed,
-                [
-                    (names["orders_b"], o, "o_orderkey"),
-                    (names["lineitem_b"], li, "l_orderkey"),
-                ],
-            )
-        )
+    errors: list[Exception] = []
+
+    def _write_orders() -> None:
+        try:
+            _write_bucketed(names["orders_b"], o, "o_orderkey")
+        except Exception as ex:  # re-raised in the calling thread
+            errors.append(ex)
+
+    t = InheritableThread(target=_write_orders)
+    t.start()
+    try:
+        _write_bucketed(names["lineitem_b"], li, "l_orderkey")
+    finally:
+        t.join()
+    if errors:
+        raise errors[0]
     ob = spark.table(f"{db}.{names['orders_b']}")
     lb = spark.table(f"{db}.{names['lineitem_b']}")
     return (
@@ -510,7 +515,7 @@ def repartition_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifests {layout, n_files, n_rows}; re-read row counts prove no data
     change. At scale: repartition before write is how you hit the
     128 MB-file sweet spot; coalesce avoids the shuffle when collapsing."""
-    base = tempfile.mkdtemp(prefix="sfm-b5-")
+    base = scratch_dir("repartition-n")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
@@ -524,10 +529,6 @@ def repartition_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 # At test SF the byte-based target collapses to 1 file (bytes < 128 MB
 # floor); the fragmented side is exactly the 16 shards written. Both
 # n_files values and the invariant row counts are data-determined.
-# B7 cached fragmented layout, keyed (applicationId, sf_dir) — one
-# live entry, stale staging dir rmtree-evicted (the B15 lifecycle).
-_last_compact_frag: tuple | None = None
-
 _COMPACT_ORACLE = """
 SELECT 'compacted' AS layout, CAST(1 AS BIGINT) AS n_files,
        COUNT(*) AS n_rows FROM orders
@@ -555,34 +556,23 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinking (no shuffle) — `repartition` only when files must also be
     size-balanced.
 
-    r15: the FRAGMENTED layout is synthetic setup — a pure function of
-    the immutable orders input standing in for the small-file mess a
-    streaming sink leaves behind — so it is written once per
-    (SparkContext, sf_dir) and reused (the B15/sim-search-ivf
-    materialized-artifact lifecycle; stale key rmtree-evicts). The
-    operator under test — scan the fragmented table, size it, rewrite
-    compacted — runs on EVERY invocation into a fresh directory.
+    The FRAGMENTED layout is synthetic setup — a pure function of the
+    orders input standing in for the small-file mess a streaming sink
+    leaves behind — so it is an ingest artifact, written once per
+    corpus. The operator under test — scan the fragmented table, size
+    it, rewrite compacted — runs on EVERY invocation into a fresh
+    directory.
     """
     import os
 
-    global _last_compact_frag
-    frag_key = (spark.sparkContext.applicationId, sf_dir)
-    if _last_compact_frag is not None and _last_compact_frag[0] == frag_key:
-        frag_path = _last_compact_frag[1]
-    else:
-        if _last_compact_frag is not None:
-            import shutil
-
-            shutil.rmtree(
-                os.path.dirname(_last_compact_frag[1]), ignore_errors=True
-            )
-            _last_compact_frag = None
-        stage = tempfile.mkdtemp(prefix="sfm-b7-frag-")
-        frag_path = stage + "/fragmented"
+    def fragment() -> str:
+        frag_path = scratch_dir() + "/fragmented"
         o = load_table(spark, sf_dir, "orders")
         o.repartition(16).write.mode("overwrite").parquet(frag_path)
-        _last_compact_frag = (frag_key, frag_path)
-    base = tempfile.mkdtemp(prefix="sfm-b7-")
+        return frag_path
+
+    frag_path = ingest_artifact("compact-fragments", spark, sf_dir, fragment)
+    base = scratch_dir("sink-compact")
 
     frag = spark.read.parquet(frag_path)
     import glob
@@ -746,7 +736,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension bounds the interleave at 20 bits — finer z resolution
     than the file count can exploit buys nothing (pruning granularity
     is the file/row-group rectangle, not the z tick)."""
-    out = tempfile.mkdtemp(prefix="sfm-b12-") + "/orders_zorder"
+    out = scratch_dir("sink-zorder") + "/orders_zorder"
     z = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -829,7 +819,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity: exact counts/keys; the money sum is DECIMAL-exact over the
     evolved column with NULLs coalesced identically in both engines."""
-    out = tempfile.mkdtemp(prefix="sfm-b13-") + "/supplier_evolving"
+    out = scratch_dir("scan-schema-evolution") + "/supplier_evolving"
     s = load_table(spark, sf_dir, "supplier")
     (
         s.filter(F.col("s_suppkey") % 2 == 0)
@@ -917,10 +907,9 @@ def sink_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    base = tempfile.mkdtemp(prefix="sfm-b14-")
+    base = scratch_dir("sink-snapshot-read")
     o = load_table(spark, sf_dir, "orders")
-    # r15 (the sink-expire-snapshots §6.3 fix): all four buckets land
-    # in ONE partitioned write job — repartition on the bucket value
+    # All four buckets land in ONE partitioned write job — repartition on the bucket value
     # puts each bucket in exactly one task, so every bucket directory
     # holds exactly one data file (the manifest invariant the
     # per-bucket coalesce(1) loop enforced with 4 sequential jobs,
@@ -940,8 +929,8 @@ def sink_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not os.path.isdir(path):
             # partitionBy writes no directory for an EMPTY bucket (a
             # degenerate corpus; never at scale), but the manifest must
-            # list one file per bucket — backfill with the pre-r15
-            # per-bucket write, which emits a zero-row parquet file.
+            # list one file per bucket — backfill with a per-bucket
+            # write, which emits a zero-row parquet file.
             (
                 o.filter(F.col("o_orderkey") % 4 == b)
                 .coalesce(1)
@@ -984,11 +973,6 @@ def sink_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DPP_YEARS = (1996, 1997)  # the dim-side era filter; 2 of 7 fact years
 
-# B15 materialized fact/dim layout, keyed (applicationId, sf_dir) —
-# one live entry, stale directory rmtree-evicted (the sim-search-ivf
-# single-live-artifact lifecycle).
-_last_dpp_tables: tuple | None = None
-
 _DPP_ORACLE = f"""
 SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS oyear,
        'mid90s' AS era,
@@ -1022,25 +1006,15 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     running a second dim scan. Money sums are DECIMAL-exact; the year
     extraction is UTC-pinned in both engines.
 
-    r15: the partitioned fact + dim layout is a pure function of the
-    immutable orders input — a corpus-ingest MATERIALIZED VIEW — so it
-    is written once per (SparkContext, sf_dir) and reused across
-    invocations (a stale key rmtree-evicts its directory; driver-fresh
-    single runs still pay the build, pinned cold in tests). The DPP
-    behavior the key declares — runtime partition pruning at split
-    generation — runs on EVERY invocation against the on-disk
-    layout."""
-    global _last_dpp_tables
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if _last_dpp_tables is not None and _last_dpp_tables[0] == cache_key:
-        base = _last_dpp_tables[1]
-    else:
-        if _last_dpp_tables is not None:
-            import shutil
+    The partitioned fact + dim layout is a pure function of the orders
+    input — a corpus-ingest MATERIALIZED VIEW — so it is an ingest
+    artifact, written once per corpus (driver-fresh single runs still
+    pay the build, pinned cold in tests). The DPP behavior the key
+    declares — runtime partition pruning at split generation — runs on
+    EVERY invocation against the on-disk layout."""
 
-            shutil.rmtree(_last_dpp_tables[1], ignore_errors=True)
-            _last_dpp_tables = None
-        base = tempfile.mkdtemp(prefix="sfm-b15-")
+    def materialize() -> str:
+        base = scratch_dir()
         o = load_table(spark, sf_dir, "orders")
         (
             o.withColumn("oyear", F.year("o_orderdate").cast("long"))
@@ -1060,7 +1034,9 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(base + "/year_dim")
         )
-        _last_dpp_tables = (cache_key, base)
+        return base
+
+    base = ingest_artifact("dpp-tables", spark, sf_dir, materialize)
     fact_path = base + "/orders_by_year"
     dim_path = base + "/year_dim"
     fact = spark.read.parquet(fact_path)
@@ -1128,7 +1104,7 @@ def scan_csv_corrupt_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the CSV scan is distributed and the corrupt column is just
     another projected column; quarantined raw lines write to a dead-
     letter sink in production (a filter on ``_corrupt IS NOT NULL``)."""
-    base = tempfile.mkdtemp(prefix="sfm-b16-")
+    base = scratch_dir("scan-csv-corrupt-recover")
     n = load_table(spark, sf_dir, "nation")
     # CSV-quote the free-text name field (wrap + double internal
     # quotes): ONLY the deliberate 1-in-5 corruption may be malformed —
@@ -1212,7 +1188,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: text write/read are both splittable (one line per record,
     newline-delimited); the parse is three map-side expressions."""
-    out = tempfile.mkdtemp(prefix="sfm-b17-") + "/documents_txt"
+    out = scratch_dir("scan-text-lines") + "/documents_txt"
     d = load_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.lower(F.trim(F.col("text")))), 1, 15), 16, 10
@@ -1267,7 +1243,7 @@ def sink_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the correction job's cost is proportional to the TOUCHED
     partitions only; file listing/commit never visits untouched ones."""
-    out = tempfile.mkdtemp(prefix="sfm-b18-") + "/orders_part"
+    out = scratch_dir("sink-overwrite-dynamic") + "/orders_part"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderstatus").alias("status"),
@@ -1329,7 +1305,7 @@ def scan_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Parity: the flattened (doc_id, lang, source, pos, tok) relation
     is predicted by the oracle straight from the source table."""
-    out = tempfile.mkdtemp(prefix="sfm-b19-") + "/documents_nested"
+    out = scratch_dir("scan-json-nested") + "/documents_nested"
     d = load_table(spark, sf_dir, "documents")
     from spark_file_mover_spark.llm._textnorm import toks
 
@@ -1422,7 +1398,7 @@ def sink_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: one write shuffle (partitionBy), one re-read
     aggregate whose map-side combine collapses each partition to a
     single row before the tiny stats window."""
-    out = tempfile.mkdtemp(prefix="sfm-b20-") + "/orders_by_year"
+    out = scratch_dir("sink-partition-stats") + "/orders_by_year"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -1497,7 +1473,7 @@ def scan_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-file parallelism only, which is exactly why B9's JSONL is the
     corpus lingua franca and this path is for sources you don't
     control. Whitespace options pinned per the B2 lesson."""
-    out = tempfile.mkdtemp(prefix="sfm-b21-") + "/hard_csv"
+    out = scratch_dir("scan-csv-quoted-multiline") + "/hard_csv"
     d = load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "'x,' || chr(10) || replace(substr(text, 1, 20), ' ', ',')"
@@ -1558,11 +1534,6 @@ ORDER BY s.snapshot
 """
 
 
-# ((appId, sf_dir), template dir) — the live read-only per-bucket file
-# template the expiry scratch dirs hardlink from (the B15 lifecycle)
-_last_b22_template: tuple | None = None
-
-
 @query("sink-expire-snapshots", oracle=_EXPIRE_ORACLE)
 def sink_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B22: snapshot expiry + orphan-file vacuum — the table-lifecycle
@@ -1593,101 +1564,55 @@ def sink_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
     import shutil
-    import time as _time
 
-    # Scratch-dir hygiene (ADVICE r13): the dir CANNOT be removed inside
-    # this function — the returned plan reads the retained snapshots'
-    # parquet lazily, after return — so each run instead sweeps PRIOR
-    # runs' dirs. The 1 h age guard keeps a concurrently-running session
-    # (the judge runs pytest + driver_sim side by side) from losing its
-    # in-flight scratch: a live run reads its dir within seconds of
-    # creating it.
-    tmp_root = tempfile.gettempdir()
-    cutoff = _time.time() - 3600
-    for name in os.listdir(tmp_root):
-        if name.startswith(("sfm-b22-", "sfm-b22tmpl-")):
-            stale = os.path.join(tmp_root, name)
-            try:
-                if os.path.getmtime(stale) < cutoff:
-                    shutil.rmtree(stale, ignore_errors=True)
-            except OSError:
-                pass
-
-    # r15: the per-bucket data files are a pure function of the
-    # immutable orders input, but the vacuum DELETES from the snapshot
-    # dir — so the fixture lands once per (SparkContext, sf_dir) as a
-    # read-only TEMPLATE (the stream-sink-exactly-once OS-copy
-    # lifecycle) and every invocation hardlinks the four files into a
-    # fresh scratch dir. The expire + vacuum + surviving-snapshot
-    # reads — the lifecycle operator itself — run per invocation
-    # against the fresh copy; a vacuum unlink removes the run's link,
-    # never the template inode. The template dir's mtime is bumped per
-    # use so the 1 h sweep can't reap a live session's template.
-    global _last_b22_template
-    tmpl_key = (spark.sparkContext.applicationId, sf_dir)
-    if (
-        _last_b22_template is not None
-        and _last_b22_template[0] == tmpl_key
-        and os.path.isdir(_last_b22_template[1])
-    ):
-        tmpl = _last_b22_template[1]
-    else:
-        if _last_b22_template is not None:
-            shutil.rmtree(_last_b22_template[1], ignore_errors=True)
-            _last_b22_template = None
-        tmpl = tempfile.mkdtemp(prefix="sfm-b22tmpl-")
+    # The per-bucket data files are a pure function of the orders input,
+    # but the vacuum DELETES from the snapshot dir — so the files land
+    # once per corpus as a read-only TEMPLATE (an ingest artifact) and
+    # every invocation hardlinks them into its own scratch dir. The
+    # expire + vacuum + surviving-snapshot reads — the lifecycle
+    # operator itself — run per invocation against that copy; a vacuum
+    # unlink removes the run's link, never the template inode.
+    def template() -> str:
+        tmpl = scratch_dir()
         o = load_table(spark, sf_dir, "orders")
         # ONE partitioned write job instead of four sequential
         # filter+write jobs (4 scans + 4 commits → 1 scan + 1 commit):
         # repartitioning by the bucket value lands each bucket's rows
         # in a single task, so every bucket=<b> directory holds exactly
-        # one data file — the same per-bucket file set the per-bucket
-        # writes produced. Downstream reads aggregate (count/sum), so
+        # one data file. Downstream reads aggregate (count/sum), so
         # within-file row order is free.
-        staged = f"{tmpl}/_buckets"
         (
             o.withColumn("bucket", F.col("o_orderkey") % 4)
             .repartition(4, "bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")
-            .parquet(staged)
+            .parquet(tmpl)
         )
         for b in range(4):
-            path = f"{tmpl}/bucket-{b}"
-            os.makedirs(path, exist_ok=True)
-            if os.path.isdir(f"{staged}/bucket={b}"):
-                (src,) = [
-                    f
-                    for f in os.listdir(f"{staged}/bucket={b}")
-                    if f.endswith(".parquet")
-                ]
-                os.rename(f"{staged}/bucket={b}/{src}", f"{path}/{src}")
-            else:
+            if not os.path.isdir(f"{tmpl}/bucket={b}"):
                 # empty bucket: dynamic partitioning emits no directory
-                # — write the empty single file the per-bucket writer
-                # produced
+                # — write the empty single file a per-bucket write makes
                 o.filter(F.col("o_orderkey") % 4 == b).coalesce(
                     1
-                ).write.mode("overwrite").parquet(path)
-        shutil.rmtree(staged, ignore_errors=True)
-        _last_b22_template = (tmpl_key, tmpl)
-    os.utime(tmpl)
+                ).write.parquet(f"{tmpl}/bucket={b}")
+        return tmpl
 
-    base = tempfile.mkdtemp(prefix="sfm-b22-")
+    tmpl = ingest_artifact("expire-template", spark, sf_dir, template)
+    base = scratch_dir("sink-expire-snapshots")
     bucket_files = {}
     for b in range(4):
         path = f"{base}/bucket-{b}"
         os.makedirs(path, exist_ok=True)
         (src,) = [
             f
-            for f in os.listdir(f"{tmpl}/bucket-{b}")
+            for f in os.listdir(f"{tmpl}/bucket={b}")
             if f.endswith(".parquet")
         ]
         pf = f"{path}/{src}"
         try:
-            os.link(f"{tmpl}/bucket-{b}/{src}", pf)
+            os.link(f"{tmpl}/bucket={b}/{src}", pf)
         except OSError:
-            shutil.copy2(f"{tmpl}/bucket-{b}/{src}", pf)
+            shutil.copy2(f"{tmpl}/bucket={b}/{src}", pf)
         bucket_files[b] = pf
     os.makedirs(f"{base}/_manifests", exist_ok=True)
     for version, buckets in _EXP_SNAPS.items():
@@ -1699,7 +1624,7 @@ def sink_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- expire: newest N manifests survive (version-ordered) ---
     # numeric version order, NOT lexicographic: sorted() alone would put
     # a v10 manifest before v2 and retain/expire the wrong snapshots
-    # (ADVICE r13; pinned by the v9..v11 test in tests/test_r14_ops.py)
+    # (pinned by the v9..v11 test in tests/test_r14_ops.py)
     versions = sorted(_EXP_SNAPS, key=lambda v: int(v[1:]))  # v1 < v2 < v3
     retained, expired = versions[-_EXP_RETAIN:], versions[:-_EXP_RETAIN]
     live_files = set()

@@ -1,7 +1,9 @@
 """The ingest-artifact primitive (``sources.io.ingest_artifact``) is the
-only corpus-artifact cache and the registry's ``pure`` flag the only
-plan cache: these tests pin that no module grows its own again, and
-that evicting an entry releases the blocks it pinned."""
+only corpus-artifact cache, the registry's ``pure`` flag the only plan
+cache and ``sources.io.scratch_dir`` the only owner of temp dirs: these
+tests pin that no module grows its own again, that evicting an entry
+releases the blocks and directories it held, and that scratch space
+stays bounded."""
 
 from __future__ import annotations
 
@@ -14,22 +16,15 @@ registry.load_all()
 
 PKG = Path(__file__).resolve().parent.parent / "spark_file_mover_spark"
 
-# (module path under the package, enclosing function) allowed to key a
-# cache on artifact_cache_key outside sources/io.py: temp-dir fixtures
-# that own files on disk and rmtree them on eviction, which the
-# DataFrame-releasing primitive does not manage.
-KEY_EXEMPT = {
-    ("operators/streaming.py", "stream_sink_exactly_once"),
-    ("llm/multimodal.py", "_asset_corpus"),
-}
-
-# cache entry point → is a call at (module path, enclosing function)
-# allowed? Plan caching is a registry flag (``@query(..., pure=True)``),
-# so only registry.py may call cached_plan.
+# entry point → may a module (path under the package) call it? Plan
+# caching is a registry flag (``@query(..., pure=True)``), so only
+# registry.py may call cached_plan; scratch space is owned by
+# sources.io.scratch_dir, so only sources/io.py may make temp dirs.
 ALLOWED = {
-    "artifact_cache_key": lambda rel, fn: rel == "sources/io.py"
-    or (rel, fn) in KEY_EXEMPT,
-    "cached_plan": lambda rel, fn: rel == "registry.py",
+    "artifact_cache_key": lambda rel: rel == "sources/io.py",
+    "cached_plan": lambda rel: rel == "registry.py",
+    "mkdtemp": lambda rel: rel == "sources/io.py",
+    "gettempdir": lambda rel: rel == "sources/io.py",
 }
 # names that must not exist anywhere in the package
 GONE = {"plan_cached"}
@@ -71,11 +66,12 @@ def test_no_hand_rolled_artifact_cache():
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         for name, fn, line in _cache_uses(path):
-            if name in GONE or not ALLOWED[name](rel, fn):
+            if name in GONE or not ALLOWED[name](rel):
                 offenders.append(f"{rel}:{line} {name} ({fn})")
     assert not offenders, (
         "cache outside its owner — use ingest_artifact for corpus "
-        "artifacts and @query(..., pure=True) for plans: "
+        "artifacts, @query(..., pure=True) for plans and scratch_dir "
+        "for temp dirs: "
         + ", ".join(offenders)
     )
 
@@ -92,3 +88,96 @@ def test_eviction_releases_checkpoint_blocks(spark, sf_dir):
         q(spark, sf).collect()
         sizes.append(sc._jsc.getPersistentRDDs().size())
     assert sizes[-1] <= sizes[0], sizes
+
+
+def test_scratch_sweep_removes_only_dead_owner_roots(tmp_path, monkeypatch):
+    """A scratch root whose owner pid is dead goes on the first
+    scratch_dir call; the live process's own root stays. Data-free."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    from spark_file_mover_spark.sources import io as sio
+
+    dead_pid = int(
+        subprocess.run(
+            [sys.executable, "-c", "import os; print(os.getpid())"],
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+    )
+    dead = tmp_path / f"sfm-{dead_pid}-x"
+    live = tmp_path / f"sfm-{os.getpid()}-y"
+    for root in (dead, live):
+        (root / "k-1").mkdir(parents=True)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(sio, "_SCRATCH_ROOT", None)
+    monkeypatch.setattr(sio, "_SCRATCH_NAMED", {})
+    first = sio.scratch_dir("k")
+    assert not dead.exists() and live.exists()
+    # a named call removes the directory the previous one handed out;
+    # an anonymous one stays
+    anon = sio.scratch_dir()
+    second = sio.scratch_dir("k")
+    assert not os.path.exists(first) and os.path.isdir(second)
+    assert os.path.isdir(anon)
+    assert os.path.dirname(second) == os.path.dirname(anon)
+    assert os.path.dirname(os.path.dirname(anon)) == str(tmp_path)
+
+
+def test_owner_alive_treats_eperm_as_alive(monkeypatch):
+    """EPERM from kill(pid, 0) is a live process under another user —
+    its files must survive every dead-owner sweep. Data-free."""
+    import os
+
+    from spark_file_mover_spark.sources import io as sio
+
+    def kill(exc):
+        def _kill(pid, sig):
+            raise exc
+
+        return _kill
+
+    monkeypatch.setattr(os, "kill", kill(PermissionError()))
+    assert sio.owner_alive(12345)
+    monkeypatch.setattr(os, "kill", kill(ProcessLookupError()))
+    assert not sio.owner_alive(12345)
+
+
+def test_scratch_holds_one_dir_per_name(spark, sf_dir):
+    """Three invocations each of a fixture key and two per-invocation
+    keys leave one directory per name and at most one new fixture
+    directory under the scratch root; a fixture whose directory was
+    removed behind the cache's back is rebuilt, not served empty."""
+    import os
+    import shutil
+
+    from spark_file_mover_spark.sources import io as sio
+
+    keys = ("sink-compact", "scan-csv-roundtrip", "move-rename")
+    registry.QUERIES[keys[0]](spark, sf_dir).collect()
+    root = sio._scratch_root()
+
+    def anonymous() -> set[str]:
+        names = set(os.listdir(root))
+        return {n for n in names if not n.startswith(keys)}
+
+    before = anonymous()
+    for _ in range(3):
+        for key in keys:
+            registry.QUERIES[key](spark, sf_dir).collect()
+    names = os.listdir(root)
+    for key in keys:
+        assert len([n for n in names if n.startswith(key + "-")]) == 1, key
+    assert anonymous() == before
+
+    (frag,) = [
+        v for k, v in sio._ARTIFACTS.items() if k[1] == "compact-fragments"
+    ]
+    shutil.rmtree(os.path.dirname(frag))
+    rows = registry.QUERIES["sink-compact"](spark, sf_dir).collect()
+    assert {r["layout"]: r["n_files"] for r in rows}["fragmented"] > 1
+    after = anonymous()
+    assert len(after - before) == 1 and len(after) == len(before)

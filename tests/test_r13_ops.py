@@ -416,8 +416,8 @@ def test_pdf_meta_parses_genuine_file(spark):
 
 def test_expire_snapshots_deletes_exactly_the_dead_state(spark, sf_dir):
     import glob
-    import re
 
+    from spark_file_mover_spark.sources import io as sio
     from spark_file_mover_spark.sources.sourcesink import (
         sink_expire_snapshots,
     )
@@ -426,12 +426,8 @@ def test_expire_snapshots_deletes_exactly_the_dead_state(spark, sf_dir):
     assert [r["snapshot"] for r in rows] == ["v2", "v3"]
     assert all(r["n_expired_manifests"] == 1 for r in rows)
     assert all(r["n_orphans_removed"] == 1 for r in rows)
-    # find the temp dir from the freshest b22 run and assert disk state
-    bases = sorted(
-        glob.glob("/tmp/sfm-b22-*"),
-        key=lambda p: __import__("os").path.getmtime(p),
-    )
-    base = bases[-1]
+    # the run's scratch dir: one per key name, the latest run's
+    (base,) = glob.glob(f"{sio._scratch_root()}/sink-expire-snapshots-*")
     manifests = sorted(
         p.split("/")[-1] for p in glob.glob(f"{base}/_manifests/*.json")
     )

@@ -194,23 +194,24 @@ def test_xml_extract_from_xml_hotpath_value_parity(spark, sf_dir):
     assert "from_xml" in plan.lower()
 
 
-def test_expire_snapshots_sweeps_stale_scratch_dirs(spark, sf_dir):
-    """Prior runs' sfm-b22-* scratch dirs older than 1 h are removed on
-    the next run; young dirs (possibly owned by a concurrent session
-    mid-query) are left alone."""
-    import os
-    import tempfile
-    import time
+def test_sink_bucketed_writes_carry_caller_job_group(spark, sf_dir):
+    """sink-bucketed overlaps its two bucketed writes on a second driver
+    thread; both writes' jobs must carry the caller's job group, or a
+    per-group profile counts none of the build's jobs. Two invocations
+    under two groups: a plain thread's JVM thread is pooled and reused,
+    so only the first invocation of a process can inherit by accident,
+    and later ones carry a stale group or none."""
+    from spark_file_mover_spark import registry
 
-    old = tempfile.mkdtemp(prefix="sfm-b22-")
-    os.utime(old, (time.time() - 7200, time.time() - 7200))
-    young = tempfile.mkdtemp(prefix="sfm-b22-")
-
-    from spark_file_mover_spark.sources.sourcesink import (
-        sink_expire_snapshots,
-    )
-
-    sink_expire_snapshots(spark, sf_dir).collect()
-    assert not os.path.exists(old)
-    assert os.path.exists(young)
-    os.rmdir(young)
+    registry.load_all()
+    sc = spark.sparkContext
+    for i in range(2):
+        group = f"sink-bucketed-job-group-{i}"
+        sc.setJobGroup(group, "sink-bucketed build")
+        try:
+            registry.QUERIES["sink-bucketed"](spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # one job per bucketed write at least
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2, i

@@ -518,15 +518,13 @@ def test_theta_setops_exact_identities(spark):
         assert r["union_in_band"] and r["intersect_in_band"]
 
 
-def test_csv_failfast_raises_where_permissive_recovers(spark):
+def test_csv_failfast_raises_where_permissive_recovers(spark, tmp_path):
     """The third mode: FAILFAST must abort on the same feed PERMISSIVE
     recovers (pinning that the corruption is real, not schema-tolerated)."""
-    import tempfile
-
     from py4j.protocol import Py4JJavaError
     from pyspark.sql import functions as F
 
-    base = tempfile.mkdtemp(prefix="sfm-b16t-")
+    base = str(tmp_path)
     spark.createDataFrame(
         [("1,GOOD,4",), ("2,BAD,not_a_number",)], "value string"
     ).coalesce(1).write.mode("overwrite").text(base + "/feed")

@@ -23,9 +23,10 @@ registry.load_all()
 
 SRC_SF = "/root/testdata/sf0.001"
 
-# One consumer of every ingest artifact (sources.io.ingest_artifact)
-# and every synthetic asset corpus (multimodal._asset_corpus) — the
-# keys that can serve a corpus-derived relation across invocations.
+# One consumer of every ingest artifact (sources.io.ingest_artifact),
+# every synthetic asset corpus (multimodal._asset_corpus) and every
+# written file fixture — the keys that can serve a corpus-derived
+# relation or file across invocations.
 # Further consumers of an artifact already listed (graph-hits and
 # graph-reciprocity beside graph-personalized-pagerank, …) add run
 # time, not coverage.
@@ -58,7 +59,11 @@ ARTIFACT_KEYS = [
     "multimodal-video-meta",
     "multimodal-webp-meta",
     "multimodal-zip-meta",
+    "move-list-files",  # a1-fixture (nation)
+    "scan-dpp-join",  # dpp-tables (orders)
     "sim-search-ivf",
+    "sink-compact",  # compact-fragments (orders)
+    "sink-expire-snapshots",  # expire-template (orders)
     "text-boilerplate-lines",
     "text-ccnet-buckets",  # tf, xent
     "text-containment",
@@ -104,15 +109,18 @@ def test_hll_union_with_empty_side(spark):
     assert round(row["est_union"]) == 3  # union-with-empty = identity
 
 
-def _rewrite_in_place(sf_dir: Path, tables=("documents",)) -> None:
-    """Replace each table's parquet file with a half-sized one at the
-    SAME path (what a regenerate-in-place pipeline does)."""
+def _rewrite_in_place(
+    sf_dir: Path, tables=("documents",), keep: int = 2
+) -> None:
+    """Replace each table's parquet file with one holding its first
+    1/``keep`` rows at the SAME path (what a regenerate-in-place
+    pipeline does)."""
     import pyarrow.parquet as pq
 
     for name in tables:
         path = sf_dir / f"{name}.parquet"
         table = pq.read_table(path)
-        pq.write_table(table.slice(0, table.num_rows // 2), path)
+        pq.write_table(table.slice(0, table.num_rows // keep), path)
 
 
 def test_corpus_fingerprint_detects_inplace_rewrite(tmp_path, spark):
@@ -139,8 +147,14 @@ def test_cached_key_survives_inplace_rewrite(key, tmp_path, spark):
         shutil.copy(Path(SRC_SF) / f"{name}.parquet", tmp_path)
     # warm caches; a stale hit is only visible if the old corpus had rows
     assert registry.QUERIES[key](spark, str(tmp_path)).collect(), key
-    # the three tables every corpus artifact derives from
-    _rewrite_in_place(tmp_path, ("documents", "events", "embeddings"))
+    # the tables every corpus artifact and file fixture derives from
+    _rewrite_in_place(
+        tmp_path, ("documents", "events", "embeddings", "orders")
+    )
+    # nation's region keys cycle 0-4, so its first half still holds all
+    # five regions; a tenth holds two, so move-list-files' stale
+    # five-dir listing would show
+    _rewrite_in_place(tmp_path, ("nation",), keep=10)
     con = duckdb.connect()
     for name in TABLES:
         con.execute(
