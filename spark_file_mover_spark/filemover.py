@@ -274,9 +274,10 @@ def _worker_rename(
     src: str, dst: str, expected_size: Optional[int] = None
 ) -> tuple[str, Optional[str]]:
     """Rename one file from inside an executor Python worker (no py4j JVM
-    access exists there). Hadoop ``FileSystem.rename`` semantics mirrored:
-    fail (don't overwrite) when the destination exists, fail when the
-    destination's parent is missing. One deliberate extension for task
+    access exists there). Hadoop's local ``FileSystem.rename`` semantics
+    mirrored, as :func:`move_files` gets them: fail (don't overwrite)
+    when the destination exists, create the destination's missing
+    parent directories. One deliberate extension for task
     RETRY idempotency: destination-exists-AND-source-gone is treated as a
     prior attempt's completed rename — a re-executed task (executor loss
     mid-batch) re-visits renames its first attempt already performed, and
@@ -322,9 +323,8 @@ def _worker_rename(
                 # instead of passing as a confirmed rename.
                 return "already-moved-unverified", None
             return "failed", "destination exists"
-        if not os.path.isdir(os.path.dirname(dp)):
-            return "failed", "destination parent missing"
         try:
+            os.makedirs(os.path.dirname(dp), exist_ok=True)
             os.rename(sp, dp)
         except OSError as ex:
             return "failed", str(ex)[:200]
@@ -643,12 +643,3 @@ def write_single_file(
         template,
         include_existing=(norm_mode == "append"),
     )
-
-
-def hive_partition_value(value: Optional[str]) -> str:
-    """The string a partition value takes in a written path: Spark encodes
-    null AND empty as ``__HIVE_DEFAULT_PARTITION__`` (reference test
-    :126-142)."""
-    if value is None or value == "":
-        return "__HIVE_DEFAULT_PARTITION__"
-    return value

@@ -710,12 +710,8 @@ def embed_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_index(qdf: DataFrame, cents: dict) -> DataFrame:
     """The persisted (vec_id, cluster, s, code) IVF-PQ index relation."""
-    from spark_file_mover_spark import checkpoints
-
     asg = _km_assign(qdf, cents).select("vec_id", "qv", "cluster")
     codes = _ivfpq_codes(asg, cents)
-    if checkpoints.LAZY_ACTIVE:
-        return codes  # plan-only: no persist/count jobs
     codes = codes.persist(StorageLevel.MEMORY_AND_DISK)
     codes.count()  # eager populate (probe + ADC both read it)
     return codes

@@ -863,7 +863,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted ingest artifact like text-containment's guarded
     shingles; the pair join + Jaccard scoring — the verify operator —
     run on every invocation."""
-    from spark_file_mover_spark import checkpoints
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
@@ -880,8 +879,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id", "lang", "source", "n", F.xxhash64("gs").alias("g")
         )
-        if checkpoints.LAZY_ACTIVE:
-            return expl  # plan-only: no corpus tokenize jobs
         expl = expl.persist(StorageLevel.MEMORY_AND_DISK)
         expl.count()  # eager: pay the ingest tokenize once
         return expl

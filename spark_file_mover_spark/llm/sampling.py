@@ -240,9 +240,9 @@ def pack_offsets_sharded(
             *[F.lit(x) for kv in sorted(bases.items()) for x in kv]
         )
         if bases
-        # empty corpus (or a plan-only build over the substitute
-        # barrier): an argless map() is untyped VOID→VOID and fails
-        # analysis at map[shard] — give the empty literal the real type
+        # empty corpus: an argless map() is untyped VOID→VOID and
+        # fails analysis at map[shard] — give the empty literal the
+        # real type
         else F.expr("CAST(map() AS MAP<INT, BIGINT>)")
     )
     lw = W.partitionBy("shard").orderBy("doc_id").rowsBetween(

@@ -926,8 +926,6 @@ def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_grams(d: DataFrame) -> DataFrame:
-    from spark_file_mover_spark import checkpoints
-
     tk = d.select("doc_id", toks().alias("tk"))
     grams = (
         tk.select(
@@ -952,8 +950,6 @@ def _novelty_grams(d: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    if checkpoints.LAZY_ACTIVE:
-        return grams  # plan-only: no corpus tokenize jobs
     # two consumers (first-seen agg + attribution join) plus later
     # invocations; persist keeps replayable lineage so executor loss
     # between invocations recomputes instead of failing later hits

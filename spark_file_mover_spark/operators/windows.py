@@ -3513,8 +3513,6 @@ def etl_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that would breach the floor-snap envelope at large corpora (the
 # numerics.py magnitude hazard); identical chains hash identically.
 _SD_TREND = "CAST(s7 AS DOUBLE) / CAST(n7 AS DOUBLE) / 100.0"
-# detrended (dollars): x − trend = (n7·x − s7)/(n7·100)
-_SD_DET = "CAST(d7 AS DOUBLE) / CAST(n7 AS DOUBLE) / 100.0"
 # seasonal (dollars): mean over the dow group of (d7/n7), kept exact
 # as Σ(d7·nlcm/n7) — n7 ∈ {4..7}, lcm 420 — so the group sum is an
 # exact integer and seasonal = that / (420·cnt·100)
@@ -3522,7 +3520,6 @@ _SD_LCM = 420
 _SD_SEAS = (
     f"CAST(sdow AS DOUBLE) / CAST(cdow AS DOUBLE) / {_SD_LCM}.0 / 100.0"
 )
-_SD_RESID = f"({_SD_DET}) - ({_SD_SEAS})"
 
 _SEASDECOMP_ORACLE = f"""
 WITH d AS (

@@ -19,6 +19,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Build-side bound of the AQE sort-merge → shuffled-hash rewrite (see
+# get_spark), in bytes.
+SHJ_THRESHOLD = 64 * 1024 * 1024
+
 
 def get_spark(app_name: str = "spark_file_mover_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession."""
@@ -52,11 +56,10 @@ def get_spark(app_name: str = "spark_file_mover_spark", cpus: int | None = None)
         # rewrite self-disables at 100 TB wherever partitions outgrow the
         # threshold (oversized joins stay sort-merge and spill gracefully)
         # — unlike a static preferSortMergeJoin=false, which would commit
-        # to hash joins on estimates. Default 64 MB, overridable per
-        # deployment via SPARK_GRAFT_SHJ_THRESHOLD (bytes).
+        # to hash joins on estimates.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024)),
+            str(SHJ_THRESHOLD),
         )
         # runtime Bloom-filter join pruning: the build side injects a
         # Bloom filter into the probe-side scan, skipping row groups
@@ -93,7 +96,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         # Runtime-gated SMJ→SHJ rewrite (see get_spark) — runtime-settable.
         spark.conf.set(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024)),
+            str(SHJ_THRESHOLD),
         )
     except Exception:
         pass  # non-runtime-settable on some builds; defaults are fine

@@ -97,12 +97,7 @@ def _lookup(
     """(value, hit) for ``name`` over the corpus at ``sf_dir``: one live
     entry per name, older entries passed to ``evict`` BEFORE ``build``
     runs. An entry whose scratch directory is gone (an OS temp reaper)
-    is a miss. Under the plan-only tooling mode (:data:`checkpoints.
-    LAZY_ACTIVE`) the store is bypassed in both directions."""
-    from spark_file_mover_spark import checkpoints
-
-    if checkpoints.LAZY_ACTIVE:
-        return build(), False
+    is a miss."""
     key = (artifact_cache_key(spark, sf_dir), name)
     if key in store and all(
         os.path.exists(p) for p in _scratch_paths(store[key])
@@ -171,12 +166,7 @@ def ingest_artifact(name: str, spark: SparkSession, sf_dir: str, build):
     * files: a value may hold paths inside anonymous
       :func:`scratch_dir` directories (written fixtures); eviction
       removes those directories, and a hit whose directory is gone is
-      a miss;
-    * under the plan-only tooling mode (:func:`checkpoints.
-      lazy_checkpoints`) ``build`` runs and the store is neither read
-      nor written — a value built against substituted empty-leaf
-      barriers is tooling-shaped and must never serve production
-      invocations, nor a production entry leak into a dumped plan.
+      a miss.
 
     Not thread-safe: one query builds at a time."""
     return _lookup(_ARTIFACTS, name, spark, sf_dir, build, _release)[0]
@@ -268,7 +258,7 @@ def session_memo(name: str, spark: SparkSession, build):
 
 def cached_plan(spark: SparkSession, sf_dir: str, name: str, make):
     """Return the built plan for query ``name`` or build it via the
-    zero-arg ``make`` — keyed and bypassed like :func:`ingest_artifact`.
+    zero-arg ``make`` — keyed like :func:`ingest_artifact`.
     The registry calls it for every ``@query(..., pure=True)`` key (see
     :func:`~spark_file_mover_spark.registry.query`). A PLAN cache, not
     a result cache: the returned DataFrame re-executes on every action,
@@ -378,12 +368,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _CACHE[ck] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 _SCAN_PARTS_ATTR = "_spark_file_mover_scan_partitions"

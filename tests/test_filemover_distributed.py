@@ -59,21 +59,29 @@ def _write(spark, out):
 
 
 def test_identical_end_state_to_move_files(spark, tmp_pair):
-    out_a, out_b, _ = tmp_pair
-    template = "$outputDirectory/$category-$id.csv"
-    _write(spark, out_a)
-    _write(spark, out_b)
+    _, _, d = tmp_pair
+    # the second template renders into a subdirectory that does not
+    # exist yet: Hadoop's local rename creates it, so the executor-side
+    # pass must too
+    for i, template in enumerate(
+        ["$outputDirectory/$category-$id.csv",
+         "$outputDirectory/new/$category-$id.csv"]
+    ):
+        out_a, out_b = str(Path(d) / f"{i}a"), str(Path(d) / f"{i}b")
+        _write(spark, out_a)
+        _write(spark, out_b)
 
-    res = move_files(spark, out_a, template)
-    manifest, moved = execute_moves_distributed(spark, out_b, template)
+        res = move_files(spark, out_a, template)
+        manifest, moved = execute_moves_distributed(spark, out_b, template)
 
-    assert res.moved and moved
-    rows = manifest.collect()
-    assert len(rows) == len(res.renames)
-    assert all(
-        r.renamed and r.status == "renamed" and r.error is None for r in rows
-    )
-    assert _tree(out_a) == _tree(out_b)
+        assert res.moved and moved, template
+        rows = manifest.collect()
+        assert len(rows) == len(res.renames), template
+        assert all(
+            r.renamed and r.status == "renamed" and r.error is None
+            for r in rows
+        ), (template, rows)
+        assert _tree(out_a) == _tree(out_b), template
 
 
 def test_collision_aborts_all_renames(spark, tmp_pair):

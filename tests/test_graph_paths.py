@@ -8,8 +8,8 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
+from bench import materialize
 from graph_reference import loop_path
 from parity import compare
 from spark_file_mover_spark import registry
@@ -23,16 +23,6 @@ KERNEL_KEYS = [
 ]
 
 
-def _value_hash(df) -> int:
-    """The benchmark's fold: xxhash64 of every row, bit_xor over rows."""
-    row = (
-        df.select(F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h"))
-        .agg(F.bit_xor("h"))
-        .first()
-    )
-    return row[0] or 0
-
-
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -43,13 +33,13 @@ def test_kernel_and_loop_paths_agree(spark, sf_dir, duck, key):
     kernel = fn(spark, sf_dir)
     with loop_path(spark):
         loop = fn(spark, sf_dir)
-        loop_hash = _value_hash(loop)
+        loop_hash = materialize(loop)
         loop_ok = compare(loop, duck.sql(registry.ORACLES[key]))
     assert "MapInPandas" in _plan(kernel)
     assert "MapInPandas" not in _plan(loop)
     assert compare(kernel, duck.sql(registry.ORACLES[key])) == (True, "ok")
     assert loop_ok == (True, "ok")
-    assert _value_hash(kernel) == loop_hash != 0
+    assert materialize(kernel) == loop_hash != 0
 
 
 def test_ppr_without_seeds_raises_on_both_paths(spark, tmp_path):

@@ -1616,60 +1616,3 @@ def test_scan_signature_budget_registry_wide(spark, sf_dir, key):
         f"rationale that the repeat is not a re-execution)"
     )
 
-
-def test_lazy_checkpoints_build_is_plan_only(spark, sf_dir):
-    """Under checkpoints.lazy_checkpoints() (the tools/dump_plans.py
-    mode), CONSTRUCTING the previously eager-checkpointing builders
-    must run zero Spark jobs — the barrier stays in the plan, its
-    materialization moves to first action (ADVICE r11 item 3 / r12
-    verdict item 4). Job count observed via a dedicated job group."""
-    from spark_file_mover_spark.checkpoints import lazy_checkpoints
-
-    sc = spark.sparkContext
-    # Warm parquet footer schema inference (a one-task metadata job any
-    # first `spark.read.parquet` of a path pays, checkpoint or not) so
-    # the assertion below isolates the barrier behavior.
-    from spark_file_mover_spark.sources.io import TABLES, load_table
-
-    for t in TABLES:
-        load_table(spark, sf_dir, t)  # cached per session afterwards
-    group = "lazy-ckpt-audit"
-    sc.setJobGroup(group, "plan-only build probe")
-    try:
-        with lazy_checkpoints():
-            for key in [
-                "events-funnel-windowed",
-                "agg-chisq-independence",
-                "agg-theil-index",
-                "agg-bootstrap-ci",
-                "agg-assoc-lift",
-                "sample-epoch-shuffle",
-            ]:
-                df = registry.QUERIES[key](spark, sf_dir)
-                # plan access (what dump_plans does) must also be free
-                df._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert jobs == [], f"plan-only build ran Spark jobs: {jobs}"
-
-
-def test_lazy_checkpoints_scoped_to_block(spark):
-    """The substitute barrier must be strictly scoped: outside the
-    with-block, localCheckpoint is Spark's own method again (the
-    production path never sees the gate)."""
-    from pyspark.sql import DataFrame
-
-    from spark_file_mover_spark.checkpoints import lazy_checkpoints
-
-    orig = DataFrame.localCheckpoint
-    with lazy_checkpoints():
-        assert DataFrame.localCheckpoint is not orig
-    assert DataFrame.localCheckpoint is orig
-    # and a real checkpoint still materializes normally afterwards
-    df = spark.range(10).localCheckpoint(eager=True)
-    assert df.count() == 10

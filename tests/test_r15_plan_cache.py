@@ -2,15 +2,13 @@
 ``@query(..., pure=True)`` key): construction is cached per (appId,
 corpus fingerprint, key), execution happens on every action.
 
-Pins the three ways the cache could go wrong:
+Pins the two ways the cache could go wrong:
 
 * a HIT that stops re-executing (result caching) — disproved by
   mutating a copied corpus between actions on the SAME returned
   DataFrame object and watching the values change;
 * a corpus change that serves a stale plan — the fingerprint component
-  must miss and rebuild;
-* the plan-only tooling mode leaking through the cache — under
-  ``lazy_checkpoints`` the cache must be bypassed in both directions.
+  must miss and rebuild.
 
 Plus the registry owns the cache: every cached name is a key in
 ``registry.PURE``.
@@ -62,21 +60,6 @@ def test_plan_cache_misses_on_corpus_change(spark, tmp_path):
     df2 = registry.QUERIES[KEY](spark, str(corpus))
     assert df1 is not df2, "fingerprint change must rebuild the plan"
     assert df2.collect() != rows1
-
-
-def test_plan_cache_bypassed_under_lazy_checkpoints(spark):
-    from spark_file_mover_spark.checkpoints import lazy_checkpoints
-
-    registry.QUERIES[KEY](spark, SF)  # ensure a production entry exists
-    entries = {
-        k: v for k, v in sio._QUERY_PLAN_CACHE.items() if k[1] == KEY
-    }
-    assert entries
-    with lazy_checkpoints():
-        registry.QUERIES[KEY](spark, SF)
-    # lazy mode must neither evict nor overwrite the production entry
-    for k, v in entries.items():
-        assert sio._QUERY_PLAN_CACHE.get(k) is v
 
 
 def test_plan_cache_holds_only_pure_keys(spark):

@@ -7,26 +7,18 @@ fingerprint) — and are evicted + rebuilt when the corpus changes,
 including an IN-PLACE rewrite at the same path (tests/test_r9_ops.py
 pins that case).
 
-These tests pin the three paths a cached key can take wrong: a HIT that
-returns stale/incorrect results, an EVICTION that fails to rebuild for
-a new corpus, and a plan-only build (``lazy_checkpoints()``, the
-tools/dump_plans.py mode) leaking its empty-leaf artifacts into
-production, or replacing or removing a live production entry and the
-files it holds. Each cached key runs against a DIFFERENT sf_dir first,
-is then built once plan-only at the test sf_dir, then oracle-compares
-at the test sf_dir (evict-rebuild), then oracle-compares again (hit) —
-both must hash-match DuckDB.
+These tests pin the two paths a cached key can take wrong: a HIT that
+returns stale/incorrect results, and an EVICTION that fails to rebuild
+for a new corpus. Each cached key runs against a DIFFERENT sf_dir
+first, then oracle-compares at the test sf_dir (evict-rebuild), then
+oracle-compares again (hit) — both must hash-match DuckDB.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from spark_file_mover_spark import registry
-from spark_file_mover_spark.checkpoints import lazy_checkpoints
-from spark_file_mover_spark.sources import io as sio
 from tests.parity import compare
 
 registry.load_all()
@@ -65,15 +57,6 @@ CACHED_KEYS = [
 def test_cache_evict_rebuild_then_hit(key, spark, sf_dir, duck):
     # warm the cache against a DIFFERENT corpus...
     registry.QUERIES[key](spark, OTHER_SF).collect()
-    # ...build the test corpus plan-only, as plan tooling does in a
-    # shared session (its empty-leaf artifacts must not be stored, nor
-    # a live production entry or its files replaced or removed)...
-    live = dict(sio._ARTIFACTS)
-    with lazy_checkpoints():
-        registry.QUERIES[key](spark, sf_dir)
-    assert sio._ARTIFACTS.keys() == live.keys(), key
-    assert all(sio._ARTIFACTS[k] is v for k, v in live.items()), key
-    assert all(map(os.path.exists, sio._scratch_paths(live))), key
     # ...then the test corpus must evict + rebuild correctly...
     ok, msg = compare(
         registry.QUERIES[key](spark, sf_dir), duck.sql(registry.ORACLES[key])

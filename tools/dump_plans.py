@@ -3,17 +3,11 @@ with scale annotations. Run from the repo root:
 
     python tools/dump_plans.py [sf_dir]
 
-Plan-only since r13 (ADVICE r11 item 3 / r12 verdict item 4): the
-whole walk runs under ``checkpoints.lazy_checkpoints()``, so the
-``localCheckpoint(eager=True)`` barriers in the Pregel/graph family,
-events-funnel-windowed and the stats relations no longer execute jobs
-at DataFrame-build time — the barrier stays in the dumped plan, its
-materialization moves to first action (which tooling never takes).
-Remaining build-time work is only the documented bounded-metadata
-collects (k-means centroid rounds, IVF seeds, bloom lanes) and the
-sink-* keys' writes, which genuinely cannot produce a plan without
-their artifacts; tests/test_plans.py pins zero jobs for the
-previously-eager builders.
+Each key is built through the production path, exactly as the driver
+and bench build it, so the dumped plan is the plan that runs. Building
+runs the eager work some keys do at build time (checkpoints, ingest
+artifacts, bounded-metadata collects and the sink-* keys' writes); the
+explain itself runs no job.
 """
 
 from __future__ import annotations
@@ -26,7 +20,6 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from spark_file_mover_spark import registry  # noqa: E402
-from spark_file_mover_spark.checkpoints import lazy_checkpoints  # noqa: E402
 from spark_file_mover_spark.session import get_spark  # noqa: E402
 
 NOTES = {
@@ -537,11 +530,7 @@ def audit(sf: str) -> int:
     rows = []
     for key, fn in registry.QUERIES.items():
         try:
-            # build under lazy barriers (zero checkpoint jobs), but
-            # explain OUTSIDE so the audited plan keeps its production
-            # AQE shape above the barrier leaves
-            with lazy_checkpoints():
-                df = fn(spark, sf)
+            df = fn(spark, sf)
             plan = df._jdf.queryExecution().explainString(mode)
             census, sigs = scan_census(plan), scan_signatures(plan)
         except Exception as exc:  # pragma: no cover - diagnostics only
@@ -587,8 +576,7 @@ def main() -> None:
     for key, note in NOTES.items():
         if key == "sink-bucketed":
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        with lazy_checkpoints():
-            df = registry.QUERIES[key](spark, sf)
+        df = registry.QUERIES[key](spark, sf)
         plan = df._jdf.queryExecution().explainString(mode)
         if key == "sink-bucketed":
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bt)

@@ -2,10 +2,9 @@
 
     python tools/plan_key.py --suffix after --out plans/r15 KEY [KEY...]
 
-Build runs under ``lazy_checkpoints()`` (no checkpoint jobs at plan
-time); the explain happens outside the guard so the dumped plan keeps
-its production AQE shape. Run from any tree: paths resolve relative to
-this file's repo.
+Each key is built through the production path, so the dumped plan is
+the plan that runs. Run from any tree: paths resolve relative to this
+file's repo.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ def main() -> None:
     args = ap.parse_args()
 
     from spark_file_mover_spark import registry
-    from spark_file_mover_spark.checkpoints import lazy_checkpoints
     from spark_file_mover_spark.session import get_spark
 
     registry.load_all()
@@ -38,8 +36,7 @@ def main() -> None:
     outdir = Path(args.out)
     outdir.mkdir(parents=True, exist_ok=True)
     for key in args.keys:
-        with lazy_checkpoints():
-            df = registry.QUERIES[key](spark, args.sf)
+        df = registry.QUERIES[key](spark, args.sf)
         plan = df._jdf.queryExecution().explainString(mode)
         path = outdir / f"{key}_{args.suffix}.txt"
         path.write_text(plan)

@@ -19,14 +19,7 @@ from pathlib import Path
 REPO = str(Path(__file__).resolve().parent.parent)
 sys.path.insert(0, REPO)
 
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def materialize(df):
-    row = df.select(
-        F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h")
-    ).agg(F.bit_xor("h").alias("s")).collect()
-    return row[0][0] or 0
+from bench import materialize  # noqa: E402
 
 
 def main() -> None:
