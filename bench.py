@@ -3,11 +3,12 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Materialization: each query's result is consumed with an xxhash64-sum
-over EVERY output column — unlike ``df.count()`` (which lets Catalyst
-delete projections/windows that don't change cardinality), this forces
-every output value to be computed. Round-1 lesson: window-ranking's
-count()-based 0.36 s timed a bare row count, no Window at all.
+Materialization (``profile.materialize``): each query's result is
+consumed with an xxhash64-sum over EVERY output column — unlike
+``df.count()`` (which lets Catalyst delete projections/windows that
+don't change cardinality), this forces every output value to be
+computed. Round-1 lesson: window-ranking's count()-based 0.36 s timed
+a bare row count, no Window at all.
 """
 
 from __future__ import annotations
@@ -17,15 +18,13 @@ import json
 import os
 import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent)
 sys.path.insert(0, REPO)
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from spark_file_mover_spark import registry  # noqa: E402
+from spark_file_mover_spark.profile import materialize, timed  # noqa: E402
 from spark_file_mover_spark.session import get_spark  # noqa: E402
 
 # Frozen comparison set: the 16 keys benched every round since r2.
@@ -76,14 +75,11 @@ WORKLOAD_CHANGED = {
 }
 
 
-def materialize(df) -> int:
-    """Execute the full plan: xxhash64 over all output columns, folded
-    with bit_xor (overflow-free under ANSI mode). Every column of every
-    row is computed and consumed; the collected result is one row."""
-    row = df.select(
-        F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h")
-    ).agg(F.bit_xor("h").alias("s")).collect()
-    return row[0][0] or 0
+# Interleaved passes of the median block, full sweeps, and timed reps
+# per key within a sweep (1 warm + 2 sweeps x 2 reps = 5 executions/key).
+MEDIAN_PASSES = 5
+SWEEPS = 2
+RUNS = 2
 
 
 def main() -> None:
@@ -110,35 +106,22 @@ def main() -> None:
         # (codegen-cache/heap churn — measured the same binaries at
         # 10.4 s young vs 16.5 s post-sweep), which would bias the
         # median high and defeat its cross-round purpose.
-        median_passes = int(
-            os.environ.get("SPARK_GRAFT_BENCH_MEDIAN_PASSES", "5")
+        c16 = [k for k in COMMON16 if k in registry.QUERIES]
+        for key in c16:  # one unmeasured warm pass (JIT/codegen)
+            materialize(registry.QUERIES[key](spark, sf_dir))
+        samples: dict[str, list[float]] = {k: [] for k in c16}
+        for _ in range(MEDIAN_PASSES):
+            for key in c16:
+                samples[key].append(timed(spark, key, sf_dir).total_s)
+        common16_median = round(
+            sum(statistics.median(v) for v in samples.values()), 4
         )
-        common16_median = None
-        if median_passes >= 1:  # <1 skips the block (ADVICE r13:
-            # statistics.median([]) would raise StatisticsError)
-            c16 = [k for k in COMMON16 if k in registry.QUERIES]
-            for key in c16:  # one unmeasured warm pass (JIT/codegen)
-                materialize(registry.QUERIES[key](spark, sf_dir))
-            samples: dict[str, list[float]] = {k: [] for k in c16}
-            for _ in range(median_passes):
-                for key in c16:
-                    t0 = time.perf_counter()
-                    materialize(registry.QUERIES[key](spark, sf_dir))
-                    samples[key].append(time.perf_counter() - t0)
-            common16_median = round(
-                sum(statistics.median(v) for v in samples.values()), 4
-            )
-            print(
-                f"# common16_median {common16_median:.3f}s"
-                f" (median of {median_passes} interleaved passes,"
-                " young session)",
-                file=sys.stderr,
-            )
-        else:
-            print(
-                "# common16_median skipped (median_passes < 1)",
-                file=sys.stderr,
-            )
+        print(
+            f"# common16_median {common16_median:.3f}s"
+            f" (median of {MEDIAN_PASSES} interleaved passes,"
+            " young session)",
+            file=sys.stderr,
+        )
 
         # Headline measurement (r14, verdict item 2): N full SWEEPS over
         # every key, committing the min-TOTAL sweep as the round's
@@ -149,38 +132,28 @@ def main() -> None:
         # contradicted; selecting across well-separated sweeps makes
         # the committed JSON steady-state by construction, with every
         # sweep's total carried in the payload's `sweeps` field for
-        # adjudication. Within a sweep each key is min-of-`runs` over a
+        # adjudication. Within a sweep each key is min-of-RUNS over a
         # per-key warmed plan: JIT + whole-stage-codegen warm-up is
         # per-generated-class (r5: the minhash key improved 2.63 ->
         # 1.92 over successive reps), so every key executes once
         # unmeasured in a global warm pass before any timed rep; the
         # minimum is the closest observation to the true cost (GC and
-        # scheduler jitter only ever add time). Defaults keep total
-        # executions/key at 5 (1 warm + 2 sweeps x 2 reps) vs r13's 4.
-        n_sweeps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_SWEEPS", "2")))
-        runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-
+        # scheduler jitter only ever add time). Total executions/key
+        # are 5 (1 warm + SWEEPS x RUNS) vs r13's 4.
         def time_key(key: str) -> float:
-            best = None
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                df = registry.QUERIES[key](spark, sf_dir)
-                materialize(df)
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            return best
+            return min(timed(spark, key, sf_dir).total_s for _ in range(RUNS))
 
         for key in keys:  # global warm pass (JIT/codegen, shared by sweeps)
             materialize(registry.QUERIES[key](spark, sf_dir))
 
         sweep_timings: list[dict[str, float]] = []
         sweep_totals: list[float] = []
-        for s in range(n_sweeps):
+        for s in range(SWEEPS):
             t: dict[str, float] = {}
             for key in keys:
                 t[key] = round(time_key(key), 4)
                 print(
-                    f"# [sweep {s + 1}] {key}: {t[key]:.3f}s (min of {runs})",
+                    f"# [sweep {s + 1}] {key}: {t[key]:.3f}s (min of {RUNS})",
                     file=sys.stderr,
                 )
             # Noise-burst defense (r12): host contention bursts last
@@ -206,7 +179,7 @@ def main() -> None:
             sweep_timings.append(t)
             sweep_totals.append(round(sum(t.values()), 4))
             print(
-                f"# sweep {s + 1}/{n_sweeps} total: {sweep_totals[-1]:.1f}s"
+                f"# sweep {s + 1}/{SWEEPS} total: {sweep_totals[-1]:.1f}s"
                 " (post-retry)",
                 file=sys.stderr,
             )
@@ -262,11 +235,11 @@ def main() -> None:
         "unit": "sec",
         "common16_total": common16_total,
         "common20_total": common20_total,
-        # Median of `median_passes` interleaved (well-separated) samples
+        # Median of MEDIAN_PASSES interleaved (well-separated) samples
         # per frozen-16 key — the burst-resistant statistic to
         # adjudicate round-over-round drift from the JSON alone.
         "common16_median": common16_median,
-        "common16_median_passes": median_passes,
+        "common16_median_passes": MEDIAN_PASSES,
         # Keys whose benched workload changed in a noted round; their
         # per-key history is not volume-comparable across that boundary.
         "workload_changed": WORKLOAD_CHANGED,

@@ -24,7 +24,7 @@ Why signatures and not raw per-table counts:
 
 ``tools/dump_plans.py --audit`` runs the gate over all registered
 keys; ``tests/test_plans.py`` pins it for the families where the
-catches happened.
+catches happened, ``tests/test_planaudit.py`` on plan text alone.
 """
 
 from __future__ import annotations
@@ -33,32 +33,11 @@ import re
 from collections import Counter
 
 
-def scan_census(plan: str) -> dict[str, int]:
-    """Per-table parquet-scan LEAF counts of a formatted plan: unique
-    tree node ids mapped to the scanned table via the node-id ->
-    Location detail blocks."""
-    tree = plan.split("\n\n")[0]
-    leaf_ids = set(re.findall(r"Scan parquet[^\(\n]*\((\d+)\)", tree))
-    id2loc: dict[str, str] = {}
-    cur: str | None = None
-    for line in plan.splitlines():
-        m = re.match(r"\((\d+)\) Scan parquet", line.strip())
-        if m:
-            cur = m.group(1)
-            continue
-        if cur is not None:
-            lm = re.search(r"Location: \S+ \[([^\],]*)", line)
-            if lm:
-                id2loc[cur] = lm.group(1).rstrip("/").rsplit("/", 1)[-1]
-                cur = None
-    return dict(Counter(id2loc.get(i, f"node-{i}") for i in leaf_ids))
-
-
 def scan_signatures(plan: str) -> dict[tuple[str, str, str], int]:
     """Unique scan nodes grouped by (table, PushedFilters, ReadSchema)
     — the gate counts these; see the module docstring for why."""
     tree = plan.split("\n\n")[0]
-    leaf_ids = set(re.findall(r"Scan parquet[^\(\n]*\((\d+)\)", tree))
+    leaf_ids = sorted(set(re.findall(r"Scan parquet[^\(\n]*\((\d+)\)", tree)))
     sig: dict[str, list[str]] = {}
     cur: str | None = None
     for line in plan.splitlines():
@@ -71,7 +50,10 @@ def scan_signatures(plan: str) -> dict[tuple[str, str, str], int]:
             s = line.strip()
             lm = re.search(r"Location: \S+ \[([^\],]*)", s)
             if lm:
-                sig[cur][0] = lm.group(1).rstrip("/").rsplit("/", 1)[-1]
+                # a listed part-* file is named at random per write: its
+                # directory is the table
+                path = lm.group(1).rstrip("/").split("/")
+                sig[cur][0] = path[-2 if path[-1].startswith("part-") else -1]
             elif s.startswith("PushedFilters:"):
                 sig[cur][1] = s
             elif s.startswith("ReadSchema:"):
@@ -83,6 +65,15 @@ def scan_signatures(plan: str) -> dict[tuple[str, str, str], int]:
             for i in leaf_ids
         )
     )
+
+
+def scan_census(plan: str) -> dict[str, int]:
+    """Per-table parquet-scan LEAF counts of a formatted plan, sorted by
+    table: the signatures summed over filters and schema."""
+    census: Counter[str] = Counter()
+    for (table, _, _), n in scan_signatures(plan).items():
+        census[table] += n
+    return dict(sorted(census.items()))
 
 
 def max_signature_count(plan: str) -> int:

@@ -33,14 +33,8 @@ def sf_dir() -> str:
 def duck():
     """DuckDB connection with the testdata tables registered as views,
     mirroring the driver's oracle environment."""
-    import duckdb
+    from spark_file_mover_spark.profile import oracle_connection
 
-    from spark_file_mover_spark.sources.io import TABLES
-
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()

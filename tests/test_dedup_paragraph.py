@@ -7,6 +7,7 @@ from __future__ import annotations
 import re
 
 from spark_file_mover_spark.llm.dedup import _PARA, dedup_paragraph
+from spark_file_mover_spark.profile import formatted_plan
 
 
 def _write_docs(spark, tmp_path, texts):
@@ -64,12 +65,9 @@ def test_paragraph_hash_shuffle_carries_no_text(spark, sf_dir):
     never the token array, the paragraph string, or document text."""
     df = dedup_paragraph(spark, sf_dir)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
     # formatted-plan node blocks: "(N) Exchange ..." followed by
     # Input/Arguments lines until the next blank line
-    formatted = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    formatted = formatted_plan(df)
     blocks = re.split(r"\n\n", formatted)
     exchange_ids = re.findall(r"\((\d+)\) Exchange", formatted)
     assert exchange_ids, "no exchanges found — plan shape changed?"

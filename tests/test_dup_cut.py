@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 
 from spark_file_mover_spark.llm.dedup import _SPAN_K, text_dup_cut
+from spark_file_mover_spark.profile import formatted_plan
 
 
 def _write_docs(spark, tmp_path, texts):
@@ -91,9 +92,7 @@ def test_cut_hash_shuffle_carries_no_text(spark, sf_dir):
     the gram hash moves only ids — never toks/text."""
     df = text_dup_cut(spark, sf_dir)
     df.collect()
-    formatted = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    formatted = formatted_plan(df)
     blocks = re.split(r"\n\n", formatted)
     checked = 0
     for block in blocks:

@@ -9,10 +9,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from bench import materialize
 from graph_reference import loop_path
 from parity import compare
 from spark_file_mover_spark import registry
+from spark_file_mover_spark.profile import formatted_plan, materialize
 
 registry.load_all()
 
@@ -23,10 +23,6 @@ KERNEL_KEYS = [
 ]
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.mark.parametrize("key", KERNEL_KEYS)
 def test_kernel_and_loop_paths_agree(spark, sf_dir, duck, key):
     fn = registry.QUERIES[key]
@@ -35,8 +31,8 @@ def test_kernel_and_loop_paths_agree(spark, sf_dir, duck, key):
         loop = fn(spark, sf_dir)
         loop_hash = materialize(loop)
         loop_ok = compare(loop, duck.sql(registry.ORACLES[key]))
-    assert "MapInPandas" in _plan(kernel)
-    assert "MapInPandas" not in _plan(loop)
+    assert "MapInPandas" in formatted_plan(kernel)
+    assert "MapInPandas" not in formatted_plan(loop)
     assert compare(kernel, duck.sql(registry.ORACLES[key])) == (True, "ok")
     assert loop_ok == (True, "ok")
     assert materialize(kernel) == loop_hash != 0

@@ -1,9 +1,9 @@
 """The ingest-artifact primitive (``sources.io.ingest_artifact``) is the
 only corpus-artifact cache, the registry's ``pure`` flag the only plan
-cache and ``sources.io.scratch_dir`` the only owner of temp dirs: these
-tests pin that no module grows its own again, that evicting an entry
-releases the blocks and directories it held, and that scratch space
-stays bounded."""
+cache, ``sources.io.scratch_dir`` the only owner of temp dirs and
+``profile`` the only measurement code: these tests pin that no module,
+test or tool grows its own again, that evicting an entry releases the
+blocks and directories it held, and that scratch space stays bounded."""
 
 from __future__ import annotations
 
@@ -14,7 +14,8 @@ from spark_file_mover_spark import registry
 
 registry.load_all()
 
-PKG = Path(__file__).resolve().parent.parent / "spark_file_mover_spark"
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "spark_file_mover_spark"
 
 # entry point → may a module (path under the package) call it? Plan
 # caching is a registry flag (``@query(..., pure=True)``), so only
@@ -75,6 +76,72 @@ def test_no_hand_rolled_artifact_cache():
         "artifacts, @query(..., pure=True) for plans and scratch_dir "
         "for temp dirs: "
         + ", ".join(offenders)
+    )
+
+
+# What spark_file_mover_spark/profile.py owns: plan text, oracle views,
+# plan-cache bypass, the materialize consume, and job counting (by
+# job-id window, never by job group). "CREATE" and "VIEW" are joined
+# here so this file does not match itself.
+_ORACLE_VIEW = " ".join(("CREATE", "VIEW"))
+_JOB_GROUP = {"setJobGroup", "getJobIdsForGroup"}
+# test_r14_ops checks that sink-bucketed's writes carry the caller's job
+# GROUP, so the group itself is what it inspects
+_JOB_GROUP_CHECK = (
+    "test_r14_ops.py",
+    "test_sink_bucketed_writes_carry_caller_job_group",
+)
+
+
+def _measurement_copies(path: Path):
+    """(what, enclosing function, line) of each piece of profile.py's
+    job done by hand in ``path``."""
+    hits = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            what = None
+            if isinstance(child, ast.Attribute) and (
+                child.attr == "explainString" or child.attr in _JOB_GROUP
+            ):
+                what = child.attr
+            elif isinstance(child, ast.Constant) and _ORACLE_VIEW in str(child.value):
+                what = _ORACLE_VIEW
+            elif isinstance(child, ast.Assign) and any(
+                getattr(t, "attr", getattr(t, "id", None)) == "cached_plan"
+                for t in child.targets
+            ):
+                what = "cached_plan ="
+            elif isinstance(child, ast.ImportFrom) and child.module == "bench":
+                if any(a.name == "materialize" for a in child.names):
+                    what = "from bench import materialize"
+            elif isinstance(child, ast.FunctionDef) and child.name == "materialize":
+                what = "def materialize"
+            if what and not (
+                what in _JOB_GROUP and (path.name, fn) == _JOB_GROUP_CHECK
+            ):
+                hits.append((what, fn, child.lineno))
+            walk(child, child.name if isinstance(child, ast.FunctionDef) else fn)
+
+    walk(ast.parse(path.read_text()), None)
+    return hits
+
+
+def test_no_measurement_copy_outside_profile():
+    paths = [
+        *sorted((REPO / "tests").rglob("*.py")),
+        *sorted((REPO / "tools").rglob("*.py")),
+        REPO / "bench.py",
+    ]
+    offenders = [
+        f"{path.relative_to(REPO).as_posix()}:{line} {what} ({fn})"
+        for path in paths
+        for what, fn, line in _measurement_copies(path)
+    ]
+    assert not offenders, (
+        "measurement code outside spark_file_mover_spark/profile.py — "
+        "use its materialize, formatted_plan, oracle_connection, "
+        "plan_cache_bypassed, counted or timed: " + ", ".join(offenders)
     )
 
 

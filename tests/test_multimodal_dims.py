@@ -12,6 +12,7 @@ import zlib
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark.llm.multimodal import jpeg_dims, png_dims
+from spark_file_mover_spark.profile import formatted_plan
 
 
 def _real_png(width: int, height: int) -> bytes:
@@ -103,9 +104,7 @@ def test_image_dims_query_is_map_only(spark, sf_dir):
 
     registry.load_all()
     df = registry.QUERIES["multimodal-image-dims"](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -160,9 +159,7 @@ def test_audio_meta_query_is_map_only_and_codegen_clean(spark, sf_dir):
 
     registry.load_all()
     df = registry.QUERIES["multimodal-audio-meta"](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -251,9 +248,7 @@ def test_video_meta_query_is_map_only_and_codegen_clean(spark, sf_dir):
 
     registry.load_all()
     df = registry.QUERIES["multimodal-video-meta"](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 

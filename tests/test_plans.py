@@ -10,39 +10,31 @@ from pyspark.sql.functions import col as F_col
 
 from graph_reference import loop_path
 from spark_file_mover_spark import registry
+from spark_file_mover_spark.profile import formatted_plan
 
 registry.load_all()
 
 
-def _formatted_plan(spark, df) -> str:
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(mode)
-
-
 def test_scan_parquet_pushes_filter_and_prunes(spark, sf_dir):
-    plan = _formatted_plan(spark, registry.QUERIES["scan-parquet"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["scan-parquet"](spark, sf_dir))
     assert "PushedFilters: [In(n_regionkey," in plan
     # pruned read schema: exactly the three projected columns
     assert "struct<n_nationkey:int,n_name:string,n_regionkey:int>" in plan
 
 
 def test_agg_hash_pushes_date_filter(spark, sf_dir):
-    plan = _formatted_plan(spark, registry.QUERIES["agg-hash"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["agg-hash"](spark, sf_dir))
     assert "PushedFilters" in plan and "l_shipdate" in plan.split("ReadSchema")[0]
 
 
 def test_join_broadcast_uses_broadcast_hash_join(spark, sf_dir):
-    plan = _formatted_plan(spark, registry.QUERIES["join-broadcast"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["join-broadcast"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_star_join_pushes_date_range_to_orders_scan(spark, sf_dir):
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-multiway-star"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-multiway-star"](spark, sf_dir))
     assert "GreaterThanOrEqual(o_orderdate" in plan
     assert "LessThan(o_orderdate" in plan
     # lineitem scan reads only the 3 needed columns
@@ -50,14 +42,14 @@ def test_star_join_pushes_date_range_to_orders_scan(spark, sf_dir):
 
 
 def test_topk_per_group_uses_window_group_limit(spark, sf_dir):
-    plan = _formatted_plan(spark, registry.QUERIES["topk-per-group"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["topk-per-group"](spark, sf_dir))
     # two WindowGroupLimit nodes = partial (map-side, before the
     # exchange) + final; full partitions never shuffle
     assert plan.count("WindowGroupLimit (") >= 2
 
 
 def test_sort_limit_uses_take_ordered(spark, sf_dir):
-    plan = _formatted_plan(spark, registry.QUERIES["sort-limit"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["sort-limit"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -71,7 +63,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         df = registry.QUERIES["sink-bucketed"](spark, sf_dir)
-        plan = _formatted_plan(spark, df)
+        plan = formatted_plan(df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" in plan
@@ -96,7 +88,7 @@ def test_no_cartesian_products_in_relational_queries(spark, sf_dir):
         "agg-hash",
         "window-ranking",
     ]:
-        plan = _formatted_plan(spark, registry.QUERIES[key](spark, sf_dir))
+        plan = formatted_plan(registry.QUERIES[key](spark, sf_dir))
         assert "CartesianProduct" not in plan, key
 
 
@@ -162,9 +154,7 @@ def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):
     """The eval gram set must reach the corpus side as a broadcast
     semi-join — a shuffled join here would move the full corpus' gram
     hashes twice at 100 TB for an eval side that is small by nature."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["text-decontaminate"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["text-decontaminate"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
@@ -172,7 +162,7 @@ def test_stream_join_is_equi_not_nested_loop(spark, sf_dir):
     """The interval join must plan as an equi join on user_id with the
     time range as a residual condition — BroadcastNestedLoop over two
     fact-sized event streams would be quadratic at scale."""
-    plan = _formatted_plan(spark, registry.QUERIES["stream-join"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["stream-join"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -181,9 +171,7 @@ def test_sorted_pruning_sink_pushes_date_range(spark, sf_dir):
     """The whole point of B10: the re-read of the range-partitioned,
     sorted layout must carry the date predicate into the parquet scan so
     row-group min/max stats can skip."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["sink-sorted-pruning"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["sink-sorted-pruning"](spark, sf_dir))
     scan = plan.split("ReadSchema")[0]
     assert "GreaterThanOrEqual(l_shipdate" in scan
     assert "LessThanOrEqual(l_shipdate" in scan
@@ -193,9 +181,7 @@ def test_lateral_topk_decorrelates_to_window(spark, sf_dir):
     """The correlated LATERAL LIMIT-1 subquery must decorrelate into a
     ranked window — the naive interpretation re-scans orders once per
     customer row."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-lateral-topk"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-lateral-topk"](spark, sf_dir))
     assert "Window" in plan
     assert "CartesianProduct" not in plan
 
@@ -207,7 +193,7 @@ def test_chunk_and_quantize_are_map_only(spark, sf_dir):
     import re
 
     for key in ["text-chunk-sliding", "embed-quantize-int8"]:
-        plan = _formatted_plan(spark, registry.QUERIES[key](spark, sf_dir))
+        plan = formatted_plan(registry.QUERIES[key](spark, sf_dir))
         names = [n for _, n in re.findall(r"\((\d+)\) (\w+)", plan)]
         assert names.count("Exchange") <= 1, (key, names)
         si = names.index("Sort")
@@ -219,16 +205,14 @@ def test_quantize_pins_absmax_behind_generate_barrier(spark, sf_dir):
     quantized array at ONE evaluation per row instead of per element —
     CollapseProject would otherwise inline them into the per-element
     lambdas (O(d) -> O(d^2) per row)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["embed-quantize-int8"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["embed-quantize-int8"](spark, sf_dir))
     assert plan.count("Generate (") >= 2
 
 
 def test_lsh_broadcasts_query_side(spark, sf_dir):
     """sim-search-lsh retrieval is a bucket equi-join with the (tiny)
     query side broadcast — the corpus must never shuffle for a probe."""
-    plan = _formatted_plan(spark, registry.QUERIES["sim-search-lsh"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["sim-search-lsh"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -237,7 +221,7 @@ def test_lsh_broadcasts_query_side(spark, sf_dir):
 def test_tfidf_uses_window_group_limit_and_broadcast_scalar(spark, sf_dir):
     """Per-doc ranking must collapse to WindowGroupLimit (partial+final)
     and the corpus-count scalar joins as a broadcast, not a shuffle."""
-    plan = _formatted_plan(spark, registry.QUERIES["text-tfidf-topk"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["text-tfidf-topk"](spark, sf_dir))
     assert plan.count("WindowGroupLimit (") >= 2
     assert "CartesianProduct" not in plan
 
@@ -264,7 +248,7 @@ def test_lsh_bucketed_probe_prunes_partitions(spark, sf_dir, tmp_path):
         "embedding", _lsh_sig(F.col("embedding"), _LSH_BUCKET_BITS).alias("b")
     ).collect()[0]
     probe = lsh_probe_bucketed(spark, out, row.embedding, row.b)
-    plan = _formatted_plan(spark, probe)
+    plan = formatted_plan(probe)
     assert "PartitionFilters" in plan and "bucket" in plan
     # pruned read: every returned row is from the probed bucket, and the
     # count matches a full-scan bucket count
@@ -301,7 +285,7 @@ def test_lsh_multiprobe_supersets_single_probe(spark, sf_dir, tmp_path):
 
     single = lsh_probe_bucketed(spark, out, row.embedding, row.b).collect()
     multi = lsh_probe_multiprobe(spark, out, row.embedding, n_flip=1)
-    plan = _formatted_plan(spark, multi)
+    plan = formatted_plan(multi)
     assert "PartitionFilters" in plan
     mrows = multi.collect()
     single_ids = {r.vec_id for r in single}
@@ -344,7 +328,7 @@ def test_minhash_guard_window_runs_once_inside_cache(spark, sf_dir):
     ]:
         del _io._QUERY_PLAN_CACHE[k]
     df = registry.QUERIES["dedup-near-minhash"](spark, sf_dir)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     # the guard window appears exactly once (in the cached plan)...
     assert len(re.findall(r"windowspecdefinition\(band#", plan)) == 1, plan
     # ...both pair-join sides are cache scans...
@@ -357,9 +341,7 @@ def test_minhash_guard_window_runs_once_inside_cache(spark, sf_dir):
 def test_gopher_rules_is_map_only(spark, sf_dir):
     """r7 pin: the full rule panel is one scan — zero exchanges, zero
     Python (every signal is built-in column math over (doc_id, text))."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["text-gopher-rules"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["text-gopher-rules"](spark, sf_dir))
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -372,7 +354,7 @@ def test_image_phash_shuffles_ids_only(spark, sf_dir):
 
     df = registry.QUERIES["dedup-image-phash"](spark, sf_dir)
     df.collect()
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     blocks = re.split(r"\n\n", plan)
     checked = 0
     for block in blocks:
@@ -392,9 +374,7 @@ def test_zorder_sink_pushes_both_dimension_filters(spark, sf_dir):
     """r7 pin for sink-zorder: the whole point of the z-order layout is
     that the re-read scan receives BOTH dimension predicates as pushed
     filters (file/row-group min-max pruning then works on either)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["sink-zorder"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["sink-zorder"](spark, sf_dir))
     scan_part = plan.split("ReadSchema")[0]
     assert "GreaterThanOrEqual(o_custkey,100)" in plan
     assert "LessThanOrEqual(o_custkey,600)" in plan
@@ -510,7 +490,7 @@ def test_ks_drift_aggregates_distinct_values_before_window(spark, sf_dir):
     cents (the distribution axis), never by raw event rows."""
     import re
 
-    plan = _formatted_plan(spark, registry.QUERIES["agg-ks-drift"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["agg-ks-drift"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     # a HashAggregate sits between the scan and the first Window in the
     # tree (operators print leaf-last, so aggregate appears BELOW window
@@ -529,9 +509,7 @@ def test_session_batch_windows_share_one_exchange(spark, sf_dir):
     user_id exchange (shared partitioning and sort)."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-session-batch"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-session-batch"](spark, sf_dir))
     hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
     assert hashparts == ["user_id"], hashparts
     assert plan.split("(1) Scan")[0].count("Window") == 2
@@ -543,9 +521,7 @@ def test_bloom_prefilter_reaches_orders_scan(spark, sf_dir):
     must broadcast the dim side."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-bloom-prefilter"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-bloom-prefilter"](spark, sf_dir))
     # a Filter whose input is exactly the orders scan's two columns
     # carries the bloom probe — scan-adjacent, inside the scan's
     # whole-stage, before any exchange
@@ -569,9 +545,7 @@ def test_interleave_uses_take_ordered_prefix(spark, sf_dir):
     window runs AFTER the limit."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["sample-interleave-sources"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["sample-interleave-sources"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     # one exchange for the per-source window; the post-limit position
     # window is single-partition over k rows and needs no hash exchange
@@ -586,9 +560,7 @@ def test_asof_nearest_single_exchange_two_windows(spark, sf_dir):
     join anywhere."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-asof-nearest"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-asof-nearest"](spark, sf_dir))
     hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
     assert hashparts == ["key"], hashparts
     assert plan.split("(1) Scan")[0].count("Window") == 2
@@ -602,9 +574,7 @@ def test_semdedup_pairs_are_one_gemm_per_cluster(spark, sf_dir):
     doing an int64 gemm — the expression-tree pair join measured
     28 µs/pair interpreted); no cartesian product anywhere, and the
     top-1 neighbor takes the WindowGroupLimit path."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["dedup-semdedup"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["dedup-semdedup"](spark, sf_dir))
     assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -617,9 +587,7 @@ def test_scd2_temporal_no_inequality_join(spark, sf_dir):
     nested-loop/cartesian anywhere."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-scd2-temporal"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-scd2-temporal"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     hashparts = set(
@@ -636,9 +604,7 @@ def test_quantile_exact_distribution_before_window(spark, sf_dir):
     partitioning, and no global sort / row_number over the raw scan."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-quantile-exact"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-quantile-exact"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     # CDF + per-group total split into two Window nodes over the SAME
     # Exchange+Sort (different frames; the E17 posture)
@@ -655,7 +621,7 @@ def test_entropy_windows_aggregated_relation(spark, sf_dir):
     scan; only grouping keys cross the first exchange."""
     import re
 
-    plan = _formatted_plan(spark, registry.QUERIES["agg-entropy"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["agg-entropy"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Window") == 1
     assert tree.count("HashAggregate") == 4
@@ -671,9 +637,7 @@ def test_range_rolling_single_window_node(spark, sf_dir):
     no per-frame re-sort, no extra exchange."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-range-rolling"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-range-rolling"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Window") == 1
     assert tree.count("Sort") == 1
@@ -699,9 +663,9 @@ def test_bfs_levels_no_cartesian(spark, sf_dir):
     nested-loop/cartesian anywhere in the final composed plan, on the
     one-task kernel path and on the shuffled loop past the gate."""
     fn = registry.QUERIES["graph-bfs-levels"]
-    plans = [_formatted_plan(spark, fn(spark, sf_dir))]
+    plans = [formatted_plan(fn(spark, sf_dir))]
     with loop_path(spark):
-        plans.append(_formatted_plan(spark, fn(spark, sf_dir)))
+        plans.append(formatted_plan(fn(spark, sf_dir)))
     assert "MapInPandas" not in plans[1]
     for plan in plans:
         assert "CartesianProduct" not in plan
@@ -722,7 +686,7 @@ def test_graph_kernel_path_is_one_task(spark, sf_dir, key):
     j0 = dag.numTotalJobs()
     df = fn(spark, sf_dir)
     assert dag.numTotalJobs() - j0 == 0
-    tree = _formatted_plan(spark, df).split("\n\n")[0]
+    tree = formatted_plan(df).split("\n\n")[0]
     assert tree.count("MapInPandas") == 1
     below = tree.split("MapInPandas", 1)[1]
     assert "Exchange" not in below, tree
@@ -734,9 +698,7 @@ def test_ewma_single_window_node(spark, sf_dir):
     Window node."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-ewma-decay"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-ewma-decay"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Window") == 1
     assert tree.count("Sort") == 1
@@ -750,9 +712,7 @@ def test_benford_distribution_before_window(spark, sf_dir):
     scan; two hash exchanges total."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-benford-digit"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-benford-digit"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     # partial+final digit-histogram agg; chi2/share are windows over the
     # aggregated relation — no second groupBy exists
@@ -765,9 +725,7 @@ def test_distinct_bitmap_partial_agg(spark, sf_dir):
     """E22's scale claim: bit_or folds map-side (a partial aggregate
     exists for the word relation), the audit join broadcasts, and the
     scan reads only (event_type, user_id)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-distinct-bitmap"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-distinct-bitmap"](spark, sf_dir))
     assert "partial_bit_or" in plan or "partial_bitor" in plan.lower()
     assert "BroadcastHashJoin" in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
@@ -778,9 +736,7 @@ def test_proportion_ztest_shape(spark, sf_dir):
     """E23's scale claim: the population relation is broadcast (2 rows
     against the 5-row metric table — no shuffle for the cross join)
     and no cartesian product on a non-broadcast side exists."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-proportion-ztest"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-proportion-ztest"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
     assert "props" not in rs and "value" not in rs
@@ -793,9 +749,7 @@ def test_streaks_one_user_exchange_after_distinct(spark, sf_dir):
     both leading with user_id."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-streaks"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-streaks"](spark, sf_dir))
     hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
     assert hashparts == ["user_id", "user_id"], hashparts
     tree = plan.split("(1) Scan")[0]
@@ -807,7 +761,7 @@ def test_triangle_count_no_cartesian_int_shuffles(spark, sf_dir):
     nested loop on non-broadcast sides), and nothing wider than ids +
     degrees crosses an exchange (props/text never shuffle)."""
     df = registry.QUERIES["graph-triangle-count"](spark, sf_dir)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     exec_plan = df._jdf.queryExecution().executedPlan().toString()
     for line in exec_plan.splitlines():
@@ -821,7 +775,7 @@ def test_edit_distance_candidates_shuffle_ints(spark, sf_dir):
     ONLY in the verify stage's id-keyed text joins, never keyed by or
     carried with gram/fingerprint strings — and no cartesian exists."""
     df = registry.QUERIES["dedup-edit-distance"](spark, sf_dir)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     exec_plan = df._jdf.queryExecution().executedPlan().toString()
     for line in exec_plan.splitlines():
@@ -835,9 +789,7 @@ def test_gif_meta_map_only(spark, sf_dir):
     """multimodal-gif-meta is map-only: no exchange before the final
     driver-hash sort; the scan reads only (asset_id, content) from the
     per-(SparkContext, sf_dir) asset corpus — never document text."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["multimodal-gif-meta"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["multimodal-gif-meta"](spark, sf_dir))
     assert "Exchange hashpartitioning" not in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
     assert "asset_id" in rs and "text" not in rs
@@ -848,9 +800,7 @@ def test_zscore_anomaly_single_window(spark, sf_dir):
     node on one user_id exchange and one (ts_us, event_id) sort."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-zscore-anomaly"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-zscore-anomaly"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Window") == 1
     assert tree.count("Sort") == 1
@@ -864,9 +814,7 @@ def test_ols_trend_single_partial_agg(spark, sf_dir):
     exchange, no window, no sort before the output ordering."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-ols-trend"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-ols-trend"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("HashAggregate") == 2
     assert tree.count("Window") == 0
@@ -876,9 +824,7 @@ def test_ols_trend_single_partial_agg(spark, sf_dir):
 def test_snapshot_diff_single_join(spark, sf_dir):
     """F15's scale claim: ONE full-outer SortMergeJoin on the key, the
     3-column projection pushed into both scans."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["etl-snapshot-diff"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["etl-snapshot-diff"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert (
         tree.count("SortMergeJoin") == 1
@@ -893,9 +839,7 @@ def test_jaccard_neighbors_windowgrouplimit(spark, sf_dir):
     """K6's scale claims: the per-user rank is bounded by
     WindowGroupLimit (no global ranked-list materialization), no
     cartesian product, and the hot-entity guard join broadcasts."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["graph-jaccard-neighbors"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["graph-jaccard-neighbors"](spark, sf_dir))
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
@@ -904,9 +848,7 @@ def test_jaccard_neighbors_windowgrouplimit(spark, sf_dir):
 def test_url_parse_map_only(spark, sf_dir):
     """G9 is map-only: no exchange before the presentation sort; the
     scan reads only the three synthesis inputs."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["fn-url-parse"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["fn-url-parse"](spark, sf_dir))
     assert "Exchange hashpartitioning" not in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
     assert "text" not in rs and "n_chars" not in rs
@@ -916,9 +858,7 @@ def test_period_over_period_agg_before_window(spark, sf_dir):
     """F16's scale claim: the lag window runs over the (type, day)
     AGGREGATED relation — a partial+final hash agg collapses the scan
     first (the E21 discipline)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-period-over-period"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-period-over-period"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("HashAggregate") == 2
     assert tree.count("Window") == 1
@@ -929,9 +869,7 @@ def test_conversion_lag_cdf_over_distinct_lags(spark, sf_dir):
     DISTINCT-lag aggregated relation, never raw rows; the funnel
     constraint is a join, not a raw-event window; no cartesian on
     non-broadcast sides."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-conversion-lag"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-conversion-lag"](spark, sf_dir))
     assert "CartesianProduct" not in plan
 
 
@@ -940,9 +878,7 @@ def test_hard_negatives_corpus_not_shuffled(spark, sf_dir):
     LoopJoin over the tiny side is the expected crossJoin shape), the
     corpus side is scanned once with NO exchange before the per-anchor
     WindowGroupLimit."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["sim-search-hard-negatives"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["sim-search-hard-negatives"](spark, sf_dir))
     assert "BroadcastExchange" in plan
     assert "WindowGroupLimit" in plan
     # corpus embedding bytes must not hash-shuffle
@@ -954,9 +890,7 @@ def test_markov_agg_before_normalizer_window(spark, sf_dir):
     """E26's scale claim: the probability window runs over the
     (prev, next) AGGREGATED relation; the only raw-row window is the
     per-user lag."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-markov-transitions"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-markov-transitions"](spark, sf_dir))
     tree = plan.split("(1) Scan")[0]
     assert tree.count("HashAggregate") == 2
     assert tree.count("Window") == 2  # user lag + prob normalizer
@@ -975,9 +909,7 @@ def test_pmi_text_never_shuffles(spark, sf_dir):
 def test_time_buckets_map_only(spark, sf_dir):
     """G10 is map-only: no exchange before the presentation sort; scan
     reads only (event_id, ts)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["fn-time-buckets"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["fn-time-buckets"](spark, sf_dir))
     assert "Exchange hashpartitioning" not in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
     assert "props" not in rs and "value" not in rs
@@ -987,7 +919,7 @@ def test_langid_confusion_agg_before_window(spark, sf_dir):
     """I55: the recall window runs over the langs^2 AGGREGATED cell
     relation; document text never crosses an exchange."""
     df = registry.QUERIES["text-langid-confusion"](spark, sf_dir)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     tree = plan.split("(1) Scan")[0]
     assert tree.count("HashAggregate") == 2
     assert tree.count("Window") == 1
@@ -1012,9 +944,7 @@ def test_null_safe_join_is_hash_not_nested_loop(spark, sf_dir):
     """D16: <=> must plan as a hashable equi-join (SMJ/SHJ/BHJ), never
     BroadcastNestedLoopJoin — null-safe equality hashes NULL like any
     other value."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-null-safe-eq"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-null-safe-eq"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     tree = plan.split("(1) Scan")[0]
@@ -1061,9 +991,7 @@ def test_json_nested_schema_pruned(spark, sf_dir):
     """B19: the nested read carries the struct in ReadSchema (field
     pruning through the JSON source) and explodes lazily (a single
     Generate node)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["scan-json-nested"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["scan-json-nested"](spark, sf_dir))
     assert "Generate" in plan
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Scan json") == 1
@@ -1075,9 +1003,7 @@ def test_norm_outliers_single_label_exchange(spark, sf_dir):
     rollup; the scan projects only (label, embedding)."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["embed-norm-outliers"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["embed-norm-outliers"](spark, sf_dir))
     hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
     assert hashparts == ["label"], hashparts
     rs = plan.split("ReadSchema")[1].splitlines()[0]
@@ -1090,9 +1016,7 @@ def test_gap_fill_single_window_exchange_no_spine_join(spark, sf_dir):
     a map-side Generate, and NO join (the calendar-spine formulation
     would show a SortMergeJoin/BroadcastHashJoin over the dense
     relation)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-gap-fill"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-gap-fill"](spark, sf_dir))
     assert "Join" not in plan
     assert "Generate" in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
@@ -1106,7 +1030,7 @@ def test_cuped_single_corpus_scan(spark, sf_dir):
     shuffle twice)."""
     import re
 
-    plan = _formatted_plan(spark, registry.QUERIES["agg-cuped"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["agg-cuped"](spark, sf_dir))
     assert plan.count("ReadSchema") == 1
     hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
     assert hashparts.count("user_id") == 1, hashparts
@@ -1117,9 +1041,7 @@ def test_matryoshka_corpus_not_shuffled_topk_limited(spark, sf_dir):
     corpus scan — no corpus exchange before ranking), budget fanout is
     a map-side Generate, and the per-(anchor,budget) top-1 runs as
     WindowGroupLimit."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["embed-matryoshka"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["embed-matryoshka"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan
     assert "WindowGroupLimit" in plan
     assert "Generate" in plan
@@ -1129,7 +1051,7 @@ def test_matryoshka_corpus_not_shuffled_topk_limited(spark, sf_dir):
 def test_kcore_no_cartesian_node_relation_shuffles(spark, sf_dir):
     """K7: the peel loop joins the cached adjacency against the 8-byte
     surviving-node relation — no cartesian products, no corpus text."""
-    plan = _formatted_plan(spark, registry.QUERIES["graph-kcore"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["graph-kcore"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -1139,7 +1061,7 @@ def test_dq_audit_one_aggregate_per_table_family(spark, sf_dir):
     (stack fanout, not a subquery per check) — at most one orders scan
     beyond the RI join's key projection, and exactly one join (the RI
     check)."""
-    plan = _formatted_plan(spark, registry.QUERIES["etl-dq-audit"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["etl-dq-audit"](spark, sf_dir))
     # scans: orders (metrics) + lineitem (metrics) + lineitem keys +
     # orders keys for RI = 4 total, not 5+ (one per orders check would
     # be 7+); the RI-join scans project ONLY the key column
@@ -1152,7 +1074,7 @@ def test_dq_audit_one_aggregate_per_table_family(spark, sf_dir):
 def test_ip_cidr_map_only(spark, sf_dir):
     """G11: no exchange other than the output ordering's range
     partition; no UDF (BatchEvalPython absent)."""
-    plan = _formatted_plan(spark, registry.QUERIES["fn-ip-cidr"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["fn-ip-cidr"](spark, sf_dir))
     assert "BatchEvalPython" not in plan
     assert "hashpartitioning" not in plan
 
@@ -1162,9 +1084,7 @@ def test_group_kfold_text_never_shuffles(spark, sf_dir):
     the exchange carries (hash, doc_id, lang), never the text column."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["sample-group-kfold"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["sample-group-kfold"](spark, sf_dir))
     for m in re.finditer(r"Arguments: hashpartitioning\(([^)]*)\)", plan):
         assert "text" not in m.group(1), m.group(1)
 
@@ -1173,7 +1093,7 @@ def test_auc_buckets_before_window(spark, sf_dir):
     """E28: the type filter is pushed to the scan, examples collapse
     map-side into score buckets BEFORE the single bounded window pass
     — no per-row ranks, no global example sort."""
-    plan = _formatted_plan(spark, registry.QUERIES["agg-auc-rank"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["agg-auc-rank"](spark, sf_dir))
     assert "PushedFilters" in plan and "event_type" in plan.split("ReadSchema")[0]
     # partial agg (score buckets) must appear below the Window in the tree
     assert plan.index("HashAggregate") < plan.index("Window")
@@ -1185,9 +1105,7 @@ def test_attribution_single_user_exchange(spark, sf_dir):
     one)."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-attribution"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-attribution"](spark, sf_dir))
     assert "Join" not in plan
     hashparts = re.findall(r"Arguments: hashpartitioning\((\w+)", plan)
     assert hashparts.count("user_id") == 1, hashparts
@@ -1196,7 +1114,7 @@ def test_attribution_single_user_exchange(spark, sf_dir):
 def test_srm_map_side_distinct(spark, sf_dir):
     """E29: the (user, variant) distinct collapses map-side (partial
     agg before the exchange) and the scan reads only user_id."""
-    plan = _formatted_plan(spark, registry.QUERIES["agg-srm-check"](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES["agg-srm-check"](spark, sf_dir))
     rs = plan.split("ReadSchema")[1].splitlines()[0]
     assert "user_id" in rs and "props" not in rs and "value" not in rs
 
@@ -1204,9 +1122,7 @@ def test_srm_map_side_distinct(spark, sf_dir):
 def test_welch_one_row_aggregate(spark, sf_dir):
     """E30: one per-user shuffle then a one-row conditional aggregate;
     the scan reads only (user_id, value) — no ts, no props, no join."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-welch-ttest"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-welch-ttest"](spark, sf_dir))
     assert "Join" not in plan
     rs = plan.split("ReadSchema")[1].splitlines()[0]
     assert "user_id" in rs and "value" in rs
@@ -1218,9 +1134,7 @@ def test_chisq_broadcast_cell_completion(spark, sf_dir):
     DISTINCT relations via broadcast (never a shuffle of cells), and
     raw rows collapse in the FIRST hash aggregate — every window runs
     over the cell relation, above the aggregate in the tree."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-chisq-independence"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-chisq-independence"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # formatted plans print root-first: the windows (margins) must sit
@@ -1235,9 +1149,7 @@ def test_cusum_single_series_exchange(spark, sf_dir):
     extra wide shuffle of raw rows."""
     import re
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-cusum-changepoint"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-cusum-changepoint"](spark, sf_dir))
     assert "Join" not in plan
     hashparts = re.findall(r"hashpartitioning\((\w+)", plan)
     assert set(hashparts) <= {"event_type"}, hashparts
@@ -1247,18 +1159,14 @@ def test_assortativity_no_broadcast_of_degrees(spark, sf_dir):
     """K8: the per-edge degree attach keeps deg on the shuffle path
     (node-cardinality relation, never broadcast); the only broadcast
     is the one-row node-count scalar."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["graph-assortativity"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["graph-assortativity"](spark, sf_dir))
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
 def test_useragent_map_only(spark, sf_dir):
     """G12: synthesize-then-parse is map-only — no shuffle, no join,
     no aggregate; the event_id modulus filter reaches the scan."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["fn-useragent-parse"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["fn-useragent-parse"](spark, sf_dir))
     assert "Join" not in plan and "HashAggregate" not in plan
     assert "PushedFilters" in plan
 
@@ -1266,9 +1174,7 @@ def test_useragent_map_only(spark, sf_dir):
 def test_rolling_corr_single_day_frame(spark, sf_dir):
     """F21: after the day aggregate, all six moments ride ONE window
     over one day-ordered frame — exactly one Window node, no join."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-rolling-corr"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-rolling-corr"](spark, sf_dir))
     assert "Join" not in plan
     assert plan.count(") Window") == 1
 
@@ -1279,9 +1185,7 @@ def test_gini_distribution_window_no_user_sort(spark, sf_dir):
     on yc first), so no user-cardinality ROW_NUMBER sort exists
     anywhere in the plan — the r9 verdict's scale-killer, now pinned
     out. No join; scan reads only (user_id, value)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-gini-coefficient"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-gini-coefficient"](spark, sf_dir))
     assert "Join" not in plan
     assert "row_number" not in plan.lower()
     # the window's input is the (yc, c) distribution: a HashAggregate
@@ -1297,9 +1201,7 @@ def test_pack_sequences_window_is_shard_partitioned(spark, sf_dir):
     must be PARTITIONED BY shard — the two-pass layout's whole point;
     an unpartitioned running sum funnels the corpus through one task
     (the r9 verdict's scale caveat, pinned out here)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["sample-pack-sequences"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["sample-pack-sequences"](spark, sf_dir))
     specs = [
         ln for ln in plan.splitlines() if "windowspecdefinition" in ln
     ]
@@ -1312,9 +1214,7 @@ def test_hhi_aggregates_before_join(spark, sf_dir):
     join — in the root-first formatted plan the join must appear
     ABOVE (before) the orders-side partial aggregate, and the orders
     scan reads only the two needed columns."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-hhi-concentration"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-hhi-concentration"](spark, sf_dir))
     import re
 
     names = [n for _, n in re.findall(r"\((\d+)\) (\w+)", plan)]
@@ -1329,9 +1229,7 @@ def test_interorder_gap_collapses_before_join(spark, sf_dir):
     """F22: the LAG rides one custkey exchange; gaps aggregate after
     the join but the join input is the gap projection (no wide order
     payload: o_totalprice never read)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-interorder-gap"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-interorder-gap"](spark, sf_dir))
     assert "o_totalprice" not in plan
     import re
 
@@ -1343,9 +1241,7 @@ def test_spearman_broadcast_rank_attach(spark, sf_dir):
     """E37: rank relations attach by BROADCAST join (value-bounded),
     and no row_number/global row sort exists — the ranks come from
     value-distribution windows, not a sort of the corpus."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-spearman-corr"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-spearman-corr"](spark, sf_dir))
     import re
 
     names = [n for n in re.findall(r"\(\d+\) (\w+)", plan)]
@@ -1358,9 +1254,7 @@ def test_geo_nearest_single_equi_join(spark, sf_dir):
     """D17: ONE equi join on the cell key — no cartesian/nested-loop
     product anywhere, and the top-1 rank runs as WindowGroupLimit
     (per-task running top-1 before the window exchange)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["join-geo-cell-nearest"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["join-geo-cell-nearest"](spark, sf_dir))
     assert "Cartesian" not in plan and "NestedLoop" not in plan
     assert "WindowGroupLimit" in plan
     import re
@@ -1373,9 +1267,7 @@ def test_novelty_text_never_shuffles(spark, sf_dir):
     """I63: every exchange carries only hashes/ids — the text column
     must not appear in any Exchange's schema (grams leave the scan as
     xxhash64 keys)."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["text-novelty-ratio"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["text-novelty-ratio"](spark, sf_dir))
     for chunk in plan.split("Exchange")[1:]:
         first = chunk.splitlines()[0]
         assert "text" not in first, first
@@ -1385,9 +1277,7 @@ def test_rfm_no_ntile_no_customer_sort(spark, sf_dir):
     """F23: scores come from boundary compares, not a global ntile —
     no ntile anywhere, and the only windows are over the value
     distributions."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-rfm-segment"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-rfm-segment"](spark, sf_dir))
     assert "ntile" not in plan.lower()
     assert "row_number" not in plan.lower()
 
@@ -1395,10 +1285,7 @@ def test_rfm_no_ntile_no_customer_sort(spark, sf_dir):
 def test_concurrency_sweep_day_bounded_window(spark, sf_dir):
     """F24: the delta stream collapses through a hash aggregate BEFORE
     the running-sum window — the window input is the day relation."""
-    plan = _formatted_plan(
-        spark,
-        registry.QUERIES["window-concurrency-sweep"](spark, sf_dir),
-    )
+    plan = formatted_plan(registry.QUERIES["window-concurrency-sweep"](spark, sf_dir),)
     assert "Window" in plan and "HashAggregate" in plan
     assert "Join" not in plan
 
@@ -1435,7 +1322,7 @@ def test_scan_signature_gate_on_catch_sites(spark, sf_dir):
 
     over = {}
     for key in _SCAN_GATE_KEYS:
-        plan = _formatted_plan(spark, registry.QUERIES[key](spark, sf_dir))
+        plan = formatted_plan(registry.QUERIES[key](spark, sf_dir))
         worst = max_signature_count(plan)
         if worst > 2:
             over[key] = worst
@@ -1448,9 +1335,7 @@ def test_reciprocity_reads_checkpointed_edges_not_corpus(spark, sf_dir):
     exactly one join — the r10 verdict's 8-scan catch, fixed."""
     from spark_file_mover_spark.planaudit import scan_census
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["graph-reciprocity"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["graph-reciprocity"](spark, sf_dir))
     assert scan_census(plan) == {}, scan_census(plan)
     assert "Scan ExistingRDD" in plan
     import re as _re
@@ -1462,9 +1347,7 @@ def test_reciprocity_reads_checkpointed_edges_not_corpus(spark, sf_dir):
 def test_setops_single_scan_single_exchange(spark, sf_dir):
     """F6: all three set ops come out of ONE presence-flag aggregate —
     one customer scan, and no join anywhere."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["set-union-intersect-except"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["set-union-intersect-except"](spark, sf_dir))
     from spark_file_mover_spark.planaudit import scan_census
 
     assert scan_census(plan) == {"customer.parquet": 1}, scan_census(plan)
@@ -1477,7 +1360,7 @@ def test_lorenz_winsorized_theil_no_user_sort(spark, sf_dir):
     value-bounded distribution relation only)."""
     for key in ("agg-theil-index", "agg-lorenz-deciles",
                 "agg-winsorized-stats"):
-        plan = _formatted_plan(spark, registry.QUERIES[key](spark, sf_dir))
+        plan = formatted_plan(registry.QUERIES[key](spark, sf_dir))
         assert "row_number" not in plan.lower(), key
         assert "ntile" not in plan.lower(), key
 
@@ -1485,18 +1368,14 @@ def test_lorenz_winsorized_theil_no_user_sort(spark, sf_dir):
 def test_zipf_uses_take_ordered_prefix(spark, sf_dir):
     """I65: the top-50 vocabulary cut is TakeOrderedAndProject — no
     global sort of the vocabulary."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["text-zipf-fit"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["text-zipf-fit"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_topk_windowed_uses_window_group_limit(spark, sf_dir):
     """H12: the per-window rank plans as WindowGroupLimit over the
     aggregated cell relation."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["stream-topk-windowed"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["stream-topk-windowed"](spark, sf_dir))
     assert "WindowGroupLimit" in plan
 
 
@@ -1504,9 +1383,7 @@ def test_global_clustering_zero_corpus_scans(spark, sf_dir):
     """K11 consumes the cached K5 checkpoints: zero parquet scans."""
     from spark_file_mover_spark.planaudit import scan_census
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["graph-global-clustering"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["graph-global-clustering"](spark, sf_dir))
     assert scan_census(plan) == {}, scan_census(plan)
 
 
@@ -1514,18 +1391,14 @@ def test_hits_zero_corpus_scans(spark, sf_dir):
     """K12 consumes the cached K1 edge checkpoint: zero parquet scans."""
     from spark_file_mover_spark.planaudit import scan_census
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["graph-hits"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["graph-hits"](spark, sf_dir))
     assert scan_census(plan) == {}, scan_census(plan)
 
 
 def test_webp_meta_is_map_only(spark, sf_dir):
     """I66: pure byte expressions fused into the scan — no exchange
     except the presentation sort, no Python."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["multimodal-webp-meta"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["multimodal-webp-meta"](spark, sf_dir))
     # Nothing above the presentation Sort may shuffle (the tree prints
     # parent-first, so the prefix before the first Sort is the root spine).
     assert "Exchange" not in plan.split("Sort")[0]
@@ -1542,9 +1415,7 @@ def test_bootstrap_single_corpus_scan(spark, sf_dir):
     the replicate fanout happens over it, never over raw events."""
     from spark_file_mover_spark.planaudit import scan_census
 
-    plan = _formatted_plan(
-        spark, registry.QUERIES["agg-bootstrap-ci"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["agg-bootstrap-ci"](spark, sf_dir))
     assert scan_census(plan) == {}, scan_census(plan)
 
 
@@ -1554,9 +1425,7 @@ def test_ohlc_bars_no_window_sort(spark, sf_dir):
     the aggregate is sort-based (struct-keyed argmin buffers aren't
     hash-aggregatable) but runs partial+final, so map-side combine
     still collapses event volume before the exchange."""
-    plan = _formatted_plan(
-        spark, registry.QUERIES["window-ohlc-bars"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["window-ohlc-bars"](spark, sf_dir))
     import re as _re
 
     assert not _re.search(r"\(\d+\) Window\b", plan), "window sort crept in"
@@ -1566,9 +1435,7 @@ def test_ohlc_bars_no_window_sort(spark, sf_dir):
 
 
 def test_flac_meta_is_map_only(spark, sf_dir):
-    plan = _formatted_plan(
-        spark, registry.QUERIES["multimodal-flac-meta"](spark, sf_dir)
-    )
+    plan = formatted_plan(registry.QUERIES["multimodal-flac-meta"](spark, sf_dir))
     body = plan.split("== Physical Plan ==")[1]
     assert "ArrowEvalPython" not in body and "BatchEvalPython" not in body
     import re as _re
@@ -1605,7 +1472,7 @@ _ALL_KEYS = sorted(registry.QUERIES)
 
 @_pytest.mark.parametrize("key", _ALL_KEYS)
 def test_scan_signature_budget_registry_wide(spark, sf_dir, key):
-    plan = _formatted_plan(spark, registry.QUERIES[key](spark, sf_dir))
+    plan = formatted_plan(registry.QUERIES[key](spark, sf_dir))
     sigs = scan_signatures(plan)
     worst = max(sigs.values(), default=0)
     budget = 2 if key not in SCAN_BUDGET_EXEMPT else 10**9

@@ -66,10 +66,9 @@ def test_bh_fdr_null_p_ranks_last_and_matches_oracle(
     with a NULL-p metric. Before the asc_nulls_last fix, Spark ranked
     the NULL-p row FIRST (rank 1), shifting every other rank off the
     oracle's NULLS-LAST ranking."""
-    import duckdb
-
     from spark_file_mover_spark import registry
     from spark_file_mover_spark.operators.aggregates import agg_bh_fdr
+    from spark_file_mover_spark.profile import oracle_connection
 
     registry.load_all()
 
@@ -78,11 +77,7 @@ def test_bh_fdr_null_p_ranks_last_and_matches_oracle(
         for r in agg_bh_fdr(spark, saturated_events_dir).collect()
     }
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"'{saturated_events_dir}/events.parquet'"
-    )
+    con = oracle_connection(saturated_events_dir, ["events"])
     cols = ["event_type", "xa", "xb", "z", "p", "rank", "m",
             "bh_critical", "rejected"]
     want = {

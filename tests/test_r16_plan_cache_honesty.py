@@ -21,6 +21,7 @@ build.
 from __future__ import annotations
 
 from spark_file_mover_spark import registry
+from spark_file_mover_spark.profile import counted, warm_build_audit
 from spark_file_mover_spark.sources import io as sio
 
 registry.load_all()
@@ -35,16 +36,6 @@ DEBARRIERED = "agg-kendall-tau"
 STRIPPED = "agg-tukey-fences"
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_plan_cache_hit_runs_corpus_jobs(spark):
     # cold: populate the plan cache
     df1 = registry.QUERIES[DEBARRIERED](spark, SF)
@@ -52,14 +43,12 @@ def test_plan_cache_hit_runs_corpus_jobs(spark):
 
     # hit: build must be job-free, the ACTION must run >0 jobs (the
     # corpus scan re-executes below the former barrier)
-    df2, build_jobs = _jobs_in_group(
-        spark, "r16-hit-build", lambda: registry.QUERIES[DEBARRIERED](spark, SF)
+    df2, _, build_jobs = counted(
+        spark, lambda: registry.QUERIES[DEBARRIERED](spark, SF)
     )
     assert build_jobs == 0, "plan-cached build ran Spark jobs"
     assert any(k[1] == DEBARRIERED for k in sio._QUERY_PLAN_CACHE)
-    rows2, action_jobs = _jobs_in_group(
-        spark, "r16-hit-action", lambda: df2.collect()
-    )
+    rows2, _, action_jobs = counted(spark, df2.collect)
     assert action_jobs > 0, "cache hit executed no jobs: result caching"
     assert rows1 == rows2
     # the hit plan's leaves are the parquet inputs, not a materialized
@@ -71,14 +60,10 @@ def test_plan_cache_hit_runs_corpus_jobs(spark):
 
 def test_stripped_barrier_key_rebuilds_per_invocation(spark):
     # first invocation: barrier runs
-    df1, jobs1 = _jobs_in_group(
-        spark, "r16-strip-1", lambda: registry.QUERIES[STRIPPED](spark, SF)
-    )
+    df1, _, jobs1 = counted(spark, lambda: registry.QUERIES[STRIPPED](spark, SF))
     assert jobs1 > 0, "expected the eager barrier to run at build time"
     # second invocation: NOT plan-cached, barrier runs again
-    df2, jobs2 = _jobs_in_group(
-        spark, "r16-strip-2", lambda: registry.QUERIES[STRIPPED](spark, SF)
-    )
+    df2, _, jobs2 = counted(spark, lambda: registry.QUERIES[STRIPPED](spark, SF))
     assert jobs2 > 0, (
         "second build ran no jobs — the key is result-cached somewhere"
     )
@@ -89,26 +74,14 @@ def test_stripped_barrier_key_rebuilds_per_invocation(spark):
 def test_no_pure_key_has_eager_build(spark):
     """Registry-wide: every ``pure`` key's SECOND build (artifact
     caches warm) is job-free. Runs at sf0.001 so the sweep stays
-    cheap; the per-key audit tool (tools/audit_build_jobs.py) is the
-    sf0.01 version of the same gate."""
-    sc = spark.sparkContext
-    real = sio.cached_plan
-    sio.cached_plan = lambda spark, sf_dir, name, make: make()
+    cheap; ``tools/audit_build_jobs.py`` runs the same
+    ``profile.warm_build_audit`` at sf0.01."""
+    # the 197 former decorator keys plus the 15 multimodal asset keys
+    assert len(registry.PURE) >= 212
     offenders = {}
-    try:
-        # the 197 former decorator keys plus the 15 multimodal asset keys
-        assert len(registry.PURE) >= 212
-        for key in sorted(registry.PURE):
-            registry.QUERIES[key](spark, SF)  # warm artifacts
-            group = f"r16-audit-{key}"
-            sc.setJobGroup(group, key)
-            try:
-                registry.QUERIES[key](spark, SF)
-            finally:
-                sc.setJobGroup(None, None)
-            n = len(sc.statusTracker().getJobIdsForGroup(group))
-            if n:
-                offenders[key] = n
-    finally:
-        sio.cached_plan = real
+    for a in warm_build_audit(spark, SF):
+        if a.error is not None:
+            raise a.error
+        if a.second_jobs:
+            offenders[a.key] = a.second_jobs
     assert not offenders, f"pure keys with eager builds: {offenders}"

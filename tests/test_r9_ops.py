@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_file_mover_spark import registry
+from spark_file_mover_spark.profile import oracle_connection
 from spark_file_mover_spark.sources.io import (
     TABLES,
     artifact_cache_key,
@@ -141,8 +142,6 @@ def test_cached_key_survives_inplace_rewrite(key, tmp_path, spark):
     fingerprint, and a persisted relation of the old bytes left in
     Spark's CacheManager, which matches the rebuilt plan of the same
     path and serves the old rows."""
-    import duckdb
-
     for name in TABLES:
         shutil.copy(Path(SRC_SF) / f"{name}.parquet", tmp_path)
     # warm caches; a stale hit is only visible if the old corpus had rows
@@ -155,12 +154,7 @@ def test_cached_key_survives_inplace_rewrite(key, tmp_path, spark):
     # five regions; a tenth holds two, so move-list-files' stale
     # five-dir listing would show
     _rewrite_in_place(tmp_path, ("nation",), keep=10)
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"'{tmp_path}/{name}.parquet'"
-        )
+    con = oracle_connection(tmp_path)
     try:
         ok, msg = compare(
             registry.QUERIES[key](spark, str(tmp_path)),

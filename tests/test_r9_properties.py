@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -23,6 +22,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from spark_file_mover_spark import registry
+from spark_file_mover_spark.profile import oracle_connection
 from tests.parity import compare
 
 registry.load_all()
@@ -62,13 +62,8 @@ def _write_events(path, rows):
 
 
 def _run_both(key, spark, corpus_dir, tables):
-    con = duckdb.connect()
+    con = oracle_connection(corpus_dir, tables)
     try:
-        for t in tables:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"'{corpus_dir}/{t}.parquet'"
-            )
         return compare(
             registry.QUERIES[key](spark, str(corpus_dir)),
             con.sql(registry.ORACLES[key]),

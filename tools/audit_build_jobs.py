@@ -7,13 +7,14 @@ barriers, collects, persist().count() outside a declared artifact
 cache) is computed once and silently served from the materialized
 intermediate afterwards — result caching, not plan caching.
 
-Method: for every key in ``registry.PURE``, bypass the plan cache (so
-the real build runs) and count the Spark jobs submitted DURING
-CONSTRUCTION (no action). The first build warms the declared
-per-(SparkContext, corpus) ingest artifacts (tf relation, minhash
-bands, asset corpora, …) whose build jobs are blessed paid-once ingest;
-the SECOND build's job count is the per-invocation eager work. Keys
-with second-build jobs > 0 may not be ``pure``.
+Method (``profile.warm_build_audit``): for every key in
+``registry.PURE``, bypass the plan cache (so the real build runs) and
+count the Spark jobs submitted DURING CONSTRUCTION (no action). The
+first build warms the declared per-(SparkContext, corpus) ingest
+artifacts (tf relation, minhash bands, asset corpora, …) whose build
+jobs are blessed paid-once ingest; the SECOND build's job count is the
+per-invocation eager work. Keys with second-build jobs > 0 may not be
+``pure``.
 
 Usage: python tools/audit_build_jobs.py [sf_dir]
 Prints one line per pure key: key, first-build jobs, second-build
@@ -32,44 +33,23 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from spark_file_mover_spark import registry
+    from spark_file_mover_spark import profile, registry
     from spark_file_mover_spark.session import get_spark
-    from spark_file_mover_spark.sources import io as sio
 
     registry.load_all()
     spark = get_spark("audit-build-jobs")
-    sc = spark.sparkContext
-
-    # bypass the plan cache so the build actually runs
-    real_cached_plan = sio.cached_plan
-    sio.cached_plan = lambda spark, sf_dir, name, make: make()
-
     print(f"# {len(registry.PURE)} pure keys", file=sys.stderr)
 
-    tracker = sc.statusTracker()
     offenders, errors = [], []
-    for key in sorted(registry.PURE):
-        counts = []
-        for rep in range(2):
-            group = f"audit-{key}-{rep}"
-            sc.setJobGroup(group, key)
-            try:
-                registry.QUERIES[key](spark, sf_dir)
-            except Exception as e:  # noqa: BLE001 — report and continue
-                print(f"{key}\tERROR\t{e}")
-                errors.append(key)
-                counts = None
-                break
-            finally:
-                sc.setJobGroup(None, None)
-            counts.append(len(tracker.getJobIdsForGroup(group)))
-        if counts is None:
+    for a in profile.warm_build_audit(spark, sf_dir):
+        if a.error is not None:
+            print(f"{a.key}\tERROR\t{a.error}")
+            errors.append(a.key)
             continue
-        flag = "OFFENDER" if counts[1] > 0 else "ok"
-        print(f"{key}\t{counts[0]}\t{counts[1]}\t{flag}")
-        if counts[1] > 0:
-            offenders.append(key)
-    sio.cached_plan = real_cached_plan
+        flag = "OFFENDER" if a.second_jobs > 0 else "ok"
+        print(f"{a.key}\t{a.first_jobs}\t{a.second_jobs}\t{flag}")
+        if a.second_jobs > 0:
+            offenders.append(a.key)
     print(f"# offenders ({len(offenders)}): {offenders}", file=sys.stderr)
     if errors:
         print(f"# errors ({len(errors)}): {errors}", file=sys.stderr)

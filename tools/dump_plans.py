@@ -12,6 +12,7 @@ explain itself runs no job.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from pathlib import Path
@@ -515,6 +516,7 @@ from spark_file_mover_spark.planaudit import (  # noqa: E402
     scan_census,
     scan_signatures,
 )
+from spark_file_mover_spark.profile import formatted_plan  # noqa: E402
 
 
 def audit(sf: str) -> int:
@@ -523,15 +525,11 @@ def audit(sf: str) -> int:
     any signature exceeds 2 scans without a SCAN_BUDGET_EXEMPT entry."""
     registry.load_all()
     spark = get_spark("scanaudit", cpus=8)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     bad = []
     rows = []
     for key, fn in registry.QUERIES.items():
         try:
-            df = fn(spark, sf)
-            plan = df._jdf.queryExecution().explainString(mode)
+            plan = formatted_plan(fn(spark, sf))
             census, sigs = scan_census(plan), scan_signatures(plan)
         except Exception as exc:  # pragma: no cover - diagnostics only
             print(f"{key:38s} ERROR {exc}")
@@ -570,14 +568,13 @@ def main() -> None:
         "",
     ]
     prev_bt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
+    # sink-bucketed names its tables after this process's pid
+    pid = re.compile(rf"(?<=_){os.getpid()}\b")
     for key, note in NOTES.items():
         if key == "sink-bucketed":
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         df = registry.QUERIES[key](spark, sf)
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = pid.sub("<pid>", formatted_plan(df))
         if key == "sink-bucketed":
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bt)
         tree = plan.split("\n\n")[0]

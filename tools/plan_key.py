@@ -26,18 +26,15 @@ def main() -> None:
     args = ap.parse_args()
 
     from spark_file_mover_spark import registry
+    from spark_file_mover_spark.profile import formatted_plan
     from spark_file_mover_spark.session import get_spark
 
     registry.load_all()
     spark = get_spark("plankey", cpus=8)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     outdir = Path(args.out)
     outdir.mkdir(parents=True, exist_ok=True)
     for key in args.keys:
-        df = registry.QUERIES[key](spark, args.sf)
-        plan = df._jdf.queryExecution().explainString(mode)
+        plan = formatted_plan(registry.QUERIES[key](spark, args.sf))
         path = outdir / f"{key}_{args.suffix}.txt"
         path.write_text(plan)
         print(f"wrote {path} ({len(plan.splitlines())} lines)")
