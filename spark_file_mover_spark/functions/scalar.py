@@ -23,29 +23,8 @@ from pyspark.sql import types as T
 
 from spark_file_mover_spark.llm._textnorm import toks
 from spark_file_mover_spark.registry import query
-from spark_file_mover_spark.sources.io import load_table
+from spark_file_mover_spark.sources.io import load_table, wide_scan
 from spark_file_mover_spark.numerics import snap
-
-def _widen_narrow_scan(
-    spark: SparkSession, table_df: DataFrame, cols: list[str]
-) -> DataFrame:
-    """Select ``cols`` and spread heavy per-row map work across all
-    cores when — and ONLY when — the scan arrives in fewer splits than
-    the session's default parallelism (the dedup.py under-parallelism
-    guard, via the memoized :func:`scan_partitions` probe on the cached
-    table object). At test scale a small parquet is one split, so
-    without an exchange the whole downstream chain runs on one core; at
-    cluster scale the scan already arrives wide and NO exchange is
-    added (ADVICE r13: the previous unconditional repartition
-    contradicted the keys' 'zero shuffle' plan notes)."""
-    from spark_file_mover_spark.sources.io import scan_partitions
-
-    narrow = table_df.select(*cols)
-    target = spark.sparkContext.defaultParallelism
-    if scan_partitions(table_df) < target:
-        return narrow.repartition(target)
-    return narrow
-
 
 # ---------------------------------------------------------------------------
 # G1 — strings
@@ -1663,11 +1642,10 @@ def fn_jwt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (16 B/row) is inserted so the heavy chain uses all cores —
     gated on the scan's split count, so it never appears when the
     scan already arrives wide."""
-    o = load_table(spark, sf_dir, "orders")
     # The synthesis+decode chain is heavy per row (2 base64 encodes,
     # 2 decodes, JSON parsing): spread it wide when the scan is
     # narrower than the session parallelism (split-count gate).
-    o = _widen_narrow_scan(spark, o, ["o_orderkey", "o_custkey"])
+    o = wide_scan(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
     t = o.selectExpr(
         "o_orderkey AS token_id",
         f"""trim(TRAILING '=' FROM translate(base64(encode(
@@ -1914,12 +1892,14 @@ def fn_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine for a triage/extract pass; a hot path lifts the parse into a
     schema-on-read `from_xml` instead (value-parity with this key's
     output is pinned in tests/test_r14_ops.py)."""
-    s = load_table(spark, sf_dir, "supplier")
     # Xalan parses a DOM per row per xpath call — heavy map work:
     # spread it wide when the scan is narrower than the session
     # parallelism (split-count gate)
-    s = _widen_narrow_scan(
-        spark, s, ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"]
+    s = wide_scan(
+        spark,
+        sf_dir,
+        "supplier",
+        ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
     )
     x = s.selectExpr(
         "s_suppkey",
@@ -1955,9 +1935,11 @@ def fn_xml_extract_hotpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     friendly: `from_xml` parses once into a struct, then every output
     is a column reference — the shape to use when XML extraction is a
     pipeline hot path rather than a triage pass."""
-    s = load_table(spark, sf_dir, "supplier")
-    s = _widen_narrow_scan(
-        spark, s, ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"]
+    s = wide_scan(
+        spark,
+        sf_dir,
+        "supplier",
+        ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
     )
     x = s.selectExpr(
         "s_suppkey",

@@ -45,8 +45,8 @@ from spark_file_mover_spark.numerics import snap
 from spark_file_mover_spark.sources.io import (
     ingest_artifact,
     load_table,
-    scan_partitions,
     session_memo,
+    wide_scan,
 )
 
 # ---------------------------------------------------------------------------
@@ -142,8 +142,9 @@ def _minhash_exprs() -> dict:
     return {"aggs": aggs, "band_arr": band_arr}
 
 
-def _minhash_signatures(d: DataFrame) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}): k = b·r minhash values over 3-word shingles.
+def _minhash_signatures(t: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh{k-1}): k = b·r minhash values over 3-word shingles
+    of the ``(doc_id, text)`` relation ``t``.
 
     Shape matters at scale: shingles are exploded to ROWS and hashed ONCE,
     then the k permuted minima come from a single groupBy(doc_id) with k
@@ -156,20 +157,11 @@ def _minhash_signatures(d: DataFrame) -> DataFrame:
       regex split inside EVERY element_at of the (interpreted) lambda —
       project the token array to a column first, then reference it
       (~3x on the explode stage).
-    The repartition spreads per-doc compute across all cores when the
-    input arrives under-parallel (a single small file locally) — but ONLY
-    then: it is guarded on the scan's actual partition count so a
-    well-partitioned 100 TB input never pays a gratuitous full-corpus
-    text shuffle. The guard deliberately probes ``rdd.getNumPartitions()``
-    (one extra py4j plan conversion, driver-side only): a file-count
-    probe undercounts splittable formats — 1 000 multi-GB parquet files
-    scan as hundreds of thousands of split partitions, and mistaking that
-    for "under-parallel" would trigger the exact full shuffle the guard
-    exists to avoid. The probe is memoized via
-    :func:`spark_file_mover_spark.sources.io.scan_partitions`, which
-    lives beside the load_table plan cache whose object-identity
-    contract makes the memo valid (~0.1 s of driver latency saved per
-    invocation). When the guard does fire, the repartition sits on the
+    The caller passes ``t`` through
+    :func:`~spark_file_mover_spark.sources.io.wide_scan`, which spreads
+    per-doc compute across all cores when the input arrives
+    under-parallel (a single small file locally) — but ONLY then. When
+    the gate does fire, the repartition sits on the
     RAW TEXT projection and tokenization happens on the receiving side —
     shuffling the text (one compact string per doc) instead of the token
     arrays it splits into (r7, measured −0.15 s on the signature stage
@@ -177,11 +169,7 @@ def _minhash_signatures(d: DataFrame) -> DataFrame:
     and padding the flat text does not, and the regex split itself then
     also runs on all cores instead of in the pre-shuffle map).
     """
-    spark = d.sparkSession
-    t = d.select("doc_id", "text")
-    par = spark.sparkContext.defaultParallelism
-    if scan_partitions(d) < par:
-        t = t.repartition(par)
+    spark = t.sparkSession
     t = t.select("doc_id", toks().alias("toks"))
     tc = F.col("toks")
     # Shingle identity is the xxhash64 of the THREE TOKENS as separate
@@ -286,15 +274,15 @@ def minhash_clusters(
     min-aggregates entirely — the signature stage is the INGEST cost a
     deployment pays once.
     """
-    d = load_table(spark, sf_dir, "documents")
     # exact-dup edges: doc <-> its normalized-text group's min doc_id;
     # only (doc_id, nh) pairs shuffle — never the text. Callers that also
     # consume the normalized-hash relation (the dedup-near-minhash audit)
     # pass a materialized one in so the corpus text is scanned+hashed
     # once, not once per consumer.
     if nh_rel is None:
+        d = load_table(spark, sf_dir, "documents")
         nh_rel = d.select("doc_id", _norm_hash().alias("nh"))
-    sparse = _minhash_cluster_sparse(spark, d, nh_rel, sf_dir)
+    sparse = _minhash_cluster_sparse(spark, nh_rel, sf_dir)
     # completion: docs with no candidate neighbor are their own cluster.
     # nh_rel (not a second scan of d) supplies the doc-id universe — it
     # has exactly one row per document and audit callers hand it in
@@ -312,7 +300,7 @@ def minhash_clusters(
 
 
 def _minhash_cluster_sparse(
-    spark: SparkSession, d: DataFrame, nh_rel: DataFrame, sf_dir: str
+    spark: SparkSession, nh_rel: DataFrame, sf_dir: str
 ) -> DataFrame:
     """The sparse core of :func:`minhash_clusters`: ``(doc_id, min_nb)``
     for documents with at least one candidate neighbor (LSH collision or
@@ -345,17 +333,19 @@ def _minhash_cluster_sparse(
     # self-join) AND across invocations (an ingest artifact).
     # MEMORY_AND_DISK: spills instead of OOM on wide corpora.
     bands = ingest_artifact(
-        "minhash-bands", spark, sf_dir, lambda: _minhash_bands(spark, d)
+        "minhash-bands", spark, sf_dir, lambda: _minhash_bands(spark, sf_dir)
     )
     return _minhash_neighbor_mins(bands, exact_edges)
 
 
-def _minhash_bands(spark: SparkSession, d: DataFrame) -> DataFrame:
+def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, band, sig)``: the persisted, bucket-guarded banded
     signature relation."""
     from pyspark.sql import Window as W
 
-    sig = _minhash_signatures(d)
+    sig = _minhash_signatures(
+        wide_scan(spark, sf_dir, "documents", ["doc_id", "text"])
+    )
 
     # Oversized-bucket guard, window form, INSIDE the cached relation
     # (r6): a count window over (band, sig) filters degenerate
@@ -485,9 +475,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream), which pays back the barrier."""
     from pyspark.sql import Window as W
 
-    d = load_table(spark, sf_dir, "documents")
     nh_rel = _nh_relation(spark, sf_dir)
-    sparse = _minhash_cluster_sparse(spark, d, nh_rel, sf_dir)
+    sparse = _minhash_cluster_sparse(spark, nh_rel, sf_dir)
     with_cl = nh_rel.join(sparse, "doc_id", "left").select(
         "doc_id",
         "nh",
@@ -1062,8 +1051,8 @@ def _span_shared(spark: SparkSession, sf_dir: str):
 
     ``t`` is ``(doc_id, toks, n_grams)`` — one tokenizer definition so
     k-gram geometry can never drift between the marking and cutting
-    passes. Same under-parallel-input guard as
-    :func:`_minhash_signatures` (see its docstring): when the scan
+    passes. Same under-parallel-input gate as
+    :func:`_minhash_signatures` (``sources.io.wide_scan``): when the scan
     arrives with fewer partitions than cores, the RAW TEXT is
     repartitioned BEFORE tokenization so the regex split + k-gram
     hashing run on all cores; a well-partitioned 100 TB input never
@@ -1091,13 +1080,9 @@ def _span_shared(spark: SparkSession, sf_dir: str):
 
 
 def _span_build(spark: SparkSession, sf_dir: str):
-    d = load_table(spark, sf_dir, "documents")
-    t = d.select("doc_id", "text")
-    par = spark.sparkContext.defaultParallelism
-    if scan_partitions(d) < par:
-        t = t.repartition(par)
     t = (
-        t.select("doc_id", toks().alias("toks"))
+        wide_scan(spark, sf_dir, "documents", ["doc_id", "text"])
+        .select("doc_id", toks().alias("toks"))
         .withColumn(
             "n_grams",
             F.greatest(F.size("toks") - (_SPAN_K - 1), F.lit(0)),

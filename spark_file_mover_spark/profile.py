@@ -32,10 +32,18 @@ def materialize(df: DataFrame) -> int:
     row is computed and consumed; the collected result is one row.
     ``df.count()`` is no substitute: it lets Catalyst delete projections
     and windows that do not change cardinality."""
-    row = df.select(
+    return _materialized(df)[0]
+
+
+def _materialized(df: DataFrame) -> tuple[int, DataFrame]:
+    """:func:`materialize`'s hash and the one-row DataFrame it executed:
+    once run, that DataFrame's :func:`formatted_plan` is AQE's final
+    plan (``isFinalPlan=true``) of ``df``'s query, while ``df``'s own
+    never executed and shows the initial one."""
+    ran = df.select(
         F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h")
-    ).agg(F.bit_xor("h").alias("s")).collect()
-    return row[0][0] or 0
+    ).agg(F.bit_xor("h").alias("s"))
+    return ran.collect()[0][0] or 0, ran
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -43,6 +51,15 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def final_plan(ran: DataFrame) -> str:
+    """:func:`formatted_plan` of a DataFrame that has executed, its tree
+    cut to AQE's final plan (``isFinalPlan=true``): each operator that
+    ran appears once, with stage reuse as ReusedExchange. The uncut
+    tree also prints the initial plan, whose scans no reuse removed."""
+    tree, _, details = formatted_plan(ran).partition("\n\n")
+    return tree.split("+- == Initial Plan ==")[0] + "\n\n" + details
 
 
 def oracle_connection(sf_dir: str, tables=TABLES):
@@ -84,7 +101,8 @@ def counted(spark, fn: Callable[[], T]) -> tuple[T, float, int]:
 
 
 class Timing(NamedTuple):
-    df: DataFrame
+    # the DataFrame the exec phase ran; its plan is the executed one
+    ran: DataFrame
     hash: int
     build_s: float
     exec_s: float
@@ -102,8 +120,8 @@ def timed(spark, key: str, sf_dir: str) -> Timing:
     df, build_s, build_jobs = counted(
         spark, lambda: registry.QUERIES[key](spark, sf_dir)
     )
-    h, exec_s, exec_jobs = counted(spark, lambda: materialize(df))
-    return Timing(df, h, build_s, exec_s, build_jobs, exec_jobs)
+    (h, ran), exec_s, exec_jobs = counted(spark, lambda: _materialized(df))
+    return Timing(ran, h, build_s, exec_s, build_jobs, exec_jobs)
 
 
 class BuildAudit(NamedTuple):

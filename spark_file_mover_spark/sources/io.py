@@ -4,13 +4,14 @@
 keeps the scan declarative (``spark.read.parquet``) so Catalyst gets
 predicate pushdown, column pruning and partition pruning for free.
 At 100 TB the same call works against a partitioned table directory —
-nothing here assumes a single file.
+nothing here assumes a single file. Table reads and their split counts
+are cached like every other per-corpus value, as
+:func:`ingest_artifact` entries.
 """
 
 from __future__ import annotations
 
 import atexit
-import itertools
 import os
 import re
 import shutil
@@ -66,7 +67,7 @@ def corpus_fingerprint(sf_dir: str) -> tuple:
                     parts.append(
                         (f"{e.name}/{fname}", st.st_size, st.st_mtime_ns)
                     )
-    return hash(tuple(parts))
+    return tuple(parts)
 
 
 def artifact_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
@@ -149,10 +150,11 @@ def ingest_artifact(name: str, spark: SparkSession, sf_dir: str, build):
     """Return the ingest artifact ``name`` for the corpus at ``sf_dir``,
     calling the zero-arg ``build`` on a miss. THE cache for relations
     (and driver-side values such as counts or centroids) that are a
-    pure function of the input files — minhash bands, span grams, IVF
-    indexes, graph adjacency, k-means models: a deployment builds them
-    once at ingest, so every query after the first pays only its own
-    operator. The contract, for every artifact:
+    pure function of the input files — table reads and split counts,
+    minhash bands, span grams, IVF indexes, graph adjacency, k-means
+    models: a deployment builds them once at ingest, so every query
+    after the first pays only its own operator. The contract, for every
+    artifact:
 
     * key ``(artifact_cache_key(spark, sf_dir), name)`` — a restarted
       SparkContext, another directory or an in-place rewrite of the
@@ -278,64 +280,23 @@ def cached_plan(spark: SparkSession, sf_dir: str, name: str, make):
     return df.select("*") if hit else df
 
 
-# (sf_dir, name) → DataFrame for ONE SparkSession at a time. A DataFrame
-# is an immutable logical plan, so reuse is safe; without the cache every
-# load_table call pays a fresh driver-side footer read + file listing
-# (~0.1 s), and the scoring run calls load_table a few hundred times
-# across all registered keys. In-place corpus rewrites are detected via
-# the fingerprint component of the key (see _CacheKey below). The
-# cache is dropped whenever a different session appears, so stopped
-# sessions are never pinned by cached plans. Keyed on
-# (applicationId, nonce): applicationId alone would conflate two
-# live sessions sharing one SparkContext (spark.newSession()) and hand
-# one session plans bound to the other; the nonce is a monotonic counter
-# stamped onto each session object the first time we see it — unlike
-# id(spark), which CPython can recycle for a new session allocated after
-# the old one is GC'd, a counter value is never reused.
-# Cache entries are keyed (sf_dir, table_name); session scoping lives
-# entirely in _CACHE_SESSION_KEY ((applicationId, nonce)) — the cache is
-# cleared whenever the observed session key changes, so entry keys never
-# need to carry session identity themselves.
-# A cached plan snapshots its file listing (sizes/offsets included), so
-# the key also carries the corpus fingerprint: rewriting a table's file
-# in place misses the cache and re-plans against the new bytes instead
-# of reading stale (or wrongly-sized) splits. Entries for a superseded
-# fingerprint linger until the session changes — harmless, they're
-# lazy plans, not pinned blocks.
-_CacheKey = tuple[str, str, tuple]  # (sf_dir, table name, fingerprint)
-_CACHE: dict[_CacheKey, DataFrame] = {}
-_CACHE_SESSION_KEY: tuple[str, int] | None = None
-_SESSION_NONCES = itertools.count()
-_NONCE_ATTR = "_spark_file_mover_cache_nonce"
-
-
-def _session_nonce(spark: SparkSession) -> int:
-    nonce = getattr(spark, _NONCE_ATTR, None)
-    if nonce is None:
-        nonce = next(_SESSION_NONCES)
-        setattr(spark, _NONCE_ATTR, nonce)
-    return nonce
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame (lazy parquet scan).
+    """Load one testdata table as a DataFrame (lazy parquet scan), an
+    :func:`ingest_artifact` named ``table-<name>``: repeat calls for
+    the same corpus return the same object and skip the driver-side
+    footer read and file listing (~0.1 s a table).
 
-    Every call — cache hit or miss — pins the session timezone to UTC so
+    Every call — hit or miss — pins the session timezone to UTC so
     timestamp-derived values are stable regardless of driver host
     timezone (runtime-settable conf; direct callers outside the
     registry's ``tune_session`` wrapper rely on this)."""
-    global _CACHE_SESSION_KEY
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    session_key = (spark.sparkContext.applicationId, _session_nonce(spark))
-    if _CACHE_SESSION_KEY != session_key:
-        _CACHE.clear()
-        _CACHE_SESSION_KEY = session_key
-    ck = (sf_dir, name, corpus_fingerprint(sf_dir))
-    if ck in _CACHE:
-        return _CACHE[ck]
-    if name == "events":
+
+    def read() -> DataFrame:
+        if name != "events":
+            return spark.read.parquet(f"{sf_dir}/{name}.parquet")
         # events.ts has shipped in two physical encodings across testdata
         # generations: parquet INT64 TIMESTAMP(NANOS) (which Spark's reader
         # rejects unless nanosAsLong is set) and plain timestamp[us]. Read
@@ -364,29 +325,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _CACHE[ck] = df
-    return df
+        return df
+
+    return ingest_artifact(f"table-{name}", spark, sf_dir, read)
 
 
-_SCAN_PARTS_ATTR = "_spark_file_mover_scan_partitions"
+def wide_scan(
+    spark: SparkSession, sf_dir: str, table: str, cols: list[str]
+) -> DataFrame:
+    """``cols`` of ``table``, spread across all cores when — and ONLY
+    when — the scan arrives in fewer splits than the session's default
+    parallelism. At test scale a small parquet is one split, so without
+    an exchange the heavy per-row map work downstream runs on one core;
+    at cluster scale the scan already arrives wide and NO exchange is
+    added, so a well-partitioned input never pays a gratuitous shuffle.
 
-
-def scan_partitions(df: DataFrame) -> int:
-    """Memoized ``df.rdd.getNumPartitions()`` for under-parallelism
-    guards. The probe is a full plan→RDD conversion (~0.1 s of driver
-    latency), so the result is stamped onto the DataFrame object itself —
-    attribute lifetime equals object lifetime, so a recycled ``id()``
-    can never alias a dead entry. The memo is VALID precisely because of
-    this module's cache contract: :func:`load_table` hands every
-    consumer the same cached plan object per (session, table) and the
-    scan's file listing is frozen at plan time, so the partition count
-    cannot change for the object's lifetime. Keeping the helper beside
-    the cache ties the two halves of that contract together — a cache
-    policy change here must revisit this memo too."""
-    n = getattr(df, _SCAN_PARTS_ATTR, None)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        setattr(df, _SCAN_PARTS_ATTR, n)
-    return n
+    The split count is probed with ``rdd.getNumPartitions()`` (a plan →
+    RDD conversion, ~0.1 s of driver latency), not a file count: 1 000
+    multi-GB parquet files scan as hundreds of thousands of splits, and
+    mistaking that for "under-parallel" would add the exact full shuffle
+    the gate exists to avoid. Within one SparkContext the count depends
+    only on the files, so it is the ingest artifact ``splits-<table>``,
+    probed once per (SparkContext, corpus)."""
+    df = load_table(spark, sf_dir, table)
+    splits = ingest_artifact(
+        f"splits-{table}", spark, sf_dir, lambda: df.rdd.getNumPartitions()
+    )
+    target = spark.sparkContext.defaultParallelism
+    narrow = df.select(*cols)
+    return narrow.repartition(target) if splits < target else narrow

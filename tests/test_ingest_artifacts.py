@@ -20,17 +20,30 @@ PKG = REPO / "spark_file_mover_spark"
 # entry point → may a module (path under the package) call it? Plan
 # caching is a registry flag (``@query(..., pure=True)``), so only
 # registry.py may call cached_plan; scratch space is owned by
-# sources.io.scratch_dir, so only sources/io.py may make temp dirs.
+# sources.io.scratch_dir, so only sources/io.py may make temp dirs; a
+# scan's split count is the ingest artifact sources.io.wide_scan reads,
+# so only sources/io.py may probe it.
 ALLOWED = {
     "artifact_cache_key": lambda rel: rel == "sources/io.py",
     "cached_plan": lambda rel: rel == "registry.py",
     "mkdtemp": lambda rel: rel == "sources/io.py",
     "gettempdir": lambda rel: rel == "sources/io.py",
+    "getNumPartitions": lambda rel: rel == "sources/io.py",
 }
 # names that must not exist anywhere in the package: every key builds
 # through the one production path, so no cache needs a bypass for a
-# plan-only build mode
-GONE = {"plan_cached", "lazy_checkpoints", "LAZY_ACTIVE"}
+# plan-only build mode; table reads and split counts are ingest
+# artifacts, so neither the session-scoped table cache nor the split
+# memo stamped on DataFrames comes back
+GONE = {
+    "plan_cached",
+    "lazy_checkpoints",
+    "LAZY_ACTIVE",
+    "scan_partitions",
+    "_widen_narrow_scan",
+    "_session_nonce",
+    "_CACHE_SESSION_KEY",
+}
 
 
 def _cache_uses(path: Path):

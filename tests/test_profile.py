@@ -5,7 +5,15 @@ from __future__ import annotations
 
 import pytest
 
-from spark_file_mover_spark.profile import counted, plan_cache_bypassed
+from spark_file_mover_spark import registry
+from spark_file_mover_spark.profile import (
+    counted,
+    final_plan,
+    formatted_plan,
+    materialize,
+    plan_cache_bypassed,
+    timed,
+)
 from spark_file_mover_spark.sources import io as sio
 
 
@@ -45,3 +53,22 @@ def test_bypass_restores_cached_plan_after_raise():
             assert sio.cached_plan(None, "", "k", lambda: 42) == 42
             raise RuntimeError("build failed")
     assert sio.cached_plan is real
+
+
+def test_timed_keeps_the_executed_final_plan(spark, monkeypatch):
+    """``Timing.ran`` is what the exec phase ran. Its final plan shows
+    the self-join's second aggregate as stage reuse over ONE range scan;
+    the uncut text also prints the initial plan's two scans, and the
+    built DataFrame itself never executes."""
+    agg = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+    df = agg.join(agg.withColumnRenamed("count", "n"), "k")
+    monkeypatch.setitem(registry.QUERIES, "range-self-join", lambda s, d: df)
+    t = timed(spark, "range-self-join", "")
+    final = final_plan(t.ran)
+    tree = final.split("\n\n")[0]
+    assert "isFinalPlan=true" in final
+    assert tree.count("Range (") == 1 and tree.count("ReusedExchange") == 1
+    uncut = formatted_plan(t.ran).split("\n\n")[0]
+    assert uncut.count("Range (") == 3
+    assert "isFinalPlan=false" in formatted_plan(df)
+    assert t.hash == materialize(df)

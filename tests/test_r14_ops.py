@@ -133,38 +133,6 @@ def test_expire_snapshots_orders_versions_numerically(
 
 
 # ---------------------------------------------------------------------------
-# _widen_narrow_scan: the scalar width gate adds an exchange ONLY for
-# under-parallel scans (ADVICE r13 — the 'zero shuffle at cluster
-# scale' claim, pinned structurally)
-# ---------------------------------------------------------------------------
-
-
-def test_widen_narrow_scan_gates_on_split_count(spark):
-    from spark_file_mover_spark.functions.scalar import _widen_narrow_scan
-
-    par = spark.sparkContext.defaultParallelism
-    if par < 2:
-        pytest.skip(
-            "coalesce(1) is not narrower than defaultParallelism=1 — "
-            "the width gate correctly adds no exchange on a 1-core runner"
-        )
-    base = spark.range(1000).selectExpr("id", "id * 2 AS v")
-
-    def n_exchanges(df) -> int:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("Exchange")
-
-    narrow = base.coalesce(1)
-    wide = base.repartition(par)  # simulates a cluster-scale multi-split scan
-    assert n_exchanges(_widen_narrow_scan(spark, narrow, ["id", "v"])) == 1
-    # already-wide input: the gate must add NOTHING beyond the input's
-    # own exchange
-    assert n_exchanges(_widen_narrow_scan(spark, wide, ["id", "v"])) == (
-        n_exchanges(wide.select("id", "v"))
-    )
-
-
-# ---------------------------------------------------------------------------
 # fn-xml-extract: the promised from_xml hot path is value-identical to
 # the registered xpath formulation (r13 verdict item 5)
 # ---------------------------------------------------------------------------

@@ -128,6 +128,7 @@ def test_corpus_fingerprint_detects_inplace_rewrite(tmp_path, spark):
     shutil.copy(Path(SRC_SF) / "documents.parquet", tmp_path)
     fp1 = corpus_fingerprint(str(tmp_path))
     key1 = artifact_cache_key(spark, str(tmp_path))
+    assert isinstance(fp1, tuple)
     assert fp1 and fp1 == corpus_fingerprint(str(tmp_path))
     _rewrite_in_place(tmp_path)
     assert corpus_fingerprint(str(tmp_path)) != fp1

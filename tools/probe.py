@@ -8,7 +8,8 @@ Per key, two lines:
 * ``reuse`` — a cold invocation (build + materialize) and a second one
   (a plan-cache hit for a ``pure`` key): build and exec seconds and
   Spark jobs of each, a check that both hash equal, and the parquet
-  scans and ReusedExchange nodes of the second invocation's plan.
+  scans and ReusedExchange nodes of the plan the second invocation
+  executed (AQE's final plan).
 * ``warm`` — min and median build, exec and total seconds over 4 more
   invocations.
 
@@ -46,7 +47,7 @@ def main() -> None:
             cold = profile.timed(spark, key, sf_dir)
             hit = profile.timed(spark, key, sf_dir)
             assert cold.hash == hit.hash, (key, cold.hash, hit.hash)
-            plan = profile.formatted_plan(hit.df)
+            plan = profile.final_plan(hit.ran)
             tree = plan.split("\n\n")[0]
             print(
                 f"{key}\treuse build_cold={cold.build_s:.2f}s"
